@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry point. Prints ONE compact JSON line on stdout.
   *
@@ -14,24 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scale probes override this upward: shuffle partitions must scale
-    // with the data so per-task aggregate/join state stays
-    // memory-sized (at sf10 the 32-partition default packs ~30× the
-    // sf1 state per task — the q153 probe measured OOM-or-GC-wall
-    // either side of a narrow heap window until partitions scaled,
-    // exactly the "size shuffle partitions for the target SF" rule a
-    // real deployment applies). AQE coalesces back when small.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-bench")
     // Steady-state measurement: run EVERY query once untimed first, so
     // each unique plan's one-time codegen compile + JVM JIT cost (2-6 s
     // per plan, measured) lands in the warmup, not on the timed run.

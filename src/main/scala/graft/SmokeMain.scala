@@ -1,14 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Replica of the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object SmokeMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-smoke")
     val df = SparkEntry.entry(spark)
     println(s"SMOKE rows=${df.count()}")
     df.show(5, false)

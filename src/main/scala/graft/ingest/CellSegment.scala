@@ -399,18 +399,10 @@ object CellSegment {
     }
   }
 
-  // A/B seam (IngestBench + diagnostics): disabling the bloom makes
-  // every probe fall through to the index — the pre-bloom read path.
-  @volatile private var bloomDisabled: Boolean =
-    sys.props.get("graft.segment.bloom.disable").contains("true")
-  private[graft] def setBloomDisabled(v: Boolean): Boolean = {
-    val prev = bloomDisabled; bloomDisabled = v; prev
-  }
-
   /** ROW-bloom membership probe: false ⇒ the segment DEFINITELY holds
     * no cell of this key, with no index I/O spent to learn it. */
   def mightContain(path: Path, digestHex: String): Boolean =
-    bloomDisabled || bloomOf(path).mightContain(digestHex)
+    bloomOf(path).mightContain(digestHex)
 
   /** Data-region iterator whose underlying stream can be released
     * EARLY: exhaustion closes it (the common scan), and `close()` lets

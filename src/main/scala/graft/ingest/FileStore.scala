@@ -47,8 +47,9 @@ object FileStore {
     * threshold up, unchanged from r17). Below this, the per-cell path
     * interleaves better across concurrent same-shard sink tasks than a
     * monitor-held direct window; above it, tiny-file churn dominates
-    * (StorePutProbe: capped 15 k-cell wave 5.5 s per-cell vs 0.14 s
-    * direct). Overridable for tests via system property. */
+    * (BENCH_SCALING.md, round 18 "directFlush wave physics": capped
+    * 15 k-cell wave 5.5 s per-cell vs 0.14 s direct). Overridable for
+    * tests via system property. */
   private[ingest] def CappedDirectFloor: Int =
     Integer.getInteger("graft.store.cappedDirectFloor", 1024)
 

@@ -43,10 +43,23 @@ object IngestMain {
     def required(k: String): String =
       conf.getOrElse(k, throw new IllegalArgumentException(s"missing required arg $k=<value>"))
 
+    def oneOf[T](k: String, default: String)(choices: (String, T)*): T = {
+      val v = conf.getOrElse(k, default)
+      choices.collectFirst { case (`v`, t) => t }.getOrElse(throw new IllegalArgumentException(
+        s"unknown $k=$v; expected one of ${choices.map(_._1).mkString(" | ")}"))
+    }
+
     // validate before building a session so bad invocations fail fast
     val inputPrefixes = required("input.prefixes").split(',').toSeq
     val tableSinkDir = required("table.sink.dir")
     val manifestDir = required("manifest.dir")
+    val runMode = oneOf("run-mode", "import_and_manifest")(
+      "import" -> IngestPipeline.RunMode.Import,
+      "manifest" -> IngestPipeline.RunMode.Manifest,
+      "import_and_manifest" -> IngestPipeline.RunMode.ImportAndManifest)
+    val pushStore = oneOf[Option[() => PushTableSink.Store]]("table.sink.impl", "parquet")(
+      "parquet" -> None,
+      "filestore" -> Some(() => FileStore(tableSinkDir)))
 
     // under spark-submit we own the session; under tests we reuse (and
     // must not stop) the caller's
@@ -56,11 +69,6 @@ object IngestMain {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     try {
-      val runMode = conf.getOrElse("run-mode", "import_and_manifest") match {
-        case "import" => IngestPipeline.RunMode.Import
-        case "manifest" => IngestPipeline.RunMode.Manifest
-        case _ => IngestPipeline.RunMode.ImportAndManifest
-      }
       val timeFilter = TimeFilter(
         earlierThan = conf.get("skip.earlier.than").map(DateFmt.timestampAsLong).getOrElse(Long.MinValue),
         laterThan = conf.get("skip.later.than").map(DateFmt.timestampAsLong).getOrElse(Long.MaxValue))
@@ -86,10 +94,7 @@ object IngestMain {
         runMode = runMode,
         skipExisting = conf.getOrElse("skip.existing.records", "true").toBoolean,
         maxObjectBytes = conf.get("object.maximum.size").map(_.toLong).getOrElse(2200000000L),
-        pushStore = conf.getOrElse("table.sink.impl", "parquet") match {
-          case "filestore" => Some(() => FileStore(tableSinkDir))
-          case _ => None
-        })
+        pushStore = pushStore)
 
       // the reference's end-of-run counter log (HBaseWriter.kt:309-318)
       println(s"""{"files": ${result.filesProcessed}, "records": ${result.recordsProcessed}, """ +

@@ -25,10 +25,8 @@ object Advanced {
     s"${path}_$fp"
   }
 
-  /** q161's staged-feed directory — ONE derivation shared with
-    * [[graft.tools.StreamProbe]] so the probe can never drift from the
-    * query's naming scheme (ADVICE r17). */
-  def q161StagedDir(d: String): java.io.File =
+  /** q161's staged-feed directory. */
+  private def q161StagedDir(d: String): java.io.File =
     new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_q161_" + layoutTag(d, "events.parquet"))
 
@@ -92,14 +90,7 @@ object Advanced {
       val schema = s.read.parquet(src.getPath).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
             batch.groupBy(col("user_id"))
@@ -113,8 +104,8 @@ object Advanced {
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .awaitTermination()
+      }
       // the upsert demo is only real if the keys actually arrived split
       // across micro-batches — fail loudly if the source planner ever
       // coalesces the 4 staged files into one batch
@@ -150,21 +141,14 @@ object Advanced {
         .dropDuplicates("user_id", "ts_ms")
         .select(col("user_id"), col("ts_ms"))
       // state partitions sized to key cardinality (see q53's comment)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         keyed.writeStream
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .awaitTermination()
+      }
       // detach the temp-view name and drop the checkpoint dir so
       // repeated invocations (bench runs 4×) don't accumulate driver
       // state; the returned plan holds the sink relation directly
@@ -262,22 +246,15 @@ object Advanced {
         Tables.tsAsTimestamp(raw).as("ts"),
         col("event_type"), col("value"))
       // state partitions sized to key cardinality (see q53's comment)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         Sessions.hourlyCountsStream(events).writeStream
           .format("memory").queryName(sinkName)
           .outputMode("complete")
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .awaitTermination()
+      }
       val out = s.table(sinkName)
         .select(unix_millis(col("hour_start")).as("hour_ms"),
           col("event_type"), col("n"), col("total_value"))
@@ -354,33 +331,24 @@ object Advanced {
         // type) count per open window — dozens of keys, not thousands —
         // and every state partition is a per-batch checkpoint-file
         // commit REGARDLESS of how empty it is, times THREE batches on
-        // this staged feed (StreamProbe r18: addBatch/stateCommit is
-        // the dominant per-batch term at 32 partitions). Restored once
+        // this staged feed (OPTIMIZATION_r18.md §A: addBatch/stateCommit
+        // is the dominant per-batch term at 32 partitions). Restored once
         // the bounded run finishes; batch plans are unaffected.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-        try {
-          stream
-          .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
-          .filter(col("event_type") =!= "__nudge") // the sentinel only carries the watermark
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        } catch {
-          case e: Throwable =>
-            s.conf.set("spark.sql.shuffle.partitions", prevParts); throw e
+        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val run = stream
+            .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
+            .filter(col("event_type") =!= "__nudge") // the sentinel only carries the watermark
+            .withWatermark("ts", "1 hour")
+            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+            .agg(count(lit(1)).as("n"))
+            .writeStream.outputMode("append")
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck.toString)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          run.awaitTermination()
+          run
         }
-        // hold the state-sizing override until the bounded run FINISHES
-        // (see q53: restoring right after start() would race a deferred
-        // session clone)
-        try q.awaitTermination()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
         val trace = q.recentProgress.map(p =>
           s"batch=${p.batchId} in=${p.numInputRows} wm=${p.eventTime.get("watermark")} " +
             s"maxT=${p.eventTime.get("max")}").mkString("; ")
@@ -464,21 +432,14 @@ object Advanced {
       // state partition is a per-batch checkpoint file regardless of
       // how empty it is. Restored once the bounded run finishes;
       // batch plans are unaffected.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         Sessions.sessionizeStream(Sessions.typedEvents(events)).toDF().writeStream
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .awaitTermination()
+      }
       val out = s.table(sinkName).filter(col("user_id") >= 0)
       s.catalog.dropTempView(sinkName)
       org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
@@ -526,21 +487,14 @@ object Advanced {
       // stream-stream join keeps FOUR stores per partition, so it gets
       // half the partitions of the single-store operators (16 store
       // instances per batch instead of 32; ~0.4 s/batch saved)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         joined.writeStream
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .awaitTermination()
+      }
       val out = s.table(sinkName)
       s.catalog.dropTempView(sinkName)
       org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
@@ -624,21 +578,14 @@ object Advanced {
           .select(col("user_id"),
             unix_millis(col("click_ts")).as("click_ms"),
             coalesce(unix_millis(col("buy_ts")), lit(-1L)).as("buy_ms"))
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        // hold the state-sizing override until the bounded run FINISHES:
-        // StreamExecution happens to clone the session (and this conf) in
-        // its constructor, but that timing is an implementation detail —
-        // restoring right after start() would race a deferred clone
-        try {
-          val q =
+        withConf(s, "spark.sql.shuffle.partitions" -> "4") {
           joined.writeStream
             .format("memory").queryName(sinkName)
             .option("checkpointLocation", ck.toString)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
-          q.awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+            .awaitTermination()
+        }
         val out = s.table(sinkName).filter(col("user_id") >= 0L)
           .select(col("user_id"), col("click_ms"), col("buy_ms"))
           .localCheckpoint() // release the memory-sink view eagerly

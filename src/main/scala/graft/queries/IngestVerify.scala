@@ -129,7 +129,7 @@ object IngestVerify {
         // store-state scans (plus the returned frame a 5th) instead of 2
         val push = readState(pushRoot).localCheckpoint()
         val bulk = readState(bulkRoot).localCheckpoint()
-        require(push.exceptAll(bulk).count() == 0 && bulk.exceptAll(push).count() == 0,
+        sameRows(push, bulk,
           "bulk-written state must be cell-for-cell identical to push-written state")
         bulk
       } finally {

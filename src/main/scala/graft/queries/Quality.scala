@@ -231,14 +231,7 @@ object Quality {
         .as[BandRow]
       val target = java.nio.file.Files.createTempDirectory("graft-q124-target")
       val ck = java.nio.file.Files.createTempDirectory("graft-q124-ck")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // hold the state-sizing override until the bounded run FINISHES:
-      // StreamExecution happens to clone the session (and this conf) in
-      // its constructor, but that timing is an implementation detail —
-      // restoring right after start() would race a deferred clone
-      try {
-        val q =
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         BandDedup.bucketMins(bands).toDF().writeStream
           .foreachBatch { (b: Dataset[Row], id: Long) =>
             b.groupBy(col("doc_id")).agg(min(col("bmin")).as("keeper"))
@@ -248,8 +241,8 @@ object Quality {
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .awaitTermination()
+      }
       val nB = target.toFile.listFiles().count(_.getName.startsWith("batch="))
       require(nB >= 2, s"expected multi-batch incremental dedup, got $nB batch dirs")
       val out = s.read.parquet(target.toString)

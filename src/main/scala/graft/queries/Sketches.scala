@@ -173,24 +173,18 @@ object Sketches {
         // ~100 keys — and every state partition is a per-batch
         // checkpoint-file commit regardless of fill (the q156/q167
         // probe finding). Restored when the bounded run finishes.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = try {
-          hllRanks(stream)
-          .groupBy(col("event_type"), col("idx"))
-          .agg(max(col("rank")).as("m"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        } catch {
-          case e: Throwable =>
-            s.conf.set("spark.sql.shuffle.partitions", prevParts); throw e
+        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val run = hllRanks(stream)
+            .groupBy(col("event_type"), col("idx"))
+            .agg(max(col("rank")).as("m"))
+            .writeStream.outputMode("complete")
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck.toString)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          run.awaitTermination()
+          run
         }
-        // hold the override until the bounded run finishes (see q53)
-        try q.awaitTermination()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming HLL must see the feed as multiple micro-batches")
         val out = registersToEstimate(s.table(sinkName)).localCheckpoint()
@@ -326,32 +320,26 @@ object Sketches {
         // state partitions sized to the stream's key cardinality (the
         // q52/q53 discipline, r18): state is the FIXED d×w = 2048-key
         // counter table, and every state partition is a per-batch
-        // checkpoint-file commit regardless of fill (StreamProbe r18:
-        // state commit fan-out dominated the 32-partition run).
+        // checkpoint-file commit regardless of fill (OPTIMIZATION_r18.md
+        // §A: state commit fan-out dominated the 32-partition run).
         // Restored when the bounded run finishes.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = try {
-          stream
-          .select(explode(split(col("text"), " ")).as("t"))
-          .filter(length(col("t")) > 0)
-          .select(col("t"), explode(sequence(lit(0), lit(CmD - 1))).as("r"))
-          .withColumn("b", expr(
-            s"CAST(conv(substring(md5(concat(CAST(r AS STRING), ':', t)), 1, 15), 16, 10) AS BIGINT) % $CmW"))
-          .groupBy(col("r"), col("b"))
-          .agg(count(lit(1)).as("cnt"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        } catch {
-          case e: Throwable =>
-            s.conf.set("spark.sql.shuffle.partitions", prevParts); throw e
+        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val run = stream
+            .select(explode(split(col("text"), " ")).as("t"))
+            .filter(length(col("t")) > 0)
+            .select(col("t"), explode(sequence(lit(0), lit(CmD - 1))).as("r"))
+            .withColumn("b", expr(
+              s"CAST(conv(substring(md5(concat(CAST(r AS STRING), ':', t)), 1, 15), 16, 10) AS BIGINT) % $CmW"))
+            .groupBy(col("r"), col("b"))
+            .agg(count(lit(1)).as("cnt"))
+            .writeStream.outputMode("complete")
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck.toString)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          run.awaitTermination()
+          run
         }
-        // hold the override until the bounded run finishes (see q53)
-        try q.awaitTermination()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming count-min must see the feed as multiple micro-batches")
         val out = s.table(sinkName)
@@ -393,27 +381,21 @@ object Sketches {
         // ~20 keys — while each of the 32 default partitions costs a
         // per-batch checkpoint-file commit even when empty. Restored
         // when the bounded run finishes.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = try {
-          stream
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("n"), min(x).as("mn"), max(x).as("mx"),
-            sum(dec(x)).as("s1"), sum(dec(x) * dec(x)).as("s2"),
-            sum(dec(x) * dec(x) * dec(x)).as("s3"),
-            sum(dec(x) * dec(x) * dec(x) * dec(x)).as("s4"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        } catch {
-          case e: Throwable =>
-            s.conf.set("spark.sql.shuffle.partitions", prevParts); throw e
+        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val run = stream
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("n"), min(x).as("mn"), max(x).as("mx"),
+              sum(dec(x)).as("s1"), sum(dec(x) * dec(x)).as("s2"),
+              sum(dec(x) * dec(x) * dec(x)).as("s3"),
+              sum(dec(x) * dec(x) * dec(x) * dec(x)).as("s4"))
+            .writeStream.outputMode("complete")
+            .format("memory").queryName(sinkName)
+            .option("checkpointLocation", ck.toString)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          run.awaitTermination()
+          run
         }
-        // hold the override until the bounded run finishes (see q53)
-        try q.awaitTermination()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming moments must see the feed as multiple micro-batches")
         val out = s.table(sinkName)

@@ -123,8 +123,7 @@ object StoreLifecycle {
         // store scans (plus the returned frame a 5th) instead of 2
         val src = readTable(srcRoot).localCheckpoint()
         val dst = readTable(dstRoot).localCheckpoint()
-        require(src.exceptAll(dst).count() == 0 && dst.exceptAll(src).count() == 0,
-          "restored store must match the source cell-for-cell")
+        sameRows(src, dst, "restored store must match the source cell-for-cell")
         dst.select(col("rowkey").cast("string").as("key_str"), col("version"),
             col("body").cast("string").as("body_md5"))
           .localCheckpoint()
@@ -223,7 +222,7 @@ object StoreLifecycle {
         // sides materialized once for the two-way check (the q195 note)
         val src = readTable(srcRoot).localCheckpoint()
         val dst = readTable(dstRoot).localCheckpoint()
-        require(src.exceptAll(dst).count() == 0 && dst.exceptAll(src).count() == 0,
+        sameRows(src, dst,
           "restore must reproduce the source's masked view — deletes must not resurrect")
         dst.select(col("rowkey").cast("string").as("key_str"), col("version"),
             col("body").cast("string").as("body_md5"))
@@ -508,8 +507,7 @@ object StoreLifecycle {
         val masked = readTable.select(col("rowkey").cast("string").as("key_str"),
           col("version"), col("body").cast("string").as("body_md5"))
           .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        require(mv.exceptAll(masked).count() == 0 && masked.exceptAll(mv).count() == 0,
-          "the MV folded from the change feed must equal the masked batch view")
+        sameRows(mv, masked, "the MV folded from the change feed must equal the masked batch view")
         mv
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
@@ -775,8 +773,7 @@ object StoreLifecycle {
           .select(col("rowkey").cast("string").as("key_str"),
             col("m.version").as("version"), col("m.body").cast("string").as("body_md5"))
           .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        require(latest.exceptAll(folded).count() == 0 && folded.exceptAll(latest).count() == 0,
-          "tbl$latest must equal the base-face max_by fold")
+        sameRows(latest, folded, "tbl$latest must equal the base-face max_by fold")
         latest
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
@@ -858,8 +855,8 @@ object StoreLifecycle {
     // 100 TB: with [[graft.sources.MergeSourcePruning]] installed the
     // target scan narrows to the SOURCE'S rowkeys through the q225
     // InputPartition key-set predicate (the HBase batched-GET idiom —
-    // the rewrite's outer join alone never narrows, measured by
-    // tools/MergeProbe in r13), opening ~|matched keys| files instead
+    // the rewrite's outer join alone never narrows, BENCH_SCALING.md
+    // "MERGE target-scan probe", r13), opening ~|matched keys| files instead
     // of every populated region; the gate pins opens == |matched|
     // two-sidedly. Above the key cap the pre-pass declines loudly to
     // the honest region-parallel scan. Writes are per-task batched
@@ -921,7 +918,7 @@ object StoreLifecycle {
           .agg(max_by(struct(col("version"), col("body_md5"), col("del")), col("version")).as("m"))
           .filter(!col("m.del"))
           .select(col("key_str"), col("m.version").as("version"), col("m.body_md5").as("body_md5"))
-        require(merged.exceptAll(upsert).count() == 0 && upsert.exceptAll(merged).count() == 0,
+        sameRows(merged, upsert,
           "MERGE must equal the union+argmax upsert (the q73 operator) both ways")
         // marker physics: exactly one EXACT marker per replaced/deleted
         // old cell (every matched %48 key's v1), no bound markers
@@ -1202,7 +1199,7 @@ object StoreLifecycle {
             col("body").cast("string").as("body_md5"))
         val src = view("q238s").localCheckpoint() // the q195 note
         val rep = view("q238r").localCheckpoint()
-        require(rep.exceptAll(src).count() == 0 && src.exceptAll(rep).count() == 0,
+        sameRows(rep, src,
           "the replica's masked view must equal the source's — the replication contract")
         rep
       } finally {
@@ -1822,7 +1819,7 @@ object StoreLifecycle {
             col("body").cast("string").as("body_md5"))
         val src = view("q248s").localCheckpoint() // the q195 note
         val rep = view("q248r").localCheckpoint()
-        require(rep.exceptAll(src).count() == 0 && src.exceptAll(rep).count() == 0,
+        sameRows(rep, src,
           "the replica's masked view must equal the source's — with zero foreachBatch")
         rep
       } finally {
@@ -2181,12 +2178,7 @@ object StoreLifecycle {
         // 2x774ms of addBatch wall to 32+ sink tasks logging ~19s of
         // blocked task-time (0.8s CPU) in a lock convoy on the single
         // shard. Restored once the bounded drain finishes.
-        def drain(): Unit = {
-          val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          try drainWith()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
+        def drain(): Unit = withConf(s, "spark.sql.shuffle.partitions" -> "8")(drainWith())
         def drainWith(): Unit = {
           var attempts = 0
           var done = false
@@ -2796,8 +2788,7 @@ object StoreLifecycle {
             col("body").cast("string").as("body_md5"))
         val src = view("q269s").localCheckpoint() // the q195 note
         val rep = view("q269r").localCheckpoint()
-        require(rep.exceptAll(src).count() == 0 && src.exceptAll(rep).count() == 0,
-          "replica and source must agree after the lifecycle races")
+        sameRows(rep, src, "replica and source must agree after the lifecycle races")
         rep
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
@@ -3453,8 +3444,7 @@ object StoreLifecycle {
           .select(col("rowkey").cast("string").as("key_str"), col("version"),
             col("body").cast("string").as("body_md5"))
           .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        require(visible.exceptAll(masked).count() == 0 && masked.exceptAll(visible).count() == 0,
-          "the state view must equal the masked batch view")
+        sameRows(visible, masked, "the state view must equal the masked batch view")
         visible
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
@@ -3616,8 +3606,7 @@ object StoreLifecycle {
         val after = readTable.select(col("rowkey").cast("string").as("key_str"),
           col("version"), col("body").cast("string").as("body_md5"))
           .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        require(after.exceptAll(res).count() == 0 && res.exceptAll(after).count() == 0,
-          "major compaction must not change the logical view")
+        sameRows(after, res, "major compaction must not change the logical view")
         require(!segFiles(root, "q222").exists(n => FileStore.tombstoneOf(n).isDefined),
           "no delete marker survives a major compaction")
         rePut() // marker purged -> the old version resurrects
@@ -3713,8 +3702,7 @@ object StoreLifecycle {
         // dst stays a live SCAN: the point-GET probe below asserts the
         // new layout prunes to one region, which a checkpoint would hide
         val dst = readTable(dstRoot)
-        require(src.exceptAll(dst).count() == 0 && dst.exceptAll(src).count() == 0,
-          "resplit must preserve the table cell-for-cell")
+        sameRows(src, dst, "resplit must preserve the table cell-for-cell")
         val probe = dst.filter(col("rowkey") === lit("doc-5".getBytes("UTF-8")))
         require(probe.rdd.getNumPartitions == 1, "point GET plans one region on the new layout")
         dst.select(col("rowkey").cast("string").as("key_str"), col("version"),

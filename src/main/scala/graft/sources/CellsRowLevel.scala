@@ -51,8 +51,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * back-dated-write contract in [[CellsMicroBatch]]).
   *
   * 100 TB: the target scan is the connector's own region-parallel
-  * scan. LEFT ALONE it is a table scan — `tools/MergeProbe` measured
-  * (r13) that the MERGE rewrite's outer join never narrows the target
+  * scan. LEFT ALONE it is a table scan — BENCH_SCALING.md ("MERGE
+  * target-scan probe", r13) measured that the MERGE rewrite's outer join never narrows the target
   * to the source's keys (the preserved side of a right-outer join
   * cannot be the broadcast build side, so the q225 runtime-filter
   * machinery has nothing to ride). [[MergeSourcePruning]] (installed

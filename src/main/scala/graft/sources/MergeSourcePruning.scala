@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.BinaryType
   * the preserved side of an outer join (or as the anti/semi probe), so
   * neither DPP (wants a partitioned build side) nor runtime group
   * filtering (group-based REPLACE operations only) ever narrows the
-  * target — `tools/MergeProbe` measured opens == populated regions in
-  * every MERGE variant. This rule closes the gap with a BOUNDED
+  * target — BENCH_SCALING.md ("MERGE target-scan probe") measured
+  * opens == populated regions in every MERGE variant. This rule closes the gap with a BOUNDED
   * pre-pass: collect the source's DISTINCT join rowkeys (capped), and
   * hand them to the already-built [[CellsScan]] through the SAME
   * InputPartition-carried key-set predicate the q225 runtime filter

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the in-repo golden parquets that anchor oracle rows whose
   * values DuckDB cannot recompute (no crc32 / rolling-hash functions).
   *
@@ -26,14 +24,7 @@ object GoldenGen {
     require(args.length >= 2, "usage: GoldenGen <outDir> <sfDir>...")
     val outDir = args.head
     val sfDirs = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-golden-gen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session("graft-golden-gen")
     import org.apache.spark.sql.functions.lit
     val tagged = sfDirs.map { sfDir =>
       val corpusChars = spark.read.parquet(s"$sfDir/documents.parquet")

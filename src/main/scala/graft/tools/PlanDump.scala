@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the EXECUTED physical plan of any SparkEntry query — the
   * plan-shape feedback loop behind every "done = the plan you'd want"
   * decision in this repo (AQE means only post-execution plans tell the
@@ -16,16 +14,7 @@ object PlanDump {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val fn = graft.SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(s"unknown query $name"))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session("graft-plan-dump")
     val df = fn(spark, sfDir)
     df.collect()
     println(s"=== executed plan: $name @ $sfDir ===")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for a list of SparkEntry queries to
   * files — the plans/r17/<query>_{before,after}.txt evidence the
   * optimization rounds commit. Fixture gates run their seeds as a side
@@ -17,16 +15,7 @@ object PlanSnap {
     val suffix = args(1)
     val names = args(2).split(',').toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session("graft-plan-snap")
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { prefix =>
       graft.SparkEntry.queries.keys.filter(_.startsWith(prefix)).toSeq.sorted.foreach { name =>

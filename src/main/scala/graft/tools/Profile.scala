@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Empirical profiler for one SparkEntry query (optimization guide §1:
   * decide where the time goes before touching anything): runs the query
@@ -22,24 +21,7 @@ object Profile {
     val passes = if (args.length > 2) args(2).toInt else 1
     val fn = graft.SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(s"unknown query $name"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // SPARK_GRAFT_NO_BROADCAST=1: forces shuffle joins — simulates
-      // the at-scale regime where a frontier/dist side outgrows the
-      // broadcast threshold, so per-iteration exchange claims can be
-      // measured at bench SF (shuffle bytes are the evidence)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        if (sys.env.contains("SPARK_GRAFT_NO_BROADCAST")) "-1" else "10485760")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        if (sys.env.contains("SPARK_GRAFT_NO_BROADCAST")) "-1" else "10485760")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session("graft-profile")
 
     final case class Job(id: Int, desc: String, start: Long,
                          var end: Long = -1, var tasks: Int = 0,

@@ -84,4 +84,25 @@ class IngestMainSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("missing required arg fails fast") {
     intercept[IllegalArgumentException](IngestMain.main(Array("run-mode=import")))
   }
+
+  private def rejectsBeforeWriting(bad: String): Unit = {
+    val tmp = Files.createTempDirectory("graft-main-bad")
+    Fixtures.writeDumpFile(tmp, "db-x", "coll-y", 1)
+    val e = intercept[IllegalArgumentException](IngestMain.main(Array(
+      s"input.prefixes=$tmp",
+      s"table.sink.dir=${tmp.resolve("cells")}",
+      s"manifest.dir=${tmp.resolve("manifests")}",
+      bad)))
+    assert(e.getMessage.contains(bad))
+    assert(!Files.exists(tmp.resolve("cells")))
+    assert(!Files.exists(tmp.resolve("manifests")))
+  }
+
+  test("an unknown run-mode is rejected, not run as import_and_manifest") {
+    rejectsBeforeWriting("run-mode=manifests")
+  }
+
+  test("an unknown table.sink.impl is rejected, not run as parquet") {
+    rejectsBeforeWriting("table.sink.impl=hbase")
+  }
 }
