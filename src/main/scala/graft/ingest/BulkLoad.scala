@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.ingest.IngestPipeline.{IngestedRow, Status}
+import graft.ingest.IngestPipeline.IngestedRow
 import graft.ingest.PushTableSink.TableSpec
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -68,16 +68,13 @@ object BulkLoad {
 
   final case class Report(cells: Long, segments: Seq[SegDesc])
 
-  /** Bulk-load the ok+unfiltered ingest rows — the same row filter and
-    * DDL behavior as [[PushTableSink.write]], different write physics. */
+  /** Bulk-load the ok+unfiltered ingest rows — the same row filter, and
+    * so the same tables created, as [[PushTableSink.write]], different
+    * write physics. */
   def write(rows: Dataset[IngestedRow], rootDir: String, config: Config = Config()): Report = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val cells = rows
-      .filter(r => r.status == Status.Ok && r.filterStatus == "DoNotFilter")
-      .map(r => (r.tableName, r.rowkey, r.version, r.envelope.getBytes("UTF-8")))
-      .toDF("tableName", "rowkey", "version", "body")
-    writeCells(cells, rootDir, config)
+    writeCells(rows.filter(r => PushTableSink.isPut(r)).map(r => PushTableSink.cellOf(r)).toDF(), rootDir, config)
   }
 
   /** Bulk-load a generic (tableName, rowkey, version, body) frame.
@@ -88,10 +85,11 @@ object BulkLoad {
     val spark = cellsDf.sparkSession
     import spark.implicits._
 
-    // driver-side DDL over the distinct table names (W3), as the push
-    // sink does — bounded by the table count, not the data. The split
-    // layout is resolved HERE too: creation-time splitPoints record a
-    // custom layout; existing tables keep whatever _splits.json says.
+    // driver-side DDL over the distinct table names (W3) — bounded by
+    // the table count, not the data. Unlike the push sink's on-first-
+    // sight DDL, it must precede every task: the split layout is
+    // resolved HERE too (creation-time splitPoints record a custom
+    // layout; existing tables keep whatever _splits.json says).
     val tables = cellsDf.select(col("tableName")).distinct().as[String].collect().sorted.toSeq
     val store = FileStore(rootDir)
     tables.foreach { t =>

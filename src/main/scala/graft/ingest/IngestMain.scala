@@ -12,9 +12,10 @@ import org.apache.spark.sql.SparkSession
   *   input.prefixes        comma-separated input dirs/URIs   (s3.prefix.folder + suffixes)
   *   table.sink.dir        versioned-cell sink location      (HBase stand-in)
   *   table.sink.impl       parquet (default) | filestore — filestore runs
-  *                         the real push path (PushTableSink: driver DDL,
-  *                         byte-capped batches, bounded retry, per-batch
-  *                         existence skip) against a durable FileStore
+  *                         the real push path (PushTableSink: DDL on first
+  *                         sight, byte-capped batches, bounded retry,
+  *                         per-batch existence skip) against a durable
+  *                         FileStore
   *   manifest.dir          manifest output                   (s3.manifest.prefix.folder)
   *   run-mode              import | manifest | import_and_manifest (default)
   *   skip.existing.records true|false (default true)         (F5)
@@ -49,6 +50,15 @@ object IngestMain {
         s"unknown $k=$v; expected one of ${choices.map(_._1).mkString(" | ")}"))
     }
 
+    // a value that does not parse names its key=value, not just the value
+    def parsed[T](k: String)(parse: String => T): Option[T] =
+      conf.get(k).map { v =>
+        try parse(v) catch {
+          case scala.util.control.NonFatal(e) =>
+            throw new IllegalArgumentException(s"bad $k=$v: ${e.getMessage}", e)
+        }
+      }
+
     // validate before building a session so bad invocations fail fast
     val inputPrefixes = required("input.prefixes").split(',').toSeq
     val tableSinkDir = required("table.sink.dir")
@@ -60,6 +70,11 @@ object IngestMain {
     val pushStore = oneOf[Option[() => PushTableSink.Store]]("table.sink.impl", "parquet")(
       "parquet" -> None,
       "filestore" -> Some(() => FileStore(tableSinkDir)))
+    val skipExisting = parsed("skip.existing.records")(_.toBoolean).getOrElse(true)
+    val maxObjectBytes = parsed("object.maximum.size")(_.toLong).getOrElse(2200000000L)
+    val timeFilter = TimeFilter(
+      earlierThan = parsed("skip.earlier.than")(DateFmt.timestampAsLong).getOrElse(Long.MinValue),
+      laterThan = parsed("skip.later.than")(DateFmt.timestampAsLong).getOrElse(Long.MaxValue))
 
     // under spark-submit we own the session; under tests we reuse (and
     // must not stop) the caller's
@@ -69,9 +84,6 @@ object IngestMain {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     try {
-      val timeFilter = TimeFilter(
-        earlierThan = conf.get("skip.earlier.than").map(DateFmt.timestampAsLong).getOrElse(Long.MinValue),
-        laterThan = conf.get("skip.later.than").map(DateFmt.timestampAsLong).getOrElse(Long.MaxValue))
       val keys: KeyService = conf.get("dks.url") match {
         case Some(url) => HttpKeyService(url)
         case None => StubKeyService()
@@ -92,8 +104,8 @@ object IngestMain {
         identity = identity,
         timeFilter = timeFilter,
         runMode = runMode,
-        skipExisting = conf.getOrElse("skip.existing.records", "true").toBoolean,
-        maxObjectBytes = conf.get("object.maximum.size").map(_.toLong).getOrElse(2200000000L),
+        skipExisting = skipExisting,
+        maxObjectBytes = maxObjectBytes,
         pushStore = pushStore)
 
       // the reference's end-of-run counter log (HBaseWriter.kt:309-318)

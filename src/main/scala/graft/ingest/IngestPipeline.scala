@@ -3,32 +3,38 @@ package graft.ingest
 import graft.core._
 import graft.core.RecordProcessor._
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
+import scala.collection.mutable
 
 /** The ingestion DAG (reference §3.1-§3.3), Spark-shaped:
   *
-  *   driver: catalog (S1-S4,F1) + ensureTables (W3 analogue) — a pure
-  *     file LISTING; no per-file metadata reads or key-service calls
-  *     happen on the driver (at ~100k files that serial I/O would be
-  *     hours of driver time before the first task)
-  *   executors: one task per file — read metadata sidecar (E1), resolve
-  *     the file key (E2, per-JVM DKS cache), open, decrypt (E4), gunzip
-  *     (E5), read lines (S5), full record chain (T1-T8, E6, K1-K5) — a
-  *     single narrow mapPartitions, no shuffle; an undecodable file
-  *     emits one skipped-file marker row instead of failing the job
-  *     (the reference logs-and-continues past failing files)
-  *   sinks: versioned-cell table sink with existence anti-join (F5,
-  *     W1-W2) and per-file manifest CSVs (W4-W5), forked off one cached
-  *     Dataset (run-mode gate W6); counters derived from that same
-  *     cached Dataset (W7), so re-computation can never skew them
+  *   driver: catalog (S1-S4,F1) — a pure file LISTING; no per-file
+  *     metadata reads or key-service calls happen on the driver (at
+  *     ~100k files that serial I/O would be hours of driver time before
+  *     the first task)
+  *   executors: one task per file ([[fileSlices]]) — read metadata
+  *     sidecar (E1), resolve the file key (E2, per-JVM DKS cache), open,
+  *     decrypt (E4), gunzip (E5), read lines (S5), full record chain
+  *     (T1-T8, E6, K1-K5); an undecodable file emits one skipped-file
+  *     marker row instead of failing the job (the reference logs and
+  *     continues past failing files)
+  *   sinks, push store: the same task streams its rows on into the
+  *     puts (W1-W3, F5, tables created on first sight) and its own
+  *     manifest spool (W4-W5), and returns its counters (W7) — one
+  *     narrow job, no cache, no shuffle, like the reference's
+  *     worker-per-file
+  *   sinks, parquet stand-in: a parquet write needs a Dataset, so the
+  *     versioned-cell sink with existence anti-join (F5) and the
+  *     manifest regroup fork off one cached Dataset, and the counters
+  *     are aggregated from that same cached Dataset
   *
   * Scale shape: encrypted+gzipped inputs are not splittable, so
   * partition-per-file is the parallelism unit exactly like the
   * reference's thread-per-file — but scheduled across every executor
-  * core in the cluster instead of 10 threads. No shuffle touches record
-  * bodies except the manifest regroup (file-sized, tiny) and the
-  * anti-join (key+version only when the sink needs it).
+  * core in the cluster instead of 10 threads.
   */
 object IngestPipeline {
 
@@ -123,13 +129,17 @@ object IngestPipeline {
              timeFilter: TimeFilter = TimeFilter(),
              ivStrategy: IvStrategy = IvStrategy.Random): Dataset[IngestedRow] = {
     import spark.implicits._
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    // one partition per file: the unit of parallelism for non-splittable inputs
-    val taskDs = spark.createDataset(tasks).repartition(math.max(tasks.size, 1))
-    taskDs.mapPartitions { it =>
-      it.flatMap(task => fileRows(task, keys, identity, timeFilter, ivStrategy, hadoopConf))
-    }
+    val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    spark.createDataset(fileSlices(spark, tasks)
+      .flatMap(task => fileRows(task, keys, identity, timeFilter, ivStrategy, hadoopConf)))
   }
+
+  /** The tasks as an RDD with exactly one file per partition — the unit
+    * of parallelism for non-splittable inputs. `parallelize` slices n
+    * elements into n partitions of one each; a round-robin
+    * `repartition(n)` leaves some partitions empty and others doubled. */
+  private def fileSlices(spark: SparkSession, tasks: Seq[FileTask]): RDD[FileTask] =
+    spark.sparkContext.parallelize(tasks, math.max(tasks.size, 1))
 
   /** All rows of one file, as a lazy iterator that survives mid-stream
     * decode failures (truncated gzip, wrong key, unreadable sidecar):
@@ -139,7 +149,7 @@ object IngestPipeline {
                        identity: Envelope.RunIdentity,
                        timeFilter: TimeFilter,
                        ivStrategy: IvStrategy,
-                       hadoopConf: org.apache.spark.util.SerializableConfiguration): Iterator[IngestedRow] = {
+                       hadoopConf: SerializableConfiguration): Iterator[IngestedRow] = {
     val manifestName = CsvEscape.manifestFileName(task.database, task.collection, task.fileNumber)
 
     def marker(lineNo: Long, e: Throwable): IngestedRow =
@@ -228,10 +238,7 @@ object IngestPipeline {
   def writeTableSink(rows: Dataset[IngestedRow], sinkDir: String, skipExisting: Boolean = true): Long = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val puts = rows
-      .filter(r => r.status == Status.Ok && r.filterStatus == "DoNotFilter")
-      .map(r => (r.tableName, r.rowkey, r.version, r.envelope.getBytes("UTF-8")))
-      .toDF("tableName", "rowkey", "version", "body")
+    val puts = rows.filter(r => PushTableSink.isPut(r)).map(r => PushTableSink.cellOf(r)).toDF()
     val fs = new Path(sinkDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh =
       if (skipExisting && fs.exists(new Path(sinkDir))) {
@@ -250,24 +257,15 @@ object IngestPipeline {
     * `db.<db>.<uncoalescedCollection>-%06d.csv`, in input line order.
     * Early/late records appear here even though F2 gates them off the
     * table path (golden behavior, UCHistoricDataImporterSpec.kt:129+).
-    *
-    * Exactly the reference's two-phase shape
-    * (StreamingManifestWriter.kt:14-56): lines STREAM through a local
-    * spool file (the group arrives sorted by Spark's spill-capable
-    * flatMapSortedGroups — no whole-manifest string is ever built),
-    * then the spool uploads to the manifest FS under a bounded retry
-    * (10 immediate attempts); zero-byte manifests are skipped; a
-    * manifest that still fails after max attempts is logged-and-dropped
-    * (best effort, like the reference), never failing the import. */
+    * Each manifest is written by [[spoolManifest]]; the group arrives
+    * sorted by Spark's spill-capable flatMapSortedGroups. */
   def writeManifests(rows: Dataset[IngestedRow], manifestDir: String): Unit = {
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
+    val hadoopConf = new SerializableConfiguration(
       rows.sparkSession.sparkContext.hadoopConfiguration)
     writeManifests(rows, ManifestStore.HadoopFs(manifestDir, hadoopConf))
   }
 
-  /** W5 against any [[ManifestStore]] — spool-streamed render, zero-byte
-    * skip, 10-attempt upload retry with a structured give-up log, and
-    * the reference's S3 object metadata passed to every upload. */
+  /** W5 against any [[ManifestStore]]. */
   def writeManifests(rows: Dataset[IngestedRow], store: ManifestStore): Unit = {
     val spark = rows.sparkSession
     import spark.implicits._
@@ -275,30 +273,44 @@ object IngestPipeline {
       .map(r => (r.manifestFileName, r.lineNo, r.manifestLine))
       .groupByKey(_._1)
       .flatMapSortedGroups(col("_2")) { (file: String, it: Iterator[(String, Long, String)]) =>
-        val spool = java.io.File.createTempFile("graft-manifest-", ".csv")
-        val os = new java.io.BufferedOutputStream(new java.io.FileOutputStream(spool))
-        var bytes = 0L
-        try it.foreach { t =>
-          val b = t._3.getBytes("UTF-8"); os.write(b); bytes += b.length
-        } finally os.close()
-        try {
-          if (bytes > 0L) { // zero-byte manifests are skipped (W5)
-            try Retry.withRetry(Retry.Policy.manifest, s"manifest $file") {
-              store.upload(file, spool, ManifestStore.metadataFor(file))
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                graft.core.JsonLog.error("StreamingManifestWriter",
-                  "Failed to write manifest after max attempts - giving up",
-                  e, "manifest_file" -> file,
-                  "max_attempts" -> Retry.Policy.manifest.maxAttempts.toString)
-            }
-          }
-        } finally spool.delete()
+        spoolManifest(file, store)(emit => it.foreach(t => emit(t._3)))
         Iterator.single(file)
       }
       // consume every element — an ignored iterator would never pull the
       // lazily-evaluated group writers above
       .foreach((_: String) => ())
+  }
+
+  /** One manifest, in the reference's two-phase shape
+    * (StreamingManifestWriter.kt:14-56): `fill` streams lines through
+    * the function it is given into a local spool file (no
+    * whole-manifest string is ever built), then the spool uploads under
+    * a bounded retry (10 immediate attempts) with the reference's S3
+    * object metadata. A zero-byte manifest is skipped; one that still
+    * fails after max attempts is logged and dropped (best effort, like
+    * the reference), never failing the import. Returns what `fill`
+    * returns. */
+  def spoolManifest[T](file: String, store: ManifestStore)(fill: (String => Unit) => T): T = {
+    val spool = java.io.File.createTempFile("graft-manifest-", ".csv")
+    try {
+      val os = new java.io.BufferedOutputStream(new java.io.FileOutputStream(spool))
+      var bytes = 0L
+      val out =
+        try fill { line => val b = line.getBytes("UTF-8"); os.write(b); bytes += b.length }
+        finally os.close()
+      if (bytes > 0L) {
+        try Retry.withRetry(Retry.Policy.manifest, s"manifest $file") {
+          store.upload(file, spool, ManifestStore.metadataFor(file))
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            graft.core.JsonLog.error("StreamingManifestWriter",
+              "Failed to write manifest after max attempts - giving up",
+              e, "manifest_file" -> file,
+              "max_attempts" -> Retry.Policy.manifest.maxAttempts.toString)
+        }
+      }
+      out
+    } finally spool.delete()
   }
 
   /** W1 — byte-capped batching helper for push-style sinks (an HBase
@@ -341,11 +353,17 @@ object IngestPipeline {
                              unreadableFiles: Long = 0L,
                              filteredExisting: Long = 0L)
 
-  /** Whole job: catalog → decode/transform → both sinks off one cached
-    * Dataset (the reference computes the chain once and forks, we do the
-    * same via cache). Counters (W7) are aggregated from that SAME cached
-    * Dataset — not from accumulators inside a transformation, which
-    * would double-count on eviction-driven recomputes. */
+  /** Whole job: catalog → decode/transform → sinks → counters (W7).
+    *
+    * With a push store this is ONE narrow Spark job, one task per file
+    * ([[pushFiles]]), and no cache and no shuffle. Each successful task
+    * reports its own counts and puts, and the driver sums them, so a
+    * retried task is counted once.
+    *
+    * The parquet stand-in computes the chain once and forks both sinks
+    * off one cached Dataset, and aggregates the counters from that SAME
+    * cached Dataset, not from accumulators inside a transformation,
+    * which would double-count on eviction-driven recomputes. */
   def run(spark: SparkSession,
           inputPrefixes: Seq[String],
           tableSinkDir: String,
@@ -360,46 +378,79 @@ object IngestPipeline {
           pushStore: Option[() => PushTableSink.Store] = None): RunResult = {
     import spark.implicits._
     val tasks = planTasks(spark, inputPrefixes, maxObjectBytes)
-    val rows = ingest(spark, tasks, keys, identity, timeFilter, ivStrategy).cache()
-    try {
-      // Import face: either the parquet snapshot sink (test/CI stand-in)
-      // or, when a push store is configured, the W1/W2/W3/F5 push path —
-      // byte-capped batches, bounded retry, driver DDL, per-batch
-      // existence skip.
-      val put =
-        if (runMode == RunMode.Manifest) 0L
-        else pushStore match {
-          case Some(factory) =>
-            PushTableSink.write(rows, factory,
-              PushTableSink.Config(skipExisting = skipExisting))
-          case None => writeTableSink(rows, tableSinkDir, skipExisting)
+    val (byStatus, put) = pushStore match {
+      case Some(factory) =>
+        val perFile = pushFiles(spark, tasks, keys, identity, timeFilter, ivStrategy,
+          store = if (runMode == RunMode.Manifest) None else Some(factory),
+          config = PushTableSink.Config(skipExisting = skipExisting),
+          manifestDir = if (runMode == RunMode.Import) None else Some(manifestDir))
+        (perFile.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _), perFile.map(_._2).sum)
+      case None =>
+        val rows = ingest(spark, tasks, keys, identity, timeFilter, ivStrategy).cache()
+        try {
+          val put = if (runMode == RunMode.Manifest) 0L else writeTableSink(rows, tableSinkDir, skipExisting)
+          if (runMode != RunMode.Import) writeManifests(rows, manifestDir)
+          (rows.groupByKey(r => (r.status, r.filterStatus)).count().collect().toMap, put)
+        } finally rows.unpersist()
+    }
+    def total(status: String): Long =
+      byStatus.collect { case ((s, _), n) if s == status => n }.sum
+    RunResult(put,
+      filesProcessed = tasks.size.toLong,
+      recordsProcessed = total(Status.Ok),
+      skippedMissingId = total(Status.MissingId),
+      skippedMalformed = total(Status.Malformed),
+      tooEarly = byStatus.getOrElse((Status.Ok, "FilterTooEarly"), 0L),
+      tooLate = byStatus.getOrElse((Status.Ok, "FilterTooLate"), 0L),
+      unreadableFiles = total(Status.UnreadableFile),
+      // F5 visibility: writable records minus records actually put =
+      // cells the existence skip filtered (the reference declares this
+      // counter but its filter never returns FilterExists — here the
+      // skip path is real, so the counter is too). Import-off and
+      // skipExisting=false runs report 0 by construction.
+      filteredExisting =
+        if (runMode == RunMode.Manifest || !skipExisting) 0L
+        else byStatus.getOrElse((Status.Ok, "DoNotFilter"), 0L) - put)
+  }
+
+  /** The push-store run's one job: each task streams its file's rows
+    * once, in line order, through the puts into `store` (see
+    * [[PushTableSink.putAll]]) and the file's manifest spool into
+    * `manifestDir` (see [[spoolManifest]]) — the reference's
+    * worker-per-file with its StreamingManifestWriter. Returns per file
+    * its rows by (status, filterStatus) and the cells it put. */
+  private def pushFiles(spark: SparkSession,
+                        tasks: Seq[FileTask],
+                        keys: KeyService,
+                        identity: Envelope.RunIdentity,
+                        timeFilter: TimeFilter,
+                        ivStrategy: IvStrategy,
+                        store: Option[() => PushTableSink.Store],
+                        config: PushTableSink.Config,
+                        manifestDir: Option[String]): Array[(Map[(String, String), Long], Long)] = {
+    val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val manifests = manifestDir.map(ManifestStore.HadoopFs(_, hadoopConf))
+    fileSlices(spark, tasks).map { task =>
+      val counts = mutable.HashMap.empty[(String, String), Long]
+      def stream(emit: String => Unit): Long = {
+        val rows = fileRows(task, keys, identity, timeFilter, ivStrategy, hadoopConf).map { r =>
+          val k = (r.status, r.filterStatus)
+          counts(k) = counts.getOrElse(k, 0L) + 1L
+          if (r.status == Status.Ok) emit(r.manifestLine)
+          r
         }
-      if (runMode != RunMode.Import) writeManifests(rows, manifestDir)
-      val byStatus: Map[(String, String), Long] =
-        rows.groupByKey(r => (r.status, r.filterStatus)).count().collect().toMap
-      def total(status: String): Long =
-        byStatus.collect { case ((s, _), n) if s == status => n }.sum
-      val okUnfiltered = byStatus.getOrElse((Status.Ok, "DoNotFilter"), 0L)
-      RunResult(put,
-        filesProcessed = tasks.size.toLong,
-        recordsProcessed = total(Status.Ok),
-        skippedMissingId = total(Status.MissingId),
-        skippedMalformed = total(Status.Malformed),
-        tooEarly = byStatus.getOrElse((Status.Ok, "FilterTooEarly"), 0L),
-        tooLate = byStatus.getOrElse((Status.Ok, "FilterTooLate"), 0L),
-        unreadableFiles = total(Status.UnreadableFile),
-        // F5 visibility: writable records minus records actually put =
-        // cells the existence skip filtered (the reference declares this
-        // counter but its filter never returns FilterExists — here the
-        // skip path is real, so the counter is too). Import-off and
-        // skipExisting=false runs report 0 by construction. Clamped at
-        // 0: the push sink's put counter has Spark's at-least-once
-        // accumulator semantics under task retry, so the difference is
-        // approximate in crash-retry runs — the STORE state stays
-        // exactly-once regardless.
-        filteredExisting =
-          if (runMode == RunMode.Manifest || !skipExisting) 0L
-          else math.max(0L, okUnfiltered - put))
-    } finally rows.unpersist()
+        store match {
+          case Some(factory) =>
+            PushTableSink.putAll(rows.filter(PushTableSink.isPut).map(PushTableSink.cellOf), factory(), config)
+          case None => rows.foreach(_ => ()); 0L
+        }
+      }
+      val put = manifests match {
+        case Some(m) =>
+          spoolManifest(CsvEscape.manifestFileName(task.database, task.collection, task.fileNumber), m)(stream)
+        case None => stream(_ => ())
+      }
+      (counts.toMap, put)
+    }.collect()
   }
 }

@@ -2,14 +2,15 @@ package graft.ingest
 
 import graft.ingest.IngestPipeline.{IngestedRow, Status, groupedByBytes}
 import org.apache.spark.sql.Dataset
+import scala.collection.mutable
 
 /** W1/W2/W3/F5 — the push-style sink contract for a versioned-cell
   * store (HBase-shaped: `Table.put(List<Put>)` + `existsAll`), driven
-  * from `foreachPartition` with byte-capped batches and bounded put
-  * retry. The parquet sink in IngestPipeline is the snapshot-style
-  * test stand-in; THIS is the shape a live cluster store needs:
-  * per-batch existence filtering is read-your-writes-correct under
-  * task retries, where a snapshot anti-join is not (SURVEY.md §4).
+  * per task through [[PushTableSink.putAll]] with byte-capped batches
+  * and bounded put retry. The parquet sink in IngestPipeline is the
+  * snapshot-style test stand-in; THIS is the shape a live cluster store
+  * needs: per-batch existence filtering is read-your-writes-correct
+  * under task retries, where a snapshot anti-join is not (SURVEY.md §4).
   */
 object PushTableSink {
 
@@ -107,41 +108,47 @@ object PushTableSink {
                           putPolicy: Retry.Policy = Retry.Policy.put,
                           tableSpec: TableSpec = TableSpec())
 
-  /** Write every ok+unfiltered row. Returns the number of cells actually
-    * put (post existence-skip), counted on an accumulator; note a
-    * retried task re-counts its successful puts — the STORE state is
-    * exactly-once via F5, the counter is Spark's usual at-least-once
-    * accumulator semantics. Failures propagate and fail the task (Spark
-    * retries it; F5 makes the replay idempotent). */
+  /** Write every ok+unfiltered row in one job, each task through
+    * [[putAll]]. Returns the number of cells actually put (post
+    * existence-skip), summed from the successful tasks' own counts, so
+    * a retried task is counted once. Failures propagate and fail the
+    * task (Spark retries it; F5 makes the replay idempotent). */
   def write(rows: Dataset[IngestedRow], storeFactory: () => Store, config: Config = Config()): Long = {
     val spark = rows.sparkSession
-    // driver-side DDL over the distinct table names (W3): do it once,
-    // not per task, exactly like the reference's primed cache
     import spark.implicits._
-    val tables = rows.filter(r => r.status == Status.Ok && r.filterStatus == "DoNotFilter")
-      .map(_.tableName).distinct().collect()
-    val driverStore = storeFactory()
-    tables.foreach(driverStore.ensureTable(_, config.tableSpec))
+    rows.filter(r => isPut(r))
+      .mapPartitions(it => Iterator.single(putAll(it.map(cellOf), storeFactory(), config)))
+      .collect().sum
+  }
 
-    val putCount = spark.sparkContext.longAccumulator("push_sink_puts")
-    rows.filter(r => r.status == Status.Ok && r.filterStatus == "DoNotFilter")
-      .foreachPartition { (it: Iterator[IngestedRow]) =>
-        val store = storeFactory()
-        val cells = it.map(r => CellPut(r.tableName, r.rowkey, r.version, r.envelope.getBytes("UTF-8")))
-        groupedByBytes(cells, config.maxBatchBytes)(_.body.length.toLong).foreach { batch =>
-          batch.groupBy(_.tableName).foreach { case (table, tableCells) =>
-            val put = Retry.withRetry(config.putPolicy, s"putBatch $table") {
-              val fresh =
-                if (config.skipExisting)
-                  tableCells.zip(store.exists(table, tableCells)).collect { case (c, false) => c }
-                else tableCells
-              if (fresh.nonEmpty) store.putBatch(table, fresh)
-              fresh.size
-            }
-            putCount.add(put.toLong)
-          }
+  /** The rows the table face writes: ok, and inside the F2 window. */
+  def isPut(r: IngestedRow): Boolean = r.status == Status.Ok && r.filterStatus == "DoNotFilter"
+
+  def cellOf(r: IngestedRow): CellPut = CellPut(r.tableName, r.rowkey, r.version, r.envelope.getBytes("UTF-8"))
+
+  /** One task's puts: byte-capped batches (W1), and per batch and table
+    * an existence skip (F5) and a bounded put retry (W2). A table is
+    * created the first time the task sees a cell for it (W3) — the
+    * reference's "on first sight, races tolerated" DDL
+    * (HbaseClient.kt:62-122): `ensureTable` is idempotent, so tasks
+    * racing to create one table are harmless, and a table exists only
+    * if a writable row named it. Returns the number of cells put. */
+  def putAll(cells: Iterator[CellPut], store: Store, config: Config): Long = {
+    val ensured = mutable.HashSet.empty[String]
+    var put = 0L
+    groupedByBytes(cells, config.maxBatchBytes)(_.body.length.toLong).foreach { batch =>
+      batch.groupBy(_.tableName).foreach { case (table, tableCells) =>
+        if (ensured.add(table)) store.ensureTable(table, config.tableSpec)
+        put += Retry.withRetry(config.putPolicy, s"putBatch $table") {
+          val fresh =
+            if (config.skipExisting)
+              tableCells.zip(store.exists(table, tableCells)).collect { case (c, false) => c }
+            else tableCells
+          if (fresh.nonEmpty) store.putBatch(table, fresh)
+          fresh.size
         }
       }
-    putCount.value
+    }
+    put
   }
 }

@@ -117,7 +117,7 @@ object IngestVerify {
           s"push and bulk must write the same cell count: push=$put bulk=${report.cells}")
         // the table list is driver-bounded (|collections| = 3 here)
         val sp = s; import sp.implicits._
-        val tables = rows.filter(r => r.status == "ok" && r.filterStatus == "DoNotFilter")
+        val tables = rows.filter(r => PushTableSink.isPut(r))
           .map(_.tableName).distinct().collect().sorted
         def readState(root: String) = tables.map { t =>
           s.read.format("graft-cells").option("root", root).option("table", t).load()

@@ -105,4 +105,12 @@ class IngestMainSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("an unknown table.sink.impl is rejected, not run as parquet") {
     rejectsBeforeWriting("table.sink.impl=hbase")
   }
+
+  test("a skip.existing.records that is not a boolean is rejected by name") {
+    rejectsBeforeWriting("skip.existing.records=yes")
+  }
+
+  test("an object.maximum.size that is not a byte count is rejected by name") {
+    rejectsBeforeWriting("object.maximum.size=2GB")
+  }
 }

@@ -2,13 +2,16 @@ package graft.ingest
 
 import graft.core._
 import graft.ingest.IngestPipeline._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, spark_partition_id}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Path => JPath}
 import java.util.Base64
 import java.util.zip.GZIPOutputStream
+import scala.jdk.CollectionConverters._
 
 /** End-to-end replica of the reference integration spec
   * (UCHistoricDataImporterSpec.kt): generate the same dump-file shapes
@@ -133,9 +136,8 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(versions.contains(DateFmt.EpochMillis)) // no timestamps at all
   }
 
-  test("undecodable files skip with marker rows instead of failing the run (per-file continue)") {
-    val dir = Files.createTempDirectory("graft-ingest-bad")
-    Fixtures.writeDumpFile(dir, "database-1", "collection-1", 1)
+  /** Two files that pass the catalog but cannot be decoded. */
+  private def writeUndecodableFiles(dir: JPath): Unit = {
     def meta: String =
       s"""{"keyEncryptionKeyId": "k", "plaintextDatakey": "$fileKeyB64", """ +
         s""""encryptedEncryptionKey": "e", "initialisationVector": "${Base64.getEncoder.encodeToString(new Array[Byte](16))}"}"""
@@ -146,6 +148,12 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // drop) and dies in the GZIP header read — the classic poison file
     Files.write(dir.resolve("bad-db.empty-coll.0001.json.gz.enc"), Array.emptyByteArray)
     Files.write(dir.resolve("bad-db.empty-coll.0001.json.encryption.json"), meta.getBytes("UTF-8"))
+  }
+
+  test("undecodable files skip with marker rows instead of failing the run (per-file continue)") {
+    val dir = Files.createTempDirectory("graft-ingest-bad")
+    Fixtures.writeDumpFile(dir, "database-1", "collection-1", 1)
+    writeUndecodableFiles(dir)
 
     val r = IngestPipeline.run(spark, Seq(dir.toString),
       dir.resolve("sink").toString, dir.resolve("manifests").toString,
@@ -154,6 +162,114 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.unreadableFiles == 2)
     assert(r.recordsProcessed == 18) // the good file decodes fully
     assert(r.put == 18)
+  }
+
+  test("ingest gives each file its own partition") {
+    Seq(2, 4, 5).foreach { n =>
+      val dir = Files.createTempDirectory(s"graft-ingest-slices-$n")
+      (1 to n).foreach(i => Fixtures.writeDumpFile(dir, "database-1", s"collection-$i", 1))
+      val rows = IngestPipeline.ingest(spark, IngestPipeline.planTasks(spark, Seq(dir.toString)),
+        StubKeyService(), identity)
+      val filesByPartition = rows.select(spark_partition_id().as("p"), col("dataPath")).distinct()
+        .groupBy("p").count().collect().map(_.getLong(1))
+      assert(rows.rdd.getNumPartitions == n, s"$n files")
+      assert(filesByPartition.toSeq == Seq.fill(n)(1L), s"$n files")
+    }
+  }
+
+  // ------------------------------------------------ push-store runs
+
+  /** The spec's three fixtures plus the two undecodable files. */
+  private lazy val mixed: JPath = {
+    val dir = Files.createTempDirectory("graft-ingest-mixed")
+    Fixtures.writeDumpFile(dir, "database-1", "collection-1", 1)
+    Fixtures.writeDumpFile(dir, "database-1", "collection-thirtyone", 1)
+    Fixtures.writeDumpFile(dir, "agent_core", "agentToDoArchive", 1)
+    writeUndecodableFiles(dir)
+    dir
+  }
+
+  /** Runs over [[mixed]] into `out/cells` and `out/manifests`; `push`
+    * selects a FileStore push store over the parquet stand-in. */
+  private def runMixed(out: JPath, push: Boolean, runMode: RunMode = RunMode.ImportAndManifest): RunResult = {
+    val cells = out.resolve("cells").toString
+    IngestPipeline.run(spark, Seq(mixed.toString), cells, out.resolve("manifests").toString,
+      StubKeyService(), identity,
+      timeFilter = RecordProcessor.TimeFilter(
+        earlierThan = DateFmt.timestampAsLong("2010-01-01T00:00:00.000Z"),
+        laterThan = DateFmt.timestampAsLong("2019-12-31T23:59:59.999Z")),
+      ivStrategy = IvStrategy.Deterministic("spec"),
+      runMode = runMode,
+      pushStore = if (push) Some(() => FileStore(cells)) else None)
+  }
+
+  /** Manifest name → bytes, without Hadoop's .crc sidecars. */
+  private def manifests(out: JPath): Map[String, Seq[Byte]] = {
+    val dir = out.resolve("manifests").toFile
+    Option(dir.listFiles()).toSeq.flatten.filterNot(_.getName.startsWith("."))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+  }
+
+  /** Stage count of each job `body` starts. The listener bus delivers
+    * events in order, so once a marker job started after `body` is
+    * seen, so is every job `body` started. */
+  private def jobsStartedBy(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.marker") != null)) marked.countDown()
+        else stages.add(e.stageInfos.size)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(marked.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+    } finally sc.removeSparkListener(listener)
+    stages.asScala.toSeq
+  }
+
+  test("push run: one narrow job, no cache, the parquet run's counts and manifests, idempotent re-run") {
+    val parquetOut = Files.createTempDirectory("graft-ingest-parquet-out")
+    val pushOut = Files.createTempDirectory("graft-ingest-push-out")
+    val parquet = runMixed(parquetOut, push = false)
+    var push: RunResult = null
+    val jobs = jobsStartedBy { push = runMixed(pushOut, push = true) }
+    assert(jobs == Seq(1)) // one job of one stage: no exchange
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(push == parquet)
+    assert(push.filesProcessed == 5 && push.unreadableFiles == 2 && push.put == 48)
+    assert(manifests(pushOut).keySet == Set(
+      "db.database-1.collection-1-000001.csv",
+      "db.database-1.collection-thirtyone-000001.csv",
+      "db.agent_core.agentToDoArchive-000001.csv"))
+    assert(manifests(pushOut) == manifests(parquetOut))
+
+    val store = FileStore(pushOut.resolve("cells").toString)
+    assert(store.scanTable("database_1:collection_1").size == 16)
+
+    // re-run: the existence skip drops every cell (F5 idempotence)
+    val again = runMixed(pushOut, push = true)
+    assert(again.put == 0)
+    assert(again.filteredExisting == 48)
+  }
+
+  test("push run modes: import uploads no manifest, manifest creates no table") {
+    val importOut = Files.createTempDirectory("graft-ingest-import-out")
+    val imported = runMixed(importOut, push = true, RunMode.Import)
+    assert(imported.put == 48)
+    assert(FileStore(importOut.resolve("cells").toString).scanTable("agent_core:agentToDo").size == 16)
+    assert(!Files.exists(importOut.resolve("manifests")))
+
+    val manifestOut = Files.createTempDirectory("graft-ingest-manifest-out")
+    val manifested = runMixed(manifestOut, push = true, RunMode.Manifest)
+    assert(manifested.put == 0 && manifested.filteredExisting == 0)
+    assert(manifested.recordsProcessed == imported.recordsProcessed)
+    assert(!Files.exists(manifestOut.resolve("cells")))
+    assert(manifests(manifestOut).size == 3)
   }
 
   test("groupedByBytes batches under the cap with at least one element each (W1)") {
