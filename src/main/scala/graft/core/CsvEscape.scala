@@ -8,10 +8,12 @@ package graft.core
   */
 object CsvEscape {
 
-  def escapeCsv(value: String): String =
-    if (value.exists(c => c == ',' || c == '"' || c == '\r' || c == '\n'))
-      "\"" + value.replace("\"", "\"\"") + "\""
-    else value
+  def escapeCsv(value: String): String = {
+    var i = 0
+    while (i < value.length && { val c = value.charAt(i); c != ',' && c != '"' && c != '\r' && c != '\n' })
+      i += 1
+    if (i == value.length) value else "\"" + value.replace("\"", "\"\"") + "\""
+  }
 
   final case class ManifestRecord(id: String,
                                   timestamp: Long,
@@ -25,9 +27,18 @@ object CsvEscape {
   /** One manifest CSV line incl. trailing newline — field order is
     * id|ts|db|collection|source|outerType|originalId|innerType
     * (StreamingManifestWriter.kt:58-59). */
-  def csv(r: ManifestRecord): String =
-    Seq(r.id, r.timestamp.toString, r.db, r.collection, r.source, r.outerType, r.originalId, r.innerType)
-      .map(escapeCsv).mkString("", "|", "\n")
+  def csv(r: ManifestRecord): String = {
+    val sb = new java.lang.StringBuilder(128)
+    sb.append(escapeCsv(r.id)).append('|')
+      .append(r.timestamp).append('|') // digits and '-': never quoted
+      .append(escapeCsv(r.db)).append('|')
+      .append(escapeCsv(r.collection)).append('|')
+      .append(escapeCsv(r.source)).append('|')
+      .append(escapeCsv(r.outerType)).append('|')
+      .append(escapeCsv(r.originalId)).append('|')
+      .append(escapeCsv(r.innerType)).append('\n')
+      .toString
+  }
 
   def topicName(db: String, collection: String): String = s"db.$db.$collection"
 

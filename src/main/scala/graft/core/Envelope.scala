@@ -27,16 +27,27 @@ object Envelope {
   final case class EncryptionResult(initialisationVector: String, encrypted: String)
   final case class DataKeyResult(dataKeyEncryptionKeyId: String, plaintextDataKey: String, ciphertextDataKey: String)
 
-  // per-record hot path: one formatter per thread, not per call
-  // (SimpleDateFormat is reusable within a thread, never across)
-  private val wallClockFmt: ThreadLocal[SimpleDateFormat] =
-    ThreadLocal.withInitial { () =>
-      val df = new SimpleDateFormat("yyyy-MM-dd'T'HH:mm:ss.SSS")
-      df.setTimeZone(TimeZone.getTimeZone("UTC"))
-      df
+  /** Per-thread wall-clock formatter that remembers its last
+    * (millis → text): the clock is read once per record, and records of
+    * one millisecond share the text (SimpleDateFormat is reusable within
+    * a thread, never across). */
+  private final class WallClock {
+    private val df = new SimpleDateFormat("yyyy-MM-dd'T'HH:mm:ss.SSS")
+    df.setTimeZone(TimeZone.getTimeZone("UTC"))
+    private var lastMillis = 0L
+    private var lastText: String = null
+    def format(d: Date): String = {
+      if (lastText == null || d.getTime != lastMillis) {
+        lastText = df.format(d)
+        lastMillis = d.getTime
+      }
+      lastText
     }
+  }
 
-  private def wallClockFormat(d: Date): String = wallClockFmt.get().format(d)
+  private val wallClock: ThreadLocal[WallClock] = ThreadLocal.withInitial(() => new WallClock)
+
+  private def wallClockFormat(d: Date): String = wallClock.get().format(d)
 
   /** `@type` of the transformed record: primitive → its string value,
     * absent → MONGO_IMPORT, object/array/null → error (the reference's

@@ -159,34 +159,41 @@ object Json {
       }
       JArr(b.result())
     }
+    /** Clean runs (no quote, no backslash) are copied whole: a string
+      * without escapes is one `substring`, and a builder is only made
+      * once the first backslash shows up. */
     private def str(): String = {
       expect('"')
-      val sb = new StringBuilder
+      var sb: java.lang.StringBuilder = null
+      var run = pos
       while (true) {
+        while (pos < s.length && { val c = s.charAt(pos); c != '"' && c != '\\' }) pos += 1
         if (eof) fail("unterminated string")
-        val c = s.charAt(pos); pos += 1
-        c match {
-          case '"' => return sb.toString
-          case '\\' =>
-            if (eof) fail("bad escape")
-            val e = s.charAt(pos); pos += 1
-            e match {
-              case '"' => sb.append('"')
-              case '\\' => sb.append('\\')
-              case '/' => sb.append('/')
-              case 'b' => sb.append('\b')
-              case 'f' => sb.append('\f')
-              case 'n' => sb.append('\n')
-              case 'r' => sb.append('\r')
-              case 't' => sb.append('\t')
-              case 'u' =>
-                if (pos + 4 > s.length) fail("bad \\u escape")
-                sb.append(Integer.parseInt(s.substring(pos, pos + 4), 16).toChar)
-                pos += 4
-              case other => fail(s"bad escape '\\$other'")
-            }
-          case other => sb.append(other)
+        if (s.charAt(pos) == '"') {
+          pos += 1
+          return if (sb == null) s.substring(run, pos - 1) else sb.append(s, run, pos - 1).toString
         }
+        if (sb == null) sb = new java.lang.StringBuilder(pos - run + 16)
+        sb.append(s, run, pos)
+        pos += 1
+        if (eof) fail("bad escape")
+        val e = s.charAt(pos); pos += 1
+        e match {
+          case '"' => sb.append('"')
+          case '\\' => sb.append('\\')
+          case '/' => sb.append('/')
+          case 'b' => sb.append('\b')
+          case 'f' => sb.append('\f')
+          case 'n' => sb.append('\n')
+          case 'r' => sb.append('\r')
+          case 't' => sb.append('\t')
+          case 'u' =>
+            if (pos + 4 > s.length) fail("bad \\u escape")
+            sb.append(Integer.parseInt(s.substring(pos, pos + 4), 16).toChar)
+            pos += 4
+          case other => fail(s"bad escape '\\$other'")
+        }
+        run = pos
       }
       sys.error("unreachable")
     }
@@ -217,32 +224,35 @@ object Json {
     * zeros), floats via Double.toString (1.50 -> "1.5"), minimal string
     * escaping plus \\uXXXX for control / 0x7f-0x9f / U+2000-U+20FF. */
   def renderCompact(v: JValue): String = {
-    val sb = new StringBuilder
-    renderTo(sb, v, klaxonNum, klaxonEscape)
+    val sb = new java.lang.StringBuilder
+    renderTo(sb, v, gson = false)
     sb.toString
   }
 
   /** Gson serializeNulls-style: compact, original number literals,
     * HTML-safe escaping of < > & = ' plus U+2028/U+2029. */
   def renderRecord(v: JValue): String = {
-    val sb = new StringBuilder
-    renderTo(sb, v, (n: JNum) => n.raw, gsonEscape)
+    val sb = new java.lang.StringBuilder
+    renderTo(sb, v, gson = true)
     sb.toString
   }
 
-  private def renderTo(sb: StringBuilder, v: JValue, numFmt: JNum => String, esc: (StringBuilder, String) => Unit): Unit =
+  // java.lang.StringBuilder, not Scala's: escapeTo appends clean runs
+  // with append(CharSequence, start, end), which Scala's builder lacks
+  // (the call would auto-tuple into append(Any))
+  private def renderTo(sb: java.lang.StringBuilder, v: JValue, gson: Boolean): Unit =
     v match {
       case JNull => sb.append("null")
       case JBool(b) => sb.append(if (b) "true" else "false")
-      case n: JNum => sb.append(numFmt(n))
-      case JStr(s) => sb.append('"'); esc(sb, s); sb.append('"')
+      case n: JNum => sb.append(if (gson) n.raw else klaxonNum(n))
+      case JStr(s) => sb.append('"'); escapeTo(sb, s, gson); sb.append('"')
       case JArr(items) =>
         sb.append('[')
         var first = true
         items.foreach { it =>
           if (!first) sb.append(',')
           first = false
-          renderTo(sb, it, numFmt, esc)
+          renderTo(sb, it, gson)
         }
         sb.append(']')
       case o: JObj =>
@@ -251,8 +261,8 @@ object Json {
         o.entries.foreach { case (k, value) =>
           if (!first) sb.append(',')
           first = false
-          sb.append('"'); esc(sb, k); sb.append('"'); sb.append(':')
-          renderTo(sb, value, numFmt, esc)
+          sb.append('"'); escapeTo(sb, k, gson); sb.append('"'); sb.append(':')
+          renderTo(sb, value, gson)
         }
         sb.append('}')
     }
@@ -261,39 +271,60 @@ object Json {
     if (n.raw.exists(c => c == '.' || c == 'e' || c == 'E')) n.raw.toDouble.toString
     else BigInt(n.raw).toString
 
-  private def klaxonEscape(sb: StringBuilder, s: String): Unit =
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case '\b' => sb.append("\\b")
-      case '\f' => sb.append("\\f")
-      case c if c < ' ' || (c.toInt >= 0x7f && c.toInt <= 0x9f) || (c.toInt >= 0x2000 && c.toInt <= 0x20ff) =>
-        sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  /** Appends `s` with every character that needs escaping replaced by
+    * its escape; the runs between are appended whole, so a string with
+    * nothing to escape is one append. */
+  private def escapeTo(sb: java.lang.StringBuilder, s: String, gson: Boolean): Unit = {
+    var run = 0
+    var i = 0
+    while (i < s.length) {
+      val e = if (gson) gsonEscapeOf(s.charAt(i)) else klaxonEscapeOf(s.charAt(i))
+      if (e != null) {
+        sb.append(s, run, i).append(e)
+        run = i + 1
+      }
+      i += 1
     }
+    if (run == 0) sb.append(s) else sb.append(s, run, s.length)
+  }
 
-  private def gsonEscape(sb: StringBuilder, s: String): Unit =
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case '\b' => sb.append("\\b")
-      case '\f' => sb.append("\\f")
-      case '<' => sb.append("\\u003c")
-      case '>' => sb.append("\\u003e")
-      case '&' => sb.append("\\u0026")
-      case '=' => sb.append("\\u003d")
-      case '\'' => sb.append("\\u0027")
-      case c if c.toInt == 0x2028 => sb.append("\\u2028")
-      case c if c.toInt == 0x2029 => sb.append("\\u2029")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
+  /** klaxon's escape of `c`, or null when it is written as is. */
+  private def klaxonEscapeOf(c: Char): String = c match {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case '\b' => "\\b"
+    case '\f' => "\\f"
+    case _ if c < ' ' || (c >= 0x7f && c <= 0x9f) || (c >= 0x2000 && c <= 0x20ff) => unicodeEscape(c)
+    case _ => null
+  }
+
+  /** Gson's escape of `c`, or null when it is written as is. */
+  private def gsonEscapeOf(c: Char): String = c match {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case '\b' => "\\b"
+    case '\f' => "\\f"
+    case '<' => "\\u003c"
+    case '>' => "\\u003e"
+    case '&' => "\\u0026"
+    case '=' => "\\u003d"
+    case '\'' => "\\u0027"
+    case _ if c < ' ' || c == 0x2028 || c == 0x2029 => unicodeEscape(c)
+    case _ => null
+  }
+
+  private val HexDigits = "0123456789abcdef"
+
+  /** `\\u` plus four lowercase hex digits. */
+  private def unicodeEscape(c: Char): String =
+    new String(Array('\\', 'u', HexDigits.charAt((c >> 12) & 0xf), HexDigits.charAt((c >> 8) & 0xf),
+      HexDigits.charAt((c >> 4) & 0xf), HexDigits.charAt(c & 0xf)))
 
   /** Top-level key sort (case-sensitive lexicographic), compact klaxon
     * rendering — MessageUtils.sortJsonByKey (MessageUtils.kt:127-133). */

@@ -134,9 +134,30 @@ object CellSegment {
   def write(dir: Path, entries: Iterator[(Array[Byte], Long, Array[Byte])],
             seqNo: Long = 0L): Meta = {
     Files.createDirectories(dir)
+    // input is key-sorted: hash each distinct key once
+    var lastKey: Array[Byte] = null
+    var lastDigest: String = null
+    writeDigested(dir, entries.map { case (key, version, body) =>
+      if (lastKey == null || !java.util.Arrays.equals(lastKey, key)) {
+        lastKey = key
+        lastDigest = FileStore.keyDigest(key)
+      }
+      (key, version, body, lastDigest)
+    }, seqNo)
+  }
+
+  /** [[write]] for a caller that already holds each entry's
+    * [[FileStore.keyDigest]] (the fourth field) and has created `dir`. */
+  private[ingest] def writeDigested(dir: Path,
+                                    entries: Iterator[(Array[Byte], Long, Array[Byte], String)],
+                                    seqNo: Long): Meta = {
     val tmp = Files.createTempFile(dir, "bulkstage", ".tmp")
     val digest = MessageDigest.getInstance("SHA-256")
-    val index = Vector.newBuilder[IndexEntry]
+    val header = java.nio.ByteBuffer.allocate(16)
+    // index entries stream into memory as the data region is written,
+    // and are appended after it
+    val index = new java.io.ByteArrayOutputStream()
+    val indexOut = new DataOutputStream(index)
     // distinct key digests for the ROW bloom — input is key-sorted, so
     // a key's digest repeats only consecutively (one entry per key)
     val bloomKeys = Vector.newBuilder[String]
@@ -150,7 +171,7 @@ object CellSegment {
     var prevBody: Array[Byte] = null
     val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16))
     try {
-      entries.foreach { case (key, version, body) =>
+      entries.foreach { case (key, version, body, keyHex) =>
         val dup = prevKey != null && prevVersion == version && java.util.Arrays.equals(prevKey, key)
         if (dup) {
           require(java.util.Arrays.equals(prevBody, body),
@@ -161,13 +182,15 @@ object CellSegment {
           out.writeLong(version)
           out.writeInt(body.length); out.write(body)
           // the running content hash that names the file
-          digest.update(java.nio.ByteBuffer.allocate(16).putInt(key.length).putLong(version).putInt(body.length).array())
+          header.clear()
+          digest.update(header.putInt(key.length).putLong(version).putInt(body.length).array())
           digest.update(key); digest.update(body)
-          val keyHex = FileStore.keyDigest(key)
           if (prevKey == null || !java.util.Arrays.equals(prevKey, key)) {
             bloomKeys += keyHex; bloomKeyCount += 1
           }
-          index += IndexEntry(keyHex, version, offset)
+          indexOut.write(FileStore.unhex(keyHex))
+          indexOut.writeLong(version)
+          indexOut.writeLong(offset)
           offset += entryLen
           count += 1
           if (version < minV) minV = version
@@ -176,11 +199,7 @@ object CellSegment {
         }
       }
       val indexOffset = offset
-      index.result().foreach { e =>
-        out.write(hexToBytes(e.digestHex))
-        out.writeLong(e.version)
-        out.writeLong(e.offset)
-      }
+      index.writeTo(out)
       val bloomOffset = indexOffset + count.toLong * IndexEntryLen
       val bloom = emptyBloom(bloomKeyCount)
       bloomKeys.result().foreach(bloom.add)
@@ -195,7 +214,7 @@ object CellSegment {
       out.writeLong(if (count == 0) 0L else maxV)
       out.writeInt(Magic)
     } finally out.close()
-    val name = "bulk-" + digest.digest().take(8).map(b => f"$b%02x").mkString + ".seg"
+    val name = "bulk-" + FileStore.hex(digest.digest(), 0, 8) + ".seg"
     Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     Meta(name, count, if (count == 0) 0L else minV, if (count == 0) 0L else maxV, offset,
       bloomKeyCount, seqNo)
@@ -269,10 +288,10 @@ object CellSegment {
     try {
       val buf = java.nio.ByteBuffer.allocate(t.entryCount * IndexEntryLen)
       readFully(ch, buf, t.indexOffset)
-      buf.flip()
-      Vector.tabulate(t.entryCount) { _ =>
-        val d = new Array[Byte](32); buf.get(d)
-        IndexEntry(d.map(b => f"$b%02x").mkString, buf.getLong, buf.getLong)
+      val a = buf.array()
+      Vector.tabulate(t.entryCount) { i =>
+        val at = i * IndexEntryLen
+        IndexEntry(FileStore.hex(a, at, at + 32), buf.getLong(at + 32), buf.getLong(at + 40))
       }
     } finally ch.close()
   }
@@ -462,7 +481,4 @@ object CellSegment {
       (key, version, body)
     } finally ch.close()
   }
-
-  private def hexToBytes(hex: String): Array[Byte] =
-    Array.tabulate(hex.length / 2)(i => Integer.parseInt(hex.substring(2 * i, 2 * i + 2), 16).toByte)
 }

@@ -62,19 +62,44 @@ object FileStore {
     * per-byte format boxing was measurable across every store row. */
   private val sha256TL: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("SHA-256"))
-  private val HexChars = "0123456789abcdef".toCharArray
   def keyDigest(rowkey: Array[Byte]): String = {
     val md = sha256TL.get()
     md.reset()
-    val d = md.digest(rowkey)
-    val out = new Array[Char](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(2 * i) = HexChars((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = HexChars(d(i) & 0xf)
+    hex(md.digest(rowkey))
+  }
+
+  private val HexChars = "0123456789abcdef".toCharArray
+
+  /** Lowercase hex of `bytes[from, until)` — the one table-driven
+    * encoder behind key digests, segment index entries, segment names
+    * and shard names. */
+  def hex(bytes: Array[Byte], from: Int, until: Int): String = {
+    val out = new Array[Char]((until - from) * 2)
+    var i = from
+    var o = 0
+    while (i < until) {
+      out(o) = HexChars((bytes(i) >> 4) & 0xf)
+      out(o + 1) = HexChars(bytes(i) & 0xf)
       i += 1
+      o += 2
     }
     new String(out)
+  }
+
+  def hex(bytes: Array[Byte]): String = hex(bytes, 0, bytes.length)
+
+  /** Inverse of [[hex]] for an even-length string of hex digits (either
+    * case); the caller validates the digits. */
+  private[ingest] def unhex(s: String): Array[Byte] = {
+    // '0'-'9' → 0-9; 'a'-'f' and 'A'-'F' have bit 6 set → 10-15
+    def nibble(c: Char): Int = (c & 0xf) + 9 * (c >> 6)
+    val out = new Array[Byte](s.length / 2)
+    var i = 0
+    while (i < out.length) {
+      out(i) = ((nibble(s.charAt(2 * i)) << 4) | nibble(s.charAt(2 * i + 1))).toByte
+      i += 1
+    }
+    out
   }
 
   /** Parse a DELETE-TOMBSTONE file name `<digest>.<version>.d` →
@@ -258,7 +283,7 @@ object FileStore {
     * sort first, with the 0x00 range. Tables with custom splits
     * resolve through [[Splits.shardNameOf]] instead. */
   def shardOf(rowkey: Array[Byte]): String =
-    if (rowkey.isEmpty) "00" else f"${rowkey(0) & 0xff}%02x"
+    if (rowkey.isEmpty) "00" else hex(rowkey, 0, 1)
 
   /** Table SPLIT layout — the HBase region-boundary model, generalized
     * past the default 256 first-byte ranges so a table's write AND
@@ -313,7 +338,7 @@ object FileStore {
     val Default: Splits = Splits(Vector.tabulate(256)(i => Array(i.toByte)))
 
     def nameOf(start: Array[Byte]): String =
-      if (start.isEmpty) "-" else start.map(b => f"$b%02x").mkString
+      if (start.isEmpty) "-" else hex(start)
 
     /** decode a shard directory name back to its start key; None for
       * non-shard names (never prunes what it cannot parse). */
@@ -321,8 +346,7 @@ object FileStore {
       if (name == "-") Some(Array.emptyByteArray)
       else if (name.nonEmpty && name.length % 2 == 0 &&
         name.forall(c => (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f')))
-        Some(Array.tabulate(name.length / 2)(i =>
-          Integer.parseInt(name.substring(2 * i, 2 * i + 2), 16).toByte))
+        Some(unhex(name))
       else None
 
     /** HBase createTable(splitKeys) shape: N split points → N+1
@@ -350,16 +374,7 @@ final case class FileStore(rootDir: String) extends Store {
     // ':' (HBase namespace separator) is path-hostile on some filesystems
     Paths.get(rootDir, tableName.replace(':', '~'))
 
-  private def hex(bytes: Array[Byte]): String =
-    bytes.map(b => f"$b%02x").mkString
-
   private def keyDigest(rowkey: Array[Byte]): String = FileStore.keyDigest(rowkey)
-
-  private def cellPath(c: CellPut): Path = {
-    val d = keyDigest(c.rowkey)
-    tableDir(c.tableName).resolve(splitsOf(c.tableName).shardNameOf(c.rowkey))
-      .resolve(s"$d.${c.version}")
-  }
 
   /** The table's split layout: `_splits.json` if recorded, else the
     * default 256 first-byte ranges. Served from the JVM-global
@@ -747,11 +762,18 @@ final case class FileStore(rootDir: String) extends Store {
         }
         buf.toSeq.distinct.filterNot(mask.masked(digest, _))
       })
+    // ONE layout read per table per call, as in putBatch: the read lock
+    // held here keeps a region split from moving the boundaries meanwhile
+    val layouts = scala.collection.mutable.HashMap.empty[String, (Path, FileStore.Splits)]
     cells.map { c =>
-      val shardDir = tableDir(c.tableName).resolve(splitsOf(c.tableName).shardNameOf(c.rowkey))
+      val (tdir, splits) = layouts.getOrElseUpdate(c.tableName, {
+        val td = tableDir(c.tableName)
+        (td, FileStore.splitsAt(td))
+      })
+      val shardDir = tdir.resolve(splits.shardNameOf(c.rowkey))
       val d = keyDigest(c.rowkey)
       def probe(): Boolean = {
-        val raw = Files.exists(cellPath(c)) ||
+        val raw = Files.exists(shardDir.resolve(s"$d.${c.version}")) ||
           segLists.getOrElseUpdate(shardDir, segmentFiles(shardDir)).exists { seg =>
             // ROW bloom first: an absent key — the common ingest probe —
             // answers off ~1.25 B/key with no index load at all
@@ -1081,10 +1103,11 @@ final case class FileStore(rootDir: String) extends Store {
         // 15 k) without convoying hot MV shards.
         directFlush(shardDir, group, threshold, spec)
         directShards += shardDir
-      } else group.foreach { c =>
+      } else {
+      Files.createDirectories(shardDir)
+      group.foreach { c =>
       val target = shardDir.resolve(s"${keyDigest(c.rowkey)}.${c.version}")
-      Files.createDirectories(target.getParent)
-      val tmp = Files.createTempFile(target.getParent, "put", ".tmp")
+      val tmp = Files.createTempFile(shardDir, "put", ".tmp")
       // cell file = [4-byte BE rowkey length][rowkey][body]: the filename
       // carries only a digest, so the true key must live in the cell
       val buf = java.nio.ByteBuffer.allocate(4 + c.rowkey.length + c.body.length)
@@ -1107,14 +1130,14 @@ final case class FileStore(rootDir: String) extends Store {
       // not exist can never be inside an absorb window (absorbs only
       // list existing files, and a swept path is never re-listed).
       if (Files.exists(target))
-        FileStore.shardLockFor(target.getParent).synchronized {
+        FileStore.shardLockFor(shardDir).synchronized {
           Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
             StandardCopyOption.REPLACE_EXISTING)
         }
       else
         Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
-    } }
+    } } }
     // retention AFTER the batch lands, ONE directory listing per
     // touched shard: pruning per put re-listed the whole shard per
     // cell — O(cells × files-in-shard), measured as the dominant cost
@@ -1235,7 +1258,7 @@ final case class FileStore(rootDir: String) extends Store {
       val (fresh, replaces, prunedResidents) =
         if (maxVersions == Int.MaxValue) (freshAll, replacesAll, Vector.empty[String])
         else {
-          val touched = group.iterator.map(c => keyDigest(c.rowkey)).toSet
+          val touched = byCoord.keysIterator.map(_._1).toSet
           val residentVs: Map[String, Vector[Long]] = names.iterator
             .filter(n => !CellSegment.isSegment(n))
             .flatMap { n =>
@@ -1269,8 +1292,7 @@ final case class FileStore(rootDir: String) extends Store {
           val c = java.util.Arrays.compareUnsigned(a._1, b._1)
           if (c != 0) c < 0 else a._2 < b._2
         }
-        CellSegment.write(shardDir,
-          sorted.iterator.map(t => (t._1, t._2, t._3)), maxSeq + 1)
+        CellSegment.writeDigested(shardDir, sorted.iterator, maxSeq + 1)
         FileStore.autoFlushes.incrementAndGet()
       }
       replaces.foreach { case (rowkey, version, body, d) =>
@@ -1457,7 +1479,7 @@ final case class FileStore(rootDir: String) extends Store {
                   val keyLen = buf.getInt()
                   val rowkey = new Array[Byte](keyLen); buf.get(rowkey)
                   val body = new Array[Byte](buf.remaining()); buf.get(body)
-                  val keyHex = hex(rowkey)
+                  val keyHex = FileStore.hex(rowkey)
                   if (seen.add((keyHex, version))) out += ((keyHex, version, body))
                 }
               }
@@ -1470,7 +1492,7 @@ final case class FileStore(rootDir: String) extends Store {
             CellSegment.entries(seg, needBody = true).zip(CellSegment.indexOf(seg).iterator)
               .foreach { case ((k, v, b), e) =>
                 if (!masked(e.digestHex, v)) {
-                  val keyHex = hex(k)
+                  val keyHex = FileStore.hex(k)
                   if (seen.add((keyHex, v))) out += ((keyHex, v, b))
                 }
               }

@@ -82,11 +82,13 @@ object IngestPipeline {
   }
   object IvStrategy {
     case object Random extends IvStrategy {
-      // SecureRandom.nextBytes is synchronized — one shared instance
-      // would serialize every executor thread on the JVM (measured: the
-      // whole ingest pipeline bottlenecked on it). One per thread.
+      // One DRBG per thread: a DRBG keeps its state per instance, so
+      // threads never wait on each other. `new SecureRandom()` would not
+      // do that on Linux: it is NativePRNG there, and every NativePRNG
+      // instance shares one process-wide reader of /dev/urandom and its
+      // lock.
       @transient private lazy val rng: ThreadLocal[java.security.SecureRandom] =
-        ThreadLocal.withInitial(() => new java.security.SecureRandom())
+        ThreadLocal.withInitial(() => java.security.SecureRandom.getInstance("DRBG"))
       def ivFor(dataPath: String, lineNo: Long): Array[Byte] = {
         val iv = new Array[Byte](16); rng.get().nextBytes(iv); iv
       }
