@@ -10,12 +10,11 @@ import org.apache.spark.sql.SparkSession
   * application.properties):
   *
   *   input.prefixes        comma-separated input dirs/URIs   (s3.prefix.folder + suffixes)
-  *   table.sink.dir        versioned-cell sink location      (HBase stand-in)
-  *   table.sink.impl       parquet (default) | filestore — filestore runs
-  *                         the real push path (PushTableSink: DDL on first
-  *                         sight, byte-capped batches, bounded retry,
-  *                         per-batch existence skip) against a durable
-  *                         FileStore
+  *   table.sink.dir        local or mounted directory (or file: URI) of
+  *                         the FileStore versioned-cell store (HBase
+  *                         stand-in), written through PushTableSink: DDL
+  *                         on first sight, byte-capped batches, bounded
+  *                         retry, per-batch existence skip
   *   manifest.dir          manifest output                   (s3.manifest.prefix.folder)
   *   run-mode              import | manifest | import_and_manifest (default)
   *   skip.existing.records true|false (default true)         (F5)
@@ -29,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Example:
   *   spark-submit --class graft.ingest.IngestMain <jar> \
-  *     input.prefixes=s3a://bucket/dumps table.sink.dir=s3a://bucket/cells \
+  *     input.prefixes=s3a://bucket/dumps table.sink.dir=/mnt/cells \
   *     manifest.dir=s3a://bucket/manifests skip.earlier.than=2010-01-01T00:00:00.000Z
   */
 object IngestMain {
@@ -61,15 +60,12 @@ object IngestMain {
 
     // validate before building a session so bad invocations fail fast
     val inputPrefixes = required("input.prefixes").split(',').toSeq
-    val tableSinkDir = required("table.sink.dir")
+    val tableSinkDir = parsed("table.sink.dir")(localDir).getOrElse(required("table.sink.dir"))
     val manifestDir = required("manifest.dir")
     val runMode = oneOf("run-mode", "import_and_manifest")(
       "import" -> IngestPipeline.RunMode.Import,
       "manifest" -> IngestPipeline.RunMode.Manifest,
       "import_and_manifest" -> IngestPipeline.RunMode.ImportAndManifest)
-    val pushStore = oneOf[Option[() => PushTableSink.Store]]("table.sink.impl", "parquet")(
-      "parquet" -> None,
-      "filestore" -> Some(() => FileStore(tableSinkDir)))
     val skipExisting = parsed("skip.existing.records")(_.toBoolean).getOrElse(true)
     val maxObjectBytes = parsed("object.maximum.size")(_.toLong).getOrElse(2200000000L)
     val timeFilter = TimeFilter(
@@ -105,8 +101,7 @@ object IngestMain {
         timeFilter = timeFilter,
         runMode = runMode,
         skipExisting = skipExisting,
-        maxObjectBytes = maxObjectBytes,
-        pushStore = pushStore)
+        maxObjectBytes = maxObjectBytes)
 
       // the reference's end-of-run counter log (HBaseWriter.kt:309-318)
       println(s"""{"files": ${result.filesProcessed}, "records": ${result.recordsProcessed}, """ +
@@ -118,5 +113,18 @@ object IngestMain {
         "files" -> result.filesProcessed.toString, "records" -> result.recordsProcessed.toString,
         "put" -> result.put.toString, "unreadable_files" -> result.unreadableFiles.toString)
     } finally if (preExisting.isEmpty) spark.stop()
+  }
+
+  /** The cell store is a local directory: a `file:` URI resolves to its
+    * path, and any other scheme is refused — the store would read
+    * `s3a://b/c` as the relative path `s3a:/b/c` and write there. */
+  private def localDir(dir: String): String = {
+    val uri = new org.apache.hadoop.fs.Path(dir).toUri
+    Option(uri.getScheme) match {
+      case None => dir
+      case Some("file") => uri.getPath
+      case Some(scheme) => throw new IllegalArgumentException(
+        s"the cell store is a local directory, not a $scheme: URI")
+    }
   }
 }

@@ -4,7 +4,7 @@ import graft.core._
 import graft.core.RecordProcessor._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 import scala.collection.mutable
@@ -21,15 +21,14 @@ import scala.collection.mutable
   *     (T1-T8, E6, K1-K5); an undecodable file emits one skipped-file
   *     marker row instead of failing the job (the reference logs and
   *     continues past failing files)
-  *   sinks, push store: the same task streams its rows on into the
-  *     puts (W1-W3, F5, tables created on first sight) and its own
-  *     manifest spool (W4-W5), and returns its counters (W7) — one
-  *     narrow job, no cache, no shuffle, like the reference's
-  *     worker-per-file
-  *   sinks, parquet stand-in: a parquet write needs a Dataset, so the
-  *     versioned-cell sink with existence anti-join (F5) and the
-  *     manifest regroup fork off one cached Dataset, and the counters
-  *     are aggregated from that same cached Dataset
+  *   sinks: the same task streams its rows on into the puts (W1-W3,
+  *     F5, tables created on first sight) and its own manifest spool
+  *     (W4-W5), and returns its counters (W7) — one narrow job, no
+  *     cache, no shuffle, like the reference's worker-per-file
+  *
+  * The Dataset functions ([[ingest]], [[writeManifests]],
+  * [[PushTableSink.write]]) compose the same steps one at a time, for
+  * the q30/q193 gates and the per-layer benchmark.
   *
   * Scale shape: encrypted+gzipped inputs are not splittable, so
   * partition-per-file is the parallelism unit exactly like the
@@ -133,8 +132,12 @@ object IngestPipeline {
     import spark.implicits._
     val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     spark.createDataset(fileSlices(spark, tasks)
-      .flatMap(task => fileRows(task, keys, identity, timeFilter, ivStrategy, hadoopConf)))
+      .flatMap(task => fileRows(task, hadoopOpen(task, hadoopConf), keys, identity, timeFilter, ivStrategy, hadoopConf)))
   }
+
+  /** The batch opener: the data file through its Hadoop FileSystem. */
+  private def hadoopOpen(task: FileTask, hadoopConf: SerializableConfiguration): () => java.io.InputStream =
+    () => { val p = new Path(task.dataPath); p.getFileSystem(hadoopConf.value).open(p) }
 
   /** The tasks as an RDD with exactly one file per partition — the unit
     * of parallelism for non-splittable inputs. `parallelize` slices n
@@ -145,13 +148,17 @@ object IngestPipeline {
 
   /** All rows of one file, as a lazy iterator that survives mid-stream
     * decode failures (truncated gzip, wrong key, unreadable sidecar):
-    * the failure point becomes a marker row and iteration ends. */
-  private def fileRows(task: FileTask,
-                       keys: KeyService,
-                       identity: Envelope.RunIdentity,
-                       timeFilter: TimeFilter,
-                       ivStrategy: IvStrategy,
-                       hadoopConf: SerializableConfiguration): Iterator[IngestedRow] = {
+    * the failure point becomes a marker row and iteration ends. `open`
+    * yields the encrypted bytes — the Hadoop file for batch, the landed
+    * content for the stream — and the sidecar is read through
+    * `hadoopConf` in both. */
+  private[graft] def fileRows(task: FileTask,
+                              open: () => java.io.InputStream,
+                              keys: KeyService,
+                              identity: Envelope.RunIdentity,
+                              timeFilter: TimeFilter,
+                              ivStrategy: IvStrategy,
+                              hadoopConf: SerializableConfiguration): Iterator[IngestedRow] = {
     val manifestName = CsvEscape.manifestFileName(task.database, task.collection, task.fileNumber)
 
     def marker(lineNo: Long, e: Throwable): IngestedRow =
@@ -168,8 +175,7 @@ object IngestPipeline {
         val plain =
           if (meta.plaintextDatakey.nonEmpty) meta.plaintextDatakey // fixture-style metadata
           else keys.decryptKey(meta.keyEncryptionKeyId, meta.encryptedEncryptionKey)
-        val p = new Path(task.dataPath)
-        val raw = p.getFileSystem(hadoopConf.value).open(p)
+        val raw = open()
         try Right(new java.io.BufferedReader(new java.io.InputStreamReader(
           Crypto.decompressingDecryptingStream(raw, plain, meta.initialisationVector), "UTF-8")))
         catch { case scala.util.control.NonFatal(e) => raw.close(); throw e }
@@ -233,41 +239,12 @@ object IngestPipeline {
 
   // ------------------------------------------------------------ sinks
 
-  /** Versioned-cell table sink on parquet — the test/CI stand-in for an
-    * HBase-like store, same triple (table, key, version) + body. F5
-    * existence anti-join keeps re-runs idempotent. Partitioned by table
-    * name so per-table reads prune directories at scale. */
-  def writeTableSink(rows: Dataset[IngestedRow], sinkDir: String, skipExisting: Boolean = true): Long = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val puts = rows.filter(r => PushTableSink.isPut(r)).map(r => PushTableSink.cellOf(r)).toDF()
-    val fs = new Path(sinkDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh =
-      if (skipExisting && fs.exists(new Path(sinkDir))) {
-        val existing = spark.read.parquet(sinkDir).select("tableName", "rowkey", "version")
-        // F5: drop cells already present at (table, key, version) —
-        // replay/idempotence semantics of HbaseClient.nonExistent
-        puts.join(existing, Seq("tableName", "rowkey", "version"), "left_anti")
-      } else puts
-    val n = fresh.count()
-    if (n > 0)
-      fresh.write.mode(SaveMode.Append).partitionBy("tableName").parquet(sinkDir)
-    n
-  }
-
   /** W4/W5 — one pipe-delimited CSV per input file, named
     * `db.<db>.<uncoalescedCollection>-%06d.csv`, in input line order.
     * Early/late records appear here even though F2 gates them off the
     * table path (golden behavior, UCHistoricDataImporterSpec.kt:129+).
     * Each manifest is written by [[spoolManifest]]; the group arrives
     * sorted by Spark's spill-capable flatMapSortedGroups. */
-  def writeManifests(rows: Dataset[IngestedRow], manifestDir: String): Unit = {
-    val hadoopConf = new SerializableConfiguration(
-      rows.sparkSession.sparkContext.hadoopConfiguration)
-    writeManifests(rows, ManifestStore.HadoopFs(manifestDir, hadoopConf))
-  }
-
-  /** W5 against any [[ManifestStore]]. */
   def writeManifests(rows: Dataset[IngestedRow], store: ManifestStore): Unit = {
     val spark = rows.sparkSession
     import spark.implicits._
@@ -357,15 +334,11 @@ object IngestPipeline {
 
   /** Whole job: catalog → decode/transform → sinks → counters (W7).
     *
-    * With a push store this is ONE narrow Spark job, one task per file
-    * ([[pushFiles]]), and no cache and no shuffle. Each successful task
+    * ONE narrow Spark job, one task per file ([[pushFiles]]), and no
+    * cache and no shuffle. The cells go to `pushStore`, or with none
+    * given to a [[FileStore]] at `tableSinkDir`. Each successful task
     * reports its own counts and puts, and the driver sums them, so a
-    * retried task is counted once.
-    *
-    * The parquet stand-in computes the chain once and forks both sinks
-    * off one cached Dataset, and aggregates the counters from that SAME
-    * cached Dataset, not from accumulators inside a transformation,
-    * which would double-count on eviction-driven recomputes. */
+    * retried task is counted once. */
   def run(spark: SparkSession,
           inputPrefixes: Seq[String],
           tableSinkDir: String,
@@ -378,23 +351,14 @@ object IngestPipeline {
           skipExisting: Boolean = true,
           maxObjectBytes: Long = 2200000000L,
           pushStore: Option[() => PushTableSink.Store] = None): RunResult = {
-    import spark.implicits._
     val tasks = planTasks(spark, inputPrefixes, maxObjectBytes)
-    val (byStatus, put) = pushStore match {
-      case Some(factory) =>
-        val perFile = pushFiles(spark, tasks, keys, identity, timeFilter, ivStrategy,
-          store = if (runMode == RunMode.Manifest) None else Some(factory),
-          config = PushTableSink.Config(skipExisting = skipExisting),
-          manifestDir = if (runMode == RunMode.Import) None else Some(manifestDir))
-        (perFile.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _), perFile.map(_._2).sum)
-      case None =>
-        val rows = ingest(spark, tasks, keys, identity, timeFilter, ivStrategy).cache()
-        try {
-          val put = if (runMode == RunMode.Manifest) 0L else writeTableSink(rows, tableSinkDir, skipExisting)
-          if (runMode != RunMode.Import) writeManifests(rows, manifestDir)
-          (rows.groupByKey(r => (r.status, r.filterStatus)).count().collect().toMap, put)
-        } finally rows.unpersist()
-    }
+    val factory = pushStore.getOrElse(() => FileStore(tableSinkDir))
+    val perFile = pushFiles(spark, tasks, keys, identity, timeFilter, ivStrategy,
+      store = if (runMode == RunMode.Manifest) None else Some(factory),
+      config = PushTableSink.Config(skipExisting = skipExisting),
+      manifestDir = if (runMode == RunMode.Import) None else Some(manifestDir))
+    val byStatus = perFile.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
+    val put = perFile.map(_._2).sum
     def total(status: String): Long =
       byStatus.collect { case ((s, _), n) if s == status => n }.sum
     RunResult(put,
@@ -415,8 +379,8 @@ object IngestPipeline {
         else byStatus.getOrElse((Status.Ok, "DoNotFilter"), 0L) - put)
   }
 
-  /** The push-store run's one job: each task streams its file's rows
-    * once, in line order, through the puts into `store` (see
+  /** The run's one job: each task streams its file's rows once, in
+    * line order, through the puts into `store` (see
     * [[PushTableSink.putAll]]) and the file's manifest spool into
     * `manifestDir` (see [[spoolManifest]]) — the reference's
     * worker-per-file with its StreamingManifestWriter. Returns per file
@@ -435,7 +399,8 @@ object IngestPipeline {
     fileSlices(spark, tasks).map { task =>
       val counts = mutable.HashMap.empty[(String, String), Long]
       def stream(emit: String => Unit): Long = {
-        val rows = fileRows(task, keys, identity, timeFilter, ivStrategy, hadoopConf).map { r =>
+        val rows = fileRows(task, hadoopOpen(task, hadoopConf), keys, identity, timeFilter, ivStrategy,
+          hadoopConf).map { r =>
           val k = (r.status, r.filterStatus)
           counts(k) = counts.getOrElse(k, 0L) + 1L
           if (r.status == Status.Ok) emit(r.manifestLine)

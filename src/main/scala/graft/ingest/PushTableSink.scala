@@ -4,13 +4,13 @@ import graft.ingest.IngestPipeline.{IngestedRow, Status, groupedByBytes}
 import org.apache.spark.sql.Dataset
 import scala.collection.mutable
 
-/** W1/W2/W3/F5 — the push-style sink contract for a versioned-cell
-  * store (HBase-shaped: `Table.put(List<Put>)` + `existsAll`), driven
-  * per task through [[PushTableSink.putAll]] with byte-capped batches
-  * and bounded put retry. The parquet sink in IngestPipeline is the
-  * snapshot-style test stand-in; THIS is the shape a live cluster store
-  * needs: per-batch existence filtering is read-your-writes-correct
-  * under task retries, where a snapshot anti-join is not (SURVEY.md §4).
+/** W1/W2/W3/F5 — the import's only sink: the push-style contract for a
+  * versioned-cell store (HBase-shaped: `Table.put(List<Put>)` +
+  * `existsAll`), driven per task through [[PushTableSink.putAll]] with
+  * byte-capped batches and bounded put retry. [[IngestPipeline.run]]
+  * calls it from its per-file pass, [[write]] from a Dataset. Per-batch
+  * existence filtering is read-your-writes-correct under task retries,
+  * where a snapshot anti-join is not (SURVEY.md §4).
   */
 object PushTableSink {
 
@@ -21,8 +21,9 @@ object PushTableSink {
     * holding a `record` qualifier with FULL version history, GZ
     * compression for both store files and compactions, and replicated
     * regions. The contract CARRIES these so a live implementation can't
-    * silently drop them; the parquet stand-in ignores what parquet has
-    * no analogue for. */
+    * silently drop them; [[FileStore]] records them all in `_spec.json`
+    * and ignores what local files have no analogue for (compression,
+    * replication). */
   final case class TableSpec(dataFamily: String = "cf",
                              dataQualifier: String = "record",
                              maxVersions: Int = Int.MaxValue,

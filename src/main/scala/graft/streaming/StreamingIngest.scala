@@ -1,21 +1,24 @@
 package graft.streaming
 
-import graft.core.{Crypto, Envelope, RecordProcessor}
-import graft.ingest.{Catalog, IngestPipeline, KeyService}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.core.{Envelope, RecordProcessor}
+import graft.ingest.{IngestPipeline, KeyService}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming file-arrival ingestion: the core record engine driven by
   * Structured Streaming's file source instead of a one-shot catalog.
   * New `*.json.gz.enc` dumps landing under the watched prefix are
-  * decoded and transformed exactly like the batch path (same
-  * RecordProcessor chain), with the stream giving exactly-once file
+  * decoded and transformed by the batch path's own per-file decoder
+  * ([[IngestPipeline.fileRows]]), so a landed file yields the same rows
+  * as a batch run over it — marker rows of unreadable or truncated
+  * files included — with the stream giving exactly-once file
   * processing via the source's checkpoint log.
   *
   * Uses `format("binaryFile")`, so one input file is one row (content
   * in memory): the right shape for steady dump-feed ingestion of
-  * normal-size files; a multi-GB dump belongs on the batch path (the
-  * reference's 2.2 GB size cap applies here with the same constant).
+  * normal-size files. No size cap is applied here (the batch catalog's
+  * `object.maximum.size` filter is not on this path), so a multi-GB
+  * dump belongs on the batch path.
   *
   * Scale shape: `maxFilesPerTrigger` bounds a micro-batch; each file
   * decodes independently (narrow), and sinks are idempotent per
@@ -53,58 +56,11 @@ object StreamingIngest {
     files.as[(String, Array[Byte])].mapPartitions { it =>
       it.flatMap { case (path, content) =>
         RecordProcessor.parseFilename(path).iterator.flatMap { case (db, coll, n) =>
-          val manifestName = graft.core.CsvEscape.manifestFileName(db, coll, n)
-          // key-service outage is systemic: fail the trigger (it retries),
-          // don't mark files unreadable
-          val fileKey = keys.batchDataKey()
-          // per-file catch-and-continue, like the batch path: a garbage
-          // or truncated landing file must not kill the streaming query.
-          // The content is already fully in memory (binaryFile source),
-          // so decoding eagerly keeps mid-stream failures inside this
-          // catch without changing the memory class.
-          try {
-            val metaPath = path.replaceFirst("\\.gz\\.enc$", ".encryption.json")
-            val meta = Catalog.readMetadata(metaPath, hadoopConf.value)
-            val plain =
-              if (meta.plaintextDatakey.nonEmpty) meta.plaintextDatakey
-              else keys.decryptKey(meta.keyEncryptionKeyId, meta.encryptedEncryptionKey)
-            val ctx = RecordProcessor.FileContext(db, coll, n, fileKey)
-            val in = Crypto.decompressingDecryptingStream(
-              new java.io.ByteArrayInputStream(content), plain, meta.initialisationVector)
-            val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-            val out = List.newBuilder[IngestPipeline.IngestedRow]
-            var lineNo = 0L
-            var line = reader.readLine()
-            while (line != null) {
-              lineNo += 1
-              val ln = lineNo
-              out += (RecordProcessor.processLine(line, ctx, identity,
-                () => ivStrategy.ivFor(path, ln)) match {
-                case Right(pr) =>
-                  IngestPipeline.IngestedRow(path, ln, pr.database, pr.collection, pr.tableName,
-                    manifestName, IngestPipeline.Status.Ok, pr.rowkey, pr.version, pr.envelope,
-                    pr.innerType, pr.manifestLine, timeFilter.status(pr.version).toString, "")
-                case Left(RecordProcessor.SkipReason.MissingId(_)) =>
-                  IngestPipeline.IngestedRow(path, ln, db, coll, "", manifestName,
-                    IngestPipeline.Status.MissingId, Array.emptyByteArray, 0L, "", "", "", "", "")
-                case Left(RecordProcessor.SkipReason.Malformed(_)) =>
-                  IngestPipeline.IngestedRow(path, ln, db, coll, "", manifestName,
-                    IngestPipeline.Status.Malformed, Array.emptyByteArray, 0L, "", "", "", "", "")
-              })
-              line = reader.readLine()
-            }
-            reader.close()
-            out.result().iterator
-          } catch {
-            case e: graft.ingest.Retry.FatalException => throw e
-            case scala.util.control.NonFatal(e) =>
-              Iterator.single(IngestPipeline.IngestedRow(path, 0L, db, coll, "", manifestName,
-                IngestPipeline.Status.UnreadableFile, Array.emptyByteArray, 0L, "", "", "", "",
-                s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(300)))
-          }
+          val task = IngestPipeline.FileTask(path, path.replaceFirst("\\.gz\\.enc$", ".encryption.json"), db, coll, n)
+          IngestPipeline.fileRows(task, () => new java.io.ByteArrayInputStream(content),
+            keys, identity, timeFilter, ivStrategy, hadoopConf)
         }
       }
     }
   }
-
 }

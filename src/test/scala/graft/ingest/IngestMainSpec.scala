@@ -26,47 +26,40 @@ class IngestMainSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("main runs the whole job from reference-style key=value args") {
     val tmp = Files.createTempDirectory("graft-main")
     Fixtures.writeDumpFile(tmp, "database-1", "collection-2", 1)
-    IngestMain.main(Array(
-      s"input.prefixes=$tmp",
-      s"table.sink.dir=${tmp.resolve("cells")}",
-      s"manifest.dir=${tmp.resolve("manifests")}",
-      "skip.earlier.than=2010-01-01T00:00:00.000Z",
-      "skip.later.than=2019-12-31T23:59:59.999Z",
-      "run-mode=import_and_manifest",
-      "correlation.id=spec-run"))
-    val sink = spark.read.parquet(tmp.resolve("cells").toString)
-    assert(sink.count() == 16)
-    assert(sink.select("tableName").distinct().collect().map(_.getString(0)).toSet ==
-      Set("database_1:collection_2"))
-    val manifests = new java.io.File(tmp.resolve("manifests").toString).listFiles()
-      .map(_.getName).filterNot(_.startsWith(".")).toSet
-    assert(manifests == Set("db.database-1.collection-2-000001.csv"))
-  }
-
-  test("table.sink.impl=filestore runs the push path end-to-end, idempotently") {
-    val tmp = Files.createTempDirectory("graft-main-fs")
-    Fixtures.writeDumpFile(tmp, "database-1", "collection-2", 1)
     val args = Array(
       s"input.prefixes=$tmp",
       s"table.sink.dir=${tmp.resolve("cells")}",
       s"manifest.dir=${tmp.resolve("manifests")}",
-      "table.sink.impl=filestore",
       "skip.earlier.than=2010-01-01T00:00:00.000Z",
       "skip.later.than=2019-12-31T23:59:59.999Z",
       "run-mode=import_and_manifest",
-      "correlation.id=spec-fs-run")
+      "correlation.id=spec-run")
     IngestMain.main(args)
     val store = FileStore(tmp.resolve("cells").toString)
     val cells = store.scanTable("database_1:collection_2")
-    // same 16 ok+unfiltered cells the parquet-sink test sees
-    assert(cells.size == 16)
+    assert(cells.size == 16) // ok and inside the F2 window
     assert(cells.forall(_._3.nonEmpty))
+    assert(tmp.resolve("cells").toFile.list().toSet == Set("database_1~collection_2"))
     // W3: the DDL reached the store
     assert(store.readSpecJson("database_1:collection_2").exists(_.contains(""""compression":"GZ"""")))
+    val manifests = new java.io.File(tmp.resolve("manifests").toString).listFiles()
+      .map(_.getName).filterNot(_.startsWith(".")).toSet
+    assert(manifests == Set("db.database-1.collection-2-000001.csv"))
     // F5 via the store's exists(): a full re-run converges to the same state
     IngestMain.main(args)
     val after = store.scanTable("database_1:collection_2")
     assert(after.map(c => (c._1, c._2)).sorted == cells.map(c => (c._1, c._2)).sorted)
+  }
+
+  test("a file: URI table.sink.dir is the local directory at its path") {
+    val tmp = Files.createTempDirectory("graft-main-uri")
+    Fixtures.writeDumpFile(tmp, "database-1", "collection-2", 1)
+    IngestMain.main(Array(
+      s"input.prefixes=$tmp",
+      s"table.sink.dir=${tmp.resolve("cells").toUri}",
+      s"manifest.dir=${tmp.resolve("manifests")}",
+      "run-mode=import"))
+    assert(FileStore(tmp.resolve("cells").toString).scanTable("database_1:collection_2").size == 18)
   }
 
   test("manifest-only run mode writes no cells") {
@@ -102,8 +95,8 @@ class IngestMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     rejectsBeforeWriting("run-mode=manifests")
   }
 
-  test("an unknown table.sink.impl is rejected, not run as parquet") {
-    rejectsBeforeWriting("table.sink.impl=hbase")
+  test("a table.sink.dir on a remote filesystem is rejected, not written to a relative path") {
+    rejectsBeforeWriting("table.sink.dir=s3a://bucket/cells")
   }
 
   test("a skip.existing.records that is not a boolean is rejected by name") {

@@ -5,6 +5,7 @@ import graft.ingest.IngestPipeline._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, spark_partition_id}
+import org.apache.spark.util.SerializableConfiguration
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import java.io.ByteArrayOutputStream
@@ -17,7 +18,7 @@ import scala.jdk.CollectionConverters._
   * (UCHistoricDataImporterSpec.kt): generate the same dump-file shapes
   * sample_data.py produces (gzipped then AES-CTR encrypted NDJSON with
   * sibling encryption metadata), run the whole pipeline on Spark, and
-  * assert table-sink contents, decrypt-back, manifest names/contents,
+  * assert the cell store's contents, decrypt-back, manifest names/contents,
   * and idempotent re-runs.
   */
 class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -49,6 +50,16 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // fixtures shared with IngestMainSpec — see Fixtures.scala
 
+  private def sinkStore: FileStore = FileStore(tmp.resolve("table-sink").toString)
+
+  /** The tables a FileStore holds: one directory each, ':' stored as '~'. */
+  private def tablesIn(root: JPath): Set[String] =
+    root.toFile.listFiles().filter(_.isDirectory).map(_.getName.replace('~', ':')).toSet
+
+  private val timeFilter = RecordProcessor.TimeFilter(
+    earlierThan = DateFmt.timestampAsLong("2010-01-01T00:00:00.000Z"),
+    laterThan = DateFmt.timestampAsLong("2019-12-31T23:59:59.999Z"))
+
   private def runJob(skipExisting: Boolean = true): RunResult =
     IngestPipeline.run(spark,
       Seq(tmp.toString),
@@ -56,9 +67,7 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       tmp.resolve("manifests").toString,
       StubKeyService(),
       identity,
-      timeFilter = RecordProcessor.TimeFilter(
-        earlierThan = DateFmt.timestampAsLong("2010-01-01T00:00:00.000Z"),
-        laterThan = DateFmt.timestampAsLong("2019-12-31T23:59:59.999Z")),
+      timeFilter = timeFilter,
       ivStrategy = IvStrategy.Deterministic("spec"),
       skipExisting = skipExisting)
 
@@ -73,10 +82,9 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r1.tooEarly == 3 && r1.tooLate == 3)
     assert(r1.put == 3 * 16) // 18 ok minus early minus late
 
-    val sink = spark.read.parquet(tmp.resolve("table-sink").toString)
-    val tables = sink.select("tableName").distinct().collect().map(_.getString(0)).toSet
-    assert(tables == Set("database_1:collection_1", "database_1:collection", "agent_core:agentToDo"))
-    assert(sink.count() == 48)
+    val tables = Set("database_1:collection_1", "database_1:collection", "agent_core:agentToDo")
+    assert(tablesIn(tmp.resolve("table-sink")) == tables)
+    assert(tables.toSeq.map(sinkStore.scanTable(_).size).sum == 48)
 
     // golden manifest names (UCHistoricDataImporterSpec.kt:223-238)
     val manifests = new java.io.File(tmp.resolve("manifests").toString).listFiles()
@@ -102,18 +110,16 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val coalesced = Files.readAllLines(tmp.resolve("manifests").resolve("db.database-1.collection-thirtyone-000001.csv")).get(0)
     assert(coalesced.contains("|database-1|collection|"))
 
-    // re-run: existence anti-join drops every cell (F5 idempotence)
+    // re-run: the existence skip drops every cell (F5 idempotence)
     val r2 = runJob()
     assert(r2.put == 0)
     assert(r2.filteredExisting == 3 * 16) // every writable cell already present
     assert(r1.filteredExisting == 0)
-    assert(spark.read.parquet(tmp.resolve("table-sink").toString).count() == 48)
+    assert(tables.toSeq.map(sinkStore.scanTable(_).size).sum == 48)
   }
 
   test("cells decrypt back to the transformed record (integration spec :84-127)") {
-    val sink = spark.read.parquet(tmp.resolve("table-sink").toString)
-    val row = sink.filter(sink("tableName") === "agent_core:agentToDo").select("body").head()
-    val envelope = new String(row.getAs[Array[Byte]]("body"), "UTF-8")
+    val envelope = new String(sinkStore.scanTable("agent_core:agentToDo").head._3, "UTF-8")
     val env = Json.parseObject(envelope)
     val msg = env.get("message").get.asInstanceOf[JObj]
     assert(msg.get("db").contains(JStr("agent_core")))
@@ -127,9 +133,7 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("versions become cell timestamps: base records carry incrementing millis") {
-    val sink = spark.read.parquet(tmp.resolve("table-sink").toString)
-    val versions = sink.filter(sink("tableName") === "database_1:collection_1")
-      .select("version").collect().map(_.getLong(0)).toSet
+    val versions = sinkStore.scanTable("database_1:collection_1").map(_._2).toSet
     (0 until 10).foreach(j => assert(versions.contains(1543676462000L + j)))
     assert(versions.contains(1330897436000L)) // removed
     assert(versions.contains(1393763696000L)) // archived
@@ -177,7 +181,7 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  // ------------------------------------------------ push-store runs
+  // ------------------------------------------------ one-pass runs
 
   /** The spec's three fixtures plus the two undecodable files. */
   private lazy val mixed: JPath = {
@@ -189,19 +193,12 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
-  /** Runs over [[mixed]] into `out/cells` and `out/manifests`; `push`
-    * selects a FileStore push store over the parquet stand-in. */
-  private def runMixed(out: JPath, push: Boolean, runMode: RunMode = RunMode.ImportAndManifest): RunResult = {
-    val cells = out.resolve("cells").toString
-    IngestPipeline.run(spark, Seq(mixed.toString), cells, out.resolve("manifests").toString,
-      StubKeyService(), identity,
-      timeFilter = RecordProcessor.TimeFilter(
-        earlierThan = DateFmt.timestampAsLong("2010-01-01T00:00:00.000Z"),
-        laterThan = DateFmt.timestampAsLong("2019-12-31T23:59:59.999Z")),
-      ivStrategy = IvStrategy.Deterministic("spec"),
-      runMode = runMode,
-      pushStore = if (push) Some(() => FileStore(cells)) else None)
-  }
+  /** Runs over [[mixed]] into a FileStore at `out/cells` and manifests
+    * at `out/manifests`. */
+  private def runMixed(out: JPath, runMode: RunMode = RunMode.ImportAndManifest): RunResult =
+    IngestPipeline.run(spark, Seq(mixed.toString), out.resolve("cells").toString,
+      out.resolve("manifests").toString, StubKeyService(), identity,
+      timeFilter = timeFilter, ivStrategy = IvStrategy.Deterministic("spec"), runMode = runMode)
 
   /** Manifest name → bytes, without Hadoop's .crc sidecars. */
   private def manifests(out: JPath): Map[String, Seq[Byte]] = {
@@ -232,40 +229,57 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     stages.asScala.toSeq
   }
 
-  test("push run: one narrow job, no cache, the parquet run's counts and manifests, idempotent re-run") {
-    val parquetOut = Files.createTempDirectory("graft-ingest-parquet-out")
+  test("push run: one narrow job, no cache, the Dataset chain's counts and manifests, idempotent re-run") {
     val pushOut = Files.createTempDirectory("graft-ingest-push-out")
-    val parquet = runMixed(parquetOut, push = false)
     var push: RunResult = null
-    val jobs = jobsStartedBy { push = runMixed(pushOut, push = true) }
+    val jobs = jobsStartedBy { push = runMixed(pushOut) }
     assert(jobs == Seq(1)) // one job of one stage: no exchange
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    assert(push == parquet)
     assert(push.filesProcessed == 5 && push.unreadableFiles == 2 && push.put == 48)
+
+    // the Dataset chain over the same files: counts from `ingest`,
+    // manifests from `writeManifests`
+    val sp = spark; import sp.implicits._
+    val tasks = IngestPipeline.planTasks(spark, Seq(mixed.toString))
+    val rows = IngestPipeline.ingest(spark, tasks, StubKeyService(), identity, timeFilter,
+      IvStrategy.Deterministic("spec"))
+    val byStatus = rows.groupByKey(r => (r.status, r.filterStatus)).count().collect().toMap
+    def total(status: String): Long = byStatus.collect { case ((`status`, _), n) => n }.sum
+    assert(push == RunResult(put = byStatus((Status.Ok, "DoNotFilter")),
+      filesProcessed = tasks.size.toLong,
+      recordsProcessed = total(Status.Ok),
+      skippedMissingId = total(Status.MissingId),
+      skippedMalformed = total(Status.Malformed),
+      tooEarly = byStatus((Status.Ok, "FilterTooEarly")),
+      tooLate = byStatus((Status.Ok, "FilterTooLate")),
+      unreadableFiles = total(Status.UnreadableFile)))
+    val chainOut = Files.createTempDirectory("graft-ingest-chain-out")
+    IngestPipeline.writeManifests(rows, ManifestStore.HadoopFs(chainOut.resolve("manifests").toString,
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)))
     assert(manifests(pushOut).keySet == Set(
       "db.database-1.collection-1-000001.csv",
       "db.database-1.collection-thirtyone-000001.csv",
       "db.agent_core.agentToDoArchive-000001.csv"))
-    assert(manifests(pushOut) == manifests(parquetOut))
+    assert(manifests(pushOut) == manifests(chainOut))
 
     val store = FileStore(pushOut.resolve("cells").toString)
     assert(store.scanTable("database_1:collection_1").size == 16)
 
     // re-run: the existence skip drops every cell (F5 idempotence)
-    val again = runMixed(pushOut, push = true)
+    val again = runMixed(pushOut)
     assert(again.put == 0)
     assert(again.filteredExisting == 48)
   }
 
   test("push run modes: import uploads no manifest, manifest creates no table") {
     val importOut = Files.createTempDirectory("graft-ingest-import-out")
-    val imported = runMixed(importOut, push = true, RunMode.Import)
+    val imported = runMixed(importOut, RunMode.Import)
     assert(imported.put == 48)
     assert(FileStore(importOut.resolve("cells").toString).scanTable("agent_core:agentToDo").size == 16)
     assert(!Files.exists(importOut.resolve("manifests")))
 
     val manifestOut = Files.createTempDirectory("graft-ingest-manifest-out")
-    val manifested = runMixed(manifestOut, push = true, RunMode.Manifest)
+    val manifested = runMixed(manifestOut, RunMode.Manifest)
     assert(manifested.put == 0 && manifested.filteredExisting == 0)
     assert(manifested.recordsProcessed == imported.recordsProcessed)
     assert(!Files.exists(manifestOut.resolve("cells")))

@@ -68,6 +68,7 @@ class S3SeamSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivStrategy = IvStrategy.Deterministic("spec"),
       skipExisting = true)
     assert(r.filesProcessed == 1 && r.put == 16)
+    assert(FileStore(out.resolve("table-sink").toString).scanTable("database_1:collection_1").size == 16)
     // the upload landed under the stub scheme's backing store with the
     // reference naming (UCHistoricDataImporterSpec.kt:223-238) and no
     // checksum sidecars (an S3 object has none)

@@ -258,6 +258,55 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally query.stop()
   }
 
+  test("stream ≡ batch on a truncated dump: decoded rows kept, marker at the failing line") {
+    import graft.ingest.{Fixtures, IngestPipeline, StubKeyService}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-truncated")
+    val ck = java.nio.file.Files.createTempDirectory("graft-stream-truncated-ck")
+    // six fixture dumps' lines (~36k chars, past the reader's 8k buffer)
+    // in one file whose gzip stream is cut at 60%, then encrypted
+    val content = (1 to 6).flatMap(n => Fixtures.dumpLines("tdb", "tcoll", n)).mkString("", "\n", "\n")
+    val gz = new java.io.ByteArrayOutputStream()
+    val go = new java.util.zip.GZIPOutputStream(gz)
+    go.write(content.getBytes("UTF-8")); go.close()
+    val cut = gz.toByteArray.take(gz.size() * 3 / 5)
+    val enc = graft.core.Crypto.encrypt(Fixtures.fileKeyB64, cut, () => new Array[Byte](16))
+    java.nio.file.Files.write(tmp.resolve("tdb.tcoll.0001.json.gz.enc"),
+      java.util.Base64.getDecoder.decode(enc.encrypted))
+    java.nio.file.Files.write(tmp.resolve("tdb.tcoll.0001.json.encryption.json"),
+      (s"""{"keyEncryptionKeyId": "k", "plaintextDatakey": "${Fixtures.fileKeyB64}", """ +
+        s""""encryptedEncryptionKey": "e", "initialisationVector": "${enc.initialisationVector}"}""").getBytes("UTF-8"))
+
+    val identity = graft.core.Envelope.RunIdentity("uow", "trace", "test", () => new java.util.Date(0L))
+    val timeFilter = graft.core.RecordProcessor.TimeFilter(
+      earlierThan = graft.core.DateFmt.timestampAsLong("2010-01-01T00:00:00.000Z"),
+      laterThan = graft.core.DateFmt.timestampAsLong("2019-12-31T23:59:59.999Z"))
+    val iv = IngestPipeline.IvStrategy.Deterministic("truncated")
+    def projected(rows: Seq[IngestPipeline.IngestedRow]) =
+      rows.map(r => (r.lineNo, r.status, r.tableName, r.rowkey.toSeq, r.version, r.manifestLine, r.filterStatus))
+        .sortBy(_._1)
+
+    val sp = spark; import sp.implicits._
+    val q = StreamingIngest.records(spark, tmp.toString, StubKeyService(), identity,
+        ivStrategy = iv, timeFilter = timeFilter)
+      .writeStream.format("memory").queryName("truncated_out")
+      .option("checkpointLocation", ck.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    val streamed = try { q.awaitTermination(); projected(spark.table("truncated_out").as[IngestPipeline.IngestedRow].collect().toSeq) }
+      finally q.stop()
+    val batch = projected(IngestPipeline.ingest(spark, IngestPipeline.planTasks(spark, Seq(tmp.toString)),
+      StubKeyService(), identity, timeFilter, iv).collect().toSeq)
+
+    // the batch shape: the lines before the cut, then one marker after them
+    val marker = batch.last
+    assert(marker._2 == IngestPipeline.Status.UnreadableFile)
+    assert(batch.count(_._2 == IngestPipeline.Status.UnreadableFile) == 1)
+    assert(marker._1 == batch.size && batch.count(_._2 == IngestPipeline.Status.Ok) > 0)
+    assert(streamed == batch)
+    org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+    org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
+  }
+
   test("stream-stream interval join matches pairs AND evicts state behind the watermark") {
     // The q54 shape: because the join condition bounds buy_ts relative
     // to click_ts and both sides carry watermarks, Spark must recognize
