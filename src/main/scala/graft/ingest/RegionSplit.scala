@@ -105,8 +105,9 @@ object RegionSplit {
   }
 
   /** total store-file bytes currently resident in a shard directory —
-    * the split policy's measure (satellites excluded: their bytes
-    * belong to the daughter being born). */
+    * the split policy's measure and the scan's packing weight
+    * (satellites excluded: their bytes belong to the daughter being
+    * born). */
   private[graft] def shardBytes(shardDir: Path): Long = {
     if (!Files.isDirectory(shardDir)) return 0L
     val s = Files.list(shardDir)

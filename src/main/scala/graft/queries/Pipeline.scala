@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.CellsSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -431,8 +432,9 @@ object Pipeline {
           .option("root", root).option("table", "q136").load()
           .filter(col("rowkey") >= lit("C".getBytes("UTF-8")) &&
             col("rowkey") < lit("D".getBytes("UTF-8")))
-        require(pruned.rdd.getNumPartitions == 1,
-          s"prefix scan must plan exactly the 'C' shard, got ${pruned.rdd.getNumPartitions}")
+        val prunedShards = CellsSource.plannedShards(pruned)
+        require(prunedShards.size == 1,
+          s"prefix scan must plan exactly the 'C' shard, got ${prunedShards.size}")
         pruned
           .select(col("rowkey").cast("string").as("key_str"), col("version"),
             col("body").cast("string").as("body_md5"))
@@ -527,14 +529,15 @@ object Pipeline {
         val idxScan = readTable("q141i")
           .filter(col("rowkey") >= lit(s"$target|".getBytes("UTF-8")) &&
             col("rowkey") < lit(s"$target}".getBytes("UTF-8")))
-        require(idxScan.rdd.getNumPartitions == 1,
-          s"index prefix scan must plan the value's shard only, got ${idxScan.rdd.getNumPartitions}")
+        val idxShards = CellsSource.plannedShards(idxScan)
+        require(idxShards.size == 1,
+          s"index prefix scan must plan the value's shard only, got ${idxShards.size}")
         val mainKeys = idxScan.select(col("body")).collect()
           .map(_.getAs[Array[Byte]](0)) // dup-group-sized
         require(mainKeys.nonEmpty, "index lookup found no postings")
         val hits = readTable("q141m")
           .filter(col("rowkey").isin(mainKeys.toSeq: _*))
-        require(hits.rdd.getNumPartitions <= mainKeys.length,
+        require(CellsSource.plannedShards(hits).size <= mainKeys.length,
           "main-table read must plan only the probed keys' shards")
         hits.select(col("rowkey").cast("string").as("key_str"), col("version"),
             col("body").cast("string").as("body_md5"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ingest.{BulkLoad, CellSegment, Compaction, FileStore, PushTableSink, Resplit}
+import graft.sources.CellsSource
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -262,11 +263,12 @@ object StoreLifecycle {
         def readTable = s.read.format("graft-cells")
           .option("root", root).option("table", "q207").load()
         val point = readTable.filter(col("rowkey") === lit("doc-7".getBytes("UTF-8")))
-        require(point.rdd.getNumPartitions == 1, "a point GET must plan exactly its region")
+        require(CellsSource.plannedShards(point).size == 1, "a point GET must plan exactly its region")
         val range = readTable.filter(col("rowkey") >= lit("doc-3".getBytes("UTF-8")) &&
           col("rowkey") < lit("doc-5".getBytes("UTF-8")))
-        require(range.rdd.getNumPartitions <= 3,
-          s"a key range must plan only its region span: ${range.rdd.getNumPartitions}")
+        val rangeShards = CellsSource.plannedShards(range)
+        require(rangeShards.size <= 3,
+          s"a key range must plan only its region span: ${rangeShards.size}")
         readTable
           .select(col("rowkey").cast("string").as("key_str"), col("version"),
             col("body").cast("string").as("body_md5"))
@@ -3704,7 +3706,7 @@ object StoreLifecycle {
         val dst = readTable(dstRoot)
         sameRows(src, dst, "resplit must preserve the table cell-for-cell")
         val probe = dst.filter(col("rowkey") === lit("doc-5".getBytes("UTF-8")))
-        require(probe.rdd.getNumPartitions == 1, "point GET plans one region on the new layout")
+        require(CellsSource.plannedShards(probe).size == 1, "point GET plans one region on the new layout")
         dst.select(col("rowkey").cast("string").as("key_str"), col("version"),
             col("body").cast("string").as("body_md5"))
           .localCheckpoint()

@@ -25,11 +25,13 @@ import java.nio.file.Paths
   * change-feed face (its rows are typed edits, not cells).
   *
   * Pushdown is PARTIAL (`supportCompletePushDown = false`): each
-  * region partition emits one pre-aggregated row — masks applied at
-  * filename level, identities deduped across store-file kinds, exactly
-  * the rows the metadata-only scan would have produced — and Spark's
-  * final aggregate folds the ≤regions rows. A region with no matching
-  * cells emits (0, null, null), so empty tables still count 0.
+  * region emits one pre-aggregated row — masks applied at filename
+  * level, identities deduped across store-file kinds, exactly the rows
+  * the metadata-only scan would have produced — and Spark's final
+  * aggregate folds the ≤regions rows. The regions ride in a few packed
+  * partitions ([[CellsShards.pack]]), each reading its regions in turn
+  * and emitting one row per region. A region with no matching cells
+  * emits (0, null, null), so empty tables still count 0.
   *
   * 100 TB: a full-table count costs one directory listing + index
   * walk per region in parallel, no data-region I/O at all — at the
@@ -67,9 +69,8 @@ case class CellsAggScan(root: String, table: String, lo: Long, hi: Long,
     // discovery ordering contract — see [[CellsScan.planInputPartitions]]):
     // a pushed COUNT must stay exact across a concurrent split
     val fp = CellsCatalog.fingerprintOf(graft.ingest.FileStore.splitsAt(dir))
-    CellsShards.pruneListed(dir, keys)
-      .map(ls => CellsAggShard(ls.path.toString, ls.endName, fp,
-        ls.isFirst): InputPartition).toArray
+    CellsShards.pack(CellsShards.pruneListed(dir, keys))(ls =>
+      CellsAggShard(ls.path.toString, ls.endName, fp, ls.isFirst))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -85,8 +86,14 @@ case class CellsAggReaderFactory(lo: Long, hi: Long, keys: CellsKeyPred,
                                  retention: Option[graft.ingest.Retention.Policy] = None)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case g: CellsShardGroup =>
+        new CellsChainedReader(g.shards.iterator.map(s => shardReader(s.asInstanceOf[CellsAggShard])))
+      case s: CellsAggShard => shardReader(s)
+    }
+
+  private def shardReader(part: CellsAggShard): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val part = partition.asInstanceOf[CellsAggShard]
       private val shard = part.dir
       private var emitted = false
       override def next(): Boolean = !emitted

@@ -139,9 +139,26 @@ object CellsSource {
   val runtimeFilteredKeys = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** rows emitted by CAPPED readers (pushed LIMIT / top-N) — the
-    * spec's proof that per-shard truncation actually stopped the
-    * stream (≈ shards × N) instead of draining the table. */
+    * spec's proof that truncation actually stopped the stream
+    * (≤ partitions × N for a LIMIT, ≈ shards × N for a top-N) instead
+    * of draining the table. */
   val cappedRowsEmitted = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** shard directories the `CellsScan`s of `df`'s physical plan plan,
+    * in key order — the pruning proof, which a partition count is not
+    * once shards are packed */
+  private[graft] def plannedShards(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[CellsScan] = (p match {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan match { case s: CellsScan => Seq(s); case _ => Nil }
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case _ => Nil
+    }) ++ p.children.flatMap(scans)
+    scans(df.queryExecution.executedPlan).flatMap(_.plannedShards.map(_.dir))
+  }
 }
 
 /** NATIVE SQL-UI METRICS (DSv2 CustomMetric): the connector's own
@@ -287,6 +304,94 @@ object CellsShards {
 
   def prune(tableDir: Path, keys: CellsKeyPred): Seq[Path] =
     pruneListed(tableDir, keys).map(_.path)
+
+  /** Packs pruned shards into a few byte-balanced partitions by Spark's
+    * own file rule ([[org.apache.spark.sql.execution.datasources.FilePartition]]):
+    * each shard weighs its resident store-file bytes
+    * ([[graft.ingest.RegionSplit.shardBytes]]) plus `spark.sql.files.openCostInBytes`,
+    * the target is `min(maxPartitionBytes, max(openCost, total / parallelism))`
+    * with parallelism `spark.sql.leafNodeDefaultParallelism` (else the
+    * context's default), and partitions fill next-fit in KEY order, never
+    * re-sorted by size. Shards are disjoint key ranges, so a group of
+    * sorted shards read in order is itself sorted. A scan of no more shards
+    * than the parallelism keeps one shard per partition. */
+  def pack(listed: Seq[ListedShard])(part: ListedShard => InputPartition): Array[InputPartition] = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val parallelism = conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(org.apache.spark.sql.SparkSession.getActiveSession
+        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+        .fold(1)(_.sparkContext.defaultParallelism))
+    // one shard leaves nothing to balance: skip its listing, which
+    // costs a stat per file on a put-heavy region
+    val bytes =
+      if (listed.size <= 1) listed.map(_ => 0L)
+      else listed.map(ls => graft.ingest.RegionSplit.shardBytes(ls.path))
+    val target = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
+    val groups = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+    var curBytes = 0L
+    listed.iterator.zip(bytes.iterator).foreach { case (ls, b) =>
+      if (cur.nonEmpty && curBytes + b > target) {
+        groups += CellsShardGroup(cur.toVector)
+        cur.clear()
+        curBytes = 0L
+      }
+      curBytes += b + openCost
+      cur += part(ls)
+    }
+    if (cur.nonEmpty) groups += CellsShardGroup(cur.toVector)
+    groups.toArray
+  }
+}
+
+/** One packed scan partition: a key-ordered run of shard partitions
+  * ([[CellsShard]]s or [[CellsAggShard]]s), read by a
+  * [[CellsChainedReader]]. */
+case class CellsShardGroup(shards: Vector[InputPartition]) extends InputPartition
+
+/** Reads a packed partition: opens each shard's own reader in turn and
+  * closes it before opening the next, stops once `limit` rows are out
+  * (a pushed LIMIT caps the partition, not each shard), and reports the
+  * shards' task metrics summed by name. */
+private[sources] final class CellsChainedReader(
+    readers: Iterator[PartitionReader[InternalRow]], limit: Long = Long.MaxValue)
+    extends PartitionReader[InternalRow] {
+  private var cur: PartitionReader[InternalRow] = _
+  private var emitted = 0L
+  private val closedTotals = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+
+  override def next(): Boolean = {
+    if (emitted >= limit) return false
+    while (true) {
+      if ((cur ne null) && cur.next()) { emitted += 1; return true }
+      closeCurrent()
+      if (!readers.hasNext) return false
+      cur = readers.next()
+    }
+    false
+  }
+  override def get(): InternalRow = cur.get()
+
+  private def closeCurrent(): Unit = if (cur ne null) {
+    val r = cur
+    cur = null
+    r.currentMetricsValues().foreach(m =>
+      closedTotals(m.name()) = closedTotals.getOrElse(m.name(), 0L) + m.value())
+    r.close()
+  }
+  override def close(): Unit = closeCurrent()
+
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val sums = closedTotals.clone()
+    if (cur ne null) cur.currentMetricsValues().foreach(m =>
+      sums(m.name()) = sums.getOrElse(m.name(), 0L) + m.value())
+    sums.iterator.map { case (n, v) =>
+      GraftTaskMetric(n, v): org.apache.spark.sql.connector.metric.CustomTaskMetric
+    }.toArray
+  }
 }
 
 object CellsKeyPred {
@@ -912,10 +1017,10 @@ case class CellsScanBuilder(root: String, table: String, stable: Boolean = false
   }
 
   // ---- limit / top-N pushdown (the HBase Scan#setLimit analog) ----
-  // LIMIT is ALWAYS safe to push partially: each region stops after N
-  // rows and Spark's GlobalLimit folds the ≤regions×N survivors — any
-  // N rows are a correct LIMIT answer. TOP-N additionally needs the
-  // rows to arrive in the requested order, which only a compacted
+  // LIMIT is ALWAYS safe to push partially: each scan partition stops
+  // after N rows and Spark's GlobalLimit folds the ≤partitions×N
+  // survivors — any N rows are a correct LIMIT answer. TOP-N
+  // additionally needs the rows to arrive in the requested order, which only a compacted
   // shard guarantees (≤1 segment, 0 puts — the outputOrdering
   // condition), and layout is a RUNTIME property — so the planning-
   // time accept is ORDER-SHAPE only ((rowkey [, version]) ASC, the
@@ -1021,7 +1126,8 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
 
   /** PER-PARTITION ORDERING report ([[SupportsReportOrdering]]):
     * segments are (rowkey, version)-sorted and each partition is one
-    * shard, so a COMPACTED table's scan already streams in sort order
+    * shard or a key-ordered run of disjoint shards, so a COMPACTED
+    * table's scan already streams in sort order
     * — reporting it lets Catalyst drop local Sorts (`
     * sortWithinPartitions`, the sort under a storage-partitioned
     * merge join, window ORDER BY rowkey). The guarantee holds ONLY
@@ -1322,8 +1428,11 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     // a rowkey point lookup plans ONLY its shard — 1 input partition
     // out of the table's whole region set (a region-server point read,
     // not a table scan); a range/prefix scan plans the contiguous
-    // shard span it covers. Parallelism = region count (256 default,
-    // finer under a custom split layout).
+    // shard span it covers. The pruned shards are then packed into a
+    // few byte-balanced partitions ([[CellsShards.pack]]), so a table
+    // scan costs about as many tasks as cores, not one per region —
+    // except under the key-grouped report below, which needs one
+    // region per partition.
     //
     // The key predicate rides IN each partition, not in the reader
     // factory: Spark may create the factory during planning — BEFORE
@@ -1351,19 +1460,32 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     // must never postdate the listing, or a split landing between the
     // two reads would hide its daughter from a stale partition set
     val fp = CellsCatalog.fingerprintOf(splits)
-    val planned: Array[InputPartition] = CellsShards.pruneListed(dir, k)
-      .map { ls =>
-        val idx = splits.names.indexOf(ls.name)
-        CellsShard(ls.path.toString, k, idx, ls.endName, fp, ls.isFirst): InputPartition
-      }
-      .toArray
+    val listed = CellsShards.pruneListed(dir, k)
+    def shard(ls: CellsShards.ListedShard): InputPartition =
+      CellsShard(ls.path.toString, k, splits.names.indexOf(ls.name), ls.endName, fp, ls.isFirst)
+    val planned =
+      if (keyGrouped) listed.map(shard).toArray
+      else CellsShards.pack(listed)(shard)
     plannedPartitions = (k, planned)
     planned
   }
 
   @transient private var plannedPartitions: (CellsKeyPred, Array[InputPartition]) = _
 
+  /** the shards this scan plans (after pruning and any runtime
+    * narrowing), in key order — packed or not */
+  private[graft] def plannedShards: Seq[CellsShard] =
+    planInputPartitions().toSeq.flatMap {
+      case g: CellsShardGroup => g.shards.map(_.asInstanceOf[CellsShard])
+      case s: CellsShard => Seq(s)
+    }
+
   @transient private lazy val tableSplits = graft.ingest.FileStore(root).splitsOf(table)
+
+  // the key-grouped report references rowkey — a metadata-only
+  // projection (provenance columns without the key) cannot resolve it,
+  // and format-based reads have no function catalog to resolve against
+  private def keyGrouped: Boolean = fromCatalog && required.fieldNames.contains("rowkey")
 
   /** STORAGE-PARTITIONED JOIN face (catalog reads only): the scan's
     * rows are key-grouped by `graft_shard_<layout>(rowkey)` — the
@@ -1373,14 +1495,11 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     * function over compatible values, so EnsureRequirements plans a
     * rowkey equi-join with no exchange on either side (the co-located
     * region join, discovered by Catalyst itself under
-    * spark.sql.sources.v2.bucketing.enabled). Format-based reads have
-    * no function catalog to resolve against and report unknown. */
+    * spark.sql.sources.v2.bucketing.enabled), so these reads keep one
+    * region per partition. Format-based reads have no function catalog
+    * to resolve against: they report unknown, and pack their shards. */
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
-    lazy val n = planInputPartitions().length
-    // the key-grouped report references rowkey — a metadata-only
-    // projection (provenance columns without the key) cannot resolve
-    // it, so it reports unknown instead of failing analysis
-    if (!fromCatalog || !required.fieldNames.contains("rowkey"))
+    if (!keyGrouped)
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     else {
       val fp = CellsCatalog.fingerprintOf(tableSplits)
@@ -1388,7 +1507,7 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
         Array(org.apache.spark.sql.connector.expressions.Expressions.apply(
           s"graft_shard_$fp",
           org.apache.spark.sql.connector.expressions.Expressions.column("rowkey"))),
-        n)
+        planInputPartitions().length)
     }
   }
 
@@ -1637,8 +1756,15 @@ case class CellsReaderFactory(lo: Long, hi: Long,
   // the change-feed BATCH face is the same edit log at rest: unmasked
   // puts + delete rows (scan-the-WAL), vs the default masked view;
   // the $latest face folds each key to its max live version
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CellsShard]
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case g: CellsShardGroup =>
+        new CellsChainedReader(g.shards.iterator.map(s => shardReader(s.asInstanceOf[CellsShard])),
+          if (limitN >= 0) limitN.toLong else Long.MaxValue)
+      case s: CellsShard => shardReader(s)
+    }
+
+  private def shardReader(p: CellsShard): PartitionReader[InternalRow] = {
     val m = new CellsReaderMetrics
     // pushed `rowkey DESC` top-N: the REVERSE capped read path (its
     // own layout gate, truncation, and forward fallback — see

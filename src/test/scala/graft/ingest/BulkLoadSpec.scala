@@ -227,7 +227,7 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // rowkey range scan over the bulk data
     val bRange = table.filter(col("rowkey") >= lit(k("B")) && col("rowkey") < lit(k("C")))
-    assert(bRange.rdd.getNumPartitions == 1, "range scan plans only the B shard")
+    assert(CellsSource.plannedShards(bRange).size == 1, "range scan plans only the B shard")
     assert(bRange.count() == 30L)
   }
 
@@ -255,9 +255,10 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until 200).map(i => f"Z-key-$i%03d").sorted)
     // point GET plans exactly one region; range scan plans its span
     val point = table.filter(col("rowkey") === lit(k("Z-key-137")))
-    assert(point.rdd.getNumPartitions == 1 && point.count() == 1L)
+    assert(CellsSource.plannedShards(point).size == 1 && point.count() == 1L)
     val range = table.filter(col("rowkey") >= lit(k("Z-key-040")) && col("rowkey") < lit(k("Z-key-080")))
-    assert(range.rdd.getNumPartitions <= 3, s"range must prune regions: ${range.rdd.getNumPartitions}")
+    val rangeShards = CellsSource.plannedShards(range)
+    assert(rangeShards.size <= 3, s"range must prune regions: $rangeShards")
     assert(range.count() == 40L)
     // F5 and the push path respect the custom placement
     val store = FileStore(root)
@@ -279,7 +280,7 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = Files.createTempDirectory("bulk-512").toString
     BulkLoad.writeCells(cells, root, BulkLoad.Config(splitPoints = points))
     val table = spark.read.format("graft-cells").option("root", root).option("table", "db:c").load()
-    assert(table.rdd.getNumPartitions == 512, "512 populated regions → 512 scan partitions")
+    assert(CellsSource.plannedShards(table).size == 512, "512 populated regions → 512 planned shards")
     assert(table.count() == 512L)
     // replay converges under the custom layout too
     BulkLoad.writeCells(cells, root, BulkLoad.Config(splitPoints = points))
@@ -326,7 +327,7 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(FileStore(dst).readSpecJson("db:c") == FileStore(src).readSpecJson("db:c"),
       "DDL travels with the migration")
     val table = spark.read.format("graft-cells").option("root", dst).option("table", "db:c").load()
-    assert(table.rdd.getNumPartitions == 3, "3 populated regions on the new layout")
+    assert(CellsSource.plannedShards(table).size == 3, "3 populated regions on the new layout")
     assert(table.count() == 60L)
     assert(FileStore(dst).scanTable("db:c").map(t => (t._1, t._2)).sorted ==
       FileStore(src).scanTable("db:c").map(t => (t._1, t._2)).sorted)

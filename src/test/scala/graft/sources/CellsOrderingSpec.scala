@@ -74,4 +74,28 @@ class CellsOrderingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("rowkey").cast("string"), col("version"))
     assert(sortsIn(sorted3) == 0, "compaction restores the sorted-layout report")
   }
+  test("packed partitions: a compacted multi-region table keeps its order report across shards") {
+    val root = Files.createTempDirectory("graft-ord-pack").toString
+    val sp = spark; import sp.implicits._
+    // 64 first-byte regions × 5 keys, one segment each (a bulk load)
+    BulkLoad.writeCells(
+      (for (b <- 0 until 64; k <- 0 until 5) yield
+        ("t", Array((b * 4).toByte, k.toByte), 10L + k, s"b-$b-$k".getBytes("UTF-8")))
+        .toDF("tableName", "rowkey", "version", "body"), root)
+    def tbl = spark.read.format("graft-cells").option("root", root).option("table", "t").load()
+    val scan = CellsScanBuilder(root, "t").build().asInstanceOf[CellsScan]
+    val parts = scan.planInputPartitions()
+    assert(scan.plannedShards.size == 64 && parts.length < 64,
+      s"${parts.length} partitions for 64 shards — nothing packed")
+
+    val sorted = tbl.sortWithinPartitions("rowkey", "version")
+      .select(hex(col("rowkey")), col("version"))
+    assert(sortsIn(sorted) == 0, "a packed scan of sorted shards still reports its order")
+    // every partition streams several shards, in order (hex order ≡ unsigned byte order)
+    val perPart = tbl.select(hex(col("rowkey")).as("k"))
+      .mapPartitions(it => Iterator.single(it.map(_.getString(0)).toSeq)).collect()
+    assert(perPart.map(_.size).sum == 320)
+    assert(perPart.exists(_.map(_.take(2)).distinct.size > 1), "a partition must span shards")
+    assert(perPart.forall(s => s == s.sorted), "reported order must be the physical order")
+  }
 }

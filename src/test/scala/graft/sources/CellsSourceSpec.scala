@@ -10,7 +10,8 @@ import org.scalatest.BeforeAndAfterAll
 /** The DataSource V2 face of the cell store: correctness of the full
   * scan against FileStore's own scanTable, version-predicate pruning
   * that provably skips file opens, column pruning that skips content
-  * I/O entirely, and shard-per-partition parallelism. */
+  * I/O entirely, and shards packed into a few byte-balanced
+  * partitions. */
 class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -190,12 +191,12 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r2))
   }
 
-  test("scan parallelism is one partition per shard directory") {
+  test("scan parallelism: every shard is planned exactly once") {
     val scan = CellsScan(root, table, Long.MinValue, Long.MaxValue, CellsKeyPred.All, CellsSource.Schema)
-    val parts = scan.planInputPartitions()
+    val shards = scan.plannedShards.map(_.dir)
     val shardDirs = new java.io.File(s"$root/${table.replace(':', '~')}")
-      .listFiles().count(_.isDirectory)
-    assert(parts.length == shardDirs && parts.nonEmpty)
+      .listFiles().filter(_.isDirectory).map(_.toString).toSet
+    assert(shards.size == shardDirs.size && shards.toSet == shardDirs && shards.nonEmpty)
   }
 
   test("rowkey point lookup plans ONLY its digest shard and opens only that key's cells") {
@@ -204,7 +205,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sb = CellsScanBuilder(root, table)
     val residual = sb.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("rowkey", key)))
     assert(residual.nonEmpty, "rowkey equality must stay residual — Spark re-checks the bytes")
-    val parts = sb.build().asInstanceOf[CellsScan].planInputPartitions()
+    val parts = sb.build().asInstanceOf[CellsScan].plannedShards
     assert(parts.length == 1, s"point lookup planned ${parts.length} shards, want 1")
     // end-to-end: correct rows, and only the probed key's 3 version
     // cells are opened (not the shard's other keys, not 120 files)
@@ -221,7 +222,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_.getLong(1)).toSet == Set(301L, 302L, 303L, 2901L, 2902L, 2903L))
     val sb = CellsScanBuilder(root, table)
     sb.pushFilters(Array(org.apache.spark.sql.sources.In("rowkey", keys.toArray[Any])))
-    assert(sb.build().asInstanceOf[CellsScan].planInputPartitions().length <= 2)
+    assert(sb.build().asInstanceOf[CellsScan].plannedShards.length <= 2)
   }
 
   test("rowkey prefix/range scan plans only its shard span and opens only that span's cells") {
@@ -242,7 +243,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.sources.GreaterThanOrEqual("rowkey", Array(5.toByte): Array[Byte]),
       org.apache.spark.sql.sources.LessThan("rowkey", Array(6.toByte): Array[Byte])))
     assert(residual.length == 2, "range bounds must stay residual — Spark re-checks the bytes")
-    val parts = sb.build().asInstanceOf[CellsScan].planInputPartitions()
+    val parts = sb.build().asInstanceOf[CellsScan].plannedShards
     assert(parts.length == 1, s"prefix scan planned ${parts.length} shards, want 1 of 16")
     // end-to-end through the DataFrame API: the binary comparisons must
     // translate, prune to the one shard, and return exactly its cells
@@ -621,6 +622,150 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("ek-1", 2L, "put", "eb-2"),
       ("ek-1", 2L, "delete", null)),
       s"the edit log reports every edit, masked or not: $log")
+  }
+
+  // ---- packed scan partitions ----
+
+  /** 256 first-byte regions, 2 keys × 2 versions each, as per-cell put files */
+  private lazy val packTable: String = {
+    val t = "pk"
+    val store = FileStore(root)
+    store.ensureTable(t, TableSpec(compactionThreshold = 0))
+    store.putBatch(t, for (b <- 0 until 256; k <- 0 until 2; v <- 1 to 2) yield CellPut(
+      t, Array(b.toByte, k.toByte), 1000L * b + 10 * k + v, s"pk-$b-$k-$v".getBytes("UTF-8")))
+    t
+  }
+  private def packRead = spark.read.format("graft-cells")
+    .option("root", root).option("table", packTable).load()
+  private def packScan(sb: CellsScanBuilder = CellsScanBuilder(root, packTable)): CellsScan =
+    sb.build().asInstanceOf[CellsScan]
+
+  private def scanExecs(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
+      (p match {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => Seq(b)
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case _ => Nil
+      }) ++ p.children.flatMap(walk)
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("packing: every pruned shard appears in exactly one partition, in key order") {
+    val parts = packScan().planInputPartitions()
+    assert(parts.forall(_.isInstanceOf[CellsShardGroup]))
+    val flat = parts.toSeq.flatMap(_.asInstanceOf[CellsShardGroup].shards)
+      .map(_.asInstanceOf[CellsShard].dir)
+    val listed = CellsShards.pruneListed(java.nio.file.Paths.get(root, packTable), CellsKeyPred.All)
+      .map(_.path.toString)
+    assert(listed.size == 256)
+    assert(flat == listed, "each shard exactly once, groups contiguous in key order")
+    assert(parts.length < 256, s"${parts.length} partitions for 256 shards — nothing packed")
+  }
+
+  test("packing: 256 shards pack to the count Spark's file rule predicts; a 3-shard range stays 3") {
+    // the rule, restated: weight = listed bytes + openCost; target =
+    // min(maxPartitionBytes, max(openCost, total / parallelism)); next-fit
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val parallelism = spark.sparkContext.defaultParallelism
+    assert(parallelism == 4 &&
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).isEmpty)
+    val bytes = CellsShards.pruneListed(java.nio.file.Paths.get(root, packTable), CellsKeyPred.All)
+      .map { ls =>
+        val s = java.nio.file.Files.walk(ls.path)
+        try s.filter(java.nio.file.Files.isRegularFile(_)).mapToLong(java.nio.file.Files.size(_)).sum()
+        finally s.close()
+      }
+    val target = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
+    var predicted = 0
+    var cur = -1L // no open partition
+    bytes.foreach { b =>
+      if (cur < 0 || cur + b > target) { predicted += 1; cur = 0L }
+      cur += b + openCost
+    }
+    val parts = packScan().planInputPartitions()
+    assert(parts.length == predicted, s"planned ${parts.length}, the rule predicts $predicted")
+    assert(predicted > 1 && predicted <= 16, s"$predicted")
+    // a range over first bytes [05, 08): three shards, three partitions
+    val sb = CellsScanBuilder(root, packTable)
+    sb.pushFilters(Array(
+      org.apache.spark.sql.sources.GreaterThanOrEqual("rowkey", Array(5.toByte): Array[Byte]),
+      org.apache.spark.sql.sources.LessThan("rowkey", Array(8.toByte): Array[Byte])))
+    val range = packScan(sb)
+    assert(range.plannedShards.size == 3)
+    assert(range.planInputPartitions().length == 3, "a scan no wider than the cores stays one shard each")
+  }
+
+  test("packing: a packed scan's SQL metrics equal the global open count and the row count") {
+    val df = packRead.select(col("rowkey"), col("version"), col("body"))
+    CellsSource.filesOpened.set(0)
+    val rows = df.collect()
+    val opened = CellsSource.filesOpened.get()
+    assert(rows.length == 1024)
+    val scan = scanExecs(df).head
+    assert(scan.inputPartitions.length < 256, "the scan must actually be packed")
+    val m = scan.metrics.map { case (k, v) => (k, v.value) }
+    assert(m("cellsEmitted") == rows.length, s"$m")
+    assert(m("filesOpened") == opened && opened == 1024L, s"$m vs global $opened")
+  }
+
+  test("packing: a catalog read projecting rowkey keeps one shard per key-grouped partition") {
+    spark.conf.set("spark.sql.catalog.gpack", classOf[CellsCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gpack.root", root)
+    val df = spark.table(s"gpack.$packTable").select(col("rowkey"), col("version"))
+    assert(df.count() == 1024L)
+    val scan = scanExecs(df).head
+    val cells = scan.scan.asInstanceOf[CellsScan]
+    assert(cells.outputPartitioning()
+      .isInstanceOf[org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning])
+    val parts = cells.planInputPartitions()
+    assert(parts.length == 256 && parts.forall(_.isInstanceOf[CellsShard]),
+      s"${parts.length} partitions: ${parts.headOption}")
+    // without rowkey the same catalog read reports unknown and packs
+    val meta = spark.table(s"gpack.$packTable").select(col("version"))
+    val metaScan = scanExecs(meta).head.scan.asInstanceOf[CellsScan]
+    assert(metaScan.planInputPartitions().length < 256)
+  }
+
+  test("packing: pushed COUNT/MIN/MAX over a packed aggregate scan equal the row scan's") {
+    val agg = packRead.filter(col("version") >= 100000L)
+      .agg(count(lit(1)), min(col("version")), max(col("version")))
+    val got = agg.collect().head
+    val aggScan = scanExecs(agg).map(_.scan).collectFirst { case a: CellsAggScan => a }
+    assert(aggScan.isDefined, s"aggregate must push:\n${agg.queryExecution.executedPlan}")
+    val parts = aggScan.get.planInputPartitions()
+    assert(parts.length < 256 && parts.forall(_.isInstanceOf[CellsShardGroup]))
+    val vs = packRead.filter(col("version") >= 100000L).select("version").collect().map(_.getLong(0))
+    assert(vs.nonEmpty)
+    assert((got.getLong(0), got.getLong(1), got.getLong(2)) == ((vs.length.toLong, vs.min, vs.max)))
+  }
+
+  test("packing: a pushed LIMIT caps each packed partition, not each shard") {
+    val df = packRead.select(col("rowkey"), col("body")).limit(5)
+    val sb = CellsScanBuilder(root, packTable)
+    assert(sb.pushLimit(5))
+    val scan = packScan(sb)
+    val parts = scan.planInputPartitions()
+    CellsSource.cappedRowsEmitted.set(0)
+    assert(df.collect().length == 5)
+    val emitted = CellsSource.cappedRowsEmitted.get()
+    assert(emitted > 0 && emitted <= 5L * parts.length,
+      s"emitted $emitted rows across ${parts.length} partitions (256 shards)")
+    // a reader drained to the end (no Spark limit above it) still stops
+    // at N for the whole packed partition, not N per shard
+    val group = parts.head.asInstanceOf[CellsShardGroup]
+    assert(group.shards.size > 1)
+    CellsSource.cappedRowsEmitted.set(0)
+    val rd = scan.createReaderFactory().createReader(group)
+    var n = 0
+    try while (rd.next()) n += 1 finally rd.close()
+    assert(n == 5 && CellsSource.cappedRowsEmitted.get() == 5L,
+      s"$n rows, ${CellsSource.cappedRowsEmitted.get()} capped, from ${group.shards.size} shards")
   }
 
   private def hexToBytes(h: String): Array[Byte] =

@@ -154,9 +154,10 @@ class ColocatedCellsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = Files.createTempDirectory("coloc-planner").toString
     seed(root, "t", keys.map(key => (key, 1L, s"v-$key")), points)
     val table = spark.read.format("graft-cells").option("root", root).option("table", "t").load()
-    assert(table.rdd.getNumPartitions == 4, "4 equi-depth regions, all populated")
+    assert(CellsSource.plannedShards(table).size == 4, "4 equi-depth regions, all populated")
     assert(table.count() == 120L)
-    val perShard = table.rdd.mapPartitions(it => Iterator(it.size)).collect()
-    assert(perShard.forall(n => n == 30), s"equi-depth boundaries balance the regions: ${perShard.toSeq}")
+    val perShard = table.groupBy("_shard").count().collect().map(_.getLong(1))
+    assert(perShard.length == 4 && perShard.forall(n => n == 30),
+      s"equi-depth boundaries balance the regions: ${perShard.toSeq}")
   }
 }

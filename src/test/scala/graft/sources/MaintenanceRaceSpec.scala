@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
 /** PLANNING-RACE coverage (ADVICE r16): both maintenance protocols
   * change the LAYOUT FILE before their directory renames land (split:
@@ -179,5 +180,71 @@ class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "merge-then-split can never restore a previously-seen byte size")
     // and the served layout is the correct one
     assert(store.splitsOf("t").names == Vector("-", "42", "43", "44"))
+  }
+  /** reads every planned partition of `scan` through its own factory */
+  private def readAll(scan: CellsScan, parts: Array[org.apache.spark.sql.connector.read.InputPartition])
+      : Seq[Seq[(String, Long)]] = {
+    val fac = scan.createReaderFactory()
+    parts.toSeq.map { p =>
+      val rd = fac.createReader(p)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      try while (rd.next()) out += ((new String(rd.get().getBinary(0), "UTF-8"), rd.get().getLong(1)))
+      finally rd.close()
+      out.toSeq
+    }
+  }
+
+  private def groupsOf(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Seq[Seq[String]] =
+    parts.toSeq.map(_.asInstanceOf[CellsShardGroup].shards.map(s =>
+      Paths.get(s.asInstanceOf[CellsShard].dir).getFileName.toString))
+
+  test("mustSort over packed partitions: a shard that gains a second segment after planning is sorted locally") {
+    val root = Files.createTempDirectory("msort-pack").toString
+    val sp = spark; import sp.implicits._
+    def load(ks: Seq[String]): Unit = graft.ingest.BulkLoad.writeCells(
+      ks.map(k => ("t", k.getBytes("UTF-8"), 1L, k.getBytes("UTF-8")))
+        .toDF("tableName", "rowkey", "version", "body"), root)
+    val regions = "ABCDEFGH".map(_.toString)
+    load(for (r <- regions; i <- 0 until 10 by 2) yield s"$r-$i")
+    val scan = CellsScanBuilder(root, "t").build().asInstanceOf[CellsScan]
+    assert(scan.outputOrdering().nonEmpty, "one segment per shard reports its order")
+    val parts = scan.planInputPartitions()
+    val groups = groupsOf(parts)
+    assert(groups.flatten.size == 8 && groups.exists(g => g.size > 1 && g.contains("43")),
+      s"shard 43 must share a packed partition: $groups")
+    // after planning: shard 43 gains a second segment interleaving the first
+    load((1 until 10 by 2).map(i => s"C-$i"))
+    val segs = Files.list(Paths.get(root, "t", "43"))
+    try assert(segs.iterator().asScala.count(p =>
+      graft.ingest.CellSegment.isSegment(p.getFileName.toString)) == 2)
+    finally segs.close()
+    val got = readAll(scan, parts)
+    assert(got.flatten.size == 45)
+    assert(got.forall(p => p.map(_._1) == p.map(_._1).sorted),
+      s"each packed partition must come back sorted: $got")
+  }
+
+  test("a packed scan planned before a region split promotes daughters returns every cell once") {
+    val root = Files.createTempDirectory("split-pack").toString
+    val t = "t"
+    val store = FileStore(root)
+    // flush on (threshold 2) builds segments; split only on request
+    store.ensureTable(t, TableSpec(compactionThreshold = 2))
+    val cold = for (r <- "ABCDEFGH"; i <- 0 until 3) yield s"$r-$i"
+    store.putBatch(t, cold.map(k => CellPut(t, k.getBytes("UTF-8"), 1L, k.getBytes("UTF-8"))))
+    val hot = (0 until 200).map(i => f"Z-$i%04d")
+    hot.grouped(25).foreach(w =>
+      store.putBatch(t, w.map(k => CellPut(t, k.getBytes("UTF-8"), 1L, k.getBytes("UTF-8")))))
+    val scan = CellsScanBuilder(root, t).build().asInstanceOf[CellsScan]
+    val parts = scan.planInputPartitions()
+    val groups = groupsOf(parts)
+    assert(groups.exists(g => g.size > 1 && g.contains("5a")), s"the hot shard must share a group: $groups")
+    val before = store.splitsOf(t).size
+    assert(graft.ingest.RegionSplit.maybeSplit(root, t, "5a", maxRegionBytes = 2048) > 0)
+    assert(store.splitsOf(t).size > before, "the split must promote daughters")
+    val got = readAll(scan, parts).flatten
+    val want = (cold ++ hot).map(k => (k, 1L))
+    assert(got.size == want.size && got.toSet == want.toSet,
+      s"${got.size} rows, ${got.toSet.size} distinct, want ${want.size}")
   }
 }
