@@ -85,12 +85,10 @@ case class CellsAggReaderFactory(lo: Long, hi: Long, keys: CellsKeyPred,
                                  specs: Seq[CellsAggSpec], latest: Boolean,
                                  retention: Option[graft.ingest.Retention.Policy] = None)
     extends PartitionReaderFactory {
+  // the scan always packs: every partition is a group of shards
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case g: CellsShardGroup =>
-        new CellsChainedReader(g.shards.iterator.map(s => shardReader(s.asInstanceOf[CellsAggShard])))
-      case s: CellsAggShard => shardReader(s)
-    }
+    new CellsChainedReader(
+      partition.asInstanceOf[CellsShardGroup[CellsAggShard]].shards.iterator.map(shardReader))
 
   private def shardReader(part: CellsAggShard): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {

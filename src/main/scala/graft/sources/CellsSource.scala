@@ -147,17 +147,26 @@ object CellsSource {
   /** shard directories the `CellsScan`s of `df`'s physical plan plan,
     * in key order — the pruning proof, which a partition count is not
     * once shards are packed */
-  private[graft] def plannedShards(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+  private[graft] def plannedShards(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    batchScans(df).map(_.scan).flatMap {
+      case s: CellsScan => s.plannedShards.map(_.dir)
+      case _ => Nil
+    }
+
+  /** every DSv2 batch scan node in `df`'s physical plan, looking
+    * through adaptive execution and its query stages */
+  private[graft] def batchScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scans(p: SparkPlan): Seq[CellsScan] = (p match {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan match { case s: CellsScan => Seq(s); case _ => Nil }
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def walk(p: SparkPlan): Seq[BatchScanExec] = (p match {
+      case b: BatchScanExec => Seq(b)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
       case _ => Nil
-    }) ++ p.children.flatMap(scans)
-    scans(df.queryExecution.executedPlan).flatMap(_.plannedShards.map(_.dir))
+    }) ++ p.children.flatMap(walk)
+    walk(df.queryExecution.executedPlan)
   }
 }
 
@@ -305,32 +314,33 @@ object CellsShards {
   def prune(tableDir: Path, keys: CellsKeyPred): Seq[Path] =
     pruneListed(tableDir, keys).map(_.path)
 
-  /** Packs pruned shards into a few byte-balanced partitions by Spark's
-    * own file rule ([[org.apache.spark.sql.execution.datasources.FilePartition]]):
+  /** Packs pruned shards into a few byte-balanced partitions by the rule
+    * of Spark's [[org.apache.spark.sql.execution.datasources.FilePartition]]:
     * each shard weighs its resident store-file bytes
     * ([[graft.ingest.RegionSplit.shardBytes]]) plus `spark.sql.files.openCostInBytes`,
     * the target is `min(maxPartitionBytes, max(openCost, total / parallelism))`
-    * with parallelism `spark.sql.leafNodeDefaultParallelism` (else the
-    * context's default), and partitions fill next-fit in KEY order, never
-    * re-sorted by size. Shards are disjoint key ranges, so a group of
-    * sorted shards read in order is itself sorted. A scan of no more shards
-    * than the parallelism keeps one shard per partition. */
-  def pack(listed: Seq[ListedShard])(part: ListedShard => InputPartition): Array[InputPartition] = {
-    val conf = org.apache.spark.sql.internal.SQLConf.get
+    * with parallelism `spark.sql.files.minPartitionNum`, else
+    * `spark.sql.leafNodeDefaultParallelism`, else the context's default,
+    * and partitions fill next-fit in KEY order, never re-sorted by size.
+    * Shards are disjoint key ranges, so a group of sorted shards read in
+    * order is itself sorted. A scan of no more non-empty shards than the
+    * parallelism keeps one of them per partition; an empty shard (no
+    * resident store files) weighs 0 in the fit test, so it joins the open
+    * group unless that group is already over the target. */
+  def pack[P <: InputPartition](listed: Seq[ListedShard])(part: ListedShard => P): Array[InputPartition] = {
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = SQLConf.get
     val openCost = conf.filesOpenCostInBytes
-    val parallelism = conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+    val parallelism = conf.filesMinPartitionNum
+      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
       .getOrElse(org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .fold(1)(_.sparkContext.defaultParallelism))
-    // one shard leaves nothing to balance: skip its listing, which
-    // costs a stat per file on a put-heavy region
-    val bytes =
-      if (listed.size <= 1) listed.map(_ => 0L)
-      else listed.map(ls => graft.ingest.RegionSplit.shardBytes(ls.path))
+    val bytes = listed.map(ls => graft.ingest.RegionSplit.shardBytes(ls.path))
     val target = math.min(conf.filesMaxPartitionBytes,
       math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
     val groups = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    val cur = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[P]
     var curBytes = 0L
     listed.iterator.zip(bytes.iterator).foreach { case (ls, b) =>
       if (cur.nonEmpty && curBytes + b > target) {
@@ -349,7 +359,7 @@ object CellsShards {
 /** One packed scan partition: a key-ordered run of shard partitions
   * ([[CellsShard]]s or [[CellsAggShard]]s), read by a
   * [[CellsChainedReader]]. */
-case class CellsShardGroup(shards: Vector[InputPartition]) extends InputPartition
+case class CellsShardGroup[+P <: InputPartition](shards: Vector[P]) extends InputPartition
 
 /** Reads a packed partition: opens each shard's own reader in turn and
   * closes it before opening the next, stops once `limit` rows are out
@@ -1476,7 +1486,7 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     * narrowing), in key order — packed or not */
   private[graft] def plannedShards: Seq[CellsShard] =
     planInputPartitions().toSeq.flatMap {
-      case g: CellsShardGroup => g.shards.map(_.asInstanceOf[CellsShard])
+      case g: CellsShardGroup[CellsShard @unchecked] => g.shards
       case s: CellsShard => Seq(s)
     }
 
@@ -1758,8 +1768,8 @@ case class CellsReaderFactory(lo: Long, hi: Long,
   // the $latest face folds each key to its max live version
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case g: CellsShardGroup =>
-        new CellsChainedReader(g.shards.iterator.map(s => shardReader(s.asInstanceOf[CellsShard])),
+      case g: CellsShardGroup[CellsShard @unchecked] =>
+        new CellsChainedReader(g.shards.iterator.map(shardReader),
           if (limitN >= 0) limitN.toLong else Long.MaxValue)
       case s: CellsShard => shardReader(s)
     }

@@ -640,25 +640,10 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def packScan(sb: CellsScanBuilder = CellsScanBuilder(root, packTable)): CellsScan =
     sb.build().asInstanceOf[CellsScan]
 
-  private def scanExecs(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
-      (p match {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => Seq(b)
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _ => Nil
-      }) ++ p.children.flatMap(walk)
-    walk(df.queryExecution.executedPlan)
-  }
-
   test("packing: every pruned shard appears in exactly one partition, in key order") {
     val parts = packScan().planInputPartitions()
-    assert(parts.forall(_.isInstanceOf[CellsShardGroup]))
-    val flat = parts.toSeq.flatMap(_.asInstanceOf[CellsShardGroup].shards)
-      .map(_.asInstanceOf[CellsShard].dir)
+    assert(parts.forall(_.isInstanceOf[CellsShardGroup[_]]))
+    val flat = parts.toSeq.flatMap(_.asInstanceOf[CellsShardGroup[CellsShard]].shards).map(_.dir)
     val listed = CellsShards.pruneListed(java.nio.file.Paths.get(root, packTable), CellsKeyPred.All)
       .map(_.path.toString)
     assert(listed.size == 256)
@@ -671,8 +656,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // min(maxPartitionBytes, max(openCost, total / parallelism)); next-fit
     val conf = org.apache.spark.sql.internal.SQLConf.get
     val openCost = conf.filesOpenCostInBytes
-    val parallelism = spark.sparkContext.defaultParallelism
-    assert(parallelism == 4 &&
+    assert(spark.sparkContext.defaultParallelism == 4 && conf.filesMinPartitionNum.isEmpty &&
       conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).isEmpty)
     val bytes = CellsShards.pruneListed(java.nio.file.Paths.get(root, packTable), CellsKeyPred.All)
       .map { ls =>
@@ -680,17 +664,26 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         try s.filter(java.nio.file.Files.isRegularFile(_)).mapToLong(java.nio.file.Files.size(_)).sum()
         finally s.close()
       }
-    val target = math.min(conf.filesMaxPartitionBytes,
-      math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
-    var predicted = 0
-    var cur = -1L // no open partition
-    bytes.foreach { b =>
-      if (cur < 0 || cur + b > target) { predicted += 1; cur = 0L }
-      cur += b + openCost
+    def predicted(parallelism: Int): Int = {
+      val target = math.min(conf.filesMaxPartitionBytes,
+        math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
+      var n = 0
+      var cur = -1L // no open partition
+      bytes.foreach { b =>
+        if (cur < 0 || cur + b > target) { n += 1; cur = 0L }
+        cur += b + openCost
+      }
+      n
     }
     val parts = packScan().planInputPartitions()
-    assert(parts.length == predicted, s"planned ${parts.length}, the rule predicts $predicted")
-    assert(predicted > 1 && predicted <= 16, s"$predicted")
+    assert(parts.length == predicted(4), s"planned ${parts.length}, the rule predicts ${predicted(4)}")
+    assert(predicted(4) > 1 && predicted(4) <= 16, s"${predicted(4)}")
+    // spark.sql.files.minPartitionNum overrides the parallelism, as on file sources
+    spark.conf.set("spark.sql.files.minPartitionNum", "64")
+    try {
+      val wide = packScan().planInputPartitions().length
+      assert(wide == predicted(64) && wide > parts.length, s"planned $wide, the rule predicts ${predicted(64)}")
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
     // a range over first bytes [05, 08): three shards, three partitions
     val sb = CellsScanBuilder(root, packTable)
     sb.pushFilters(Array(
@@ -707,7 +700,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = df.collect()
     val opened = CellsSource.filesOpened.get()
     assert(rows.length == 1024)
-    val scan = scanExecs(df).head
+    val scan = CellsSource.batchScans(df).head
     assert(scan.inputPartitions.length < 256, "the scan must actually be packed")
     val m = scan.metrics.map { case (k, v) => (k, v.value) }
     assert(m("cellsEmitted") == rows.length, s"$m")
@@ -719,7 +712,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.catalog.gpack.root", root)
     val df = spark.table(s"gpack.$packTable").select(col("rowkey"), col("version"))
     assert(df.count() == 1024L)
-    val scan = scanExecs(df).head
+    val scan = CellsSource.batchScans(df).head
     val cells = scan.scan.asInstanceOf[CellsScan]
     assert(cells.outputPartitioning()
       .isInstanceOf[org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning])
@@ -728,7 +721,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"${parts.length} partitions: ${parts.headOption}")
     // without rowkey the same catalog read reports unknown and packs
     val meta = spark.table(s"gpack.$packTable").select(col("version"))
-    val metaScan = scanExecs(meta).head.scan.asInstanceOf[CellsScan]
+    val metaScan = CellsSource.batchScans(meta).head.scan.asInstanceOf[CellsScan]
     assert(metaScan.planInputPartitions().length < 256)
   }
 
@@ -736,10 +729,10 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val agg = packRead.filter(col("version") >= 100000L)
       .agg(count(lit(1)), min(col("version")), max(col("version")))
     val got = agg.collect().head
-    val aggScan = scanExecs(agg).map(_.scan).collectFirst { case a: CellsAggScan => a }
+    val aggScan = CellsSource.batchScans(agg).map(_.scan).collectFirst { case a: CellsAggScan => a }
     assert(aggScan.isDefined, s"aggregate must push:\n${agg.queryExecution.executedPlan}")
     val parts = aggScan.get.planInputPartitions()
-    assert(parts.length < 256 && parts.forall(_.isInstanceOf[CellsShardGroup]))
+    assert(parts.length < 256 && parts.forall(_.isInstanceOf[CellsShardGroup[_]]))
     val vs = packRead.filter(col("version") >= 100000L).select("version").collect().map(_.getLong(0))
     assert(vs.nonEmpty)
     assert((got.getLong(0), got.getLong(1), got.getLong(2)) == ((vs.length.toLong, vs.min, vs.max)))
@@ -758,7 +751,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"emitted $emitted rows across ${parts.length} partitions (256 shards)")
     // a reader drained to the end (no Spark limit above it) still stops
     // at N for the whole packed partition, not N per shard
-    val group = parts.head.asInstanceOf[CellsShardGroup]
+    val group = parts.head.asInstanceOf[CellsShardGroup[CellsShard]]
     assert(group.shards.size > 1)
     CellsSource.cappedRowsEmitted.set(0)
     val rd = scan.createReaderFactory().createReader(group)

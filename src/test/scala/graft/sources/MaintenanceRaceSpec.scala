@@ -195,8 +195,8 @@ class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def groupsOf(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Seq[Seq[String]] =
-    parts.toSeq.map(_.asInstanceOf[CellsShardGroup].shards.map(s =>
-      Paths.get(s.asInstanceOf[CellsShard].dir).getFileName.toString))
+    parts.toSeq.map(_.asInstanceOf[CellsShardGroup[CellsShard]].shards.map(s =>
+      Paths.get(s.dir).getFileName.toString))
 
   test("mustSort over packed partitions: a shard that gains a second segment after planning is sorted locally") {
     val root = Files.createTempDirectory("msort-pack").toString
