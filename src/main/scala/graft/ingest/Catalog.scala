@@ -104,7 +104,8 @@ object Catalog {
   def readMetadata(path: String, conf: org.apache.hadoop.conf.Configuration): EncryptionMetadata = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    val text = new String(fs.open(p).readAllBytes(), "UTF-8")
+    val in = fs.open(p)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     parseMetadata(text, path)
   }
 

@@ -33,12 +33,20 @@ import org.apache.spark.sql.SparkSession
   */
 object IngestMain {
 
+  /** every key `main` reads */
+  private val Keys = Seq("input.prefixes", "table.sink.dir", "manifest.dir", "run-mode",
+    "skip.existing.records", "skip.earlier.than", "skip.later.than", "object.maximum.size",
+    "dks.url", "correlation.id", "hdi.version")
+
   def main(args: Array[String]): Unit = {
-    val conf: Map[String, String] =
-      args.filter(_.contains("=")).map { a =>
-        val i = a.indexOf('=')
-        a.take(i) -> a.drop(i + 1)
-      }.toMap
+    // an argument main does not read would run an import on defaults
+    // and report nothing: a typo or a retired key fails by name
+    val conf: Map[String, String] = args.map { a =>
+      val i = a.indexOf('=')
+      if (i < 0 || !Keys.contains(a.take(i))) throw new IllegalArgumentException(
+        s"unknown argument $a; expected key=value with a key among ${Keys.mkString(", ")}")
+      a.take(i) -> a.drop(i + 1)
+    }.toMap
 
     def required(k: String): String =
       conf.getOrElse(k, throw new IllegalArgumentException(s"missing required arg $k=<value>"))

@@ -49,7 +49,7 @@ class S3StubFileSystem extends FileSystem {
   private def local(f: Path): File = new File(f.toUri.getPath)
 
   private def qualify(file: File): Path =
-    new Path("s3stub", null, file.getAbsolutePath)
+    new Path(fsUri.getScheme, null, file.getAbsolutePath)
 
   private def status(file: File): FileStatus =
     new FileStatus(file.length(), file.isDirectory, 1, 32 * 1024 * 1024,

@@ -28,10 +28,11 @@ import java.nio.file.Paths
   * region emits one pre-aggregated row — masks applied at filename
   * level, identities deduped across store-file kinds, exactly the rows
   * the metadata-only scan would have produced — and Spark's final
-  * aggregate folds the ≤regions rows. The regions ride in a few packed
-  * partitions ([[CellsShards.pack]]), each reading its regions in turn
-  * and emitting one row per region. A region with no matching cells
-  * emits (0, null, null), so empty tables still count 0.
+  * aggregate folds the ≤regions rows. The scan plans like every other
+  * face ([[CellsShards.plan]]): the regions ride in a few packed
+  * partitions, each reading its regions in turn and emitting one row
+  * per region. A region with no matching cells emits (0, null, null),
+  * so empty tables still count 0.
   *
   * 100 TB: a full-table count costs one directory listing + index
   * walk per region in parallel, no data-region I/O at all — at the
@@ -64,35 +65,24 @@ case class CellsAggScan(root: String, table: String, lo: Long, hi: Long,
       (if (latest) " latest" else "") + s" aggs=[${specs.mkString(",")}]"
 
   override def planInputPartitions(): Array[InputPartition] = {
+    // a pushed COUNT must stay exact across a concurrent split: the
+    // planner's fingerprint-before-listing order covers it
     val dir = Paths.get(root, table.replace(':', '~'))
-    // layout fingerprint BEFORE the listing (the region-split daughter-
-    // discovery ordering contract — see [[CellsScan.planInputPartitions]]):
-    // a pushed COUNT must stay exact across a concurrent split
-    val fp = CellsCatalog.fingerprintOf(graft.ingest.FileStore.splitsAt(dir))
-    CellsShards.pack(CellsShards.pruneListed(dir, keys))(ls =>
-      CellsAggShard(ls.path.toString, ls.endName, fp, ls.isFirst))
+    CellsShards.plan(dir, graft.ingest.FileStore.splitsAt(dir), keys, lo, hi)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    CellsAggReaderFactory(lo, hi, keys, specs, latest, retention)
+    CellsAggReaderFactory(specs, latest, retention)
 }
 
-case class CellsAggShard(dir: String, endName: Option[String] = None,
-                         plannedFp: String = "",
-                         firstShard: Boolean = false) extends InputPartition
-
-case class CellsAggReaderFactory(lo: Long, hi: Long, keys: CellsKeyPred,
-                                 specs: Seq[CellsAggSpec], latest: Boolean,
+case class CellsAggReaderFactory(specs: Seq[CellsAggSpec], latest: Boolean,
                                  retention: Option[graft.ingest.Retention.Policy] = None)
     extends PartitionReaderFactory {
-  // the scan always packs: every partition is a group of shards
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new CellsChainedReader(
-      partition.asInstanceOf[CellsShardGroup[CellsAggShard]].shards.iterator.map(shardReader))
+    CellsShards.read(partition)(shardReader)
 
-  private def shardReader(part: CellsAggShard): PartitionReader[InternalRow] =
+  private def shardReader(part: CellsShard): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val shard = part.dir
       private var emitted = false
       override def next(): Boolean = !emitted
       override def get(): InternalRow = {
@@ -104,7 +94,7 @@ case class CellsAggReaderFactory(lo: Long, hi: Long, keys: CellsKeyPred,
         // a capped/TTL'd table still costs zero body bytes) all apply
         // exactly as on the row scan — including region-split satellite
         // and daughter discovery (a COUNT must stay exact mid-split)
-        val rows = CellsReaders.reader(shard, lo, hi, keys, Array("version"),
+        val rows = CellsReaders.reader(part.dir, part.lo, part.hi, part.keys, Array("version"),
           maskDeletes = true, emitOps = false, latestOnly = latest,
           retention = retention, endName = part.endName, plannedFp = part.plannedFp,
           firstShard = part.firstShard)

@@ -52,9 +52,11 @@ import scala.jdk.CollectionConverters._
   *    requested it never reads file CONTENT at all (the version is in
   *    the name) — a `count(version)` query is pure directory listing.
   *
-  * Parallelism: one [[InputPartition]] per shard directory. Shards are
-  * 256 uniform buckets (CRC32 leading byte), so partition work is
-  * balanced by construction and scales the scan to the cluster.
+  * Parallelism: every read face plans through [[CellsShards.plan]] —
+  * the pruned shard directories packed into a few byte-balanced
+  * partitions, one shard per partition only under the key-grouped
+  * catalog report. Shards are 256 uniform buckets (CRC32 leading
+  * byte) by default, so shard work is balanced by construction.
   *
   * DELETES (HBase Delete-marker model, both Delete types): a tombstone
   * file `<digest>.<version>.d` masks every cell of its rowkey with
@@ -204,6 +206,20 @@ private[sources] case class GraftTaskMetric(name: String, value: Long)
 /** per-reader I/O cells, reported through currentMetricsValues */
 private[sources] final class CellsReaderMetrics { var filesOpened: Long = 0L }
 
+/** One shard reader's SQL-UI task metrics: the store files `m` saw
+  * opened and the rows `base` emitted. */
+private[sources] final class CellsMetricsReader(base: PartitionReader[InternalRow],
+                                                m: CellsReaderMetrics)
+    extends PartitionReader[InternalRow] {
+  private var emitted = 0L
+  override def next(): Boolean = base.next() && { emitted += 1; true }
+  override def get(): InternalRow = base.get()
+  override def close(): Unit = base.close()
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(GraftTaskMetric("filesOpened", m.filesOpened), GraftTaskMetric("cellsEmitted", emitted))
+}
+
 /** Rowkey predicates resolved at planning time into three pruning
   * tiers: shard DIRECTORIES (point probes and first-byte range spans),
   * cell FILES (point-probe digests matched against the filename), and
@@ -314,6 +330,30 @@ object CellsShards {
   def prune(tableDir: Path, keys: CellsKeyPred): Seq[Path] =
     pruneListed(tableDir, keys).map(_.path)
 
+  /** THE read planner of every cell face (row scan, pushed aggregate,
+    * micro-batch stream, `$versions` inventory): one [[CellsShard]] per
+    * pruned shard of `tableDir`, carrying the key predicate, the version
+    * window [lo, hi], its listed end, the layout fingerprint and its
+    * region index in `splits`, then [[pack]]ed — or left one shard per
+    * partition when `keyGrouped` (the catalog report a storage-
+    * partitioned join needs). `keep` drops shards by name after the
+    * listing, so ends stay those of the full listing.
+    *
+    * `splits` must be read BEFORE this call (a by-value argument is):
+    * the reader treats a fingerprint CHANGE as "daughters may have been
+    * promoted since planning", so the fingerprint must never postdate
+    * the listing, or a split landing between the two reads would hide
+    * its daughter from a stale partition set. */
+  def plan(tableDir: Path, splits: graft.ingest.FileStore.Splits, keys: CellsKeyPred,
+           lo: Long, hi: Long, keyGrouped: Boolean = false,
+           keep: String => Boolean = _ => true): Array[InputPartition] = {
+    val fp = CellsCatalog.fingerprintOf(splits)
+    val shards = pruneListed(tableDir, keys).filter(ls => keep(ls.name)).map(ls =>
+      CellsShard(ls.path.toString, keys, lo, hi, splits.names.indexOf(ls.name),
+        ls.endName, fp, ls.isFirst))
+    if (keyGrouped) shards.toArray else pack(shards)
+  }
+
   /** Packs pruned shards into a few byte-balanced partitions by the rule
     * of Spark's [[org.apache.spark.sql.execution.datasources.FilePartition]]:
     * each shard weighs its resident store-file bytes
@@ -327,7 +367,7 @@ object CellsShards {
     * parallelism keeps one of them per partition; an empty shard (no
     * resident store files) weighs 0 in the fit test, so it joins the open
     * group unless that group is already over the target. */
-  def pack[P <: InputPartition](listed: Seq[ListedShard])(part: ListedShard => P): Array[InputPartition] = {
+  def pack(shards: Seq[CellsShard]): Array[InputPartition] = {
     import org.apache.spark.sql.internal.SQLConf
     val conf = SQLConf.get
     val openCost = conf.filesOpenCostInBytes
@@ -336,30 +376,39 @@ object CellsShards {
       .getOrElse(org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .fold(1)(_.sparkContext.defaultParallelism))
-    val bytes = listed.map(ls => graft.ingest.RegionSplit.shardBytes(ls.path))
+    val bytes = shards.map(s => graft.ingest.RegionSplit.shardBytes(Paths.get(s.dir)))
     val target = math.min(conf.filesMaxPartitionBytes,
       math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
     val groups = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    val cur = scala.collection.mutable.ArrayBuffer.empty[P]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[CellsShard]
     var curBytes = 0L
-    listed.iterator.zip(bytes.iterator).foreach { case (ls, b) =>
+    shards.iterator.zip(bytes.iterator).foreach { case (s, b) =>
       if (cur.nonEmpty && curBytes + b > target) {
         groups += CellsShardGroup(cur.toVector)
         cur.clear()
         curBytes = 0L
       }
       curBytes += b + openCost
-      cur += part(ls)
+      cur += s
     }
     if (cur.nonEmpty) groups += CellsShardGroup(cur.toVector)
     groups.toArray
   }
+
+  /** Opens a planned partition with `shard` as each shard's reader: a
+    * packed group through a [[CellsChainedReader]] capped at `limit`
+    * rows, a lone key-grouped shard directly. */
+  def read(partition: InputPartition, limit: Long = Long.MaxValue)(
+      shard: CellsShard => PartitionReader[InternalRow]): PartitionReader[InternalRow] =
+    partition match {
+      case g: CellsShardGroup => new CellsChainedReader(g.shards.iterator.map(shard), limit)
+      case s: CellsShard => shard(s)
+    }
 }
 
-/** One packed scan partition: a key-ordered run of shard partitions
-  * ([[CellsShard]]s or [[CellsAggShard]]s), read by a
+/** One packed partition: a key-ordered run of [[CellsShard]]s, read by a
   * [[CellsChainedReader]]. */
-case class CellsShardGroup[+P <: InputPartition](shards: Vector[P]) extends InputPartition
+case class CellsShardGroup(shards: Vector[CellsShard]) extends InputPartition
 
 /** Reads a packed partition: opens each shard's own reader in turn and
   * closes it before opening the next, stops once `limit` rows are out
@@ -1157,7 +1206,6 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     if (changeFeed || !names.contains("rowkey")) return Array.empty
     val sortedLayout = {
       if (orderedState == 0) {
-        val dir = Paths.get(root, table.replace(':', '~'))
         // a SPLIT-ELIGIBLE table (maxRegionBytes DDL) can never promise
         // a static per-partition ordering: an automatic split between
         // this report and execution would splice a second sorted run
@@ -1308,7 +1356,6 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
           catch { case _: java.io.IOException => (Long.MaxValue >> 20, Long.MaxValue >> 20) }
       }
     private def compute(): (Long, Long) = {
-      val dir = Paths.get(root, table.replace(':', '~'))
       var n = 0L
       var b = 0L
       if (Files.isDirectory(dir)) {
@@ -1434,12 +1481,11 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val dir = Paths.get(root, table.replace(':', '~'))
     // a rowkey point lookup plans ONLY its shard — 1 input partition
     // out of the table's whole region set (a region-server point read,
     // not a table scan); a range/prefix scan plans the contiguous
     // shard span it covers. The pruned shards are then packed into a
-    // few byte-balanced partitions ([[CellsShards.pack]]), so a table
+    // few byte-balanced partitions ([[CellsShards.plan]]), so a table
     // scan costs about as many tasks as cores, not one per region —
     // except under the key-grouped report below, which needs one
     // region per partition.
@@ -1464,18 +1510,7 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     val k = effKeys
     val cached = plannedPartitions
     if (cached != null && (cached._1 eq k)) return cached._2
-    // layout fingerprint captured BEFORE the directory listing (splits
-    // was forced above): the reader treats a fingerprint CHANGE as
-    // "daughters may have been promoted since planning" — so the fp
-    // must never postdate the listing, or a split landing between the
-    // two reads would hide its daughter from a stale partition set
-    val fp = CellsCatalog.fingerprintOf(splits)
-    val listed = CellsShards.pruneListed(dir, k)
-    def shard(ls: CellsShards.ListedShard): InputPartition =
-      CellsShard(ls.path.toString, k, splits.names.indexOf(ls.name), ls.endName, fp, ls.isFirst)
-    val planned =
-      if (keyGrouped) listed.map(shard).toArray
-      else CellsShards.pack(listed)(shard)
+    val planned = CellsShards.plan(dir, splits, k, lo, hi, keyGrouped)
     plannedPartitions = (k, planned)
     planned
   }
@@ -1486,11 +1521,12 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     * narrowing), in key order — packed or not */
   private[graft] def plannedShards: Seq[CellsShard] =
     planInputPartitions().toSeq.flatMap {
-      case g: CellsShardGroup[CellsShard @unchecked] => g.shards
+      case g: CellsShardGroup => g.shards
       case s: CellsShard => Seq(s)
     }
 
-  @transient private lazy val tableSplits = graft.ingest.FileStore(root).splitsOf(table)
+  private def dir = Paths.get(root, table.replace(':', '~'))
+  @transient private lazy val tableSplits = graft.ingest.FileStore.splitsAt(dir)
 
   // the key-grouped report references rowkey — a metadata-only
   // projection (provenance columns without the key) cannot resolve it,
@@ -1532,8 +1568,10 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     // wave + flush) can silently void it — so the readers re-verify
     // the premise against their OWN read-time listing and locally sort
     // the partition when it no longer holds ([[CellsReaderFactory]]).
-    CellsReaderFactory(lo, hi, required.fieldNames, changeFeed, latest, limitN, topK,
-      topKDesc, topKRev, retention, mustSort = orderedState == 1)
+    // the change-feed BATCH face is the same edit log at rest: unmasked
+    // puts + delete rows (scan-the-WAL), vs the default masked view
+    CellsReaderFactory(required.fieldNames, maskDeletes = !changeFeed, emitOps = changeFeed,
+      latest, limitN, topK, topKDesc, topKRev, retention, mustSort = orderedState == 1)
 
   /** SQL-UI metrics per scan node — pruning quality visible without
     * the global test counters. */
@@ -1576,7 +1614,10 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
   * IS delivered (spec-pinned both ways).
   * Version and rowkey pushdown compose: a `.where("version >= T")` on
   * the stream bounds the watermark window at the FILENAME level,
-  * exactly like the batch face. */
+  * exactly like the batch face. Each micro-batch plans and reads like
+  * the batch scan: [[CellsShards.plan]] packs its pruned shards, the
+  * batch window riding in each [[CellsShard]], and
+  * [[CellsReaderFactory]] reads them with the edit-log flags. */
 case class CellsOffset(v: Long) extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String = s"""{"v":$v}"""
 }
@@ -1694,55 +1735,29 @@ case class CellsMicroBatch(root: String, table: String, lo: Long, hi: Long,
     // saturating guard — s = Long.MinValue means "from the beginning"
     val bLo = math.max(lo, if (s == Long.MinValue) Long.MinValue else s + 1)
     val bHi = math.min(hi, e)
-    // layout fingerprint BEFORE the listing — same ordering contract as
-    // the batch planner: a split completing between this planning pass
-    // and the task run must trigger daughter discovery, or the window's
-    // moved cells would silently drop out of the feed
-    val fp = CellsCatalog.fingerprintOf(graft.ingest.FileStore.splitsAt(dir))
-    CellsShards.pruneListed(dir, keys)
-      .map(ls => CellsStreamShard(ls.path.toString, bLo, bHi, ls.endName, fp,
-        ls.isFirst): InputPartition)
-      .toArray
+    // the window rides in each partition: createReaderFactory() never
+    // sees the offsets
+    CellsShards.plan(dir, graft.ingest.FileStore.splitsAt(dir), keys, bLo, bHi)
   }
 
+  // the feed is an EDIT log: tombstones never rewrite already-committed
+  // batch windows (replay determinism) — maskDeletes=false. With
+  // changeFeed the markers THEMSELVES are versioned feed rows
+  // (op='delete'), so a downstream view can apply the delete.
   override def createReaderFactory(): PartitionReaderFactory =
-    CellsStreamReaderFactory(keys, cols, changeFeed)
+    CellsReaderFactory(cols, maskDeletes = false, emitOps = changeFeed)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-case class CellsStreamShard(dir: String, lo: Long, hi: Long,
-                            endName: Option[String] = None,
-                            plannedFp: String = "",
-                            firstShard: Boolean = false) extends InputPartition
-
-case class CellsStreamReaderFactory(keys: CellsKeyPred, cols: Array[String],
-                                    changeFeed: Boolean = false)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CellsStreamShard]
-    // the feed is an EDIT log: tombstones never rewrite already
-    // -committed batch windows (replay determinism) — maskDeletes=false.
-    // With changeFeed the markers THEMSELVES are versioned feed rows
-    // (op='delete'), so a downstream view can apply the delete.
-    val m = new CellsReaderMetrics
-    val base = CellsReaders.reader(p.dir, p.lo, p.hi, keys, cols,
-      maskDeletes = false, emitOps = changeFeed, taskMetrics = m,
-      endName = p.endName, plannedFp = p.plannedFp, firstShard = p.firstShard)
-    new PartitionReader[InternalRow] {
-      private var emitted = 0L
-      override def next(): Boolean = base.next() && { emitted += 1; true }
-      override def get(): InternalRow = base.get()
-      override def close(): Unit = base.close()
-      override def currentMetricsValues()
-          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        Array(GraftTaskMetric("filesOpened", m.filesOpened),
-          GraftTaskMetric("cellsEmitted", emitted))
-    }
-  }
-}
-
-case class CellsShard(dir: String, keys: CellsKeyPred, shardIdx: Int = -1,
+/** One shard read, as planned by [[CellsShards.plan]] for every face:
+  * the directory, the key predicate, the version window [lo, hi] (a
+  * stream batch's (s, e] ∩ the pushed window), the listed end, the
+  * planned layout fingerprint, the first-region flag and the region
+  * index. */
+case class CellsShard(dir: String, keys: CellsKeyPred,
+                      lo: Long = Long.MinValue, hi: Long = Long.MaxValue,
+                      shardIdx: Int = -1,
                       endName: Option[String] = None, plannedFp: String = "",
                       firstShard: Boolean = false)
     extends InputPartition with HasPartitionKey {
@@ -1753,8 +1768,12 @@ case class CellsShard(dir: String, keys: CellsKeyPred, shardIdx: Int = -1,
     new GenericInternalRow(Array[Any](shardIdx))
 }
 
-case class CellsReaderFactory(lo: Long, hi: Long,
-                              cols: Array[String], changeFeed: Boolean = false,
+/** The row reader of the batch scan and the micro-batch stream. The
+  * delete flags are the face's: the masked view (`maskDeletes`), or the
+  * edit log (`maskDeletes = false`, `emitOps` for typed op rows); the
+  * `$latest` face folds each key to its max live version. */
+case class CellsReaderFactory(cols: Array[String],
+                              maskDeletes: Boolean = true, emitOps: Boolean = false,
                               latest: Boolean = false,
                               limitN: Int = -1, topK: Int = -1,
                               topKDesc: Boolean = false,
@@ -1763,16 +1782,8 @@ case class CellsReaderFactory(lo: Long, hi: Long,
                               mustSort: Boolean = false)
     extends PartitionReaderFactory {
 
-  // the change-feed BATCH face is the same edit log at rest: unmasked
-  // puts + delete rows (scan-the-WAL), vs the default masked view;
-  // the $latest face folds each key to its max live version
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case g: CellsShardGroup[CellsShard @unchecked] =>
-        new CellsChainedReader(g.shards.iterator.map(shardReader),
-          if (limitN >= 0) limitN.toLong else Long.MaxValue)
-      case s: CellsShard => shardReader(s)
-    }
+    CellsShards.read(partition, if (limitN >= 0) limitN.toLong else Long.MaxValue)(shardReader)
 
   private def shardReader(p: CellsShard): PartitionReader[InternalRow] = {
     val m = new CellsReaderMetrics
@@ -1785,23 +1796,12 @@ case class CellsReaderFactory(lo: Long, hi: Long,
     // report can never satisfy — Catalyst retains that Sort, so the
     // reverse emission order is always re-sorted and the report is
     // inert on this path)
-    if (topKRev && topK >= 0) {
-      val rev = CellsReaders.reverseCapped(p.dir, lo, hi, p.keys, cols, topK,
-        exactOrder = topKDesc, taskMetrics = m, retention = retention,
-        endName = p.endName, plannedFp = p.plannedFp, firstShard = p.firstShard)
-      return new PartitionReader[InternalRow] {
-        private var emitted = 0L
-        override def next(): Boolean = rev.next() && { emitted += 1; true }
-        override def get(): InternalRow = rev.get()
-        override def close(): Unit = rev.close()
-        override def currentMetricsValues()
-            : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-          Array(GraftTaskMetric("filesOpened", m.filesOpened),
-            GraftTaskMetric("cellsEmitted", emitted))
-      }
-    }
-    val base = CellsReaders.reader(p.dir, lo, hi, p.keys, cols,
-      maskDeletes = !changeFeed, emitOps = changeFeed, latestOnly = latest,
+    if (topKRev && topK >= 0)
+      return new CellsMetricsReader(CellsReaders.reverseCapped(p.dir, p.lo, p.hi, p.keys,
+        cols, topK, exactOrder = topKDesc, taskMetrics = m, retention = retention,
+        endName = p.endName, plannedFp = p.plannedFp, firstShard = p.firstShard), m)
+    val base = CellsReaders.reader(p.dir, p.lo, p.hi, p.keys, cols,
+      maskDeletes = maskDeletes, emitOps = emitOps, latestOnly = latest,
       taskMetrics = m, retention = retention,
       endName = p.endName, plannedFp = p.plannedFp, firstShard = p.firstShard)
     // per-shard row cap: LIMIT truncates unconditionally (any N rows
@@ -1849,19 +1849,13 @@ case class CellsReaderFactory(lo: Long, hi: Long,
         if (c != 0) c < 0
         else versionIdx >= 0 && a.getLong(versionIdx) < b.getLong(versionIdx)
       }
-      return new PartitionReader[InternalRow] {
+      return new CellsMetricsReader(new PartitionReader[InternalRow] {
         private val it = sorted.iterator
         private var row: InternalRow = _
-        private var emitted = 0L
-        override def next(): Boolean =
-          it.hasNext && { row = it.next(); emitted += 1; true }
+        override def next(): Boolean = it.hasNext && { row = it.next(); true }
         override def get(): InternalRow = row
         override def close(): Unit = base.close()
-        override def currentMetricsValues()
-            : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-          Array(GraftTaskMetric("filesOpened", m.filesOpened),
-            GraftTaskMetric("cellsEmitted", emitted))
-      }
+      }, m)
     }
     // TopN eligibility is DYNAMIC (ADVICE r15): a mid-scan resilience
     // rebuild voids the sorted-stream guarantee (base.layoutSorted
@@ -1877,7 +1871,7 @@ case class CellsReaderFactory(lo: Long, hi: Long,
     val descMode = topKDesc && limitN < 0 && topK >= 0 && rowkeyIdx >= 0
     val mustVerifyOrder = mustSort && rowkeyIdx >= 0 // premise held at construction — guard the stream
     val versionIdxV = if (mustVerifyOrder) cols.indexOf("version") else -1
-    new PartitionReader[InternalRow] {
+    new CellsMetricsReader(new PartitionReader[InternalRow] {
       private var emitted = 0L
       private var row: InternalRow = _
       private var lastKey: Array[Byte] = _
@@ -1930,17 +1924,15 @@ case class CellsReaderFactory(lo: Long, hi: Long,
         if (wasCapped) CellsSource.cappedRowsEmitted.addAndGet(emitted)
         base.close()
       }
-      override def currentMetricsValues()
-          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        Array(GraftTaskMetric("filesOpened", m.filesOpened),
-          GraftTaskMetric("cellsEmitted", emitted))
-    }
+    }, m)
   }
 }
 
-/** The shard reader shared by the batch scan and the micro-batch
-  * stream — identical filename pruning, point-lookup digest filter,
-  * exact rowkey-range re-check, and column-pruned I/O in both faces.
+/** The shard reader of every cell face — the row scan and micro-batch
+  * stream (through [[CellsReaderFactory]]) and the pushed aggregate
+  * (a version-only projection): identical filename pruning,
+  * point-lookup digest filter, exact rowkey-range re-check, and
+  * column-pruned I/O.
   *
   * Reads BOTH store-file kinds and merges them on the cell identity
   * (key digest, version) — the HBase read model where every store file

@@ -33,7 +33,7 @@ import scala.jdk.CollectionConverters._
   *
   * PUSHDOWN (round 15): the inventory prunes like every other face —
   *  - `shard` `=`/`IN` prunes at the DIRECTORY level: unmatched shards
-  *    are never listed (one partition per surviving shard);
+  *    are never listed;
   *  - `kind` `=`/`IN` prunes at the FILENAME level: a filtered-out
   *    kind's rows are never built, and its TRAILERS are never read
   *    (the expensive part of a segment row);
@@ -48,8 +48,10 @@ import scala.jdk.CollectionConverters._
   *    (`shard`/`kind`/`file`) segment trailers are never opened.
   *
   * Read-only, batch-only; rows are bounded by the FILE count (kept
-  * flat by compaction), never the cell count. One partition per
-  * surviving shard — the same region parallelism as every other face. */
+  * flat by compaction), never the cell count. The surviving shards are
+  * planned and packed like every other face's ([[CellsShards.plan]]),
+  * the pushed version bounds riding as each shard's window; each shard
+  * lists its own directory, so a row names the shard that holds it. */
 object CellsVersions {
   val Schema: StructType = StructType(Seq(
     StructField("shard", StringType, nullable = false),
@@ -173,18 +175,18 @@ case class CellsVersionsScan(root: String, table: String,
       (if (vLo != Long.MinValue || vHi != Long.MaxValue) s" window=[$vLo,$vHi]" else "") +
       s" cols=[${required.fieldNames.mkString(",")}]"
 
-  private def shardDirs: Seq[Path] = {
-    val dir = Paths.get(root, table.replace(':', '~'))
-    CellsShards.prune(dir, CellsKeyPred.All)
-      .filter(p => shards.forall(_.contains(p.getFileName.toString)))
-  }
+  private def dir = Paths.get(root, table.replace(':', '~'))
+  private def keep(shard: String): Boolean = shards.forall(_.contains(shard))
+
+  private def shardDirs: Seq[Path] =
+    CellsShards.prune(dir, CellsKeyPred.All).filter(p => keep(p.getFileName.toString))
 
   override def planInputPartitions(): Array[InputPartition] =
-    shardDirs.map(p =>
-      CellsVersionsShard(p.toString, kinds, vLo, vHi): InputPartition).toArray
+    CellsShards.plan(dir, graft.ingest.FileStore.splitsAt(dir), CellsKeyPred.All, vLo, vHi,
+      keep = keep)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    CellsVersionsReaderFactory(required.fieldNames)
+    CellsVersionsReaderFactory(required.fieldNames, kinds)
 
   /** EXACT row stats from the same listings + classifier the scan
     * pays ([[CellsVersions.kindOf]] — one definition, no drift):
@@ -212,14 +214,16 @@ case class CellsVersionsScan(root: String, table: String,
   }
 }
 
-case class CellsVersionsShard(dir: String, kinds: Option[Set[String]],
-                              vLo: Long, vHi: Long) extends InputPartition
-
-case class CellsVersionsReaderFactory(cols: Array[String]) extends PartitionReaderFactory {
+/** `kinds` prunes rows by kind; each shard's window [lo, hi] prunes
+  * put/marker rows by their filename version. */
+case class CellsVersionsReaderFactory(cols: Array[String], kinds: Option[Set[String]])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    CellsShards.read(partition)(shardReader)
+
+  private def shardReader(part: CellsShard): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       import org.apache.spark.unsafe.types.UTF8String
-      private val part = partition.asInstanceOf[CellsVersionsShard]
       private val shard = Paths.get(part.dir)
       private val shardName = shard.getFileName.toString
       private val shardU8 = UTF8String.fromString(shardName)
@@ -240,9 +244,9 @@ case class CellsVersionsReaderFactory(cols: Array[String]) extends PartitionRead
         // qualified file name, truthfully.
         CellsReaders.listCovered(shard, None, "").files.iterator.flatMap { case (p, n) =>
           CellsVersions.kindOf(n)
-            .filter(k => part.kinds.forall(_.contains(k)))
+            .filter(k => kinds.forall(_.contains(k)))
             .filter(_ => CellsVersions.versionOf(n)
-              .forall(v => v >= part.vLo && v <= part.vHi))
+              .forall(v => v >= part.lo && v <= part.hi))
             .flatMap { kind =>
               val rel =
                 if (p.getParent == shard) n else shard.relativize(p).toString

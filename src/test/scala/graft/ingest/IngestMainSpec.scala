@@ -106,4 +106,10 @@ class IngestMainSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("an object.maximum.size that is not a byte count is rejected by name") {
     rejectsBeforeWriting("object.maximum.size=2GB")
   }
+
+  test("an unknown key, a retired key and a bare key are rejected by name, not run on defaults") {
+    rejectsBeforeWriting("skip.existing.record=false")
+    rejectsBeforeWriting("table.sink.impl=parquet")
+    rejectsBeforeWriting("input.prefixes")
+  }
 }

@@ -80,4 +80,46 @@ class S3SeamSpec extends AnyFunSuite with BeforeAndAfterAll {
       "\"{\"\"declarationId\"\":\"\"database-1.collection-1.0001-1\"\",\"\"someId\"\":\"\"RANDOM_GUID\"\"}\"|1543676462000|database-1|collection-1|IMPORT|HDI|" +
       "\"{\"\"declarationId\"\":\"\"database-1.collection-1.0001-1\"\",\"\"someId\"\":\"\"RANDOM_GUID\"\"}\"|MONGO_IMPORT")
   }
+
+  test("every stream the import opens through the FileSystem seam is closed") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.s3count.impl", classOf[CountingStubFileSystem].getName)
+    CountingStubFileSystem.opened.set(0)
+    CountingStubFileSystem.closed.set(0)
+    val r = IngestPipeline.run(spark,
+      Seq(s"s3count://$in"),
+      out.resolve("count-sink").toString,
+      out.resolve("count-manifests").toString,
+      StubKeyService(),
+      identity,
+      ivStrategy = IvStrategy.Deterministic("spec"))
+    assert(r.filesProcessed == 1 && r.put > 0)
+    val opened = CountingStubFileSystem.opened.get()
+    assert(opened >= 2, s"the data file and its metadata sidecar open through the seam: $opened")
+    assert(CountingStubFileSystem.closed.get() == opened,
+      s"${CountingStubFileSystem.closed.get()} of $opened opened streams closed")
+  }
+}
+
+/** The s3stub FileSystem under its own scheme (`s3count://`), counting
+  * the input streams it opens and the ones closed. */
+class CountingStubFileSystem extends S3StubFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, Path}
+  override def getScheme: String = "s3count"
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    CountingStubFileSystem.opened.incrementAndGet()
+    new FSDataInputStream(in.getWrappedStream) {
+      private val once = new java.util.concurrent.atomic.AtomicBoolean(false)
+      override def close(): Unit = {
+        if (once.compareAndSet(false, true)) CountingStubFileSystem.closed.incrementAndGet()
+        super.close()
+      }
+    }
+  }
+}
+
+object CountingStubFileSystem {
+  val opened = new java.util.concurrent.atomic.AtomicLong(0)
+  val closed = new java.util.concurrent.atomic.AtomicLong(0)
 }

@@ -642,8 +642,8 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("packing: every pruned shard appears in exactly one partition, in key order") {
     val parts = packScan().planInputPartitions()
-    assert(parts.forall(_.isInstanceOf[CellsShardGroup[_]]))
-    val flat = parts.toSeq.flatMap(_.asInstanceOf[CellsShardGroup[CellsShard]].shards).map(_.dir)
+    assert(parts.forall(_.isInstanceOf[CellsShardGroup]))
+    val flat = parts.toSeq.flatMap(_.asInstanceOf[CellsShardGroup].shards).map(_.dir)
     val listed = CellsShards.pruneListed(java.nio.file.Paths.get(root, packTable), CellsKeyPred.All)
       .map(_.path.toString)
     assert(listed.size == 256)
@@ -651,30 +651,33 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(parts.length < 256, s"${parts.length} partitions for 256 shards — nothing packed")
   }
 
-  test("packing: 256 shards pack to the count Spark's file rule predicts; a 3-shard range stays 3") {
-    // the rule, restated: weight = listed bytes + openCost; target =
-    // min(maxPartitionBytes, max(openCost, total / parallelism)); next-fit
+  /** the partition count Spark's file rule predicts for `t`'s shards,
+    * restated: weight = listed bytes + openCost; target =
+    * min(maxPartitionBytes, max(openCost, total / parallelism)); next-fit */
+  private def predicted(parallelism: Int, t: String = packTable): Int = {
     val conf = org.apache.spark.sql.internal.SQLConf.get
     val openCost = conf.filesOpenCostInBytes
-    assert(spark.sparkContext.defaultParallelism == 4 && conf.filesMinPartitionNum.isEmpty &&
-      conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).isEmpty)
-    val bytes = CellsShards.pruneListed(java.nio.file.Paths.get(root, packTable), CellsKeyPred.All)
+    val bytes = CellsShards.pruneListed(java.nio.file.Paths.get(root, t), CellsKeyPred.All)
       .map { ls =>
         val s = java.nio.file.Files.walk(ls.path)
         try s.filter(java.nio.file.Files.isRegularFile(_)).mapToLong(java.nio.file.Files.size(_)).sum()
         finally s.close()
       }
-    def predicted(parallelism: Int): Int = {
-      val target = math.min(conf.filesMaxPartitionBytes,
-        math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
-      var n = 0
-      var cur = -1L // no open partition
-      bytes.foreach { b =>
-        if (cur < 0 || cur + b > target) { n += 1; cur = 0L }
-        cur += b + openCost
-      }
-      n
+    val target = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
+    var n = 0
+    var cur = -1L // no open partition
+    bytes.foreach { b =>
+      if (cur < 0 || cur + b > target) { n += 1; cur = 0L }
+      cur += b + openCost
     }
+    n
+  }
+
+  test("packing: 256 shards pack to the count Spark's file rule predicts; a 3-shard range stays 3") {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    assert(spark.sparkContext.defaultParallelism == 4 && conf.filesMinPartitionNum.isEmpty &&
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).isEmpty)
     val parts = packScan().planInputPartitions()
     assert(parts.length == predicted(4), s"planned ${parts.length}, the rule predicts ${predicted(4)}")
     assert(predicted(4) > 1 && predicted(4) <= 16, s"${predicted(4)}")
@@ -732,7 +735,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val aggScan = CellsSource.batchScans(agg).map(_.scan).collectFirst { case a: CellsAggScan => a }
     assert(aggScan.isDefined, s"aggregate must push:\n${agg.queryExecution.executedPlan}")
     val parts = aggScan.get.planInputPartitions()
-    assert(parts.length < 256 && parts.forall(_.isInstanceOf[CellsShardGroup[_]]))
+    assert(parts.length < 256 && parts.forall(_.isInstanceOf[CellsShardGroup]))
     val vs = packRead.filter(col("version") >= 100000L).select("version").collect().map(_.getLong(0))
     assert(vs.nonEmpty)
     assert((got.getLong(0), got.getLong(1), got.getLong(2)) == ((vs.length.toLong, vs.min, vs.max)))
@@ -751,7 +754,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"emitted $emitted rows across ${parts.length} partitions (256 shards)")
     // a reader drained to the end (no Spark limit above it) still stops
     // at N for the whole packed partition, not N per shard
-    val group = parts.head.asInstanceOf[CellsShardGroup[CellsShard]]
+    val group = parts.head.asInstanceOf[CellsShardGroup]
     assert(group.shards.size > 1)
     CellsSource.cappedRowsEmitted.set(0)
     val rd = scan.createReaderFactory().createReader(group)
@@ -759,6 +762,109 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     try while (rd.next()) n += 1 finally rd.close()
     assert(n == 5 && CellsSource.cappedRowsEmitted.get() == 5L,
       s"$n rows, ${CellsSource.cappedRowsEmitted.get()} capped, from ${group.shards.size} shards")
+  }
+
+  // ---- the micro-batch stream plans and reads like the batch scan ----
+
+  private def streamOf(t: String): CellsMicroBatch =
+    packScan(CellsScanBuilder(root, t)).toMicroBatchStream("unused").asInstanceOf[CellsMicroBatch]
+
+  /** runs one AvailableNow pass of `t`'s stream into parquet at `out`
+    * and returns the micro-batch scan node of its last batch */
+  private def streamOnce(t: String, out: String, ck: String, changeFeed: Boolean = false)
+      : org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec = {
+    val cols = Seq(col("rowkey").cast("string").as("k"), col("version")) ++
+      (if (changeFeed) Seq(col("op")) else Nil)
+    val q = spark.readStream.format("graft-cells")
+      .option("root", root).option("table", t).option("changeFeed", changeFeed.toString).load()
+      .select(cols: _*)
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.collect {
+        case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => m
+      }.head
+  }
+
+  /** a fresh table with one key per first-byte region, at versions base+b */
+  private def wideTable(t: String, base: Long): FileStore = {
+    val store = FileStore(root)
+    store.ensureTable(t, TableSpec(compactionThreshold = 0))
+    store.putBatch(t, (0 until 256).map(b =>
+      CellPut(t, Array(b.toByte, 1.toByte), base + b, s"w-$b".getBytes("UTF-8"))))
+    store
+  }
+
+  test("packing: a micro-batch plans the count the rule predicts, every shard once in key order") {
+    val stream = streamOf(packTable)
+    val end = stream.latestOffset().asInstanceOf[CellsOffset]
+    val parts = stream.planInputPartitions(stream.initialOffset(), end)
+    assert(parts.forall(_.isInstanceOf[CellsShardGroup]))
+    val flat = parts.toSeq.flatMap(_.asInstanceOf[CellsShardGroup].shards)
+    val listed = CellsShards.pruneListed(java.nio.file.Paths.get(root, packTable), CellsKeyPred.All)
+      .map(_.path.toString)
+    assert(listed.size == 256 && flat.map(_.dir) == listed, "each shard exactly once, in key order")
+    assert(parts.length == predicted(4), s"planned ${parts.length}, the rule predicts ${predicted(4)}")
+    assert(flat.forall(s => s.lo == Long.MinValue && s.hi == end.v), "the batch window rides in each shard")
+  }
+
+  test("packing: a packed stream delivers every cell exactly once across a checkpoint restart") {
+    val t = "pk_stream"
+    val store = wideTable(t, 1000L)
+    val ck = java.nio.file.Files.createTempDirectory("graft-pack-stream-ck").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-pack-stream-out").toString
+    def delivered = spark.read.parquet(out).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val first = streamOnce(t, out, ck)
+    assert(first.inputPartitions.length == predicted(4, t) && first.inputPartitions.length < 256)
+    assert(delivered.length == 256 && delivered.toSet.size == 256)
+    // 256 more cells above the watermark, and a re-put below it
+    store.putBatch(t, (0 until 256).map(b =>
+      CellPut(t, Array(b.toByte, 2.toByte), 2000L + b, s"w2-$b".getBytes("UTF-8"))))
+    store.putBatch(t, Seq(CellPut(t, Array(7.toByte, 1.toByte), 1007L, "w-7".getBytes("UTF-8"))))
+    val second = streamOnce(t, out, ck)
+    assert(second.inputPartitions.length < 256)
+    val all = delivered
+    assert(all.length == 512, s"the restart delivers only the 256 new cells: ${all.length}")
+    assert(all.map(_._2).toSet == ((0 until 256).map(1000L + _) ++ (0 until 256).map(2000L + _)).toSet)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("packing: a packed change-feed stream delivers delete and delete_version rows") {
+    val t = "pk_feed"
+    val store = wideTable(t, 100L)
+    store.deleteCells(t, Seq((Array(3.toByte, 1.toByte), 900L)))
+    store.deleteCellsExact(t, Seq((Array(200.toByte, 1.toByte), 300L)))
+    val ck = java.nio.file.Files.createTempDirectory("graft-pack-feed-ck").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-pack-feed-out").toString
+    val scan = streamOnce(t, out, ck, changeFeed = true)
+    assert(scan.inputPartitions.length < 256)
+    val rows = spark.read.parquet(out).collect().map(r => (r.getLong(1), r.getString(2))).toSeq
+    assert(rows.count(_._2 == "put") == 256)
+    assert(rows.filter(_._2 != "put").toSet == Set((900L, "delete"), (300L, "delete_version")),
+      s"${rows.filter(_._2 != "put")}")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("packing: a packed stream's SQL metrics equal the global open count and the row count") {
+    val t = "pk_stream_metrics"
+    wideTable(t, 5000L)
+    val ck = java.nio.file.Files.createTempDirectory("graft-pack-metrics-ck").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-pack-metrics-out").toString
+    CellsSource.filesOpened.set(0)
+    val scan = streamOnce(t, out, ck)
+    val opened = CellsSource.filesOpened.get()
+    val rows = spark.read.parquet(out).count()
+    assert(rows == 256 && scan.inputPartitions.length < 256)
+    val m = scan.metrics.map { case (k, v) => (k, v.value) }
+    assert(m("cellsEmitted") == rows, s"$m")
+    assert(m("filesOpened") == opened && opened == 256L, s"$m vs global $opened")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   private def hexToBytes(h: String): Array[Byte] =

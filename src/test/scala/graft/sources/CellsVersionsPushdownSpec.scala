@@ -4,6 +4,7 @@ import graft.ingest.{BulkLoad, CellSegment, FileStore}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -99,5 +100,30 @@ class CellsVersionsPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats(CellsVersionsScan(root, "t", kinds = Some(Set("put")))) == 2)
     assert(stats(CellsVersionsScan(root, "t", kinds = Some(Set("put", "marker_bound")),
       vLo = 60L, vHi = Long.MaxValue)) == 2)
+  }
+
+  test("a packed inventory read returns exactly the rows of per-shard reads") {
+    def rowsOf(rd: org.apache.spark.sql.connector.read.PartitionReader[
+        org.apache.spark.sql.catalyst.InternalRow]): Seq[(String, String)] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      try while (rd.next()) out += ((rd.get().getUTF8String(0).toString, rd.get().getUTF8String(1).toString))
+      finally rd.close()
+      out.toSeq
+    }
+    // one partition for the whole table: both shards in one group
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    val scan = CellsVersionsScan(root, "t", required = StructType(
+      CellsVersions.Schema.filter(f => f.name == "shard" || f.name == "file")))
+    val parts = try scan.planInputPartitions() finally spark.conf.unset("spark.sql.files.minPartitionNum")
+    assert(parts.length == 1)
+    val shards = parts.head.asInstanceOf[CellsShardGroup].shards
+    assert(shards.map(s => java.nio.file.Paths.get(s.dir).getFileName.toString) == Vector("41", "5a"))
+    val fac = scan.createReaderFactory()
+    CellsVersions.shardsListed.set(0)
+    val packed = rowsOf(fac.createReader(parts.head))
+    assert(CellsVersions.shardsListed.get() == 2)
+    val perShard = shards.flatMap(s => rowsOf(fac.createReader(s)))
+    assert(packed.size == 5 && packed == perShard, s"$packed vs $perShard")
+    assert(packed.map(_._1) == Seq("41", "41", "41", "41", "5a"))
   }
 }

@@ -142,8 +142,7 @@ class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val s = Files.list(Paths.get(root, "t"))
       try s.iterator().next().toString finally s.close()
     }
-    val fac = CellsReaderFactory(Long.MinValue, Long.MaxValue,
-      Array("rowkey", "version", "body"), mustSort = true)
+    val fac = CellsReaderFactory(Array("rowkey", "version", "body"), mustSort = true)
     val rd = fac.createReader(CellsShard(shardDir, allKeys))
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     while (rd.next()) out += new String(rd.get().getBinary(0), "UTF-8")
@@ -153,8 +152,8 @@ class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "mustSort must restore the promised (rowkey, version) order")
     // without mustSort the same layout streams unsorted (the premise
     // this spec exists to catch)
-    val rd2 = CellsReaderFactory(Long.MinValue, Long.MaxValue,
-      Array("rowkey", "version", "body")).createReader(CellsShard(shardDir, allKeys))
+    val rd2 = CellsReaderFactory(Array("rowkey", "version", "body"))
+      .createReader(CellsShard(shardDir, allKeys))
     val out2 = scala.collection.mutable.ArrayBuffer.empty[String]
     while (rd2.next()) out2 += new String(rd2.get().getBinary(0), "UTF-8")
     rd2.close()
@@ -195,7 +194,7 @@ class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def groupsOf(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Seq[Seq[String]] =
-    parts.toSeq.map(_.asInstanceOf[CellsShardGroup[CellsShard]].shards.map(s =>
+    parts.toSeq.map(_.asInstanceOf[CellsShardGroup].shards.map(s =>
       Paths.get(s.dir).getFileName.toString))
 
   test("mustSort over packed partitions: a shard that gains a second segment after planning is sorted locally") {
