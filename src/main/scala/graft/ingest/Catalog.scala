@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * The catalog is driver-side: it is file-listing-sized (one row per
   * input file), never data-sized, so a 100 TB run with ~100k dump files
   * is still a trivially small driver list — the heavy work happens in
-  * the executor-side decode stage (`Decode.scala`). Listing goes
+  * the executor-side per-file decoder ([[IngestPipeline.fileRows]]). Listing goes
   * through the Hadoop FileSystem API so local paths in tests and
   * s3a:// URIs on a cluster behave identically, pagination included.
   */

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** MAJOR COMPACTION for the cell store — the maintenance operator that
   * completes the HBase store-file lifecycle: flushed per-cell puts and
@@ -144,14 +143,7 @@ object Compaction {
     * no puts is untouched. */
   def minor(spark: SparkSession, root: String, table: String,
             maxInputBytes: Long = 32L << 20): Report = {
-    val tableDir = Paths.get(root, table.replace(':', '~'))
-    val shards =
-      if (!Files.isDirectory(tableDir)) Seq.empty[String]
-      else {
-        val s = Files.list(tableDir)
-        try s.iterator().asScala.filter(Files.isDirectory(_)).map(_.toString).toSeq.sorted
-        finally s.close()
-      }
+    val shards = ShardFiles.regions(Paths.get(root, table.replace(':', '~'))).map(_.toString)
     if (shards.isEmpty) return Report(0L, 0L, Seq.empty)
     val results = spark.sparkContext
       .parallelize(shards, shards.size)
@@ -191,19 +183,10 @@ object Compaction {
     // segment's trailer is read anyway for the size filter, so the
     // shard's max seqNo — the precedence ceiling — is free)
     val (puts, segInfo, shardMaxSeq) = {
-      val l = Files.list(shard)
-      try {
-        val names = l.iterator().asScala.map(_.getFileName.toString)
-          .filterNot(_.endsWith(".tmp")).toVector
-        val p = names.filter { n =>
-          val dot = n.lastIndexOf('.')
-          dot > 0 && !CellSegment.isSegment(n) && n.drop(dot + 1).toLongOption.isDefined
-        }
-        val all = names.filter(CellSegment.isSegment)
-          .map(n => (n, CellSegment.readTrailer(shard.resolve(n))))
-        val g = all.filter(_._2.indexOffset <= maxInputBytes)
-        (p, g, all.map(_._2.seqNo).foldLeft(0L)(math.max))
-      } finally l.close()
+      val own = ShardFiles.list(shard).own
+      val all = own.filter(_.isSegment).map(e => (e.path, CellSegment.readTrailer(e.path)))
+      val g = all.filter(_._2.indexOffset <= maxInputBytes)
+      (own.filter(_.isPut), g, all.map(_._2.seqNo).foldLeft(0L)(math.max))
     }
     val segs = segInfo.map(_._1)
     if (puts.isEmpty && segs.size <= 1) (0L, 0L, Seq.empty[BulkLoad.SegDesc])
@@ -216,19 +199,15 @@ object Compaction {
           // materialization: task memory = O(puts + open iterators),
           // whatever maxInputBytes says — including the q221 serving
           // flush that passes Long.MaxValue
-          val putCells = puts.map { n =>
-            val bytes = Files.readAllBytes(shard.resolve(n))
-            val buf = java.nio.ByteBuffer.wrap(bytes)
-            val keyLen = buf.getInt()
-            val key = new Array[Byte](keyLen); buf.get(key)
-            val body = new Array[Byte](buf.remaining()); buf.get(body)
-            (key, n.drop(n.lastIndexOf('.') + 1).toLong, body, Long.MaxValue)
+          val putCells = puts.map { e =>
+            val (key, body) = ShardFiles.read(e.path)
+            (key, e.version, body, Long.MaxValue)
           }.sortWith(cellCmp(_, _) < 0)
           minorMaxBuffered.updateAndGet(m => math.max(m, putCells.size.toLong))
           // inputs close on exhaustion in the happy path; the finally
           // releases every NON-exhausted input's stream if the merge or
           // the segment write throws mid-way (close is idempotent)
-          val segIts = segInfo.map(i => CellSegment.entries(shard.resolve(i._1), needBody = true))
+          val segIts = segInfo.map(i => CellSegment.entries(i._1, needBody = true))
           val tagged = segIts.zip(segInfo).map { case (it, (_, t)) =>
             it.map { case (k, v, b) => (k, v, b, t.seqNo) }
           }
@@ -246,10 +225,10 @@ object Compaction {
               resolveSorted(mergeSorted(putCells.iterator +: tagged)), segSeq)
             finally segIts.foreach(it => try it.close() catch { case _: Exception => () })
           var removed = 0L
-          (puts ++ segs).foreach { n =>
+          (puts.map(_.path) ++ segs).foreach { p =>
             // the fresh segment may REUSE an input's content-hash name
             // (single-input merge) — never delete what was just written
-            if (n != meta.fileName && Files.deleteIfExists(shard.resolve(n))) removed += 1
+            if (p.getFileName.toString != meta.fileName && Files.deleteIfExists(p)) removed += 1
           }
           (meta.entryCount.toLong, removed,
             Seq(BulkLoad.SegDesc(table, shardName, meta.fileName,
@@ -300,34 +279,22 @@ object Compaction {
     // gate on the flush path; the major's scan→sweep window is the
     // same hazard stretched over a whole job)
     val snapshot: Map[String, Map[String, Option[(Long, Long)]]] =
-      if (!Files.isDirectory(tableDir0)) Map.empty
-      else {
-        val s = Files.list(tableDir0)
-        try s.iterator().asScala.filter(Files.isDirectory(_)).map { shard =>
-          val l = Files.list(shard)
-          val names =
-            try l.iterator().asScala.map(_.getFileName.toString)
-              // `_split*`/`_merge*` entries are a concurrent region
-              // split/merge's satellite/staging DIRECTORIES — never
-              // sweep targets (the lifecycle ops own them)
-              .filterNot(n => n.endsWith(".tmp") || n.startsWith("_split") ||
-                n.startsWith("_merge"))
-              .map { n =>
-                val stamp =
-                  if (CellSegment.isSegment(n)) None
-                  else try {
-                    val a = Files.readAttributes(shard.resolve(n),
-                      classOf[java.nio.file.attribute.BasicFileAttributes])
-                    Some((a.size(), a.lastModifiedTime().to(
-                      java.util.concurrent.TimeUnit.NANOSECONDS)))
-                  } catch { case _: java.io.IOException => Some((-1L, -1L)) }
-                n -> stamp
-              }.toMap
-            finally l.close()
-          shard.getFileName.toString -> names
+      ShardFiles.regions(tableDir0).map { shard =>
+        // own store files only: `_split*`/`_merge*` satellites and
+        // staging belong to a concurrent region split/merge, and are
+        // never sweep targets (the lifecycle ops own them)
+        shard.getFileName.toString -> ShardFiles.list(shard).own.map { e =>
+          val stamp =
+            if (e.isSegment) None
+            else try {
+              val a = Files.readAttributes(e.path,
+                classOf[java.nio.file.attribute.BasicFileAttributes])
+              Some((a.size(), a.lastModifiedTime().to(
+                java.util.concurrent.TimeUnit.NANOSECONDS)))
+            } catch { case _: java.io.IOException => Some((-1L, -1L)) }
+          e.name -> stamp
         }.toMap
-        finally s.close()
-      }
+      }.toMap
 
     // the rewrite scan evaluates READ-TIME retention at the SAME clock
     // instant as the keep-filter below (option("retentionNowMillis")),
@@ -414,17 +381,9 @@ object Compaction {
     // past the DDL's maxRegionBytes — split it now rather than waiting
     // for the next write to that region. Driver-side, per shard; the
     // default DDL (bound off) pays nothing.
-    if (spec.maxRegionBytes > 0 && Files.isDirectory(tableDir0)) {
-      val shardNames = {
-        val s = Files.list(tableDir0)
-        try s.iterator().asScala
-          .filter(p => Files.isDirectory(p) &&
-            FileStore.Splits.startOf(p.getFileName.toString).isDefined)
-          .map(_.getFileName.toString).toVector.sorted
-        finally s.close()
-      }
-      shardNames.foreach(RegionSplit.maybeSplit(root, table, _, spec.maxRegionBytes))
-    }
+    if (spec.maxRegionBytes > 0)
+      ShardFiles.regions(tableDir0).foreach(shard =>
+        RegionSplit.maybeSplit(root, table, shard.getFileName.toString, spec.maxRegionBytes))
 
     Report(report.cells, removed, report.segments)
   }

@@ -2,7 +2,6 @@ package graft.ingest
 
 import graft.ingest.PushTableSink.{CellPut, Store, TableSpec}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
 /** Durable file-backed [[PushTableSink.Store]] — the push-path stand-in
   * for a live HBase cluster in an offline sandbox. One cell = one file:
@@ -12,9 +11,10 @@ import scala.jdk.CollectionConverters._
   * named by the rowkey's SHA-256 (rowkeys embed the full record id and
   * are unbounded — far past the 255-byte filename limit — so the true
   * key is stored INSIDE the cell file, length-prefixed before the
-  * body). `shard` is the hex of the ROWKEY'S OWN FIRST BYTE — 256
-  * contiguous KEY RANGES, the HBase region model (regions partition the
-  * rowkey space by range; splits land on key-prefix boundaries). The
+  * body; [[ShardFiles]] owns this region-directory format). `shard` is
+  * the hex of the ROWKEY'S OWN FIRST BYTE — 256 contiguous KEY RANGES,
+  * the HBase region model (regions partition the rowkey space by range;
+  * splits land on key-prefix boundaries). The
   * reference rowkey opens with a 4-byte CRC32 of the id
   * (MessageUtils.kt:120-149) precisely so this first byte is uniform —
   * range sharding gets hash-bucket balance for free, and a rowkey
@@ -101,97 +101,6 @@ object FileStore {
     }
     out
   }
-
-  /** Parse a DELETE-TOMBSTONE file name `<digest>.<version>.d` →
-    * (key digest, masked-through version). Tombstones are the HBase
-    * Delete-marker analog: a marker at version T masks every cell of
-    * its rowkey with version ≤ T on the BATCH read faces (the marker
-    * itself is never surfaced), is purged together with the cells it
-    * masks by the next major compaction, and — exactly as in HBase —
-    * masks even a put that lands AFTER it at a version ≤ T, until that
-    * compaction removes the marker. The `.d` suffix makes every
-    * existing filename parse (`toLongOption` on the last dot segment)
-    * skip markers without change. */
-  def tombstoneOf(name: String): Option[(String, Long)] =
-    if (!name.endsWith(".d")) None
-    else {
-      val core = name.dropRight(2) // <digest>.<version>
-      val dot = core.lastIndexOf('.')
-      if (dot <= 0) None else core.drop(dot + 1).toLongOption.map(v => (core.take(dot), v))
-    }
-
-  /** Parse an EXACT-VERSION tombstone `<digest>.<version>.dv` →
-    * (key digest, the one masked version) — the HBase
-    * `Delete.addColumn(family, qualifier, ts)` idiom: the marker masks
-    * ONLY the cell at exactly its version (including a put landing
-    * later at that version, until a major purges both), never older
-    * ones. This is the precise per-row delete SQL row-level operations
-    * (MERGE/UPDATE, predicate DELETE) need — a ≤-bound marker would
-    * over-delete sibling versions. Every existing filename parse skips
-    * `.dv` (the last dot segment is not a long), so the two marker
-    * kinds and cell files coexist in one listing. */
-  def exactTombstoneOf(name: String): Option[(String, Long)] =
-    if (!name.endsWith(".dv")) None
-    else {
-      val core = name.dropRight(3) // <digest>.<version>
-      val dot = core.lastIndexOf('.')
-      if (dot <= 0) None else core.drop(dot + 1).toLongOption.map(v => (core.take(dot), v))
-    }
-
-  /** One shard's combined delete-mask: a ≤-BOUND per digest (`.d`
-    * markers) plus the EXACT-version set (`.dv`). A cell (d, v) is
-    * masked iff v ≤ bound(d) OR (d, v) is exactly deleted. Filenames
-    * only — building the mask costs the directory listing the reader
-    * already pays, zero file-content I/O. */
-  final case class ShardMask(bound: Map[String, Long], exact: Set[(String, Long)]) {
-    def masked(digestHex: String, v: Long): Boolean =
-      bound.get(digestHex).exists(_ >= v) || exact((digestHex, v))
-  }
-
-  object ShardMask { val Empty: ShardMask = ShardMask(Map.empty, Set.empty) }
-
-  def maskOf(shardDir: Path): ShardMask =
-    if (!Files.isDirectory(shardDir)) ShardMask.Empty
-    else {
-      val s = Files.list(shardDir)
-      try {
-        var bound = Map.empty[String, Long]
-        val exact = Set.newBuilder[(String, Long)]
-        s.iterator().asScala.foreach { p =>
-          val n = p.getFileName.toString
-          tombstoneOf(n).foreach { case (d, v) =>
-            if (bound.getOrElse(d, Long.MinValue) < v) bound = bound.updated(d, v)
-          }
-          exactTombstoneOf(n).foreach(exact += _)
-        }
-        ShardMask(bound, exact.result())
-      } finally s.close()
-    }
-
-  /** REGION-SPLIT SATELLITE directory name: while a split of shard S at
-    * key m is mid-protocol, the upper daughter's store files live in
-    * `S/_split-<hex(m)>/` — INSIDE the parent's directory, so the
-    * parent's single listing discovers them with zero extra I/O and the
-    * split needs no cross-directory atomicity ([[RegionSplit]]). The
-    * name never parses as a cell/segment/marker (no dot-long suffix),
-    * so every legacy filename scan skips it by construction. */
-  def satelliteNameOf(targetStart: String): String = s"_split-$targetStart"
-
-  /** decode a satellite directory name → the daughter region's start
-    * name; None for anything else. */
-  def satelliteTargetOf(name: String): Option[String] =
-    if (!name.startsWith("_split-")) None
-    else Splits.startOf(name.stripPrefix("_split-")).map(_ => name.stripPrefix("_split-"))
-
-  /** REGION-MERGE satellite `_merge-<hex>`: a merged-away RIGHT
-    * region's store files parked inside its LEFT neighbor's directory
-    * ([[RegionSplit.mergeLeft]]) until the fold moves them in place.
-    * Decodes to the absorbed region's start name. */
-  def mergeSatelliteNameOf(rightStart: String): String = s"_merge-$rightStart"
-
-  def mergeTargetOf(name: String): Option[String] =
-    if (!name.startsWith("_merge-")) None
-    else Splits.startOf(name.stripPrefix("_merge-")).map(_ => name.stripPrefix("_merge-"))
 
   /** Per-TABLE read/write locks (JVM-wide): writers (`putBatch`,
     * markers, existence probes, the flush hook) hold the READ side;
@@ -484,40 +393,25 @@ final case class FileStore(rootDir: String) extends Store {
     * same schema and region boundaries). Backs `INSERT OVERWRITE`.
     * Returns the number of files removed. */
   def truncateTable(tableName: String): Long = {
-    val dir = tableDir(tableName)
-    if (!Files.isDirectory(dir)) return 0L
     var removed = 0L
-    val shards = Files.list(dir)
-    try shards.iterator().asScala.foreach { shard =>
-      if (Files.isDirectory(shard) &&
-        FileStore.Splits.startOf(shard.getFileName.toString).isDefined) {
-        val l = Files.list(shard)
-        try l.iterator().asScala.foreach { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("_split") || n.startsWith("_merge")) {
-            // a mid-protocol split/merge satellite DIRECTORY: its
-            // content is table data too — truncate takes it whole
-            if (org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)) removed += 1
-          }
-          else if (Files.deleteIfExists(p)) removed += 1
-        } finally l.close()
+    ShardFiles.regions(tableDir(tableName)).foreach { shard =>
+      val l = ShardFiles.list(shard)
+      l.own.foreach(e => if (Files.deleteIfExists(e.path)) removed += 1)
+      // a mid-protocol split/merge satellite DIRECTORY: its content is
+      // table data too — truncate takes it whole, with any staging
+      (l.satellites ++ l.debris).foreach { p =>
+        if (org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)) removed += 1
       }
-    } finally shards.close()
+    }
     removed
   }
 
-  /** any store file (cell, segment, or tombstone) under any shard dir? */
-  private def hasAnyCell(dir: Path): Boolean = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.exists { shard =>
-      Files.isDirectory(shard) &&
-        FileStore.Splits.startOf(shard.getFileName.toString).isDefined && {
-          val l = Files.list(shard)
-          try l.iterator().asScala.exists(!_.getFileName.toString.endsWith(".tmp"))
-          finally l.close()
-        }
-    } finally s.close()
-  }
+  /** any store file (cell, segment, or marker) under any shard dir? */
+  private def hasAnyCell(dir: Path): Boolean =
+    ShardFiles.regions(dir).exists { shard =>
+      val l = ShardFiles.list(shard)
+      l.own.nonEmpty || l.satellites.nonEmpty
+    }
 
   private def renderSpec(spec: TableSpec): String =
     s"""{"dataFamily":"${spec.dataFamily}","dataQualifier":"${spec.dataQualifier}",""" +
@@ -594,37 +488,35 @@ final case class FileStore(rootDir: String) extends Store {
   }
 
   /** Write DELETE TOMBSTONES — the HBase `Table.delete` analog. Each
-    * (rowkey, version) pair lands as a marker file
-    * `<digest>.<version>.d` (content: the length-prefixed rowkey, so
-    * the true key is recoverable like any cell file) by tmp + atomic
-    * rename: replayed deletes converge exactly like replayed puts.
-    * Semantics (see [[FileStore.tombstoneOf]]): the marker masks every
-    * version ≤ its own on the batch read faces until a major
-    * compaction purges masked cells and marker together. */
+    * (rowkey, version) pair lands as a bound marker
+    * `<digest>.<version>.d` ([[ShardFiles.writeMarker]]: tmp + atomic
+    * rename, so replayed deletes converge exactly like replayed puts).
+    * The marker masks every cell of its rowkey with version ≤ its own on
+    * the BATCH read faces (the marker itself is never surfaced), is
+    * purged together with the cells it masks by the next major
+    * compaction, and — exactly as in HBase — masks even a put that
+    * lands AFTER it at a version ≤ its own, until that compaction. */
   def deleteCells(tableName: String, cells: Seq[(Array[Byte], Long)]): Unit =
-    writeMarkers(tableName, cells, suffix = "d")
+    writeMarkers(tableName, cells, exact = false)
 
-  /** Write EXACT-VERSION tombstones — the HBase `Delete.addColumn(ts)`
-    * analog: each marker masks ONLY the cell at exactly its version
-    * (see [[FileStore.exactTombstoneOf]]). The precise per-row delete
-    * behind SQL MERGE/UPDATE and predicate DELETE. */
+  /** Write EXACT-VERSION tombstones `<digest>.<version>.dv` — the HBase
+    * `Delete.addColumn(family, qualifier, ts)` analog: each marker masks
+    * ONLY the cell at exactly its version (including a put landing later
+    * at that version, until a major purges both), never older ones. The
+    * precise per-row delete behind SQL MERGE/UPDATE and predicate
+    * DELETE, where a ≤-bound marker would over-delete sibling versions. */
   def deleteCellsExact(tableName: String, cells: Seq[(Array[Byte], Long)]): Unit =
-    writeMarkers(tableName, cells, suffix = "dv")
+    writeMarkers(tableName, cells, exact = true)
 
   private def writeMarkers(tableName: String, cells: Seq[(Array[Byte], Long)],
-                           suffix: String): Unit =
+                           exact: Boolean): Unit =
     // marker placement is a WRITE — the table read lock keeps it off a
     // mid-flight region split's placement window (see Locks)
     FileStore.Locks.read(tableDir(tableName)) {
       cells.foreach { case (rowkey, version) =>
         val shardDir = tableDir(tableName).resolve(splitsOf(tableName).shardNameOf(rowkey))
         Files.createDirectories(shardDir)
-        val target = shardDir.resolve(s"${keyDigest(rowkey)}.$version.$suffix")
-        val tmp = Files.createTempFile(shardDir, "del", ".tmp")
-        val buf = java.nio.ByteBuffer.allocate(4 + rowkey.length)
-        buf.putInt(rowkey.length).put(rowkey)
-        Files.write(tmp, buf.array())
-        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        ShardFiles.writeMarker(shardDir, keyDigest(rowkey), version, exact, rowkey)
       }
     }
 
@@ -641,27 +533,12 @@ final case class FileStore(rootDir: String) extends Store {
     * backup export face (a chain must carry exact deletes exactly as it
     * carries bound ones). Same boundedness as [[listTombstones]]: the
     * between-majors delete backlog. */
-  def listMarkers(tableName: String): Seq[(Array[Byte], Long, Boolean)] = {
-    val dir = tableDir(tableName)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val shards = Files.list(dir)
-    try shards.iterator().asScala.filter(Files.isDirectory(_)).flatMap { shard =>
-      val l = Files.list(shard)
-      try l.iterator().asScala.flatMap { p =>
-        val n = p.getFileName.toString
-        val kinded = FileStore.tombstoneOf(n).map(t => (t, false))
-          .orElse(FileStore.exactTombstoneOf(n).map(t => (t, true)))
-        kinded.map { case ((_, v), exact) =>
-          val buf = java.nio.ByteBuffer.wrap(Files.readAllBytes(p))
-          val keyLen = buf.getInt()
-          val rowkey = new Array[Byte](keyLen); buf.get(rowkey)
-          (rowkey, v, exact)
-        }
-      }.toVector
-      finally l.close()
-    }.toVector
-    finally shards.close()
-  }
+  def listMarkers(tableName: String): Seq[(Array[Byte], Long, Boolean)] =
+    ShardFiles.regions(tableDir(tableName)).flatMap { shard =>
+      ShardFiles.list(shard).own.filter(_.isMarker).map { e =>
+        (ShardFiles.read(e.path)._1, e.version, e.kind == ShardFiles.Kind.ExactMarker)
+      }
+    }
 
   /** Highest version PRESENT for each rowkey, across both store-file
     * kinds (per-cell filenames + segment indexes) — masking ignored:
@@ -680,24 +557,18 @@ final case class FileStore(rootDir: String) extends Store {
     val byShard = rowkeys.zipWithIndex.groupBy { case (k, _) => splits.shardNameOf(k) }
     val out = new Array[Option[Long]](rowkeys.size)
     byShard.foreach { case (shardName, keyed) =>
-      val shardDir = tableDir(tableName).resolve(shardName)
       val wanted: Map[String, Seq[Int]] =
         keyed.groupBy { case (k, _) => keyDigest(k) }.map { case (d, ks) => d -> ks.map(_._2) }
       val best = scala.collection.mutable.HashMap.empty[String, Long]
       def bump(d: String, v: Long): Unit =
         if (wanted.contains(d) && best.getOrElse(d, Long.MinValue) < v) best(d) = v
-      if (Files.isDirectory(shardDir)) {
-        val s = Files.list(shardDir)
-        try s.iterator().asScala.foreach { p =>
-          val n = p.getFileName.toString
-          val dot = n.lastIndexOf('.')
-          if (dot > 0) // cell files only: a marker's name never splits to (digest, long)
-            n.drop(dot + 1).toLongOption.foreach(v => bump(n.take(dot), v))
-        } finally s.close()
-        segmentFiles(shardDir).foreach { seg =>
-          if (wanted.keysIterator.exists(CellSegment.mightContain(seg, _)))
-            CellSegment.indexOf(seg).foreach(e => bump(e.digestHex, e.version))
-        }
+      // own entries plus in-directory satellites: a mid-split daughter
+      // or a parked merge holds keys this region serves
+      val entries = ShardFiles.list(tableDir(tableName).resolve(shardName)).covered
+      entries.foreach(e => if (e.isPut) bump(e.digest, e.version))
+      ShardFiles.segmentsOf(entries).foreach { seg =>
+        if (wanted.keysIterator.exists(CellSegment.mightContain(seg, _)))
+          CellSegment.indexOf(seg).foreach(e => bump(e.digestHex, e.version))
       }
       wanted.foreach { case (d, idxs) =>
         val v = best.get(d)
@@ -728,12 +599,23 @@ final case class FileStore(rootDir: String) extends Store {
     * snapshots the wall clock once per probe batch). */
   def existsAt(tableName: String, cells: Seq[CellPut], nowMillis: Long): Seq[Boolean] =
     FileStore.Locks.read(tableDir(tableName)) {
-    val masks = scala.collection.mutable.HashMap.empty[Path, FileStore.ShardMask]
-    // segment listings memoize per BATCH (segments are immutable, and
-    // a put landing mid-batch is invisible to a snapshot check anyway)
-    // — a 10k-cell probe batch pays one directory listing per touched
-    // shard, not one per cell
-    val segLists = scala.collection.mutable.HashMap.empty[Path, Seq[Path]]
+    // ONE listing per touched shard per BATCH — own entries plus
+    // in-directory satellites; segments are immutable, and a put landing
+    // mid-batch is invisible to a snapshot check anyway — so a 10k-cell
+    // probe batch pays one listing per touched shard, not one per cell.
+    // Segments, satellite puts, the delete mask and the retention
+    // version lists all derive from it.
+    final class Listed(l: ShardFiles.Listing) {
+      val entries: Vector[ShardFiles.Entry] = l.covered
+      val segments: Vector[Path] = ShardFiles.segmentsOf(entries)
+      // the per-cell `Files.exists` probe sees own-directory puts only
+      lazy val satellitePuts: Set[(String, Long)] =
+        entries.iterator.drop(l.own.size).filter(_.isPut).map(e => (e.digest, e.version)).toSet
+      lazy val mask: ShardFiles.ShardMask = ShardFiles.maskOf(entries)
+    }
+    val listed = scala.collection.mutable.HashMap.empty[Path, Listed]
+    def listedOf(shardDir: Path): Listed =
+      listed.getOrElseUpdate(shardDir, new Listed(ShardFiles.list(shardDir)))
     // READ-TIME RETENTION (the HBase existsAll contract — the probe
     // runs the same masked read path as a Get): a cell hidden by the
     // version cap or TTL reads as ABSENT, so an ingest replay re-puts
@@ -743,24 +625,16 @@ final case class FileStore(rootDir: String) extends Store {
     // the ingest DDL leaves retention unbounded).
     val policies = scala.collection.mutable.HashMap.empty[String, Option[Retention.Policy]]
     val verMemo = scala.collection.mutable.HashMap.empty[(Path, String), Seq[Long]]
-    def liveVersionsOf(shardDir: Path, digest: String, mask: FileStore.ShardMask): Seq[Long] =
+    def liveVersionsOf(shardDir: Path, digest: String): Seq[Long] =
       verMemo.getOrElseUpdate((shardDir, digest), {
+        val ls = listedOf(shardDir)
         val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        if (Files.isDirectory(shardDir)) {
-          val s = Files.list(shardDir)
-          try s.iterator().asScala.foreach { p =>
-            val n = p.getFileName.toString
-            val dot = n.lastIndexOf('.')
-            if (dot > 0 && !n.endsWith(".tmp") && !CellSegment.isSegment(n) &&
-              n.take(dot) == digest)
-              n.drop(dot + 1).toLongOption.foreach(buf += _)
-          } finally s.close()
-          segLists.getOrElseUpdate(shardDir, segmentFiles(shardDir)).foreach { seg =>
-            if (CellSegment.mightContain(seg, digest))
-              CellSegment.indexOf(seg).foreach(e => if (e.digestHex == digest) buf += e.version)
-          }
+        ls.entries.foreach(e => if (e.isPut && e.digest == digest) buf += e.version)
+        ls.segments.foreach { seg =>
+          if (CellSegment.mightContain(seg, digest))
+            CellSegment.indexOf(seg).foreach(e => if (e.digestHex == digest) buf += e.version)
         }
-        buf.toSeq.distinct.filterNot(mask.masked(digest, _))
+        buf.toSeq.distinct.filterNot(ls.mask.masked(digest, _))
       })
     // ONE layout read per table per call, as in putBatch: the read lock
     // held here keeps a region split from moving the boundaries meanwhile
@@ -773,32 +647,29 @@ final case class FileStore(rootDir: String) extends Store {
       val shardDir = tdir.resolve(splits.shardNameOf(c.rowkey))
       val d = keyDigest(c.rowkey)
       def probe(): Boolean = {
-        val raw = Files.exists(shardDir.resolve(s"$d.${c.version}")) ||
-          segLists.getOrElseUpdate(shardDir, segmentFiles(shardDir)).exists { seg =>
+        val ls = listedOf(shardDir)
+        val raw = Files.exists(shardDir.resolve(ShardFiles.putName(d, c.version))) ||
+          ls.segments.exists { seg =>
             // ROW bloom first: an absent key — the common ingest probe —
             // answers off ~1.25 B/key with no index load at all
             CellSegment.mightContain(seg, d) &&
               CellSegment.indexOf(seg).exists(e => e.version == c.version && e.digestHex == d)
-          }
-        // masks consulted only for raw hits (an absent cell can't be
-        // masked INTO existence), so a fresh-cell probe — the common
-        // ingest case — pays no extra listing; one listing per touched
-        // shard per batch otherwise
-        raw && {
-          val mask = masks.getOrElseUpdate(shardDir, FileStore.maskOf(shardDir))
-          !mask.masked(d, c.version) &&
-            policies.getOrElseUpdate(c.tableName,
-              Retention.of(specOf(c.tableName), nowMillis))
-              .forall(_.admits(c.version, liveVersionsOf(shardDir, d, mask)))
-        }
+          } || ls.satellitePuts((d, c.version))
+        // the mask is consulted only for raw hits (an absent cell can't
+        // be masked INTO existence); a raw hit is live unless masked, so
+        // it ranks among the key's live versions even if it landed after
+        // the batch's listing
+        raw && !ls.mask.masked(d, c.version) &&
+          policies.getOrElseUpdate(c.tableName, Retention.of(specOf(c.tableName), nowMillis))
+            .forall(_.admits(c.version, liveVersionsOf(shardDir, d) :+ c.version))
       }
       // VANISH RESILIENCE (the connector readers' posture): automatic
       // maintenance (flush / tier merge / region split) deletes
       // absorbed segments AFTER their merge output renamed in, so a
       // probe racing concurrent ingest can hit a vanished file or keep
-      // consulting a memoized segment list that no longer holds the
-      // cell's current home. Drop the shard's memos, re-list, retry —
-      // the vanished input's cells are in the merge output the fresh
+      // consulting a memoized listing that no longer holds the cell's
+      // current home. Drop the shard's memos, re-list, retry — the
+      // vanished input's cells are in the merge output the fresh
       // listing contains. Bounded retries; a store churning harder
       // than that is a real fault and should fail the batch.
       var attempts = 0
@@ -810,8 +681,7 @@ final case class FileStore(rootDir: String) extends Store {
           case e: java.io.IOException =>
             attempts += 1
             if (attempts > 3) throw e
-            segLists.remove(shardDir)
-            masks.remove(shardDir)
+            listed.remove(shardDir)
             verMemo.filterInPlace { case ((sd, _), _) => sd != shardDir }
         }
       }
@@ -848,22 +718,20 @@ final case class FileStore(rootDir: String) extends Store {
       try {
         return FileStore.Locks.read(tableDir(tableName)) {
           val shardDir = tableDir(tableName).resolve(splitsOf(tableName).shardNameOf(rowkey))
-          if (!Files.isDirectory(shardDir)) return None
           FileStore.shardLockFor(shardDir).synchronized {
-          val mask = FileStore.maskOf(shardDir)
+          // ONE listing — own entries plus in-directory satellites (a
+          // mid-split daughter, a parked merge): the delete mask, the put
+          // candidates and the segments all come from it
+          val entries = ShardFiles.list(shardDir).covered
+          val mask = ShardFiles.maskOf(entries)
           // candidates: version → best source (put beats segment, then
           // higher seqNo); values: Left(putPath) | Right((seg, offset, seqNo))
           val cand = scala.collection.mutable.HashMap
             .empty[Long, Either[Path, (Path, Long, Long)]]
-          val s = Files.list(shardDir)
-          try s.iterator().asScala.foreach { p =>
-            val n = p.getFileName.toString
-            val dot = n.lastIndexOf('.')
-            if (dot > 0 && !n.endsWith(".tmp") && !n.startsWith("_split") &&
-              !CellSegment.isSegment(n) && n.take(dot) == d)
-              n.drop(dot + 1).toLongOption.foreach(v => cand(v) = Left(p))
-          } finally s.close()
-          segmentFiles(shardDir).foreach { seg =>
+          entries.foreach { e =>
+            if (e.isPut && e.digest == d && !cand.contains(e.version)) cand(e.version) = Left(e.path)
+          }
+          ShardFiles.segmentsOf(entries).foreach { seg =>
             if (CellSegment.mightContain(seg, d)) {
               lazy val seq = CellSegment.readTrailer(seg).seqNo
               CellSegment.indexOf(seg).foreach { e =>
@@ -883,12 +751,7 @@ final case class FileStore(rootDir: String) extends Store {
           if (admitted.isEmpty) return None
           val v = admitted.max
           val (key, body) = cand(v) match {
-            case Left(p) =>
-              val buf = java.nio.ByteBuffer.wrap(Files.readAllBytes(p))
-              val keyLen = buf.getInt()
-              val k = new Array[Byte](keyLen); buf.get(k)
-              val b = new Array[Byte](buf.remaining()); buf.get(b)
-              (k, b)
+            case Left(p) => ShardFiles.read(p)
             case Right((seg, off, _)) =>
               val (k, _, b) = CellSegment.entryAt(seg, off, needBody = true)
               (k, b)
@@ -1014,40 +877,15 @@ final case class FileStore(rootDir: String) extends Store {
       next
     }
 
-  private def segmentFiles(shardDir: Path): Seq[Path] =
-    if (!Files.isDirectory(shardDir)) Seq.empty
-    else {
-      val s = Files.list(shardDir)
-      try s.iterator().asScala
-        .filter(p => CellSegment.isSegment(p.getFileName.toString))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally s.close()
-    }
-
-  /** A shard's segments NEWEST-FIRST — (seqNo desc, name) — the read
-    * precedence order: at a colliding (rowkey, version) identity the
-    * newer segment's body wins (legal collisions exist once an
-    * in-place SQL UPDATE has been minor-compacted while a stale copy
-    * stayed in an unmerged segment). One trailer read per segment. */
-  private[graft] def segmentsNewestFirst(shardDir: Path): Seq[Path] =
-    segmentFiles(shardDir)
-      .map(p => (CellSegment.readTrailer(p).seqNo, p))
-      .sortBy { case (sq, p) => (-sq, p.getFileName.toString) }
-      .map(_._2)
-
   /** Highest segment sequence number anywhere in the table (0 if
     * none) — the next bulk generation stamps maxSeqNo+1 so its bodies
     * outrank every resident segment at any colliding identity.
     * Driver-side, one trailer read per segment. */
-  def maxSeqNo(tableName: String): Long = {
-    val dir = tableDir(tableName)
-    if (!Files.isDirectory(dir)) return 0L
-    val shards = Files.list(dir)
-    try shards.iterator().asScala.filter(Files.isDirectory(_)).flatMap { shard =>
-      segmentFiles(shard).map(CellSegment.readTrailer(_).seqNo)
+  def maxSeqNo(tableName: String): Long =
+    ShardFiles.regions(tableDir(tableName)).iterator.flatMap { shard =>
+      ShardFiles.list(shard).own.iterator.filter(_.isSegment)
+        .map(e => CellSegment.readTrailer(e.path).seqNo)
     }.foldLeft(0L)(math.max)
-    finally shards.close()
-  }
 
   override def putBatch(tableName: String, cells: Seq[CellPut]): Unit = {
     // shard names of the batch's touched shards, for the split-policy
@@ -1105,14 +943,6 @@ final case class FileStore(rootDir: String) extends Store {
         directShards += shardDir
       } else {
       Files.createDirectories(shardDir)
-      group.foreach { c =>
-      val target = shardDir.resolve(s"${keyDigest(c.rowkey)}.${c.version}")
-      val tmp = Files.createTempFile(shardDir, "put", ".tmp")
-      // cell file = [4-byte BE rowkey length][rowkey][body]: the filename
-      // carries only a digest, so the true key must live in the cell
-      val buf = java.nio.ByteBuffer.allocate(4 + c.rowkey.length + c.body.length)
-      buf.putInt(c.rowkey.length).put(c.rowkey).put(c.body)
-      Files.write(tmp, buf.array())
       // REPLACE-BY-COORDINATE GUARD (r17 — a real lost update caught by
       // q255's forensic gate): an IN-PLACE overwrite (streaming upsert
       // MV, SQL in-place UPDATE) re-renames onto an EXISTING put path.
@@ -1129,15 +959,11 @@ final case class FileStore(rootDir: String) extends Store {
       // whole normal ingest path) take no monitor: a path that does
       // not exist can never be inside an absorb window (absorbs only
       // list existing files, and a swept path is never re-listed).
-      if (Files.exists(target))
-        FileStore.shardLockFor(shardDir).synchronized {
-          Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        }
-      else
-        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-    } } }
+      val replaceLock = FileStore.shardLockFor(shardDir)
+      group.foreach { c =>
+        ShardFiles.writePut(shardDir, keyDigest(c.rowkey), c.version, c.rowkey, c.body, replaceLock)
+      }
+    } }
     // retention AFTER the batch lands, ONE directory listing per
     // touched shard: pruning per put re-listed the whole shard per
     // cell — O(cells × files-in-shard), measured as the dominant cost
@@ -1150,26 +976,10 @@ final case class FileStore(rootDir: String) extends Store {
       byShard.filterNot { case (sd, _) => directShards(sd) }
         .foreach { case (shardDir, shardCells) =>
         val touched = shardCells.map(c => keyDigest(c.rowkey)).toSet
-        val byKey = {
-          val s = Files.list(shardDir)
-          try s.iterator().asScala.map(_.getFileName.toString)
-            .filterNot(_.endsWith(".tmp"))
-            .flatMap { n =>
-              val dot = n.lastIndexOf('.')
-              if (dot <= 0) None
-              else {
-                val key = n.take(dot)
-                if (!touched.contains(key)) None
-                else n.drop(dot + 1).toLongOption.map(v => (key, v))
-              }
-            }.toSeq.groupBy(_._1)
-          finally s.close()
-        }
-        byKey.foreach { case (key, versions) =>
-          versions.map(_._2).sorted.dropRight(spec).foreach { v =>
-            Files.deleteIfExists(shardDir.resolve(s"$key.$v"))
+        ShardFiles.list(shardDir).own.filter(e => e.isPut && touched.contains(e.digest))
+          .groupBy(_.digest).foreach { case (_, puts) =>
+            puts.sortBy(_.version).dropRight(spec).foreach(e => Files.deleteIfExists(e.path))
           }
-        }
       }
     }
     // POST-COMMIT FLUSH HOOK (the memstore-flush / hbase.hstore.
@@ -1217,25 +1027,22 @@ final case class FileStore(rootDir: String) extends Store {
     FileStore.shardLockFor(shardDir).synchronized {
       Files.createDirectories(shardDir)
       FileStore.flushChecks.incrementAndGet()
-      // ONE listing: existing names (replace routing) + segment
-      // trailers (precedence ceiling + tier population)
-      val names = {
-        val s = Files.list(shardDir)
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .filterNot(_.endsWith(".tmp")).toVector
-        finally s.close()
-      }
+      // ONE listing: existing puts (replace routing, the version-cap
+      // prune, the backlog count) + segment trailers (precedence
+      // ceiling + tier population)
+      val own = ShardFiles.list(shardDir).own
+      val puts = own.filter(_.isPut)
       // trailer reads are LAZY (r18): an all-replace batch (the
       // streaming-upsert MV shape) needs neither the seqNo ceiling nor
       // the tier population — reading every segment trailer per batch
       // under the shard monitor was measurable contention on hot
       // single-shard MV drains
-      lazy val trailers = names.filter(CellSegment.isSegment)
-        .flatMap(n => try Some(CellSegment.readTrailer(shardDir.resolve(n)))
+      lazy val trailers = own.filter(_.isSegment)
+        .flatMap(e => try Some(CellSegment.readTrailer(e.path))
                       catch { case _: java.io.IOException => None })
       def maxSeq = trailers.map(_.seqNo).foldLeft(0L)(math.max)
       def smallSegs = trailers.count(_.indexOffset <= SmallSegmentBytes)
-      val existing = names.toSet
+      val existing = puts.iterator.map(e => (e.digest, e.version)).toSet
       val byCoord = scala.collection.mutable.LinkedHashMap
         .empty[(String, Long), (Array[Byte], Long, Array[Byte], String)]
       group.foreach { c =>
@@ -1243,7 +1050,7 @@ final case class FileStore(rootDir: String) extends Store {
         byCoord((d, c.version)) = (c.rowkey, c.version, c.body, d)
       }
       val (replacesAll, freshAll) = byCoord.valuesIterator.toVector
-        .partition { case (_, v, _, d) => existing.contains(s"$d.$v") }
+        .partition { case (_, v, _, d) => existing.contains((d, v)) }
       // VERSION-CAP PRUNE (r18, guide §6 — closes the last small-files
       // path): the per-cell path lands the batch as files and then the
       // retention prune deletes, per TOUCHED key, every put file below
@@ -1259,17 +1066,8 @@ final case class FileStore(rootDir: String) extends Store {
         if (maxVersions == Int.MaxValue) (freshAll, replacesAll, Vector.empty[String])
         else {
           val touched = byCoord.keysIterator.map(_._1).toSet
-          val residentVs: Map[String, Vector[Long]] = names.iterator
-            .filter(n => !CellSegment.isSegment(n))
-            .flatMap { n =>
-              val dot = n.lastIndexOf('.')
-              if (dot <= 0) None
-              else {
-                val key = n.take(dot)
-                if (!touched.contains(key)) None
-                else n.drop(dot + 1).toLongOption.map(v => (key, v))
-              }
-            }.toVector.groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2)) }
+          val residentVs: Map[String, Vector[Long]] = puts.filter(e => touched.contains(e.digest))
+            .groupBy(_.digest).map { case (k, es) => (k, es.map(_.version)) }
           val batchVs = byCoord.valuesIterator
             .map { case (_, v, _, d) => (d, v) }.toVector.groupBy(_._1)
             .map { case (k, vs) => (k, vs.map(_._2)) }
@@ -1280,7 +1078,7 @@ final case class FileStore(rootDir: String) extends Store {
               (k, all.takeRight(maxVersions).toSet)
             }.toMap
           val dead = residentVs.iterator.flatMap { case (k, vs) =>
-            vs.filterNot(keep(k)).map(v => s"$k.$v")
+            vs.filterNot(keep(k)).map(ShardFiles.putName(k, _))
           }.toVector
           dead.foreach(n => Files.deleteIfExists(shardDir.resolve(n)))
           (freshAll.filter { case (_, v, _, d) => keep(d)(v) },
@@ -1296,13 +1094,7 @@ final case class FileStore(rootDir: String) extends Store {
         FileStore.autoFlushes.incrementAndGet()
       }
       replaces.foreach { case (rowkey, version, body, d) =>
-        val target = shardDir.resolve(s"$d.$version")
-        val tmp = Files.createTempFile(shardDir, "put", ".tmp")
-        val buf = java.nio.ByteBuffer.allocate(4 + rowkey.length + body.length)
-        buf.putInt(rowkey.length).put(rowkey).put(body)
-        Files.write(tmp, buf.array())
-        Files.move(tmp, target,
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        ShardFiles.writePut(shardDir, d, version, rowkey, body)
       }
       // HOOK PARITY (ADVICE r17): a PRE-EXISTING put backlog (left by
       // ≤-threshold batches) must not outlive a direct-path batch just
@@ -1314,11 +1106,7 @@ final case class FileStore(rootDir: String) extends Store {
       // run the segment-tier check here — even when the batch was all
       // replaces (fresh empty), matching the hook's `smallSegs >
       // threshold` trigger.
-      val putBacklog = names.count { n =>
-        val dot = n.lastIndexOf('.')
-        dot > 0 && !CellSegment.isSegment(n) && n.drop(dot + 1).toLongOption.isDefined
-      }
-      if (putBacklog - prunedResidents.size + replaces.size > threshold)
+      if (puts.size - prunedResidents.size + replaces.size > threshold)
         flushShardIfBacklogged(shardDir, threshold)
       else if (smallSegs + (if (fresh.nonEmpty) 1 else 0) > threshold)
         try {
@@ -1367,23 +1155,15 @@ final case class FileStore(rootDir: String) extends Store {
     FileStore.shardLockFor(shardDir).synchronized {
     FileStore.flushChecks.incrementAndGet()
     val (puts, shardMaxSeq, smallSegs) = {
-      val s = Files.list(shardDir)
-      try {
-        val names = s.iterator().asScala.map(_.getFileName.toString)
-          .filterNot(_.endsWith(".tmp")).toVector
-        val p = names.filter { n =>
-          val dot = n.lastIndexOf('.')
-          dot > 0 && !CellSegment.isSegment(n) && n.drop(dot + 1).toLongOption.isDefined
-        }
-        // a sibling task's merge may delete a listed segment mid-scan —
-        // skip vanished ones (their content moved into a merge output
-        // whose seqNo is ≥ theirs, so the maxSeq floor stays sound)
-        val trailers = names.filter(CellSegment.isSegment)
-          .flatMap(n => try Some(CellSegment.readTrailer(shardDir.resolve(n)))
-                        catch { case _: java.io.IOException => None })
-        (p, trailers.map(_.seqNo).foldLeft(0L)(math.max),
-          trailers.count(_.indexOffset <= SmallSegmentBytes))
-      } finally s.close()
+      val own = ShardFiles.list(shardDir).own
+      // a sibling task's merge may delete a listed segment mid-scan —
+      // skip vanished ones (their content moved into a merge output
+      // whose seqNo is ≥ theirs, so the maxSeq floor stays sound)
+      val trailers = own.filter(_.isSegment)
+        .flatMap(e => try Some(CellSegment.readTrailer(e.path))
+                      catch { case _: java.io.IOException => None })
+      (own.filter(_.isPut), trailers.map(_.seqNo).foldLeft(0L)(math.max),
+        trailers.count(_.indexOffset <= SmallSegmentBytes))
     }
     // BEST-EFFORT tier merge: a concurrent sibling task may delete an
     // input mid-read (its own merge won the race) — the policy then
@@ -1402,15 +1182,11 @@ final case class FileStore(rootDir: String) extends Store {
     }
     // the backlog is small by construction (threshold-bounded batches
     // of memstore-sized cells) — sort in-core, stream to the writer
-    val cells = puts.flatMap { n =>
+    val cells = puts.flatMap { e =>
       // a racing flush may have absorbed this put already
       try {
-        val bytes = Files.readAllBytes(shardDir.resolve(n))
-        val buf = java.nio.ByteBuffer.wrap(bytes)
-        val keyLen = buf.getInt()
-        val key = new Array[Byte](keyLen); buf.get(key)
-        val body = new Array[Byte](buf.remaining()); buf.get(body)
-        Some((key, n.drop(n.lastIndexOf('.') + 1).toLong, body))
+        val (key, body) = ShardFiles.read(e.path)
+        Some((key, e.version, body))
       } catch { case _: java.io.IOException => None }
     }.sortWith { (a, b) =>
       val c = java.util.Arrays.compareUnsigned(a._1, b._1)
@@ -1425,7 +1201,7 @@ final case class FileStore(rootDir: String) extends Store {
     // never land inside (it can't — the replace takes this shard's
     // monitor, held here; FlushReplaceRaceSpec drives the interleaving)
     FileStore.absorbProbe(shardDir)
-    puts.foreach { n => if (n != meta.fileName) Files.deleteIfExists(shardDir.resolve(n)) }
+    puts.foreach(e => Files.deleteIfExists(e.path))
     FileStore.autoFlushes.incrementAndGet()
     // tier 2: the flush just added one more small segment — merge the
     // tier once it outgrows the threshold (see the scaladoc above)
@@ -1455,51 +1231,34 @@ final case class FileStore(rootDir: String) extends Store {
     * any segment copy, and among segments the higher trailer seqNo
     * wins — the same winner every read face picks. */
   def scanTable(tableName: String): Seq[(String, Long, Array[Byte])] = {
-    val dir = tableDir(tableName)
-    if (!Files.exists(dir)) return Seq.empty
     val out = Seq.newBuilder[(String, Long, Array[Byte])]
     val seen = scala.collection.mutable.HashSet.empty[(String, Long)]
-    val shards = Files.list(dir)
-    try {
-      shards.iterator().forEachRemaining { shard =>
-        if (Files.isDirectory(shard)) {
-          // the LOGICAL view: delete tombstones mask here as on the
-          // connector's batch face
-          val mask = FileStore.maskOf(shard)
-          def masked(digestHex: String, v: Long): Boolean = mask.masked(digestHex, v)
-          val cells = Files.list(shard)
-          try cells.iterator().forEachRemaining { p =>
-            val n = p.getFileName.toString
-            val dot = n.lastIndexOf('.')
-            if (dot > 0 && !n.endsWith(".tmp") && !CellSegment.isSegment(n)) {
-              n.drop(dot + 1).toLongOption.foreach { version => // skips .d markers
-                if (!masked(n.take(dot), version)) {
-                  val bytes = Files.readAllBytes(p)
-                  val buf = java.nio.ByteBuffer.wrap(bytes)
-                  val keyLen = buf.getInt()
-                  val rowkey = new Array[Byte](keyLen); buf.get(rowkey)
-                  val body = new Array[Byte](buf.remaining()); buf.get(body)
-                  val keyHex = FileStore.hex(rowkey)
-                  if (seen.add((keyHex, version))) out += ((keyHex, version, body))
-                }
-              }
-            }
-          } finally cells.close()
-          // newest-first so a colliding identity surfaces its NEWEST
-          // segment body (put files already drained and hold overall
-          // precedence via `seen`)
-          segmentsNewestFirst(shard).foreach { seg =>
-            CellSegment.entries(seg, needBody = true).zip(CellSegment.indexOf(seg).iterator)
-              .foreach { case ((k, v, b), e) =>
-                if (!masked(e.digestHex, v)) {
-                  val keyHex = FileStore.hex(k)
-                  if (seen.add((keyHex, v))) out += ((keyHex, v, b))
-                }
-              }
-          }
+    ShardFiles.regions(tableDir(tableName)).foreach { shard =>
+      // ONE listing — own entries plus in-directory satellites (a
+      // mid-split daughter, a parked merge) — and the LOGICAL view:
+      // delete markers mask here as on the connector's batch face
+      val entries = ShardFiles.list(shard).covered
+      val mask = ShardFiles.maskOf(entries)
+      entries.foreach { e =>
+        if (e.isPut && !mask.masked(e.digest, e.version)) {
+          val (rowkey, body) = ShardFiles.read(e.path)
+          val keyHex = FileStore.hex(rowkey)
+          if (seen.add((keyHex, e.version))) out += ((keyHex, e.version, body))
         }
       }
-    } finally shards.close()
+      // newest-first so a colliding identity surfaces its NEWEST
+      // segment body (put files already drained and hold overall
+      // precedence via `seen`)
+      ShardFiles.newestFirst(ShardFiles.segmentsOf(entries)).foreach { seg =>
+        CellSegment.entries(seg, needBody = true).zip(CellSegment.indexOf(seg).iterator)
+          .foreach { case ((k, v, b), e) =>
+            if (!mask.masked(e.digestHex, v)) {
+              val keyHex = FileStore.hex(k)
+              if (seen.add((keyHex, v))) out += ((keyHex, v, b))
+            }
+          }
+      }
+    }
     out.result()
   }
 }

@@ -1,7 +1,6 @@
 package graft.ingest
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
 /** AUTOMATIC REGION SPLIT — the `hbase.hregion.max.filesize` lifecycle
   * verb, completing the store's autonomous maintenance after r15's
@@ -108,16 +107,10 @@ object RegionSplit {
     * the split policy's measure and the scan's packing weight
     * (satellites excluded: their bytes belong to the daughter being
     * born). */
-  private[graft] def shardBytes(shardDir: Path): Long = {
-    if (!Files.isDirectory(shardDir)) return 0L
-    val s = Files.list(shardDir)
-    try s.iterator().asScala.map { p =>
-      val n = p.getFileName.toString
-      if (n.endsWith(".tmp") || n.startsWith("_split") || n.startsWith("_merge")) 0L
-      else try Files.size(p) catch { case _: java.io.IOException => 0L }
+  private[graft] def shardBytes(shardDir: Path): Long =
+    ShardFiles.list(shardDir).own.iterator.map { e =>
+      try Files.size(e.path) catch { case _: java.io.IOException => 0L }
     }.sum
-    finally s.close()
-  }
 
   /** The split key: midkey of the region's LARGEST segment (HBase's
     * split-point policy — the biggest store file's middle block key),
@@ -127,20 +120,10 @@ object RegionSplit {
     * disabled). None when the region holds < 2 distinct keys — an
     * unsplittable region, exactly HBase's single-row-region behavior. */
   private[graft] def chooseSplitKey(shardDir: Path): Option[Array[Byte]] = {
-    val (puts, segs) = {
-      val s = Files.list(shardDir)
-      try {
-        val names = s.iterator().asScala.map(_.getFileName.toString)
-          .filterNot(n => n.endsWith(".tmp") || n.startsWith("_split") ||
-            n.startsWith("_merge")).toVector
-        (names.filter { n =>
-          val dot = n.lastIndexOf('.')
-          dot > 0 && !CellSegment.isSegment(n) && n.drop(dot + 1).toLongOption.isDefined
-        }, names.filter(CellSegment.isSegment))
-      } finally s.close()
-    }
+    val own = ShardFiles.list(shardDir).own
+    val (puts, segs) = (own.filter(_.isPut), own.filter(_.isSegment).map(_.path))
     val fromSegment = segs
-      .map(n => (n, CellSegment.readTrailer(shardDir.resolve(n))))
+      .map(p => (p, CellSegment.readTrailer(p)))
       .sortBy(-_._2.indexOffset)
       .headOption
       .filter(_._2.distinctKeys >= 2)
@@ -150,7 +133,7 @@ object RegionSplit {
         var prev: Array[Byte] = null
         var below: (Array[Byte], Array[Byte]) = null // last key change at index ≤ mid
         var above: (Array[Byte], Array[Byte]) = null // first key change after mid
-        val it = CellSegment.entries(shardDir.resolve(n), needBody = false)
+        val it = CellSegment.entries(n, needBody = false)
         try {
           while (it.hasNext && above == null) {
             val (k, _, _) = it.next()
@@ -167,14 +150,9 @@ object RegionSplit {
     fromSegment.orElse {
       // no usable segment: median boundary of the put backlog's keys
       // (key headers only — 4 + keyLen bytes per file)
-      val keys = puts.flatMap { n =>
-        try {
-          val in = Files.newInputStream(shardDir.resolve(n))
-          try {
-            val keyLen = java.nio.ByteBuffer.wrap(in.readNBytes(4)).getInt
-            Some(in.readNBytes(keyLen))
-          } finally in.close()
-        } catch { case _: java.io.IOException => None }
+      val keys = puts.flatMap { e =>
+        try Some(ShardFiles.readKey(e.path, _ => false)._1)
+        catch { case _: java.io.IOException => None }
       }.distinctBy(_.toSeq).sortWith(cmp(_, _) < 0)
       if (keys.size < 2) None
       else Some(shortestSeparator(keys(keys.size / 2 - 1), keys(keys.size / 2)))
@@ -262,7 +240,7 @@ object RegionSplit {
       FileStore(root).recordBoundaryRemoval(table, rightStart)
       probeHook(s"unbound:$rightStart")
       if (Files.isDirectory(rightDir))
-        Files.move(rightDir, leftDir.resolve(FileStore.mergeSatelliteNameOf(rightStart)),
+        Files.move(rightDir, leftDir.resolve(ShardFiles.mergeSatelliteNameOf(rightStart)),
           StandardCopyOption.ATOMIC_MOVE)
       probeHook(s"parked:$rightStart")
       foldMergeSatellite(leftDir, rightStart)
@@ -277,18 +255,17 @@ object RegionSplit {
     * (completePendingIn runs first), but a nested dir moves wholesale
     * and keeps its range classification if one ever did. */
   private def foldMergeSatellite(leftDir: Path, target: String): Unit = {
-    val sat = leftDir.resolve(FileStore.mergeSatelliteNameOf(target))
+    val sat = leftDir.resolve(ShardFiles.mergeSatelliteNameOf(target))
     if (!Files.isDirectory(sat)) return
-    val l = Files.list(sat)
-    val names = try l.iterator().asScala.map(_.getFileName.toString).toVector finally l.close()
-    names.foreach { n =>
-      if (n.endsWith(".tmp")) Files.deleteIfExists(sat.resolve(n))
+    ShardFiles.list(sat).paths.foreach { p =>
+      val n = p.getFileName.toString
+      if (n.endsWith(".tmp")) Files.deleteIfExists(p)
       else
-        try Files.move(sat.resolve(n), leftDir.resolve(n), StandardCopyOption.ATOMIC_MOVE)
+        try Files.move(p, leftDir.resolve(n), StandardCopyOption.ATOMIC_MOVE)
         catch {
           case _: java.nio.file.FileAlreadyExistsException =>
             // content-hash twin (identical segment) — one copy suffices
-            Files.deleteIfExists(sat.resolve(n))
+            Files.deleteIfExists(p)
         }
     }
     Files.deleteIfExists(sat)
@@ -305,24 +282,18 @@ object RegionSplit {
   }
 
   private def completePendingIn(root: String, table: String, tableDir: Path): Int = {
-    if (!Files.isDirectory(tableDir)) return 0
     var completed = 0
-    val shards = Files.list(tableDir)
-    val shardDirs =
-      try shards.iterator().asScala.filter(p => Files.isDirectory(p) &&
-        FileStore.Splits.startOf(p.getFileName.toString).isDefined).toVector
-      finally shards.close()
+    val shardDirs = ShardFiles.regions(tableDir)
     // a crashed MERGE between unbind and park leaves the right
     // region's dir standing with its boundary gone — park + fold it
-    // into the left LISTED neighbor now (sorted order makes "left" the
-    // previous element)
+    // into the left LISTED neighbor now (regions come in name order, so
+    // "left" is the previous element)
     val layoutNames = FileStore.splitsAt(tableDir).names.toSet
-    val sortedDirs = shardDirs.sortBy(_.getFileName.toString)
-    sortedDirs.zipWithIndex.foreach { case (shard, idx) =>
+    shardDirs.zipWithIndex.foreach { case (shard, idx) =>
       val n = shard.getFileName.toString
       if (!layoutNames.contains(n) && idx > 0) {
-        val left = sortedDirs(idx - 1)
-        val sat = left.resolve(FileStore.mergeSatelliteNameOf(n))
+        val left = shardDirs(idx - 1)
+        val sat = left.resolve(ShardFiles.mergeSatelliteNameOf(n))
         if (!Files.exists(sat) && Files.isDirectory(shard)) {
           try Files.move(shard, sat, StandardCopyOption.ATOMIC_MOVE)
           catch { case _: java.io.IOException => () }
@@ -333,26 +304,25 @@ object RegionSplit {
     }
     // a dir the orphan pass just parked is gone from its old path
     shardDirs.filter(Files.isDirectory(_)).foreach { shard =>
-      val l = Files.list(shard)
-      val pend =
-        try l.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("_split") || n.startsWith("_merge")).toVector
-        finally l.close()
-      pend.foreach { n =>
-        if (n.startsWith("_splitstage"))
-          org.apache.commons.io.FileUtils.deleteQuietly(shard.resolve(n).toFile)
-        else if (n.startsWith("_merge-"))
-          FileStore.mergeTargetOf(n).foreach { target =>
+      val l = ShardFiles.list(shard)
+      // pre-publish staging orphans: the parents are still intact
+      l.debris.foreach { p =>
+        if (p.getFileName.toString.startsWith("_splitstage"))
+          org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
+      }
+      l.satellites.foreach { sat =>
+        val n = sat.getFileName.toString
+        ShardFiles.mergeTargetOf(n) match {
+          case Some(target) =>
             // an unfolded merge satellite: ensure its boundary is gone,
             // then fold (both idempotent)
             FileStore(root).recordBoundaryRemoval(table, target)
             foldMergeSatellite(shard, target)
-            completed += 1
-          }
-        else FileStore.satelliteTargetOf(n).foreach { target =>
-          finishFromSatellite(root, table, tableDir, shard, shard.resolve(n), target)
-          completed += 1
+          case None =>
+            ShardFiles.satelliteTargetOf(n).foreach(
+              finishFromSatellite(root, table, tableDir, shard, sat, _))
         }
+        completed += 1
       }
     }
     completed
@@ -407,31 +377,15 @@ object RegionSplit {
 
     // ---- phase 1: merge (the minorShard physics, two outputs) ----
     val (puts, segInfo, markers, shardMaxSeq) = {
-      val l = Files.list(shardDir)
-      try {
-        val names = l.iterator().asScala.map(_.getFileName.toString)
-          .filterNot(n => n.endsWith(".tmp") || n.startsWith("_split") ||
-            n.startsWith("_merge")).toVector
-        val p = names.filter { n =>
-          val dot = n.lastIndexOf('.')
-          dot > 0 && !CellSegment.isSegment(n) && n.drop(dot + 1).toLongOption.isDefined
-        }
-        val mk = names.filter(n => FileStore.tombstoneOf(n).isDefined ||
-          FileStore.exactTombstoneOf(n).isDefined)
-        val segs = names.filter(CellSegment.isSegment)
-          .map(n => (n, CellSegment.readTrailer(shardDir.resolve(n))))
-        (p, segs, mk, segs.map(_._2.seqNo).foldLeft(0L)(math.max))
-      } finally l.close()
+      val own = ShardFiles.list(shardDir).own
+      val segs = own.filter(_.isSegment).map(e => (e.path, CellSegment.readTrailer(e.path)))
+      (own.filter(_.isPut), segs, own.filter(_.isMarker), segs.map(_._2.seqNo).foldLeft(0L)(math.max))
     }
     if (puts.isEmpty && segInfo.isEmpty) return None
-    val putCells = puts.flatMap { n =>
+    val putCells = puts.flatMap { e =>
       try {
-        val bytes = Files.readAllBytes(shardDir.resolve(n))
-        val buf = java.nio.ByteBuffer.wrap(bytes)
-        val keyLen = buf.getInt()
-        val key = new Array[Byte](keyLen); buf.get(key)
-        val body = new Array[Byte](buf.remaining()); buf.get(body)
-        Some((key, n.drop(n.lastIndexOf('.') + 1).toLong, body, Long.MaxValue))
+        val (key, body) = ShardFiles.read(e.path)
+        Some((key, e.version, body, Long.MaxValue))
       } catch { case _: java.io.IOException => None }
     }.sortWith { (a, b) =>
       val c = cmp(a._1, b._1)
@@ -441,8 +395,7 @@ object RegionSplit {
     // same seqNo rule as minorShard; both daughters inherit it (they
     // live in different directories, precedence is per-shard)
     val outSeq = if (puts.nonEmpty) shardMaxSeq + 1 else shardMaxSeq
-    val segIts = segInfo.map(i =>
-      CellSegment.entries(shardDir.resolve(i._1), needBody = true))
+    val segIts = segInfo.map(i => CellSegment.entries(i._1, needBody = true))
     val stage = Files.createTempDirectory(shardDir, "_splitstage")
     val (lowerMeta, upperMeta) =
       try {
@@ -469,36 +422,31 @@ object RegionSplit {
     }
     // upper-key delete markers ride with their cells (they carry the
     // length-prefixed true key, so membership is one small read each)
-    val upperMarkers = markers.filter { n =>
-      try {
-        val buf = java.nio.ByteBuffer.wrap(Files.readAllBytes(shardDir.resolve(n)))
-        val keyLen = buf.getInt()
-        val k = new Array[Byte](keyLen); buf.get(k)
-        cmp(k, m) >= 0
-      } catch { case _: java.io.IOException => false }
+    val upperMarkers = markers.map(_.path).filter { p =>
+      try cmp(ShardFiles.read(p)._1, m) >= 0
+      catch { case _: java.io.IOException => false }
     }
-    upperMarkers.foreach { n =>
-      Files.copy(shardDir.resolve(n), stage.resolve(n),
-        StandardCopyOption.REPLACE_EXISTING)
+    upperMarkers.foreach { p =>
+      Files.copy(p, stage.resolve(p.getFileName), StandardCopyOption.REPLACE_EXISTING)
     }
     // recovery manifest: everything the sweep may delete from the
     // parent (the fresh lower segment explicitly excluded — a
     // single-input identity merge can reuse an absorbed file's name)
-    val parents = (puts ++ segInfo.map(_._1) ++ upperMarkers)
-      .filterNot(_ == lowerMeta.fileName)
+    val parents = (puts.map(_.path) ++ segInfo.map(_._1) ++ upperMarkers)
+      .map(_.getFileName.toString).filterNot(_ == lowerMeta.fileName)
     val manifest = ("""{"target":"""" + mName + """","parents":[""" +
       parents.map(p => "\"" + p + "\"").mkString(",") + "]}").getBytes("UTF-8")
     Files.write(stage.resolve("_split.json"), manifest)
     probeHook(s"staged:$mName")
 
     // ---- phase 2: publish the satellite (one atomic rename) ----
-    Files.move(stage, shardDir.resolve(FileStore.satelliteNameOf(mName)),
+    Files.move(stage, shardDir.resolve(ShardFiles.satelliteNameOf(mName)),
       StandardCopyOption.ATOMIC_MOVE)
     probeHook(s"published:$mName")
 
     // ---- phases 3–5: sweep, record, promote (shared with recovery) ----
     finishFromSatellite(root, table, tableDir, shardDir,
-      shardDir.resolve(FileStore.satelliteNameOf(mName)), mName)
+      shardDir.resolve(ShardFiles.satelliteNameOf(mName)), mName)
     Some(mName)
   }
 }

@@ -83,23 +83,15 @@ object Snapshots {
             val src = tableDir.resolve(f)
             if (Files.exists(src)) Files.copy(src, tDir.resolve(f))
           }
-          val shards = Files.list(tableDir)
-          try shards.iterator().asScala.foreach { shard =>
-            if (Files.isDirectory(shard) &&
-              FileStore.Splits.startOf(shard.getFileName.toString).isDefined) {
-              val dst = Files.createDirectories(
-                tDir.resolve(shard.getFileName.toString))
-              val l = Files.list(shard)
-              try l.iterator().asScala.foreach { p =>
-                val n = p.getFileName.toString
-                if (!n.endsWith(".tmp") && !n.startsWith("_split") &&
-                  !Files.isDirectory(p)) {
-                  Files.createLink(dst.resolve(n), p)
-                  files += 1
-                }
-              } finally l.close()
+          // each region's own store files: satellites are finished
+          // above, debris is never store data
+          ShardFiles.regions(tableDir).foreach { shard =>
+            val dst = Files.createDirectories(tDir.resolve(shard.getFileName.toString))
+            ShardFiles.list(shard).own.foreach { e =>
+              Files.createLink(dst.resolve(e.name), e.path)
+              files += 1
             }
-          } finally shards.close()
+          }
           Files.write(tDir.resolve("_snapshot.json"),
             (s"""{"name":"$name","table":"$table","files":$files,""" +
               s""""createdMillis":$nowMillis}""").getBytes("UTF-8"))
@@ -155,17 +147,13 @@ object Snapshots {
       val src = srcDir.resolve(f)
       if (Files.exists(src)) Files.copy(src, staged.resolve(f))
     }
-    val shards = Files.list(srcDir)
-    try shards.iterator().asScala.foreach { shard =>
-      if (Files.isDirectory(shard)) {
-        val dst = Files.createDirectories(staged.resolve(shard.getFileName.toString))
-        val l = Files.list(shard)
-        try l.iterator().asScala.foreach { p =>
-          Files.createLink(dst.resolve(p.getFileName.toString), p)
-          files += 1
-        } finally l.close()
+    ShardFiles.regions(srcDir).foreach { shard =>
+      val dst = Files.createDirectories(staged.resolve(shard.getFileName.toString))
+      ShardFiles.list(shard).own.foreach { e =>
+        Files.createLink(dst.resolve(e.name), e.path)
+        files += 1
       }
-    } finally shards.close()
+    }
     (stagingRoot, staged, files)
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ingest.{BulkLoad, CellSegment, Compaction, FileStore, PushTableSink, Resplit}
+import graft.ingest.{BulkLoad, CellSegment, Compaction, FileStore, PushTableSink, Resplit, ShardFiles}
 import graft.sources.CellsSource
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,23 +18,13 @@ import scala.jdk.CollectionConverters._
 object StoreLifecycle {
 
   /** sorted shard-directory names of a table — layout inspection. */
-  private def segShardDirs(root: String, tableDirName: String): Seq[String] = {
-    val dir = Paths.get(root, tableDirName)
-    val shards = Files.list(dir)
-    try shards.iterator().asScala.filter(Files.isDirectory(_))
-      .map(_.getFileName.toString).toVector.sorted
-    finally shards.close()
-  }
+  private def segShardDirs(root: String, tableDirName: String): Seq[String] =
+    ShardFiles.regions(Paths.get(root, tableDirName)).map(_.getFileName.toString)
 
-  private def segFiles(root: String, tableDirName: String): Seq[String] = {
-    val dir = Paths.get(root, tableDirName)
-    val shards = Files.list(dir)
-    try shards.iterator().asScala.filter(Files.isDirectory(_)).flatMap { s =>
-      val l = Files.list(s)
-      try l.iterator().asScala.map(_.getFileName.toString).toVector finally l.close()
-    }.toVector
-    finally shards.close()
-  }
+  /** every entry name of every shard directory, whatever its kind. */
+  private def segFiles(root: String, tableDirName: String): Seq[String] =
+    ShardFiles.regions(Paths.get(root, tableDirName))
+      .flatMap(ShardFiles.list(_).paths.map(_.getFileName.toString))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Major compaction through the full store-file mix: versions 1-2
@@ -1863,15 +1853,7 @@ object StoreLifecycle {
         val trash = java.nio.file.Paths.get(root, "_overwrite_trash", "torn", "q249")
         Files.createDirectories(trash)
         Files.write(trash.resolve("old.bin"), Array.fill[Byte](64)(2))
-        val shard = {
-          val l = Files.list(java.nio.file.Paths.get(root, "q249"))
-          try {
-            val it = l.iterator()
-            var p: java.nio.file.Path = null
-            while (p == null && it.hasNext) { val c = it.next(); if (Files.isDirectory(c)) p = c }
-            p
-          } finally l.close()
-        }
+        val shard = ShardFiles.regions(Paths.get(root, "q249")).head
         Files.write(shard.resolve("put-torn.tmp"), Array.fill[Byte](32)(3))
         // fresh artifacts survive the default 24h age gate
         val r0 = s.sql(s"CALL $cat.vacuum()").collect()(0)
@@ -3160,8 +3142,7 @@ object StoreLifecycle {
         require(spec.maxVersions == 5 && spec.compactionThreshold == 0,
           "TBLPROPERTIES must commit with the table")
         Seq("-", "646f632d35").foreach { sh =>
-          val l = Files.list(Paths.get(root, "q262", sh))
-          val n = try l.iterator().asScala.size finally l.close()
+          val n = ShardFiles.list(Paths.get(root, "q262", sh)).paths.size
           require(n > 0, s"region $sh must hold cells (placement honors the CTAS layout)")
         }
         val n8 = Tables.documents(s, d).filter(col("doc_id") % 8 === 0).count()
@@ -3609,7 +3590,7 @@ object StoreLifecycle {
           col("version"), col("body").cast("string").as("body_md5"))
           .localCheckpoint() // evaluated once, compared twice (the q195 note)
         sameRows(after, res, "major compaction must not change the logical view")
-        require(!segFiles(root, "q222").exists(n => FileStore.tombstoneOf(n).isDefined),
+        require(!segFiles(root, "q222").exists(n => ShardFiles.tombstoneOf(n).isDefined),
           "no delete marker survives a major compaction")
         rePut() // marker purged -> the old version resurrects
         require(readTable.filter(col("version") === lit(probe * 8 + 1)).count() == 1,

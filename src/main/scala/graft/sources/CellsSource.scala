@@ -9,8 +9,8 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.ingest.ShardFiles
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 read connector over the [[graft.ingest.FileStore]]
   * cell layout — the versioned KV sink becomes a first-class Spark
@@ -309,17 +309,10 @@ object CellsShards {
                                endName: Option[String], isFirst: Boolean)
 
   def pruneListed(tableDir: Path, keys: CellsKeyPred): Seq[ListedShard] = {
-    if (!Files.isDirectory(tableDir)) return Seq.empty
-    val s = Files.list(tableDir)
-    val named =
-      try s.iterator().asScala.flatMap { p =>
-        if (!Files.isDirectory(p)) None
-        else {
-          val n = p.getFileName.toString
-          graft.ingest.FileStore.Splits.startOf(n).map(st => (n, st, p))
-        }
-      }.toVector.sortBy(_._1)
-      finally s.close()
+    val named = ShardFiles.regions(tableDir).map { p =>
+      val n = p.getFileName.toString
+      (n, graft.ingest.FileStore.Splits.startOf(n).get, p)
+    }
     named.zipWithIndex.collect {
       case ((n, st, p), i) if keys.shardRangeOk(n, st,
         if (i + 1 < named.size) Some(named(i + 1)._2) else None, i == 0) =>
@@ -1223,22 +1216,10 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
           .exists(_.maxRegionBytes > 0)
         val ok = !splitEligible && Files.isDirectory(dir) &&
           CellsShards.prune(dir, effKeys).forall { shard =>
-          var puts = 0
-          var segs = 0
-          val s = Files.list(shard)
-          try s.iterator().asScala.foreach { p =>
-            val n = p.getFileName.toString
-            if (n.startsWith("_split") || n.startsWith("_merge"))
-              puts += 1 // mid-protocol satellite: never sorted
-            else if (graft.ingest.CellSegment.isSegment(n)) segs += 1
-            else {
-              val dot = n.lastIndexOf('.')
-              if (dot > 0 && !n.endsWith(".tmp") && n.drop(dot + 1).toLongOption.isDefined)
-                puts += 1
-            }
-          } finally s.close()
-          puts == 0 && segs <= 1
-        }
+            // a mid-protocol satellite is never sorted
+            val l = ShardFiles.list(shard)
+            l.satellites.isEmpty && !l.own.exists(_.isPut) && l.own.count(_.isSegment) <= 1
+          }
         orderedState = if (ok) 1 else -1
       }
       orderedState == 1
@@ -1361,32 +1342,26 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
       if (Files.isDirectory(dir)) {
         CellsShards.prune(dir, keys)
           .foreach { shard =>
-            val mask = graft.ingest.FileStore.maskOf(shard)
-            def live(d: String, v: Long): Boolean =
-              changeFeed || !mask.masked(d, v) // the edit log counts everything
-            val noMasks = changeFeed || (mask.bound.isEmpty && mask.exact.isEmpty)
             // one covered listing (satellite subdirs of a mid-protocol
             // region split expanded in place — their cells may be the
             // only resident copy, and statistics must not UNDERestimate):
-            // per-cell puts, segments, and (feed) markers
+            // the delete mask, per-cell puts, segments, and (feed) markers
+            val covered = CellsReaders.listCovered(shard, None, "").files
+            val mask = ShardFiles.maskOf(covered)
+            def live(d: String, v: Long): Boolean =
+              changeFeed || !mask.masked(d, v) // the edit log counts everything
+            val noMasks = changeFeed || mask.isEmpty
             val puts = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
             val segs = scala.collection.mutable.ArrayBuffer.empty[Path]
-            CellsReaders.listCovered(shard, None, "").files.foreach { case (p, name) =>
-              val dot = name.lastIndexOf('.')
-              lazy val marker = graft.ingest.FileStore.tombstoneOf(name)
-                .orElse(graft.ingest.FileStore.exactTombstoneOf(name))
-              if (graft.ingest.CellSegment.isSegment(name)) segs += p
-              else if (changeFeed && marker.isDefined) {
+            covered.foreach { e =>
+              def inWindow = keys.fileOk(e.digest) && e.version >= lo && e.version <= hi
+              if (e.isSegment) segs += e.path
+              else if (e.isMarker) {
                 // markers are feed rows (op='delete'/'delete_version')
                 // — uncounted, the feed face would UNDERestimate
-                val (d, v) = marker.get
-                if (keys.fileOk(d) && v >= lo && v <= hi) { n += 1; b += Files.size(p) }
-              } else if (dot > 0 && !name.endsWith(".tmp") && marker.isEmpty &&
-                keys.fileOk(name.take(dot)))
-                name.drop(dot + 1).toLongOption.foreach { v =>
-                  val d = name.take(dot)
-                  if (v >= lo && v <= hi && live(d, v)) puts += ((d, v, Files.size(p)))
-                }
+                if (changeFeed && inWindow) { n += 1; b += Files.size(e.path) }
+              } else if (inWindow && live(e.digest, e.version))
+                puts += ((e.digest, e.version, Files.size(e.path)))
             }
 
             // stream a segment's live in-window index entries; None if
@@ -1669,9 +1644,9 @@ case class CellsMicroBatch(root: String, table: String, lo: Long, hi: Long,
           // the shard's only copy of its max version — skipping it would
           // dip the reported watermark (harmless for delivery, but the
           // expansion is one subdir listing and keeps the report exact)
-          CellsReaders.listCovered(shard, None, "").files.foreach { case (p, n) =>
-            val dot = n.lastIndexOf('.')
-            if (graft.ingest.CellSegment.isSegment(n)) {
+          CellsReaders.listCovered(shard, None, "").files.foreach { f =>
+            val p = f.path
+            if (f.isSegment) {
               // bulk segments advance the watermark too: trailer-only
               // read in the common case, index read under a point
               // predicate (both content-I/O-free). A segment the
@@ -1701,20 +1676,13 @@ case class CellsMicroBatch(root: String, table: String, lo: Long, hi: Long,
                 } catch { case _: java.io.IOException => Long.MinValue } // vanished mid-sweep
                 if (segMax > mx) mx = segMax
               }
-            } else if (dot > 0 && !n.endsWith(".tmp") && keys.fileOk(n.take(dot)))
-              n.drop(dot + 1).toLongOption.foreach { v =>
-                if (v >= lo && v <= hi && v > mx) mx = v
-              }
-            // delete markers (BOTH kinds) are feed rows on the
-            // change-feed face, so they advance the watermark like any
-            // other edit (a delete with no subsequent put must still
-            // get delivered)
-            if (changeFeed) {
-              graft.ingest.FileStore.tombstoneOf(n)
-                .orElse(graft.ingest.FileStore.exactTombstoneOf(n)).foreach { case (d, v) =>
-                  if (keys.fileOk(d) && v >= lo && v <= hi && v > mx) mx = v
-                }
-            }
+            } else if (keys.fileOk(f.digest) && f.version >= lo && f.version <= hi &&
+              f.version > mx && (f.isPut || changeFeed))
+              // delete markers (BOTH kinds) are feed rows on the
+              // change-feed face, so they advance the watermark like any
+              // other edit (a delete with no subsequent put must still
+              // get delivered)
+              mx = f.version
           }
         }
     }
@@ -1993,7 +1961,7 @@ object CellsReaders {
     * `bound = Some((loInclusive, hiExclusiveOpt))` forces content
     * reads; rows outside the planned range are someone else's. */
   private[sources] final case class Covered(
-      files: Vector[(Path, String)],
+      files: Vector[ShardFiles.Entry],
       bound: Option[(Array[Byte], Option[Array[Byte]])])
 
   private[sources] def listCovered(shardDir: Path, endName: Option[String],
@@ -2001,19 +1969,7 @@ object CellsReaders {
                                    firstShard: Boolean = false): Covered = {
     val myStart = graft.ingest.FileStore.Splits.startOf(shardDir.getFileName.toString)
     val end = endName.flatMap(graft.ingest.FileStore.Splits.startOf)
-    def expand(d: Path): Vector[(Path, String)] = {
-      if (!Files.isDirectory(d)) return Vector.empty
-      val s = Files.list(d)
-      val entries =
-        try s.iterator().asScala.map(p => (p, p.getFileName.toString)).toVector
-        finally s.close()
-      entries.flatMap { case (p, n) =>
-        if (n.endsWith(".tmp") || n == "_split.json" || n.startsWith("_splitstage"))
-          Vector.empty
-        else if (n.startsWith("_split-") || n.startsWith("_merge-")) expand(p)
-        else Vector((p, n))
-      }
-    }
+    def expand(d: Path): Vector[ShardFiles.Entry] = ShardFiles.list(d).covered
     val own = expand(shardDir) // own dir FIRST — see the ordering argument
     // LAYOUT-STALE discovery: when the split layout changed since this
     // partition was planned (one stamp-validated stat), region splits
@@ -2073,13 +2029,8 @@ object CellsReaders {
       val ms = myStart.get
       val myLo = if (firstShard) Array.emptyByteArray else ms
       val tableDir = shardDir.getParent
-      val s = Files.list(tableDir)
-      val named =
-        try s.iterator().asScala.flatMap { p =>
-          graft.ingest.FileStore.Splits.startOf(p.getFileName.toString)
-            .map(st => (p, st))
-        }.toVector.sortBy(_._1.getFileName.toString)
-        finally s.close()
+      val named = ShardFiles.regions(tableDir).map(p =>
+        (p, graft.ingest.FileStore.Splits.startOf(p.getFileName.toString).get))
       val others = named.zipWithIndex.flatMap { case ((p, st), i) =>
         if (p.getFileName.toString == shardDir.getFileName.toString) Vector.empty
         else {
@@ -2133,27 +2084,11 @@ object CellsReaders {
       // forward fallback applies the planned-range bound exactly
       if (cv.bound.isDefined) return None
       val covered = cv.files
-      val segs = covered.filter(e => graft.ingest.CellSegment.isSegment(e._2))
-      val puts = covered.exists { case (_, n) =>
-        val dot = n.lastIndexOf('.')
-        dot > 0 && !graft.ingest.CellSegment.isSegment(n) &&
-          graft.ingest.FileStore.tombstoneOf(n).isEmpty &&
-          graft.ingest.FileStore.exactTombstoneOf(n).isEmpty &&
-          n.drop(dot + 1).toLongOption.isDefined
-      }
-      if (puts || segs.size != 1) return None
-      val seg = segs.head._1
+      val segs = covered.filter(_.isSegment)
+      if (covered.exists(_.isPut) || segs.size != 1) return None
+      val seg = segs.head.path
       // masks from the same covered listing
-      var bound = Map.empty[String, Long]
-      val exact = scala.collection.mutable.HashSet.empty[(String, Long)]
-      covered.foreach { case (_, n) =>
-        graft.ingest.FileStore.tombstoneOf(n).foreach { case (d, v) =>
-          if (bound.getOrElse(d, Long.MinValue) < v) bound = bound.updated(d, v)
-        }
-        graft.ingest.FileStore.exactTombstoneOf(n).foreach(exact += _)
-      }
-      def masked(d: String, v: Long): Boolean =
-        bound.get(d).exists(_ >= v) || exact((d, v))
+      val mask = ShardFiles.maskOf(covered)
       val idx = graft.ingest.CellSegment.indexOf(seg)
       // read-time retention over the key's FULL live version list —
       // one O(index) metadata fold, only on retention-active tables
@@ -2162,7 +2097,7 @@ object CellsReaders {
         val byDigest = scala.collection.mutable.HashMap
           .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
         idx.foreach { e =>
-          if (keys.fileOk(e.digestHex) && !masked(e.digestHex, e.version))
+          if (keys.fileOk(e.digestHex) && !mask.masked(e.digestHex, e.version))
             byDigest.getOrElseUpdate(e.digestHex,
               scala.collection.mutable.ArrayBuffer.empty[Long]) += e.version
         }
@@ -2186,7 +2121,7 @@ object CellsReaders {
           while (i >= 0) {
             val e = idx(i); i -= 1
             if (e.version >= lo && e.version <= hi && keys.fileOk(e.digestHex) &&
-              !masked(e.digestHex, e.version) && admitted(e.digestHex, e.version) &&
+              !mask.masked(e.digestHex, e.version) && admitted(e.digestHex, e.version) &&
               !seen((e.digestHex, e.version))) {
               // the cap: exact shape stops at k; key-only shape stops
               // at the first key change once ≥ k rows are out
@@ -2358,22 +2293,19 @@ object CellsReaders {
       // `seen` is OWNED BY THE RESILIENT WRAPPER (shared across
       // rebuilds) — the exactly-once guarantee under a mid-scan
       // maintenance race rests on it surviving the re-listing
-      // delete-tombstone mask, built from the SAME directory listing
-      // the file prune pays — a masked cell is dropped at FILENAME
-      // level, before any content I/O. Two marker kinds (the HBase
-      // Delete type split): `.d` = digest → masked-THROUGH version
-      // (everything ≤ bound), `.dv` = one exactly-masked (digest,
-      // version). The streaming face passes maskDeletes=false: the
-      // change feed is a WAL-style PUT-edit log whose replayed batches
-      // must regenerate identical rows, so a later tombstone never
-      // rewrites history — deletes surface through the batch face (and
-      // compaction), the same split HBase makes between its WAL and
-      // its read path.
-      private val masks = scala.collection.mutable.HashMap.empty[String, Long]
-      private val exactMasks = scala.collection.mutable.HashSet.empty[(String, Long)]
+      // delete-tombstone mask, built from the SAME covered listing the
+      // file prune pays — a masked cell is dropped at FILENAME level,
+      // before any content I/O. Two marker kinds (the HBase Delete type
+      // split): `.d` = digest → masked-THROUGH version (everything ≤
+      // bound), `.dv` = one exactly-masked (digest, version). The
+      // streaming face passes maskDeletes=false: the change feed is a
+      // WAL-style PUT-edit log whose replayed batches must regenerate
+      // identical rows, so a later tombstone never rewrites history —
+      // deletes surface through the batch face (and compaction), the
+      // same split HBase makes between its WAL and its read path.
+      private lazy val mask: ShardFiles.ShardMask = ShardFiles.maskOf(entries)
       private def masked(digestHex: String, v: Long): Boolean =
-        maskDeletes &&
-          (masks.get(digestHex).exists(_ >= v) || exactMasks.contains((digestHex, v)))
+        maskDeletes && mask.masked(digestHex, v)
       // ONE covered listing per reader — every decision this reader
       // makes (delete masks, the put/marker row set, the segment set,
       // the sortedness gate, the retention fold) derives from THIS
@@ -2383,38 +2315,16 @@ object CellsReaders {
       // the partition's whole PLANNED range: satellites and daughters a
       // region split created ride along ([[CellsReaders.listCovered]]),
       // and any parent/daughter copy overlap dedups on the identity.
-      private val allNames: Vector[(Path, String)] = covered.files
-      // (path, version, kind: 0=cell, 1=bound marker, 2=exact marker) —
-      // markers enter the listing only on the change-feed face
-      // (emitOps), as op='delete' / op='delete_version' rows. Kept as a
-      // vector (not just an iterator) so the $latest winner sweep can
-      // re-walk it without a second directory listing; materialized
-      // before `masks` is read — the tombstone sweep completes first.
-      private val listed: Vector[(Path, Long, Int)] = {
-        allNames.flatMap { case (p, n) =>
-          val bound = graft.ingest.FileStore.tombstoneOf(n)
-          val exact = graft.ingest.FileStore.exactTombstoneOf(n)
-          if (maskDeletes) {
-            bound.foreach { case (d, v) =>
-              if (masks.getOrElse(d, Long.MinValue) < v) masks(d) = v
-            }
-            exact.foreach(exactMasks += _)
-          }
-          if (emitOps && (bound.isDefined || exact.isDefined)) {
-            val (d, v) = bound.getOrElse(exact.get)
-            val kind = if (bound.isDefined) 1 else 2
-            if (keys.fileOk(d) && v >= lo && v <= hi) Some((p, v, kind)) else None
-          } else {
-            val dot = n.lastIndexOf('.')
-            if (dot <= 0 || graft.ingest.CellSegment.isSegment(n)) None
-            else if (!keys.fileOk(n.take(dot))) None // point lookup: only the probed key's cells
-            else n.drop(dot + 1).toLongOption.collect {
-              case v if v >= lo && v <= hi => (p, v, 0) // filename prune — not opened
-            }
-          }
-        }
+      private val entries: Vector[ShardFiles.Entry] = covered.files
+      // the in-window put files, plus — only on the change-feed face
+      // (emitOps) — the markers, as op='delete' / op='delete_version'
+      // rows. Kept as a vector (not just an iterator) so the $latest
+      // winner sweep can re-walk it without a second directory listing.
+      private val listed: Vector[ShardFiles.Entry] = entries.filter { e =>
+        (e.isPut || (emitOps && e.isMarker)) &&
+          keys.fileOk(e.digest) && e.version >= lo && e.version <= hi // filename prune — not opened
       }
-      private val files: Iterator[(Path, Long, Int)] = listed.iterator
+      private val files: Iterator[ShardFiles.Entry] = listed.iterator
       // the shard's segments, shared by the segment read phase and the
       // $latest winner sweep (same single listing), NEWEST-FIRST
       // (trailer seqNo desc, then name): the dedup set keeps the
@@ -2423,31 +2333,16 @@ object CellsReaders {
       // (rowkey, version) (legal once an in-place UPDATE was
       // minor-compacted while a stale copy stayed in an unmerged
       // segment)
-      private lazy val segPaths: Vector[Path] = {
-        allNames
-          .filter(e => graft.ingest.CellSegment.isSegment(e._2))
-          .map { case (p, _) => (graft.ingest.CellSegment.readTrailer(p).seqNo, p) }
-          .sortBy { case (sq, p) => (-sq, p.getFileName.toString) }
-          .map(_._2)
-      }
+      private lazy val segPaths: Vector[Path] =
+        ShardFiles.newestFirst(ShardFiles.segmentsOf(entries))
 
       /** ≤1 segment and zero put backlog in THIS reader's snapshot —
         * the (rowkey, version) stream-order guarantee the pushed-TopN
         * cap rides (see [[CellsShardReader]]). Full-range put count —
         * the version window doesn't matter: any put file breaks the
         * single-sorted-run shape. */
-      override val layoutSorted: Boolean = {
-        var puts = 0
-        var segs = 0
-        allNames.foreach { case (_, n) =>
-          if (graft.ingest.CellSegment.isSegment(n)) segs += 1
-          else {
-            val dot = n.lastIndexOf('.')
-            if (dot > 0 && n.drop(dot + 1).toLongOption.isDefined) puts += 1
-          }
-        }
-        puts == 0 && segs <= 1
-      }
+      override val layoutSorted: Boolean =
+        !entries.exists(_.isPut) && entries.count(_.isSegment) <= 1
 
       // READ-TIME RETENTION fold ([[graft.ingest.Retention]]): per key
       // digest, the admitted version subset — newest-maxVersions live
@@ -2468,13 +2363,7 @@ object CellsReaders {
         def add(d: String, v: Long): Unit =
           if (keys.fileOk(d) && !masked(d, v))
             byDigest.getOrElseUpdate(d, scala.collection.mutable.ArrayBuffer.empty[Long]) += v
-        allNames.foreach { case (_, n) =>
-          val dot = n.lastIndexOf('.')
-          if (dot > 0 && !graft.ingest.CellSegment.isSegment(n) &&
-            graft.ingest.FileStore.tombstoneOf(n).isEmpty &&
-            graft.ingest.FileStore.exactTombstoneOf(n).isEmpty)
-            n.drop(dot + 1).toLongOption.foreach(add(n.take(dot), _))
-        }
+        entries.foreach(e => if (e.isPut) add(e.digest, e.version))
         segPaths.foreach { seg =>
           val skip = keys.digests.exists(ds =>
             !ds.exists(graft.ingest.CellSegment.mightContain(seg, _)))
@@ -2499,12 +2388,7 @@ object CellsReaders {
         val best = scala.collection.mutable.HashMap.empty[String, Long]
         def bump(d: String, v: Long): Unit =
           if (!suppressed(d, v) && best.getOrElse(d, Long.MinValue) < v) best(d) = v
-        listed.foreach { case (p, v, kind) =>
-          if (kind == 0) {
-            val n = p.getFileName.toString
-            bump(n.take(n.lastIndexOf('.')), v)
-          }
-        }
+        listed.foreach(e => if (e.isPut) bump(e.digest, e.version))
         segPaths.foreach { seg =>
           val t = graft.ingest.CellSegment.readTrailer(seg)
           if (t.entryCount > 0 && t.minVersion <= hi && t.maxVersion >= lo) {
@@ -2612,18 +2496,15 @@ object CellsReaders {
 
       override def next(): Boolean = {
         while (files.hasNext) {
-          val (p, version, kind) = files.next()
-          val n = p.getFileName.toString
-          val digestHex =
-            if (kind == 1) n.take(n.dropRight(2).lastIndexOf('.'))
-            else if (kind == 2) n.take(n.dropRight(3).lastIndexOf('.'))
-            else n.take(n.lastIndexOf('.'))
-          if (kind != 0) {
+          val e = files.next()
+          val (p, digestHex, version) = (e.path, e.digest, e.version)
+          if (e.isMarker) {
             // op='delete' / op='delete_version' feed row; markers are
             // never (digest, version)-deduped against puts — a put and
             // a delete at one cell identity are two distinct edits —
             // but each marker IS deduped against its own re-walk after
             // a resilience rebuild (kind-suffixed identity)
+            val kind = if (e.kind eq ShardFiles.Kind.BoundMarker) 1 else 2
             val markerId = (digestHex + (if (kind == 1) "#d" else "#dv"), version)
             if (seen.contains(markerId)) { /* emitted before a rebuild */ }
             else if (!readsContent) {
@@ -2633,9 +2514,7 @@ object CellsReaders {
             else {
               openedOne()
               // marker files carry the length-prefixed true key
-              val buf = java.nio.ByteBuffer.wrap(Files.readAllBytes(p))
-              val keyLen = buf.getInt()
-              val k = new Array[Byte](keyLen); buf.get(k)
+              val k = ShardFiles.read(p)._1
               if (keys.keyOk(k)) {
                 seen.add(markerId)
                 row = mkRow(k, version, null, markerKind = kind, src = p); return true
@@ -2661,26 +2540,13 @@ object CellsReaders {
             return true
           } else {
             openedOne()
-            val in = Files.newInputStream(p)
-            val cell =
-              try {
-                val lenBytes = in.readNBytes(4)
-                val keyLen = java.nio.ByteBuffer.wrap(lenBytes).getInt
-                val k = in.readNBytes(keyLen)
-                // range re-check on the PARSED key, before body I/O: a
-                // non-matching cell costs a key read, never a body read
-                if (!keys.keyOk(k)) None
-                else {
-                  val b = if (needBody) in.readAllBytes() else null // key-only: stop early
-                  Some((k, b))
-                }
-              } finally in.close()
-            cell match {
-              case Some((k, b)) =>
-                markEmitted(digestHex, version)
-                row = mkRow(k, version, b, src = p); return true
-              case None => // out of key range — skip to the next cell file
-            }
+            // range re-check on the PARSED key, before body I/O: a
+            // non-matching cell costs a key read, never a body read
+            val (k, b) = ShardFiles.readKey(p, k => needBody && keys.keyOk(k))
+            if (keys.keyOk(k)) {
+              markEmitted(digestHex, version)
+              row = mkRow(k, version, b, src = p); return true
+            } // else out of key range — skip to the next cell file
           }
         }
         if (segmentRows.hasNext) { row = segmentRows.next(); return true }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 /** `tbl$versions` — the STORE-FILE INVENTORY metadata face (the
   * Iceberg `files` / Delta `DESCRIBE HISTORY` analog for this store):
@@ -64,33 +63,11 @@ object CellsVersions {
     StructField("bytes", LongType, nullable = false),
     StructField("seq_no", LongType, nullable = true)))
 
-  /** THE inventory classifier — one definition shared by the reader,
-    * the statistics, and the version-window prune, so "what counts as
-    * an inventory row" can never drift between them (ADVICE r14: the
-    * stats used a separate re-implementation). None = not a store
-    * file (temp debris, table-level meta). */
-  def kindOf(name: String): Option[String] =
-    if (name.endsWith(".tmp")) None
-    else if (graft.ingest.CellSegment.isSegment(name)) Some("segment")
-    else if (graft.ingest.FileStore.tombstoneOf(name).isDefined) Some("marker_bound")
-    else if (graft.ingest.FileStore.exactTombstoneOf(name).isDefined) Some("marker_exact")
-    else {
-      val dot = name.lastIndexOf('.')
-      if (dot > 0 && name.drop(dot + 1).toLongOption.isDefined) Some("put") else None
-    }
-
-  /** the single version a put/marker filename pins (its whole
-    * [min_version, max_version] window); None for segments (window in
-    * the trailer) and non-inventory names. */
-  def versionOf(name: String): Option[Long] =
-    kindOf(name) match {
-      case Some("put") =>
-        val dot = name.lastIndexOf('.')
-        name.drop(dot + 1).toLongOption
-      case Some("marker_bound") => graft.ingest.FileStore.tombstoneOf(name).map(_._2)
-      case Some("marker_exact") => graft.ingest.FileStore.exactTombstoneOf(name).map(_._2)
-      case _ => None
-    }
+  /** the version window [lo, hi] admits an inventory row: a put or
+    * marker pins its filename version; a segment's window lives in its
+    * trailer, so it always passes. */
+  private[sources] def inWindow(e: graft.ingest.ShardFiles.Entry, lo: Long, hi: Long): Boolean =
+    e.isSegment || (e.version >= lo && e.version <= hi)
 
   /** shard DIRECTORIES actually listed by $versions readers — the
     * spec/gate proof that a shard predicate pruned the listing work
@@ -189,7 +166,7 @@ case class CellsVersionsScan(root: String, table: String,
     CellsVersionsReaderFactory(required.fieldNames, kinds)
 
   /** EXACT row stats from the same listings + classifier the scan
-    * pays ([[CellsVersions.kindOf]] — one definition, no drift):
+    * pays ([[graft.ingest.ShardFiles.kindOf]] — one definition, no drift):
     * inventory rows = store files, so `cells JOIN inventory` sizes the
     * inventory side as the (compaction-bounded) file count and earns a
     * broadcast. Stats honor the pushed shard/kind/window prunes
@@ -199,11 +176,8 @@ case class CellsVersionsScan(root: String, table: String,
     * ~120 B/row: 9 mostly-fixed columns + a file name. */
   @transient private lazy val fileCount: Long =
     shardDirs.map { shard =>
-      CellsReaders.listCovered(shard, None, "").files.count { case (_, n) =>
-        CellsVersions.kindOf(n).exists { k =>
-          kinds.forall(_.contains(k)) &&
-            CellsVersions.versionOf(n).forall(v => v >= vLo && v <= vHi)
-        }
+      CellsReaders.listCovered(shard, None, "").files.count { e =>
+        kinds.forall(_.contains(e.kind.label)) && CellsVersions.inWindow(e, vLo, vHi)
       }
     }.sum.toLong
 
@@ -242,39 +216,35 @@ case class CellsVersionsReaderFactory(cols: Array[String], kinds: Option[Set[Str
         // output is in this or the next listing) instead of aborting
         // the inventory scan. Satellite rows carry their subdir-
         // qualified file name, truthfully.
-        CellsReaders.listCovered(shard, None, "").files.iterator.flatMap { case (p, n) =>
-          CellsVersions.kindOf(n)
-            .filter(k => kinds.forall(_.contains(k)))
-            .filter(_ => CellsVersions.versionOf(n)
-              .forall(v => v >= part.lo && v <= part.hi))
-            .flatMap { kind =>
-              val rel =
-                if (p.getParent == shard) n else shard.relativize(p).toString
-              try Some(buildRow(p, rel, kind))
-              catch { case _: java.io.IOException => None }
-            }
-        }.toVector.iterator
+        CellsReaders.listCovered(shard, None, "").files.iterator
+          .filter(e => kinds.forall(_.contains(e.kind.label)) &&
+            CellsVersions.inWindow(e, part.lo, part.hi))
+          .flatMap { e =>
+            val rel =
+              if (e.path.getParent == shard) e.name else shard.relativize(e.path).toString
+            try Some(buildRow(e, rel))
+            catch { case _: java.io.IOException => None }
+          }.toVector.iterator
       }
 
-      private def buildRow(p: java.nio.file.Path, n: String, kind: String): InternalRow = {
-        lazy val trailer = graft.ingest.CellSegment.readTrailer(p)
-        lazy val fileV = CellsVersions.versionOf(n).getOrElse(0L)
+      private def buildRow(e: graft.ingest.ShardFiles.Entry, file: String): InternalRow = {
+        lazy val trailer = graft.ingest.CellSegment.readTrailer(e.path)
         val values: Array[Any] = cols.map {
           case "shard" => shardU8
-          case "kind" => UTF8String.fromString(kind)
-          case "file" => UTF8String.fromString(n)
+          case "kind" => UTF8String.fromString(e.kind.label)
+          case "file" => UTF8String.fromString(file)
           case "cells" =>
-            if (kind == "segment") trailer.entryCount.toLong
-            else if (kind == "put") 1L else 0L
+            if (e.isSegment) trailer.entryCount.toLong
+            else if (e.isPut) 1L else 0L
           case "distinct_keys" =>
-            if (kind == "segment") (trailer.distinctKeys.toLong: Any) else null
+            if (e.isSegment) (trailer.distinctKeys.toLong: Any) else null
           case "min_version" =>
-            if (kind == "segment") trailer.minVersion else fileV
+            if (e.isSegment) trailer.minVersion else e.version
           case "max_version" =>
-            if (kind == "segment") trailer.maxVersion else fileV
-          case "bytes" => if (needBytes) Files.size(p) else 0L
+            if (e.isSegment) trailer.maxVersion else e.version
+          case "bytes" => if (needBytes) Files.size(e.path) else 0L
           case "seq_no" =>
-            if (kind == "segment") (trailer.seqNo: Any) else null
+            if (e.isSegment) (trailer.seqNo: Any) else null
         }
         new GenericInternalRow(values): InternalRow
       }

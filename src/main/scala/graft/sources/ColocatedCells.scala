@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Region-aligned, SHUFFLE-FREE equi-join of two cell tables — the
   * storage-side analog of Spark's bucketed join, and the join shape an
@@ -64,16 +63,9 @@ object ColocatedCells {
     require(store.splitsOf(tableA).toJson == store.splitsOf(tableB).toJson,
       s"co-located join requires identical split layouts: $tableA vs $tableB")
 
-    def shardNames(t: String): Set[String] = {
-      val dir = Paths.get(root, t.replace(':', '~'))
-      if (!Files.isDirectory(dir)) Set.empty
-      else {
-        val s = Files.list(dir)
-        try s.iterator().asScala.filter(Files.isDirectory(_)).map(_.getFileName.toString)
-          .filter(n => graft.ingest.FileStore.Splits.startOf(n).isDefined).toSet
-        finally s.close()
-      }
-    }
+    def shardNames(t: String): Set[String] =
+      graft.ingest.ShardFiles.regions(Paths.get(root, t.replace(':', '~')))
+        .map(_.getFileName.toString).toSet
     // directory-level join pruning per join type: a region empty on a
     // REQUIRED side can contribute no row
     val (aShards, bShards) = (shardNames(tableA), shardNames(tableB))

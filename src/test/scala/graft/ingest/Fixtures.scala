@@ -10,4 +10,32 @@ object Fixtures {
   def baseRecord(declarationId: String, ms: Int): String = FixtureDumps.baseRecord(declarationId, ms)
   def dumpLines(db: String, coll: String, n: Int): Seq[String] = FixtureDumps.dumpLines(db, coll, n)
   def writeDumpFile(dir: JPath, db: String, coll: String, n: Int): Unit = FixtureDumps.writeDumpFile(dir, db, coll, n)
+
+  /** Every point face and `scanTable` agree with a scan's view
+    * `expected` of (rowkey, version, body) strings: each key's
+    * `getLatest` and `latestVersionsOf` name its newest cell, `exists`
+    * sees every cell, and `scanTable` returns exactly the view. */
+  def assertPointFacesAgree(store: FileStore, table: String,
+                            expected: Set[(String, Long, String)], ctx: String): Unit = {
+    import org.scalatest.Assertions._
+    def bytes(s: String): Array[Byte] = s.getBytes("UTF-8")
+    val latest = expected.groupBy(_._1).values.map(_.maxBy(_._2)).toSeq.sortBy(_._1)
+    val gotLatest = latest.count { case l @ (k, _, _) =>
+      store.getLatest(table, bytes(k)).map { case (v, b) => (k, v, new String(b, "UTF-8")) }
+        .contains(l)
+    }
+    assert(gotLatest == latest.size, s"getLatest $ctx: $gotLatest of ${latest.size}")
+    val gotVersions = store.latestVersionsOf(table, latest.map(l => bytes(l._1)))
+      .zip(latest).count { case (g, l) => g.contains(l._2) }
+    assert(gotVersions == latest.size, s"latestVersionsOf $ctx: $gotVersions of ${latest.size}")
+    val found = store.exists(table, expected.toSeq.map { case (k, v, b) =>
+      PushTableSink.CellPut(table, bytes(k), v, bytes(b))
+    }).count(identity)
+    assert(found == expected.size, s"exists $ctx: $found of ${expected.size}")
+    val scanned = store.scanTable(table).map { case (kh, v, b) =>
+      (new String(FileStore.unhex(kh), "UTF-8"), v, new String(b, "UTF-8"))
+    }
+    assert(scanned.size == expected.size && scanned.toSet == expected,
+      s"scanTable $ctx: ${scanned.toSet.intersect(expected).size} of ${expected.size}")
+  }
 }

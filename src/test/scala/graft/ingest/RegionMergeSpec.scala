@@ -85,8 +85,14 @@ class RegionMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
       try intercept[java.io.IOException](RegionSplit.mergeLeft(root, "t", "5a2d3035"))
       finally RegionSplit.probeHook = _ => ()
       assert(scanAll(root, "t") == expected, s"view diverged after crash at $crashAt")
+      // the point faces see it too: the right region lives in the left's
+      // satellite until the fold. (At `unbound` the layout already routes
+      // right keys left while the right directory still stands.)
+      if (crashAt == "parked")
+        Fixtures.assertPointFacesAgree(store, "t", expected, s"after crash at $crashAt")
       RegionSplit.completePending(root, "t")
       assert(scanAll(root, "t") == expected, s"view diverged after recovery from $crashAt")
+      Fixtures.assertPointFacesAgree(store, "t", expected, s"after recovery from $crashAt")
       assert(store.splitsOf("t").size == 1, s"boundary must be gone after recovery from $crashAt")
       assert(!Files.exists(Paths.get(root, "t", "5a2d3035")))
       val leftDir = Paths.get(root, "t", store.splitsOf("t").names.head)

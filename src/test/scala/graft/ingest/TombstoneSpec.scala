@@ -48,11 +48,11 @@ class TombstoneSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tombstone name parse round-trips and rejects non-markers") {
-    assert(FileStore.tombstoneOf("abc123.42.d").contains(("abc123", 42L)))
-    assert(FileStore.tombstoneOf("abc123.42").isEmpty)
-    assert(FileStore.tombstoneOf("abc123.x.d").isEmpty)
-    assert(FileStore.tombstoneOf(".42.d").isEmpty)
-    assert(FileStore.tombstoneOf("bulk-aa.seg").isEmpty)
+    assert(ShardFiles.tombstoneOf("abc123.42.d").contains(("abc123", 42L)))
+    assert(ShardFiles.tombstoneOf("abc123.42").isEmpty)
+    assert(ShardFiles.tombstoneOf("abc123.x.d").isEmpty)
+    assert(ShardFiles.tombstoneOf(".42.d").isEmpty)
+    assert(ShardFiles.tombstoneOf("bulk-aa.seg").isEmpty)
   }
 
   test("marker masks versions <= T across put files and bulk segments; > T and other keys unmasked") {
@@ -175,7 +175,7 @@ class TombstoneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val markers = Files.list(tDir).iterator().asScala.filter(Files.isDirectory(_)).flatMap { s =>
       val l = Files.list(s)
       try l.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => FileStore.tombstoneOf(n).isDefined).toVector
+        .filter(n => ShardFiles.tombstoneOf(n).isDefined).toVector
       finally l.close()
     }.toVector
     assert(markers.size == 1, "minor compaction must not drop delete markers")
@@ -287,9 +287,9 @@ class TombstoneSpec extends AnyFunSuite with BeforeAndAfterAll {
       Set(("ex", 1L), ("ex", 3L), ("seg", 1L), ("seg", 3L)),
       "exactly version 2 vanishes on both store-file kinds")
     // name parses: the two marker kinds never collide
-    assert(FileStore.exactTombstoneOf("abc.42.dv").contains(("abc", 42L)))
-    assert(FileStore.exactTombstoneOf("abc.42.d").isEmpty)
-    assert(FileStore.tombstoneOf("abc.42.dv").isEmpty)
+    assert(ShardFiles.exactTombstoneOf("abc.42.dv").contains(("abc", 42L)))
+    assert(ShardFiles.exactTombstoneOf("abc.42.d").isEmpty)
+    assert(ShardFiles.tombstoneOf("abc.42.dv").isEmpty)
     // F5: the exactly-deleted cell reads as absent; siblings exist
     val probes = Seq(1L, 2L, 3L).map(v => PushTableSink.CellPut("t", k("ex"), v, k("b")))
     assert(store.exists("t", probes) == Seq(true, false, true))

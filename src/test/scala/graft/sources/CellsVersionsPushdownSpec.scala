@@ -12,7 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * directory listings, kind predicates prune filenames AND trailer
   * reads, version bounds prune put/marker rows, projection prunes
   * trailer/size I/O — all advisory (filters stay residual), so the
-  * answers never change. One classifier ([[CellsVersions.kindOf]])
+  * answers never change. One classifier ([[graft.ingest.ShardFiles.kindOf]])
   * backs the reader and the exact statistics. */
 class CellsVersionsPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 

@@ -54,7 +54,7 @@ class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     (root, store)
   }
 
-  private def names(c: CellsReaders.Covered): Set[String] = c.files.map(_._2).toSet
+  private def names(c: CellsReaders.Covered): Set[String] = c.files.map(_.name).toSet
 
   test("(c)+(a) merge race: fp-matching reader escalates when plannedEnd left the layout / own dir vanished") {
     val (root, store) = seedThreeRegions()
@@ -75,7 +75,7 @@ class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // park the right region (the merge's second phase)
     Files.move(tableDir.resolve("44"),
-      tableDir.resolve("42").resolve(FileStore.mergeSatelliteNameOf("44")),
+      tableDir.resolve("42").resolve(graft.ingest.ShardFiles.mergeSatelliteNameOf("44")),
       StandardCopyOption.ATOMIC_MOVE)
 
     // RIGHT partition (dir "44", endName None): own dir is gone — must
