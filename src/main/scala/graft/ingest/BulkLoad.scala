@@ -3,8 +3,10 @@ package graft.ingest
 import graft.ingest.IngestPipeline.IngestedRow
 import graft.ingest.PushTableSink.TableSpec
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** HFile-style BULK-LOAD write path for the cell store — the idiomatic
   * heavy-ingest alternative to [[PushTableSink]]'s per-batch puts
@@ -15,22 +17,22 @@ import org.apache.spark.sql.functions._
   *
   * Plan shape — ONE shuffle, then embarrassingly-parallel file writes:
   *
-  *  1. hash-repartition on (tableName, shard name): the shard IS the
-  *     store's range unit (the HBase region model — the default 256
-  *     first-byte ranges are uniform because reference rowkeys open
-  *     with a CRC32 byte; custom [[FileStore.Splits]] go finer or
-  *     coarser), so this is a range shard assignment priced as a hash
-  *     exchange, with parallelism = the table's region count;
-  *  2. sortWithinPartitions (tableName, rowkey, version) — Spark's
+  *  1. number the load's regions (the store's range unit, the HBase
+  *     region model) globally — tables in name order, regions in key
+  *     order — and `repartitionById` so each write task owns a
+  *     contiguous range of whole regions: one writer per region, P =
+  *     min(regions, max(cores, ⌈key+body bytes / advisory partition
+  *     size⌉)) tasks, whatever `spark.sql.shuffle.partitions` says;
+  *  2. sortWithinPartitions (region, rowkey, version) — Spark's
   *     BinaryType sort is unsigned-lexicographic, the segment order;
-  *  3. mapPartitions: each task streams its sorted run and rolls one
-  *     [[CellSegment]] per (table, shard) — segments land in a staging
-  *     directory invisible to every read face;
-  *  4. driver flip-in: after the job commits, each staged segment is
-  *     ATOMIC_MOVE'd into `<table>/<shard>/` — per-file atomic, the
-  *     same visibility contract as HBase's bulk-load handoff (files
-  *     appear whole or not at all; the load as a whole is not one
-  *     transaction across regions, and neither is HBase's).
+  *  3. mapPartitions: each task creates its regions' live directories
+  *     and rolls one [[CellSegment]] per region into its own ATTEMPT's
+  *     staging directory, invisible to every read face;
+  *  4. driver flip-in: after the job commits, each segment a committed
+  *     attempt reported is ATOMIC_MOVE'd into `<table>/<shard>/` — per-
+  *     file atomic, the same visibility contract as HBase's bulk-load
+  *     handoff (files appear whole or not at all; the load as a whole
+  *     is not one transaction across regions, and neither is HBase's).
   *
   * Idempotence without an existence check: segment files are named by
   * their content hash and the shuffle+sort is deterministic, so a
@@ -43,16 +45,14 @@ import org.apache.spark.sql.functions._
   * exactly HBase's duplicate-KeyValue semantics across store files.
   *
   * Scale: no per-cell existence RPCs, no per-cell rename, no W1 batch
-  * round-trips — each task does one sequential write per owned shard.
-  * Segment size is capped ([[Config.maxSegmentBytes]]) so a hot shard
-  * rolls into multiple files instead of one unbounded one; version GC
-  * past `maxVersions` across files is compaction's job
-  * ([[Compaction]]), as in HBase.
+  * round-trips — a few tasks each do one sequential write per owned
+  * region. Segment size is capped ([[Config.maxSegmentBytes]]) so a hot
+  * region rolls into multiple files; version GC past `maxVersions`
+  * across files is compaction's job ([[Compaction]]), as in HBase.
   */
 object BulkLoad {
 
-  final case class Config(numPartitions: Int = 0, // 0 → spark.sql.shuffle.partitions
-                          maxSegmentBytes: Long = 1L << 30,
+  final case class Config(maxSegmentBytes: Long = 1L << 30,
                           tableSpec: TableSpec = TableSpec(),
                           // creation-time pre-split (HBase createTable(splitKeys)):
                           // N split points → N+1 key-range shards; recorded
@@ -85,20 +85,27 @@ object BulkLoad {
     val spark = cellsDf.sparkSession
     import spark.implicits._
 
-    // driver-side DDL over the distinct table names (W3) — bounded by
-    // the table count, not the data. Unlike the push sink's on-first-
-    // sight DDL, it must precede every task: the split layout is
+    // pre-pass, no exchange: key + body bytes per table. Its tables get
+    // their driver-side DDL (W3) before any task; the split layout is
     // resolved HERE too (creation-time splitPoints record a custom
-    // layout; existing tables keep whatever _splits.json says).
-    val tables = cellsDf.select(col("tableName")).distinct().as[String].collect().sorted.toSeq
+    // layout; existing tables keep whatever _splits.json says)
+    val bytesByTable: Map[String, Long] = cellsDf
+      .select(col("tableName"), (length(col("rowkey")) + length(col("body"))).cast("long"))
+      .as[(String, Long)]
+      .mapPartitions { it =>
+        val sums = scala.collection.mutable.HashMap.empty[String, Long]
+        it.foreach { case (t, b) => sums(t) = sums.getOrElse(t, 0L) + b }
+        sums.iterator
+      }
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    val tables = bytesByTable.keys.toSeq.sorted
+    if (tables.isEmpty) return Report(0L, Nil)
     val store = FileStore(rootDir)
     tables.foreach { t =>
       store.ensureTable(t, config.tableSpec)
       if (config.splitPoints.nonEmpty)
         store.ensureSplits(t, FileStore.Splits.ofSplitPoints(config.splitPoints))
     }
-    val splitsByTable: Map[String, FileStore.Splits] =
-      tables.map(t => t -> store.splitsOf(t)).toMap
     // the load's GENERATION: one seqNo per table, above every resident
     // segment's, so this load's bodies win any colliding identity on
     // the read faces (a task retry re-stamps the same number — the
@@ -107,97 +114,86 @@ object BulkLoad {
     val seqNoByTable: Map[String, Long] =
       tables.map(t => t -> (store.maxSeqNo(t) + 1L)).toMap
 
+    // global region numbers: (region, rowkey) order is segment order
+    val layouts = tables.map(t => t -> store.splitsOf(t))
+    val regionNames = layouts.flatMap { case (t, s) => s.names.map(t -> _) }.toVector
+    val placement = layouts.zip(layouts.scanLeft(0)(_ + _._2.size))
+      .map { case ((t, s), first) => t -> (first, s) }.toMap
+    val regions = regionNames.size
+    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val p = math.min(regions.toLong, math.max(spark.sparkContext.defaultParallelism.toLong,
+      (bytesByTable.values.sum + advisory - 1) / advisory)).toInt
+
     val staging = Files.createDirectories(
       Paths.get(rootDir, "_bulk_staging", java.util.UUID.randomUUID().toString))
     val stagingStr = staging.toString
-    val n = if (config.numPartitions > 0) config.numPartitions
-            else spark.sessionState.conf.numShufflePartitions
     val maxSeg = config.maxSegmentBytes
+    val regionOf = udf { (t: String, key: Array[Byte]) =>
+      val (from, splits) = placement(t)
+      from + splits.shardIdxOf(key)
+    }
 
-    // The shuffle key is the SHARD NAME, so a table's write
-    // parallelism is its region count — not a fixed 256 ceiling.
-    // Default layout: the name is a pure column expression (hex of the
-    // first key byte — whole-stage codegen, no UDF). Custom layouts:
-    // one narrow typed pass resolves each key against the broadcast
-    // split list (binary search over ≤ |regions| starts).
-    val base = cellsDf.select(col("tableName"), col("rowkey"), col("version"), col("body"))
-    val withShard =
-      if (splitsByTable.values.forall(_.isDefault))
-        base.withColumn("shard",
-          when(length(col("rowkey")) === 0, lit("00"))
-            .otherwise(lower(hex(substring(col("rowkey"), 1, 1)))))
-          .select(col("tableName"), col("shard"), col("rowkey"), col("version"), col("body"))
-      else {
-        val startsB = spark.sparkContext.broadcast(
-          splitsByTable.map { case (t, s) => t -> s.starts.toArray })
-        base.as[(String, Array[Byte], Long, Array[Byte])]
-          .mapPartitions { it =>
-            val splits = startsB.value.map { case (t, s) => t -> FileStore.Splits(s.toVector) }
-            it.map { case (t, k, v, b) => (t, splits(t).shardNameOf(k), k, v, b) }
-          }
-          .toDF("tableName", "shard", "rowkey", "version", "body")
-      }
-
-    val descs = withShard
-      .repartition(n, col("tableName"), col("shard"))
-      // (shard, rowkey) order ≡ rowkey order within a table (shard
-      // names are range starts in hex), and CellSegment.write needs
-      // each run sorted by (key, version)
-      .sortWithinPartitions(col("tableName"), col("shard"), col("rowkey"), col("version"))
-      .mapPartitions { it =>
-        val rows = it.buffered
-        val out = Seq.newBuilder[SegDesc]
-        while (rows.hasNext) {
-          val table = rows.head.getString(0)
-          val shard = rows.head.getString(1)
-          def sameRun: Boolean = rows.hasNext && {
-            val r = rows.head
-            r.getString(0) == table && r.getString(1) == shard
-          }
-          val dir = Paths.get(stagingStr, table.replace(':', '~'), shard)
-          // duplicate handling spans the WHOLE (table, shard) run, not
-          // one segment: a (rowkey, version) pair straddling a segment
-          // roll still collapses (same body) or fails loudly
-          // (conflicting body) instead of landing in two files
-          val run = dedupSorted(new Iterator[(Array[Byte], Long, Array[Byte])] {
-            override def hasNext: Boolean = sameRun
-            override def next(): (Array[Byte], Long, Array[Byte]) = {
-              val r = rows.next()
-              (r.getAs[Array[Byte]](2), r.getLong(3), r.getAs[Array[Byte]](4))
-            }
-          })
-          while (run.hasNext) {
-            // roll a new segment when the byte cap fills; ≥1 entry each
-            var bytes = 0L
-            val chunk = new Iterator[(Array[Byte], Long, Array[Byte])] {
-              override def hasNext: Boolean = run.hasNext && (bytes == 0L || bytes < maxSeg)
+    try { // staging goes with the load, failed or not ([[Vacuum]] after a dead driver)
+      val staged = cellsDf
+        .select(regionOf(col("tableName"), col("rowkey")).as("region"),
+          col("rowkey"), col("version"), col("body"))
+        // task i owns regions [i·R/P, (i+1)·R/P) (an exact quotient: region·P ≪ 2^53)
+        .repartitionById(p, (col("region").cast("long") * p / regions).cast("int"))
+        .sortWithinPartitions(col("region"), col("rowkey"), col("version"))
+        .mapPartitions { it =>
+          // a retried or speculative twin stages apart from the committed attempt
+          val attempt = TaskContext.get().taskAttemptId()
+          val rows = it.buffered
+          val out = Seq.newBuilder[(Long, SegDesc)]
+          while (rows.hasNext) {
+            val region = rows.head.getInt(0)
+            val (table, shard) = regionNames(region)
+            val tableDir = table.replace(':', '~')
+            // the region's one writer makes its live directory (empty, it
+            // shows nothing to any face), so the driver flip only renames
+            Files.createDirectories(Paths.get(rootDir, tableDir, shard))
+            val dir = Paths.get(stagingStr, attempt.toString, tableDir)
+            // duplicate handling spans the WHOLE region run: a (rowkey,
+            // version) pair straddling a segment roll still collapses (same
+            // body) or fails loudly (conflicting body), never lands twice
+            val run = dedupSorted(new Iterator[(Array[Byte], Long, Array[Byte])] {
+              override def hasNext: Boolean = rows.hasNext && rows.head.getInt(0) == region
               override def next(): (Array[Byte], Long, Array[Byte]) = {
-                val e = run.next()
-                bytes += 16L + e._1.length + e._3.length
-                e
+                val r = rows.next()
+                (r.getAs[Array[Byte]](1), r.getLong(2), r.getAs[Array[Byte]](3))
               }
+            })
+            while (run.hasNext) {
+              // roll a new segment when the byte cap fills; ≥1 entry each
+              var bytes = 0L
+              val chunk = new Iterator[(Array[Byte], Long, Array[Byte])] {
+                override def hasNext: Boolean = run.hasNext && (bytes == 0L || bytes < maxSeg)
+                override def next(): (Array[Byte], Long, Array[Byte]) = {
+                  val e = run.next()
+                  bytes += 16L + e._1.length + e._3.length
+                  e
+                }
+              }
+              val meta = CellSegment.write(dir, chunk, seqNoByTable(table))
+              out += ((attempt, SegDesc(table, shard, meta.fileName, meta.entryCount.toLong,
+                meta.minVersion, meta.maxVersion)))
             }
-            val meta = CellSegment.write(dir, chunk, seqNoByTable(table))
-            out += SegDesc(table, shard, meta.fileName, meta.entryCount.toLong,
-              meta.minVersion, meta.maxVersion)
           }
+          out.result().iterator
         }
-        out.result().iterator
-      }
-      .collect()
+        .collect()
 
-    // flip-in, driver-side, after every task committed: per-file atomic
-    // rename out of staging into the live shard directories
-    try {
-      descs.foreach { d =>
-        val destDir = Paths.get(rootDir, d.table.replace(':', '~'), d.shard)
-        Files.createDirectories(destDir)
-        Files.move(staging.resolve(d.table.replace(':', '~')).resolve(d.shard).resolve(d.file),
-          destDir.resolve(d.file), StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      // flip-in, driver-side, after every task committed: per-file atomic
+      // rename out of the committed attempt's staging into its region
+      staged.foreach { case (attempt, d) =>
+        val tableDir = d.table.replace(':', '~')
+        Files.move(staging.resolve(attempt.toString).resolve(tableDir).resolve(d.file),
+          Paths.get(rootDir, tableDir, d.shard, d.file),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       }
+      val descs = staged.map(_._2).toSeq
+      Report(descs.map(_.cells).sum, descs)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(staging.toFile)
-
-    Report(descs.map(_.cells).sum, descs.toSeq)
   }
 
   /** Collapse adjacent exact-duplicate cells of a SORTED run — cell

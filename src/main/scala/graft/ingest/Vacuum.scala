@@ -13,6 +13,8 @@ import scala.jdk.CollectionConverters._
   *  - `_overwrite_staging/<writeId>/` — a staged INSERT OVERWRITE
   *    generation whose job died before commit (the table itself is
   *    untouched; the staging dir is pure dead weight);
+  *  - `_bulk_staging/<load>/` — staged segments of a bulk load (major,
+  *    restore, resplit) whose driver died before its flip-in;
   *  - `_overwrite_trash/<writeId>/` — the displaced old generation if
   *    the commit crashed between its two renames (the swap itself
   *    completed — trash is a deletion that never finished);
@@ -90,9 +92,10 @@ object Vacuum {
     }
 
     staging = sweepGenerations(rootDir.resolve("_overwrite_staging"))
-    // a CTAS/RTAS whose job died before commit leaves its staged
-    // generation here — same lifecycle, same age gate
+    // a CTAS/RTAS or bulk load whose job died before commit leaves its
+    // staged generation here — same lifecycle, same age gate
     staging += sweepGenerations(rootDir.resolve("_ctas_staging"))
+    staging += sweepGenerations(rootDir.resolve("_bulk_staging"))
     trash = sweepGenerations(rootDir.resolve("_overwrite_trash"))
 
     // torn-task .tmp files: every table dir, every shard dir — one

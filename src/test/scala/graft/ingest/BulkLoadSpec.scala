@@ -3,6 +3,7 @@ package graft.ingest
 import graft.ingest.IngestPipeline.{IngestedRow, Status}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import graft.sources.CellsSource
 import org.apache.spark.sql.functions._
@@ -311,6 +312,137 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = BulkLoad.writeCells(dup.coalesce(1), root2, BulkLoad.Config(maxSegmentBytes = 1))
     assert(r.cells == 2L)
     assert(FileStore(root2).scanTable("db:c").size == 2)
+  }
+
+  test("a conflicting duplicate fails the load before any segment reaches a region directory") {
+    val sp = spark; import sp.implicits._
+    // good cells in many regions (so most write tasks succeed and stage
+    // their segments) plus one conflicting pair in the 'Z' region
+    val good = spreadKeys(200).map(key => ("db:c", k(key), 1L, k(s"body-$key")))
+    val conflict = Seq(("db:c", k("Z-dup"), 1L, k("body-A")), ("db:c", k("Z-dup"), 1L, k("body-B")))
+    val root = Files.createTempDirectory("bulk-conflict").toString
+    val ex = intercept[org.apache.spark.SparkException] {
+      BulkLoad.writeCells((good ++ conflict).toDF("tableName", "rowkey", "version", "body").repartition(4), root)
+    }
+    assert(ex.getMessage.contains("two bodies") ||
+      Option(ex.getCause).exists(_.getMessage.contains("two bodies")))
+    val tableDir = Paths.get(root, "db~c")
+    val segments = ShardFiles.regions(tableDir).flatMap(r => ShardFiles.segmentsOf(ShardFiles.list(r).own))
+    assert(segments.isEmpty, s"a failed load must flip nothing in: $segments")
+    assert(FileStore(root).scanTable("db:c").isEmpty)
+  }
+
+  // ---- region-packed exchange ----
+
+  /** numTasks of every stage `body` submits, in submission order; a
+    * marker job drains the listener bus before the listener goes. */
+  private def stageTasks(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.marker") != null)) marked.countDown()
+        else tasks.add(e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(marked.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker stage never seen")
+    } finally sc.removeSparkListener(listener)
+    tasks.asScala.toSeq
+  }
+
+  private def withSessionConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("the write stage runs one task per core, not one per shuffle partition") {
+    val sp = spark; import sp.implicits._
+    // two tables under the default layout: 512 regions, ~9 KB of cells
+    val cells = Seq("db:a", "db:b").flatMap(t => spreadKeys(200).map(key => (t, k(key), 1L, k(s"$t/$key"))))
+      .toDF("tableName", "rowkey", "version", "body")
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val root = Files.createTempDirectory("bulk-tasks").toString
+    val tasks = withSessionConf("spark.sql.shuffle.partitions", "200") {
+      stageTasks { assert(BulkLoad.writeCells(cells, root).cells == 400L) }
+    }
+    assert(tasks.last == 4 && tasks.forall(_ <= 4), s"P = defaultParallelism = 4 write tasks: $tasks")
+    assert(FileStore(root).scanTable("db:a").size == 200 && FileStore(root).scanTable("db:b").size == 200)
+
+    // a load past the advisory size gets one more task per advisory
+    // share, and never more tasks than regions
+    val root2 = Files.createTempDirectory("bulk-tasks-advisory").toString
+    val grown = withSessionConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1024") {
+      stageTasks(BulkLoad.writeCells(cells, root2))
+    }
+    val bytes = Seq("db:a", "db:b").flatMap(t => spreadKeys(200).map(key => key.length + s"$t/$key".length)).sum
+    assert(grown.last == (bytes + 1023) / 1024, s"⌈$bytes / 1024⌉ write tasks: $grown")
+    val root3 = Files.createTempDirectory("bulk-tasks-regions").toString
+    val capped = withSessionConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1024") {
+      stageTasks(BulkLoad.writeCells(cells.filter(col("tableName") === "db:a"), root3,
+        BulkLoad.Config(splitPoints = Seq(k("H"), k("P")))))
+    }
+    assert(capped.last == 3, s"three regions, three write tasks: $capped")
+    assert(FileStore(root3).scanTable("db:a").size == 200)
+  }
+
+  test("every region's segment is CellSegment.write of its sorted cells at seqNo 1") {
+    val sp = spark; import sp.implicits._
+    def golden(cells: Seq[(String, Array[Byte], Long, Array[Byte])], points: Seq[Array[Byte]]): Unit = {
+      val root = Files.createTempDirectory("bulk-golden").toString
+      val report = BulkLoad.writeCells(cells.toDF("tableName", "rowkey", "version", "body").repartition(3),
+        root, BulkLoad.Config(splitPoints = points))
+      val splits = if (points.isEmpty) FileStore.Splits.Default else FileStore.Splits.ofSplitPoints(points)
+      val expectRoot = Files.createTempDirectory("bulk-golden-expect")
+      val byRegion = cells.groupBy(c => (c._1, splits.shardNameOf(c._2)))
+      byRegion.foreach { case ((t, shard), cs) =>
+        val sorted = cs.sortWith { (a, b) =>
+          val c = java.util.Arrays.compareUnsigned(a._2, b._2)
+          if (c != 0) c < 0 else a._3 < b._3
+        }
+        val expectDir = expectRoot.resolve(t.replace(':', '~')).resolve(shard)
+        val meta = CellSegment.write(expectDir, sorted.iterator.map(c => (c._2, c._3, c._4)), seqNo = 1L)
+        val live = Paths.get(root, t.replace(':', '~'), shard)
+        val names = ShardFiles.segmentsOf(ShardFiles.list(live).own).map(_.getFileName.toString)
+        assert(names == Vector(meta.fileName), s"$t/$shard")
+        assert(java.util.Arrays.equals(Files.readAllBytes(live.resolve(meta.fileName)),
+          Files.readAllBytes(expectDir.resolve(meta.fileName))), s"$t/$shard bytes")
+      }
+      // no other region holds a segment, and the report names exactly these
+      cells.map(_._1).distinct.foreach { t =>
+        val populated = ShardFiles.regions(Paths.get(root, t.replace(':', '~')))
+          .filter(r => ShardFiles.segmentsOf(ShardFiles.list(r).own).nonEmpty)
+          .map(_.getFileName.toString).toSet
+        assert(populated == byRegion.keys.collect { case (`t`, s) => s }.toSet)
+      }
+      assert(report.segments.map(d => (d.table, d.shard)).sorted == byRegion.keys.toSeq.sorted)
+    }
+    // default layout: two tables, two versions per key
+    golden(Seq("db:a", "db:b").flatMap(t => spreadKeys(150).flatMap(key =>
+      Seq(1L, 2L).map(v => (t, k(key), v, k(s"$t/$key/$v"))))), Nil)
+    // 512-region custom layout, two tables: global region numbers past 256
+    val points = (0 until 256).map(b => Array(b.toByte, 0x80.toByte)) ++ (1 until 256).map(b => Array(b.toByte))
+    golden(Seq("db:a", "db:b").flatMap(t => (0 until 256).flatMap(b =>
+      Seq(Array(b.toByte, 0x10.toByte), Array(b.toByte, 0x90.toByte)).map(key =>
+        (t, key, b.toLong, k(s"$t/${FileStore.hex(key)}")))) ++ Seq((t, Array.emptyByteArray, 3L, k("empty")))),
+      points)
+  }
+
+  test("Vacuum sweeps aged _bulk_staging orphans and keeps a live load's") {
+    val root = Files.createTempDirectory("bulk-vac").toString
+    val orphan = Paths.get(root, "_bulk_staging", "deadbeef", "7", "db~c")
+    Files.createDirectories(orphan)
+    Files.write(orphan.resolve("bulk-0123456789abcdef.seg"), "staged".getBytes)
+    val live = Vacuum.sweep(root, olderThanMs = 3600L * 1000L)
+    assert(live.stagingSwept == 0 && Files.isDirectory(orphan), "a fresh staging dir is a running load's")
+    val rep = Vacuum.sweep(root, olderThanMs = 0L)
+    assert(rep.stagingSwept == 1)
+    assert(!Files.isDirectory(Paths.get(root, "_bulk_staging", "deadbeef")))
   }
 
   test("resplit migrates a table onto a new layout, carrying content and DDL") {
