@@ -237,6 +237,11 @@ object CellSegment {
     }
   }
 
+  /** Trailer I/O counter — the spec seam proving projection pruning
+    * on the `$versions` inventory face skips trailer reads when no
+    * trailer-derived column is named. */
+  private[graft] val trailerReads = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** Trailer read: 52 bytes off the file tail — the only I/O a
     * version-disjoint segment ever costs a scan.
     *
@@ -247,53 +252,63 @@ object CellSegment {
     * HBase HFile-version migration posture: majors rewrite every store
     * file into the current format). The magic check below fails
     * loudly — with the version named for GSE2 — and never misparses. */
-  /** Trailer I/O counter — the spec seam proving projection pruning
-    * on the `$versions` inventory face skips trailer reads when no
-    * trailer-derived column is named. */
-  private[graft] val trailerReads = new java.util.concurrent.atomic.AtomicLong(0)
+  def readTrailer(path: Path): Trailer = withChannel(path)(trailerOf(_, path))
 
-  def readTrailer(path: Path): Trailer = {
-    trailerReads.incrementAndGet()
+  private def withChannel[T](path: Path)(f: java.nio.channels.FileChannel => T): T = {
     val ch = java.nio.channels.FileChannel.open(path)
-    try {
-      val buf = java.nio.ByteBuffer.allocate(TrailerLen)
-      readFully(ch, buf, ch.size() - TrailerLen)
-      buf.flip()
-      val t = Trailer(buf.getLong, buf.getLong, buf.getInt,
-        distinctKeys = buf.getInt, seqNo = buf.getLong,
-        minVersion = buf.getLong, maxVersion = buf.getLong)
-      val magic = buf.getInt
-      // the 52-byte tail read ends at EOF, so `magic` IS the file's
-      // last word whatever the format — a GSE2 file is named, not
-      // misparsed
-      require(magic != MagicV2,
-        s"GSE2 cell segment (pre-stats format): rewrite via Compaction.major on the old binary before upgrading: $path")
-      require(magic == Magic,
-        s"not a GSE3 cell segment (bad magic 0x${magic.toHexString}): $path")
-      t
-    } finally ch.close()
+    try f(ch) finally ch.close()
   }
 
-  /** Full index read (48 B/entry) — still no data-region I/O. Cached
-    * per JVM in [[indexOf]]; segments are immutable so the cache never
-    * invalidates. */
+  /** The trailer off an open channel, so a caller reading more of the
+    * segment pays one open for both. */
+  private def trailerOf(ch: java.nio.channels.FileChannel, path: Path): Trailer = {
+    trailerReads.incrementAndGet()
+    val buf = java.nio.ByteBuffer.allocate(TrailerLen)
+    readFully(ch, buf, ch.size() - TrailerLen)
+    buf.flip()
+    val t = Trailer(buf.getLong, buf.getLong, buf.getInt,
+      distinctKeys = buf.getInt, seqNo = buf.getLong,
+      minVersion = buf.getLong, maxVersion = buf.getLong)
+    val magic = buf.getInt
+    // the 52-byte tail read ends at EOF, so `magic` IS the file's
+    // last word whatever the format — a GSE2 file is named, not
+    // misparsed
+    require(magic != MagicV2,
+      s"GSE2 cell segment (pre-stats format): rewrite via Compaction.major on the old binary before upgrading: $path")
+    require(magic == Magic,
+      s"not a GSE3 cell segment (bad magic 0x${magic.toHexString}): $path")
+    t
+  }
+
   /** Index I/O counter — the spec/gate seam proving the ROW bloom
     * short-circuits absent-key probes before any index load. */
   private[graft] val indexReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def readIndex(path: Path): Vector[IndexEntry] = {
+  /** Full index read (48 B/entry) — still no data-region I/O. Cached
+    * per JVM in [[indexOf]]; segments are immutable so the cache never
+    * invalidates. */
+  def readIndex(path: Path): Vector[IndexEntry] = loadIndex(path).entries
+
+  /** A segment's index entries plus the end of its data region (the
+    * trailer's `indexOffset`): entry i spans [offset(i), [[endOf]](i)),
+    * so a point read fetches it in one positional read. */
+  final class Index(val entries: Vector[IndexEntry], val dataEnd: Long) {
+    def endOf(i: Int): Long = if (i + 1 < entries.length) entries(i + 1).offset else dataEnd
+  }
+
+  /** Trailer and index through one open. */
+  private def loadIndex(path: Path): Index = {
     indexReads.incrementAndGet()
-    val t = readTrailer(path)
-    val ch = java.nio.channels.FileChannel.open(path)
-    try {
+    withChannel(path) { ch =>
+      val t = trailerOf(ch, path)
       val buf = java.nio.ByteBuffer.allocate(t.entryCount * IndexEntryLen)
       readFully(ch, buf, t.indexOffset)
       val a = buf.array()
-      Vector.tabulate(t.entryCount) { i =>
+      new Index(Vector.tabulate(t.entryCount) { i =>
         val at = i * IndexEntryLen
         IndexEntry(FileStore.hex(a, at, at + 32), buf.getLong(at + 32), buf.getLong(at + 40))
-      }
-    } finally ch.close()
+      }, t.indexOffset)
+    }
   }
 
   // Per-JVM segment-index cache — the HBase BlockCache analog for
@@ -322,10 +337,10 @@ object CellSegment {
   // accessOrder=true: iteration order is least-recently-USED first,
   // which is exactly the eviction order; all access synchronized (get
   // mutates the order links)
-  private val indexCache = new java.util.LinkedHashMap[String, Vector[IndexEntry]](64, 0.75f, true)
+  private val indexCache = new java.util.LinkedHashMap[String, Index](64, 0.75f, true)
   private var cacheBytes = 0L
 
-  private def weightOf(v: Vector[IndexEntry]): Long = EntryOverhead + IndexEntryWeight * v.length
+  private def weightOf(v: Index): Long = EntryOverhead + IndexEntryWeight * v.entries.length
 
   private def evictToCap(): Unit = {
     val it = indexCache.entrySet().iterator()
@@ -349,14 +364,18 @@ object CellSegment {
   private[graft] def indexCacheStats: (Int, Long) =
     indexCache.synchronized((indexCache.size, cacheBytes))
 
-  def indexOf(path: Path): Vector[IndexEntry] = {
+  def indexOf(path: Path): Vector[IndexEntry] = indexWithEnd(path).entries
+
+  /** [[indexOf]] with the data-region end, for point reads by entry
+    * number ([[entryAt]]). */
+  def indexWithEnd(path: Path): Index = {
     val key = path.toAbsolutePath.toString
     val hit = indexCache.synchronized(indexCache.get(key))
     if (hit != null) hit
     else {
       // load OUTSIDE the lock: two racing loads of one segment waste a
       // read but never serialize unrelated loads behind segment I/O
-      val v = readIndex(path)
+      val v = loadIndex(path)
       indexCache.synchronized {
         if (!indexCache.containsKey(key)) {
           indexCache.put(key, v)
@@ -392,17 +411,15 @@ object CellSegment {
     val hit = bloomCache.synchronized(bloomCache.get(key))
     if (hit != null) hit
     else {
-      val t = readTrailer(path)
-      val ch = java.nio.channels.FileChannel.open(path)
-      val b =
-        try {
-          val head = java.nio.ByteBuffer.allocate(8)
-          readFully(ch, head, t.bloomOffset); head.flip()
-          val bits = head.getLong
-          val words = java.nio.ByteBuffer.allocate((bits / 8).toInt)
-          readFully(ch, words, t.bloomOffset + 8); words.flip()
-          Bloom(Array.fill((bits / 64).toInt)(words.getLong))
-        } finally ch.close()
+      val b = withChannel(path) { ch =>
+        val t = trailerOf(ch, path)
+        val head = java.nio.ByteBuffer.allocate(8)
+        readFully(ch, head, t.bloomOffset); head.flip()
+        val bits = head.getLong
+        val words = java.nio.ByteBuffer.allocate((bits / 8).toInt)
+        readFully(ch, words, t.bloomOffset + 8); words.flip()
+        Bloom(Array.fill((bits / 64).toInt)(words.getLong))
+      }
       bloomCache.synchronized {
         if (!bloomCache.containsKey(key)) {
           bloomCache.put(key, b)
@@ -458,27 +475,26 @@ object CellSegment {
     }
   }
 
-  /** Point read of one entry by its index offset — the segment-side
-    * get-by-key path (open, one seek, one entry). */
-  def entryAt(path: Path, offset: Long, needBody: Boolean): (Array[Byte], Long, Array[Byte]) = {
-    val ch = java.nio.channels.FileChannel.open(path)
-    try {
-      val lenBuf = java.nio.ByteBuffer.allocate(4)
-      readFully(ch, lenBuf, offset); lenBuf.flip()
-      val keyLen = lenBuf.getInt
-      val head = java.nio.ByteBuffer.allocate(keyLen + 12)
-      readFully(ch, head, offset + 4); head.flip()
-      val key = new Array[Byte](keyLen); head.get(key)
-      val version = head.getLong
-      val bodyLen = head.getInt
-      val body =
-        if (!needBody) null
-        else {
-          val b = java.nio.ByteBuffer.allocate(bodyLen)
-          readFully(ch, b, offset + 4 + keyLen + 12)
-          b.array()
-        }
-      (key, version, body)
-    } finally ch.close()
+  /** Point read of one entry spanning [offset, end) — the segment-side
+    * get-by-key path: one open and one positional read for key, version
+    * and body. `end` is the next entry's offset, or the data-region end
+    * for the last ([[Index.endOf]]). `needBody = false` still reads the
+    * body's bytes (they ride in the same read) but returns null. */
+  def entryAt(path: Path, offset: Long, end: Long,
+              needBody: Boolean): (Array[Byte], Long, Array[Byte]) = {
+    val buf = java.nio.ByteBuffer.allocate(Math.toIntExact(end - offset))
+    withChannel(path)(readFully(_, buf, offset))
+    buf.flip()
+    val key = new Array[Byte](buf.getInt); buf.get(key)
+    val version = buf.getLong
+    val bodyLen = buf.getInt
+    require(buf.remaining == bodyLen,
+      s"cell segment entry at $offset does not end at $end: $path")
+    val body = if (needBody) { val b = new Array[Byte](bodyLen); buf.get(b); b } else null
+    (key, version, body)
   }
+
+  /** [[entryAt]] of entry `i` of `index`. */
+  def entryAt(path: Path, index: Index, i: Int, needBody: Boolean): (Array[Byte], Long, Array[Byte]) =
+    entryAt(path, index.entries(i).offset, index.endOf(i), needBody)
 }

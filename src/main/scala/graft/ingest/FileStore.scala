@@ -166,12 +166,15 @@ object FileStore {
     * same-millisecond replace races) and every [[FileStore]] instance
     * in the JVM sees the new layout at its next placement decision for
     * the price of one `stat`. Absent file = the default 256 first-byte
-    * layout (not cached — a first split must become visible). */
+    * layout (not cached — a first split must become visible), answered
+    * by one `length` stat without an exception: the file is written by
+    * atomic rename and is never empty, so length 0 means absent. */
   private val layoutCache = new java.util.concurrent.ConcurrentHashMap[
     String, (java.nio.file.attribute.FileTime, Long, Splits)]()
 
   def splitsAt(tableDir: Path): Splits = {
     val p = tableDir.resolve("_splits.json")
+    if (p.toFile.length() == 0L) return Splits.Default
     val attrs =
       try Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
       catch { case _: java.io.IOException => return Splits.Default }
@@ -239,6 +242,12 @@ object FileStore {
         starts(i).length == 1 && starts(i)(0) == i.toByte)
 
     def toJson: String = names.mkString("""{"starts":["""", "\",\"", "\"]}")
+
+    /** Content fingerprint: the first 8 bytes of the SHA-256 of
+      * [[toJson]], in hex. Computed once per layout instance, which
+      * [[splitsAt]]'s cache shares across every reader of a table. */
+    lazy val fingerprint: String =
+      hex(java.security.MessageDigest.getInstance("SHA-256").digest(toJson.getBytes("UTF-8")), 0, 8)
   }
 
   object Splits {
@@ -399,7 +408,7 @@ final case class FileStore(rootDir: String) extends Store {
       l.own.foreach(e => if (Files.deleteIfExists(e.path)) removed += 1)
       // a mid-protocol split/merge satellite DIRECTORY: its content is
       // table data too — truncate takes it whole, with any staging
-      (l.satellites ++ l.debris).foreach { p =>
+      (l.satellites ++ l.mergeLinks ++ l.debris).foreach { p =>
         if (org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)) removed += 1
       }
     }
@@ -553,18 +562,20 @@ final case class FileStore(rootDir: String) extends Store {
     * on a 4.8k-key bare DELETE against a 38k-cell shard at sf10. */
   def latestVersionsOf(tableName: String, rowkeys: Seq[Array[Byte]]): Seq[Option[Long]] =
     FileStore.Locks.read(tableDir(tableName)) {
-    val splits = splitsOf(tableName)
-    val byShard = rowkeys.zipWithIndex.groupBy { case (k, _) => splits.shardNameOf(k) }
+    val tdir = tableDir(tableName)
+    val splits = FileStore.splitsAt(tdir)
+    val byShard = rowkeys.zipWithIndex.groupBy { case (k, _) => splits.shardIdxOf(k) }
     val out = new Array[Option[Long]](rowkeys.size)
-    byShard.foreach { case (shardName, keyed) =>
+    byShard.foreach { case (shardIdx, keyed) =>
       val wanted: Map[String, Seq[Int]] =
         keyed.groupBy { case (k, _) => keyDigest(k) }.map { case (d, ks) => d -> ks.map(_._2) }
       val best = scala.collection.mutable.HashMap.empty[String, Long]
       def bump(d: String, v: Long): Unit =
         if (wanted.contains(d) && best.getOrElse(d, Long.MinValue) < v) best(d) = v
-      // own entries plus in-directory satellites: a mid-split daughter
-      // or a parked merge holds keys this region serves
-      val entries = ShardFiles.list(tableDir(tableName).resolve(shardName)).covered
+      // own entries plus in-directory satellites (a mid-split daughter
+      // or a parked merge holds keys this region serves) and the
+      // split/merge windows' outside files
+      val entries = ShardFiles.pointEntries(tdir, splits, shardIdx)
       entries.foreach(e => if (e.isPut) bump(e.digest, e.version))
       ShardFiles.segmentsOf(entries).foreach { seg =>
         if (wanted.keysIterator.exists(CellSegment.mightContain(seg, _)))
@@ -603,19 +614,15 @@ final case class FileStore(rootDir: String) extends Store {
     // in-directory satellites; segments are immutable, and a put landing
     // mid-batch is invisible to a snapshot check anyway — so a 10k-cell
     // probe batch pays one listing per touched shard, not one per cell.
-    // Segments, satellite puts, the delete mask and the retention
-    // version lists all derive from it.
-    final class Listed(l: ShardFiles.Listing) {
-      val entries: Vector[ShardFiles.Entry] = l.covered
+    // Put hits, segments, the delete mask and the retention version
+    // lists all derive from it.
+    final class Listed(val entries: Vector[ShardFiles.Entry]) {
       val segments: Vector[Path] = ShardFiles.segmentsOf(entries)
-      // the per-cell `Files.exists` probe sees own-directory puts only
-      lazy val satellitePuts: Set[(String, Long)] =
-        entries.iterator.drop(l.own.size).filter(_.isPut).map(e => (e.digest, e.version)).toSet
+      lazy val puts: Set[(String, Long)] =
+        entries.iterator.filter(_.isPut).map(e => (e.digest, e.version)).toSet
       lazy val mask: ShardFiles.ShardMask = ShardFiles.maskOf(entries)
     }
     val listed = scala.collection.mutable.HashMap.empty[Path, Listed]
-    def listedOf(shardDir: Path): Listed =
-      listed.getOrElseUpdate(shardDir, new Listed(ShardFiles.list(shardDir)))
     // READ-TIME RETENTION (the HBase existsAll contract — the probe
     // runs the same masked read path as a Get): a cell hidden by the
     // version cap or TTL reads as ABSENT, so an ingest replay re-puts
@@ -625,9 +632,8 @@ final case class FileStore(rootDir: String) extends Store {
     // the ingest DDL leaves retention unbounded).
     val policies = scala.collection.mutable.HashMap.empty[String, Option[Retention.Policy]]
     val verMemo = scala.collection.mutable.HashMap.empty[(Path, String), Seq[Long]]
-    def liveVersionsOf(shardDir: Path, digest: String): Seq[Long] =
+    def liveVersionsOf(shardDir: Path, ls: Listed, digest: String): Seq[Long] =
       verMemo.getOrElseUpdate((shardDir, digest), {
-        val ls = listedOf(shardDir)
         val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
         ls.entries.foreach(e => if (e.isPut && e.digest == digest) buf += e.version)
         ls.segments.foreach { seg =>
@@ -644,24 +650,24 @@ final case class FileStore(rootDir: String) extends Store {
         val td = tableDir(c.tableName)
         (td, FileStore.splitsAt(td))
       })
-      val shardDir = tdir.resolve(splits.shardNameOf(c.rowkey))
+      val shardIdx = splits.shardIdxOf(c.rowkey)
+      val shardDir = tdir.resolve(splits.names(shardIdx))
       val d = keyDigest(c.rowkey)
       def probe(): Boolean = {
-        val ls = listedOf(shardDir)
-        val raw = Files.exists(shardDir.resolve(ShardFiles.putName(d, c.version))) ||
+        val ls = listed.getOrElseUpdate(shardDir,
+          new Listed(ShardFiles.pointEntries(tdir, splits, shardIdx)))
+        val raw = ls.puts((d, c.version)) ||
           ls.segments.exists { seg =>
             // ROW bloom first: an absent key — the common ingest probe —
             // answers off ~1.25 B/key with no index load at all
             CellSegment.mightContain(seg, d) &&
               CellSegment.indexOf(seg).exists(e => e.version == c.version && e.digestHex == d)
-          } || ls.satellitePuts((d, c.version))
+          }
         // the mask is consulted only for raw hits (an absent cell can't
-        // be masked INTO existence); a raw hit is live unless masked, so
-        // it ranks among the key's live versions even if it landed after
-        // the batch's listing
+        // be masked INTO existence)
         raw && !ls.mask.masked(d, c.version) &&
           policies.getOrElseUpdate(c.tableName, Retention.of(specOf(c.tableName), nowMillis))
-            .forall(_.admits(c.version, liveVersionsOf(shardDir, d) :+ c.version))
+            .forall(_.admits(c.version, liveVersionsOf(shardDir, ls, d)))
       }
       // VANISH RESILIENCE (the connector readers' posture): automatic
       // maintenance (flush / tier merge / region split) deletes
@@ -713,34 +719,45 @@ final case class FileStore(rootDir: String) extends Store {
     * retry, as before. */
   def getLatest(tableName: String, rowkey: Array[Byte]): Option[(Long, Array[Byte])] = {
     val d = keyDigest(rowkey)
+    val tdir = tableDir(tableName)
     var attempts = 0
     while (true) {
       try {
-        return FileStore.Locks.read(tableDir(tableName)) {
-          val shardDir = tableDir(tableName).resolve(splitsOf(tableName).shardNameOf(rowkey))
-          FileStore.shardLockFor(shardDir).synchronized {
+        return FileStore.Locks.read(tdir) {
+          val splits = FileStore.splitsAt(tdir)
+          val shardIdx = splits.shardIdxOf(rowkey)
+          FileStore.shardLockFor(tdir.resolve(splits.names(shardIdx))).synchronized {
           // ONE listing — own entries plus in-directory satellites (a
           // mid-split daughter, a parked merge): the delete mask, the put
           // candidates and the segments all come from it
-          val entries = ShardFiles.list(shardDir).covered
+          val entries = ShardFiles.pointEntries(tdir, splits, shardIdx)
           val mask = ShardFiles.maskOf(entries)
-          // candidates: version → best source (put beats segment, then
-          // higher seqNo); values: Left(putPath) | Right((seg, offset, seqNo))
+          // candidates: version → best source, Left(putPath) or
+          // Right((seg, index, entry number)). A put file beats any
+          // segment; among segments the higher trailer seqNo wins, and a
+          // trailer is read only when a second segment offers the same
+          // version — a seqNo decides nothing else here
           val cand = scala.collection.mutable.HashMap
-            .empty[Long, Either[Path, (Path, Long, Long)]]
+            .empty[Long, Either[Path, (Path, CellSegment.Index, Int)]]
           entries.foreach { e =>
             if (e.isPut && e.digest == d && !cand.contains(e.version)) cand(e.version) = Left(e.path)
           }
+          val seqNos = scala.collection.mutable.HashMap.empty[Path, Long]
+          def seqNo(seg: Path): Long =
+            seqNos.getOrElseUpdate(seg, CellSegment.readTrailer(seg).seqNo)
           ShardFiles.segmentsOf(entries).foreach { seg =>
             if (CellSegment.mightContain(seg, d)) {
-              lazy val seq = CellSegment.readTrailer(seg).seqNo
-              CellSegment.indexOf(seg).foreach { e =>
+              val index = CellSegment.indexWithEnd(seg)
+              var i = 0
+              while (i < index.entries.length) {
+                val e = index.entries(i)
                 if (e.digestHex == d)
                   cand.get(e.version) match {
                     case Some(Left(_)) => () // a put file always wins its coordinate
-                    case Some(Right((_, _, s0))) if s0 >= seq => ()
-                    case _ => cand(e.version) = Right((seg, e.offset, seq))
+                    case Some(Right((s0, _, _))) if seqNo(s0) >= seqNo(seg) => ()
+                    case _ => cand(e.version) = Right((seg, index, i))
                   }
+                i += 1
               }
             }
           }
@@ -752,8 +769,8 @@ final case class FileStore(rootDir: String) extends Store {
           val v = admitted.max
           val (key, body) = cand(v) match {
             case Left(p) => ShardFiles.read(p)
-            case Right((seg, off, _)) =>
-              val (k, _, b) = CellSegment.entryAt(seg, off, needBody = true)
+            case Right((seg, index, i)) =>
+              val (k, _, b) = CellSegment.entryAt(seg, index, i, needBody = true)
               (k, b)
           }
           // digest-collision honesty: the filename/index digest routed

@@ -200,12 +200,18 @@ object RegionSplit {
     * Protocol (write lock held — writers and other maintenance
     * excluded; readers never lock):
     *
+    *  0. '''link''' — write the merge link `left/_merging-<rightStart>`
+    *     ([[ShardFiles.mergeLinkNameOf]]): from here until the fold, a
+    *     point read routed to the left region also lists the right
+    *     directory while it still stands ([[ShardFiles.pointEntries]]).
+    *     Scans ignore the link.
     *  1. '''unbind''' — remove the boundary from `_splits.json` FIRST:
     *     new writes route the right range to the left region, and any
     *     reader planned under the old layout sees the fingerprint
     *     change and discovers the parked content below. (Both regions'
     *     directories still exist at this instant, each serving its own
-    *     files — exactly-once by disjointness.)
+    *     files — exactly-once by disjointness; point reads of the right
+    *     range, now routed left, follow the link.)
     *  2. '''park''' — ONE atomic rename moves the right region's whole
     *     directory to the left's MERGE SATELLITE
     *     `left/_merge-<rightStart>/`: ownership flips to the left
@@ -218,11 +224,12 @@ object RegionSplit {
     *  3. '''fold''' — move each parked file into the left directory
     *     proper (atomic renames; keys are range-disjoint so nothing
     *     collides except content-identical segment names) and drop the
-    *     empty satellite.
+    *     empty satellite, then the link.
     *
     * Crash recovery ([[completePending]]): an unfolded `_merge-*`
     * satellite folds idempotently; a boundary removed with the right
-    * directory still standing (crash between 1 and 2) parks + folds it.
+    * directory still standing (crash between 1 and 2) parks + folds it;
+    * every merge link goes (no merge is mid-protocol once recovery ran).
     * At 100 TB a merge is O(store files of one region) renames — no
     * data bytes move. */
   def mergeLeft(root: String, table: String, rightStart: String): Boolean = {
@@ -236,6 +243,8 @@ object RegionSplit {
       val leftDir = tableDir.resolve(layout.names(i - 1))
       val rightDir = tableDir.resolve(rightStart)
       Files.createDirectories(leftDir)
+      val link = leftDir.resolve(ShardFiles.mergeLinkNameOf(rightStart))
+      if (!Files.exists(link)) Files.createFile(link)
       probeHook(s"unbinding:$rightStart")
       FileStore(root).recordBoundaryRemoval(table, rightStart)
       probeHook(s"unbound:$rightStart")
@@ -244,6 +253,7 @@ object RegionSplit {
           StandardCopyOption.ATOMIC_MOVE)
       probeHook(s"parked:$rightStart")
       foldMergeSatellite(leftDir, rightStart)
+      Files.deleteIfExists(link)
       probeHook(s"folded:$rightStart")
       mergesDone.incrementAndGet()
       true
@@ -310,6 +320,8 @@ object RegionSplit {
         if (p.getFileName.toString.startsWith("_splitstage"))
           org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
       }
+      // no merge is mid-protocol once the passes above ran
+      l.mergeLinks.foreach(Files.deleteIfExists(_))
       l.satellites.foreach { sat =>
         val n = sat.getFileName.toString
         ShardFiles.mergeTargetOf(n) match {

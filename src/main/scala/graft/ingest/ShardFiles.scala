@@ -18,6 +18,9 @@ import scala.jdk.CollectionConverters._
   *  - '''satellite''' `_split-<hex>` / `_merge-<hex>`: a directory in the
   *    same format holding a mid-protocol region's store files
   *    ([[RegionSplit]]), named by that region's start;
+  *  - '''merge link''' `_merging-<hex>`: an empty file naming a right
+  *    region that a mid-protocol merge is folding into this one
+  *    ([[RegionSplit.mergeLeft]]);
   *  - '''debris''': temp files `*.tmp`, a split's `_split.json` manifest,
   *    `_splitstage*` staging, and any name that parses as none of the
   *    above. Debris is never store data.
@@ -37,6 +40,7 @@ object ShardFiles {
     case object ExactMarker extends Kind("marker_exact")
     case object Segment extends Kind("segment")
     case object Satellite extends Kind("satellite")
+    case object MergeLink extends Kind("merge_link")
     case object Debris extends Kind("debris")
   }
 
@@ -87,6 +91,17 @@ object ShardFiles {
   /** a merge satellite's name → the absorbed region's start name. */
   def mergeTargetOf(name: String): Option[String] = startAfter("_merge-", name)
 
+  /** Merge link `_merging-<hex>`: written into the LEFT region before a
+    * merge unbinds the right region's boundary, removed once the right
+    * region is folded in ([[RegionSplit.mergeLeft]]). Between unbinding
+    * and parking, placement routes the right range's keys left while
+    * their cells still stand in the right directory; a point read of
+    * the left region follows the link ([[pointEntries]]). */
+  def mergeLinkNameOf(rightStart: String): String = s"_merging-$rightStart"
+
+  /** a merge link's name → the right region's start name. */
+  def mergeLinkTargetOf(name: String): Option[String] = startAfter("_merging-", name)
+
   private def startAfter(prefix: String, name: String): Option[String] =
     if (!name.startsWith(prefix)) None
     else {
@@ -104,6 +119,7 @@ object ShardFiles {
     else if (n.startsWith("_"))
       Entry(path, n,
         if (satelliteTargetOf(n).isDefined || mergeTargetOf(n).isDefined) Kind.Satellite
+        else if (mergeLinkTargetOf(n).isDefined) Kind.MergeLink
         else Kind.Debris, null, 0L)
     else if (n.endsWith(".d")) versioned(Kind.BoundMarker, tombstoneOf(n))
     else if (n.endsWith(".dv")) versioned(Kind.ExactMarker, exactTombstoneOf(n))
@@ -115,11 +131,13 @@ object ShardFiles {
 
   /** One listing of a region directory, classified. `own` holds the
     * directory's own store files (puts, markers, segments) in listing
-    * order, `satellites` its satellite directories, `debris` the rest.
-    * Flush, compaction, split and snapshot work on `own`; readers on
-    * [[covered]]. */
+    * order, `satellites` its satellite directories, `mergeLinks` its
+    * merge links, `debris` the rest; `present` is false when the
+    * directory does not exist. Flush, compaction, split and snapshot
+    * work on `own`; readers on [[covered]]. */
   final class Listing(val dir: Path, val own: Vector[Entry], val satellites: Vector[Path],
-                      val debris: Vector[Path]) {
+                      val mergeLinks: Vector[Path], val debris: Vector[Path],
+                      val present: Boolean) {
     /** own store files, then every satellite's (recursively: a daughter
       * may be mid-second-split) — what a reader of this region sees.
       * Lists each satellite once, on first use; none when there are
@@ -128,7 +146,7 @@ object ShardFiles {
       if (satellites.isEmpty) own else own ++ satellites.flatMap(list(_).covered)
 
     /** every entry of the directory itself, whatever its kind. */
-    def paths: Vector[Path] = own.map(_.path) ++ satellites ++ debris
+    def paths: Vector[Path] = own.map(_.path) ++ satellites ++ mergeLinks ++ debris
   }
 
   /** List `dir` once. A missing directory lists as empty. */
@@ -137,20 +155,53 @@ object ShardFiles {
       try Files.list(dir)
       catch {
         case _: NoSuchFileException | _: NotDirectoryException =>
-          return new Listing(dir, Vector.empty, Vector.empty, Vector.empty)
+          return new Listing(dir, Vector.empty, Vector.empty, Vector.empty, Vector.empty,
+            present = false)
       }
     val own = Vector.newBuilder[Entry]
     val satellites = Vector.newBuilder[Path]
+    val mergeLinks = Vector.newBuilder[Path]
     val debris = Vector.newBuilder[Path]
     try s.iterator().asScala.foreach { p =>
       val e = classify(p, p.getFileName.toString)
       e.kind match {
         case Kind.Satellite => satellites += p
+        case Kind.MergeLink => mergeLinks += p
         case Kind.Debris => debris += p
         case _ => own += e
       }
     } finally s.close()
-    new Listing(dir, own.result(), satellites.result(), debris.result())
+    new Listing(dir, own.result(), satellites.result(), mergeLinks.result(), debris.result(),
+      present = true)
+  }
+
+  /** Every store file a POINT read (get, existence probe, latest
+    * version) of a key in region `idx` of `splits` must see: the
+    * region's [[Listing.covered]] entries, plus the store files of the
+    * two maintenance windows in which some of the region's keys sit
+    * outside it ([[RegionSplit]]):
+    *  - a split crashed after recording its boundary: the daughter's
+    *    directory does not exist yet, and its cells are the preceding
+    *    region's `_split-<name>/` satellite;
+    *  - a merge between unbinding and parking: the right region's
+    *    directory still stands, named by a merge link in this one.
+    * Steady state this is the one listing of the region directory. */
+  def pointEntries(tableDir: Path, splits: FileStore.Splits, idx: Int): Vector[Entry] = {
+    val name = splits.names(idx)
+    val l = list(tableDir.resolve(name))
+    val unpromoted =
+      if (l.present || idx == 0) Vector.empty
+      else {
+        // a stat, not a failed listing: most missing regions were
+        // simply never written
+        val sat = tableDir.resolve(splits.names(idx - 1)).resolve(satelliteNameOf(name))
+        if (sat.toFile.isDirectory) list(sat).covered else Vector.empty
+      }
+    val linked = l.mergeLinks.flatMap { p =>
+      mergeLinkTargetOf(p.getFileName.toString).fold(Vector.empty[Entry])(t =>
+        list(tableDir.resolve(t)).covered)
+    }
+    if (unpromoted.isEmpty && linked.isEmpty) l.covered else l.covered ++ unpromoted ++ linked
   }
 
   /** The region directories of a table directory in name (≡ key)

@@ -513,10 +513,7 @@ object CellsCatalog {
   /** content fingerprint of a split layout — embedded in the shard
     * function's name so SPJ compatibility (canonicalName equality) is
     * exactly layout equality. */
-  def fingerprintOf(splits: FileStore.Splits): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(splits.toJson.getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
+  def fingerprintOf(splits: FileStore.Splits): String = splits.fingerprint
 
   // fingerprint → layout memo, per (root, fp). Layouts are WRITE-ONCE
   // (ensureSplits), so a positive hit can never go stale; only misses

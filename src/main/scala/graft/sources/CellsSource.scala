@@ -2089,7 +2089,8 @@ object CellsReaders {
       val seg = segs.head.path
       // masks from the same covered listing
       val mask = ShardFiles.maskOf(covered)
-      val idx = graft.ingest.CellSegment.indexOf(seg)
+      val index = graft.ingest.CellSegment.indexWithEnd(seg)
+      val idx = index.entries
       // read-time retention over the key's FULL live version list —
       // one O(index) metadata fold, only on retention-active tables
       lazy val retained: Map[String, Set[Long]] = {
@@ -2119,7 +2120,8 @@ object CellsReaders {
         override def next(): Boolean = {
           if (done) return false
           while (i >= 0) {
-            val e = idx(i); i -= 1
+            val at = i
+            val e = idx(at); i -= 1
             if (e.version >= lo && e.version <= hi && keys.fileOk(e.digestHex) &&
               !mask.masked(e.digestHex, e.version) && admitted(e.digestHex, e.version) &&
               !seen((e.digestHex, e.version))) {
@@ -2135,7 +2137,7 @@ object CellsReaders {
                     CellsSource.filesOpened.incrementAndGet()
                     if (taskMetrics ne null) taskMetrics.filesOpened += 1
                   }
-                  val (key, v, b) = graft.ingest.CellSegment.entryAt(seg, e.offset, needBody)
+                  val (key, v, b) = graft.ingest.CellSegment.entryAt(seg, index, at, needBody)
                   if (!keys.keyOk(key)) None else Some(mk(key, v, b))
                 }
               built match {
@@ -2427,17 +2429,22 @@ object CellsReaders {
                 Iterator.empty
               case Some(ds) =>
                 // point lookup: seek straight to the probed entries
-                graft.ingest.CellSegment.indexOf(seg).iterator
-                  .filter(e => ds.contains(e.digestHex) && e.version >= lo && e.version <= hi &&
-                    !suppressed(e.digestHex, e.version) &&
-                    isWinner(e.digestHex, e.version) &&
-                    !seen.contains((e.digestHex, e.version)))
-                  .flatMap { e =>
+                val index = graft.ingest.CellSegment.indexWithEnd(seg)
+                index.entries.indices.iterator
+                  .filter { i =>
+                    val e = index.entries(i)
+                    ds.contains(e.digestHex) && e.version >= lo && e.version <= hi &&
+                      !suppressed(e.digestHex, e.version) &&
+                      isWinner(e.digestHex, e.version) &&
+                      !seen.contains((e.digestHex, e.version))
+                  }
+                  .flatMap { i =>
+                    val e = index.entries(i)
                     if (!readsContent) {
                       markEmitted(e.digestHex, e.version); Some(mkRow(null, e.version, null, src = seg))
                     } else {
                       openedOne()
-                      val (k, v, b) = graft.ingest.CellSegment.entryAt(seg, e.offset, needBody)
+                      val (k, v, b) = graft.ingest.CellSegment.entryAt(seg, index, i, needBody)
                       if (!keys.keyOk(k)) None
                       else { markEmitted(e.digestHex, e.version); Some(mkRow(k, v, b, src = seg)) }
                     }
@@ -2459,19 +2466,22 @@ object CellsReaders {
                 // bytes; post-major segments (~1 version/key) stay on
                 // the stream path — seeks would cost more than the
                 // sequential read they replace.
-                lazy val winnersHere =
-                  graft.ingest.CellSegment.indexOf(seg).filter(e =>
-                    e.version >= lo && e.version <= hi &&
-                      isWinner(e.digestHex, e.version) &&
-                      !seen.contains((e.digestHex, e.version)))
+                lazy val index = graft.ingest.CellSegment.indexWithEnd(seg)
+                lazy val winnersHere = index.entries.indices.filter { i =>
+                  val e = index.entries(i)
+                  e.version >= lo && e.version <= hi &&
+                    isWinner(e.digestHex, e.version) &&
+                    !seen.contains((e.digestHex, e.version))
+                }
                 if (latestOnly && winnersHere.size.toLong * 4 < t.entryCount.toLong) {
                   // a segment with NO winners is never opened at all —
                   // the index (cached) already proved it has nothing
                   if (winnersHere.isEmpty) Iterator.empty
                   else {
                     openedOne()
-                    winnersHere.iterator.flatMap { e =>
-                      val (k, v, b) = graft.ingest.CellSegment.entryAt(seg, e.offset, needBody)
+                    winnersHere.iterator.flatMap { i =>
+                      val e = index.entries(i)
+                      val (k, v, b) = graft.ingest.CellSegment.entryAt(seg, index, i, needBody)
                       if (!keys.keyOk(k)) None
                       else if (!markEmitted(e.digestHex, v)) None
                       else Some(mkRow(k, v, b, src = seg))

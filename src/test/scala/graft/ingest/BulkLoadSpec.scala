@@ -66,9 +66,12 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val back = CellSegment.entries(path, needBody = true).toSeq
     assert(back.map { case (kk, v, b) => (new String(kk), v, new String(b)) } ==
       Seq(("aa", 5L, "b1"), ("aa", 9L, "b2"), ("ab", 1L, "b3")))
-    // point read through the index offset
-    val (pk, pv, pb) = CellSegment.entryAt(path, idx(1).offset, needBody = true)
+    // point read of the span from one index offset to the next
+    val (pk, pv, pb) = CellSegment.entryAt(path, idx(1).offset, idx(2).offset, needBody = true)
     assert(new String(pk) == "aa" && pv == 9L && new String(pb) == "b2")
+    // the last entry ends where the index begins, which the cached index carries
+    val (lk, lv, lb) = CellSegment.entryAt(path, CellSegment.indexWithEnd(path), 2, needBody = true)
+    assert(new String(lk) == "ab" && lv == 1L && new String(lb) == "b3")
     // key-only streaming skips bodies without losing position
     val keysOnly = CellSegment.entries(path, needBody = false).toSeq
     assert(keysOnly.map { case (kk, v, b) => (new String(kk), v, b) } ==

@@ -86,10 +86,9 @@ class RegionMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
       finally RegionSplit.probeHook = _ => ()
       assert(scanAll(root, "t") == expected, s"view diverged after crash at $crashAt")
       // the point faces see it too: the right region lives in the left's
-      // satellite until the fold. (At `unbound` the layout already routes
-      // right keys left while the right directory still stands.)
-      if (crashAt == "parked")
-        Fixtures.assertPointFacesAgree(store, "t", expected, s"after crash at $crashAt")
+      // satellite until the fold (at `unbound` the layout already routes
+      // right keys left while the right directory still stands)
+      Fixtures.assertPointFacesAgree(store, "t", expected, s"after crash at $crashAt")
       RegionSplit.completePending(root, "t")
       assert(scanAll(root, "t") == expected, s"view diverged after recovery from $crashAt")
       Fixtures.assertPointFacesAgree(store, "t", expected, s"after recovery from $crashAt")

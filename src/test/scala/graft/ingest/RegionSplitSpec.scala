@@ -150,10 +150,9 @@ class RegionSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
       // whatever the crash point, the masked view never changes
       assert(scanAll(root, t) == expected, s"view diverged after crash at $crashAt")
       // the point faces see it too: the split's upper half lives in the
-      // parent's satellite until promotion. (At `recorded` the layout
-      // already routes upper keys to the unpromoted daughter directory.)
-      if (crashAt != "recorded")
-        Fixtures.assertPointFacesAgree(store, t, expected, s"after crash at $crashAt")
+      // parent's satellite until promotion (at `recorded` the layout
+      // already routes upper keys to the unpromoted daughter directory)
+      Fixtures.assertPointFacesAgree(store, t, expected, s"after crash at $crashAt")
       // recovery finishes the protocol (or sweeps the orphan stage dir)
       RegionSplit.completePending(root, t)
       assert(scanAll(root, t) == expected, s"view diverged after recovery from $crashAt")
