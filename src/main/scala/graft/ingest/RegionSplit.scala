@@ -40,7 +40,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *     the daughter; every reader planning from here on sees the new
   *     layout (the stamp-validated [[FileStore.splitsAt]] cache).
   *  5. '''promote''' — one atomic rename moves the satellite to the
-  *     first-class region directory `<table>/<hex(m)>`.
+  *     first-class region directory `<table>/<hex(m)>`. If a put after
+  *     a crash between record and promote already created that
+  *     directory, recovery folds the satellite into it instead.
   *
   * '''Exactly-once under concurrency.''' Writers are excluded for the
   * split's duration by the table write lock ([[FileStore.Locks]] — the
@@ -260,18 +262,21 @@ object RegionSplit {
     }
   }
 
-  /** move every parked file into the left directory proper; idempotent
-    * (recovery replays converge) — nested satellites can't exist here
-    * (completePendingIn runs first), but a nested dir moves wholesale
-    * and keeps its range classification if one ever did. */
-  private def foldMergeSatellite(leftDir: Path, target: String): Unit = {
-    val sat = leftDir.resolve(ShardFiles.mergeSatelliteNameOf(target))
+  private def foldMergeSatellite(leftDir: Path, target: String): Unit =
+    foldInto(leftDir, leftDir.resolve(ShardFiles.mergeSatelliteNameOf(target)))
+
+  /** move every file of satellite `sat` into region directory `dir`,
+    * then drop the empty satellite; idempotent (recovery replays
+    * converge) — nested satellites can't exist here (completePendingIn
+    * runs first), but a nested dir moves wholesale and keeps its range
+    * classification if one ever did. */
+  private def foldInto(dir: Path, sat: Path): Unit = {
     if (!Files.isDirectory(sat)) return
     ShardFiles.list(sat).paths.foreach { p =>
       val n = p.getFileName.toString
       if (n.endsWith(".tmp")) Files.deleteIfExists(p)
       else
-        try Files.move(p, leftDir.resolve(n), StandardCopyOption.ATOMIC_MOVE)
+        try Files.move(p, dir.resolve(n), StandardCopyOption.ATOMIC_MOVE)
         catch {
           case _: java.nio.file.FileAlreadyExistsException =>
             // content-hash twin (identical segment) — one copy suffices
@@ -279,6 +284,25 @@ object RegionSplit {
         }
     }
     Files.deleteIfExists(sat)
+  }
+
+  /** Lift every segment in `dir` by the same step above every segment
+    * of `sat` when any of them is not already above: a flush into a
+    * daughter directory born after a crash stamps from that directory's
+    * own (empty) history, so before the fold it could lose its
+    * coordinates to the older satellite copies. Each segment is
+    * rewritten under its own name (the seqNo is outside the content
+    * hash), highest first, so a replay after a crash mid-lift lifts
+    * the done ones again and `dir`'s own order still holds. */
+  private def outrank(dir: Path, sat: Path): Unit = {
+    def seqs(d: Path) = ShardFiles.list(d).own.filter(_.isSegment)
+      .map(e => (e.path, CellSegment.readTrailer(e.path).seqNo))
+    val ceiling = seqs(sat).map(_._2).foldLeft(0L)(math.max)
+    val mine = seqs(dir).sortBy(-_._2)
+    if (mine.exists(_._2 <= ceiling)) mine.foreach { case (p, seq) =>
+      val it = CellSegment.entries(p, needBody = true)
+      try CellSegment.write(dir, it, seq + ceiling + 1) finally it.close()
+    }
   }
 
   /** Finish interrupted splits across the table (crash recovery):
@@ -363,6 +387,14 @@ object RegionSplit {
     Files.deleteIfExists(manifest)
     if (!Files.exists(dst))
       Files.move(satellite, dst, StandardCopyOption.ATOMIC_MOVE)
+    else {
+      // a put after a crash at `recorded` created the daughter's
+      // directory: fold the satellite into it, the post-crash cells
+      // keeping their coordinates (a put file beats any segment;
+      // `outrank` settles segment against segment)
+      outrank(dst, satellite)
+      foldInto(dst, satellite)
+    }
     probeHook(s"promoted:$target")
   }
 

@@ -37,8 +37,7 @@ import graft.ingest.PushTableSink.TableSpec
   * as delete masks: an edit log reports edits and replayed offset
   * windows must regenerate identical rows — HBase WALs likewise carry
   * expired edits). The clock is injectable (scan option
-  * `retentionNowMillis`, session conf `spark.graft.retention.nowMillis`)
-  * so gates and compactions evaluate one deterministic instant; a plain
+  * `retentionNowMillis`) so gates and compactions evaluate one deterministic instant; a plain
   * read snapshots the wall clock once per scan plan, the scanner-open
   * time HBase uses.
   */

@@ -88,10 +88,10 @@ object Advanced {
       val target = java.nio.file.Files.createTempDirectory("graft-q94-target")
       val ck = java.nio.file.Files.createTempDirectory("graft-q94-ck")
       val schema = s.read.parquet(src.getPath).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-        stream.writeStream
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+        s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src.getPath)
+          .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
             batch.groupBy(col("user_id"))
               .agg(max_by(struct(col("ts_ms"), col("event_id"), col("event_type"), col("vx")),
@@ -127,33 +127,31 @@ object Advanced {
     "q48_stream_dedup" -> { (s, d) =>
       val schema = s.read.parquet(s"$d/events.parquet").schema
       val ck = java.nio.file.Files.createTempDirectory("graft-q48-ck")
-      val sinkName = "q48_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // the file source requires a DIRECTORY; select just the events
-      // file out of the shared sf dir with a glob filter
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d)
-      val keyed = raw
-        .select(col("user_id").cast("long").as("user_id"),
-          Tables.tsAsMillis(raw).as("ts_ms"))
-        .withColumn("ts_t", timestamp_millis(col("ts_ms")))
-        .withWatermark("ts_t", "2 hours")
-        .dropDuplicates("user_id", "ts_ms")
-        .select(col("user_id"), col("ts_ms"))
+      val sinkName = "q48_mem"
       // state partitions sized to key cardinality (see q53's comment)
-      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-        keyed.writeStream
+      val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+        // the file source requires a DIRECTORY; select just the events
+        // file out of the shared sf dir with a glob filter
+        val raw = s.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet")
+          .parquet(d)
+        raw
+          .select(col("user_id").cast("long").as("user_id"),
+            Tables.tsAsMillis(raw).as("ts_ms"))
+          .withColumn("ts_t", timestamp_millis(col("ts_ms")))
+          .withWatermark("ts_t", "2 hours")
+          .dropDuplicates("user_id", "ts_ms")
+          .select(col("user_id"), col("ts_ms"))
+          .writeStream
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
           .awaitTermination()
+        // the sink's view lives on the child and goes with it; the
+        // returned plan holds the sink relation directly
+        s.table(sinkName)
       }
-      // detach the temp-view name and drop the checkpoint dir so
-      // repeated invocations (bench runs 4×) don't accumulate driver
-      // state; the returned plan holds the sink relation directly
-      val out = s.table(sinkName)
-      s.catalog.dropTempView(sinkName)
       org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
@@ -238,15 +236,15 @@ object Advanced {
     "q52_stream_hourly" -> { (s, d) =>
       val schema = s.read.parquet(s"$d/events.parquet").schema
       val ck = java.nio.file.Files.createTempDirectory("graft-q52-ck")
-      val sinkName = "q52_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d)
-      val events = raw.select(
-        Tables.tsAsTimestamp(raw).as("ts"),
-        col("event_type"), col("value"))
+      val sinkName = "q52_mem"
       // state partitions sized to key cardinality (see q53's comment)
-      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+        val raw = s.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet")
+          .parquet(d)
+        val events = raw.select(
+          Tables.tsAsTimestamp(raw).as("ts"),
+          col("event_type"), col("value"))
         Sessions.hourlyCountsStream(events).writeStream
           .format("memory").queryName(sinkName)
           .outputMode("complete")
@@ -254,11 +252,10 @@ object Advanced {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
           .awaitTermination()
+        s.table(sinkName)
+          .select(unix_millis(col("hour_start")).as("hour_ms"),
+            col("event_type"), col("n"), col("total_value"))
       }
-      val out = s.table(sinkName)
-        .select(unix_millis(col("hour_start")).as("hour_ms"),
-          col("event_type"), col("n"), col("total_value"))
-      s.catalog.dropTempView(sinkName)
       org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
@@ -321,21 +318,20 @@ object Advanced {
         stage(staged.filter(unix_millis(col("ts")) < cutoff), "02_late.parquet", t0 + 600000L)
       }
       val ck = java.nio.file.Files.createTempDirectory("graft-q161-ck")
-      val sinkName = "q161_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val sinkName = "q161_mem"
       try {
         val schema = s.read.parquet(src.getPath).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src.getPath)
         // state partitions sized to the stream's key cardinality (the
         // q52/q53 discipline, r18): state here is one (hour-window,
         // type) count per open window — dozens of keys, not thousands —
         // and every state partition is a per-batch checkpoint-file
         // commit REGARDLESS of how empty it is, times THREE batches on
         // this staged feed (OPTIMIZATION_r18.md §A: addBatch/stateCommit
-        // is the dominant per-batch term at 32 partitions). Restored once
-        // the bounded run finishes; batch plans are unaffected.
-        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-          val run = stream
+        // is the dominant per-batch term at 32 partitions). Batch plans
+        // are unaffected.
+        val (q, sink) = withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+          val run = s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(src.getPath)
             .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
             .filter(col("event_type") =!= "__nudge") // the sentinel only carries the watermark
             .withWatermark("ts", "1 hour")
@@ -347,7 +343,8 @@ object Advanced {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           run.awaitTermination()
-          run
+          // the sink's view lives on the child and goes with it
+          (run, s.table(sinkName))
         }
         val trace = q.recentProgress.map(p =>
           s"batch=${p.batchId} in=${p.numInputRows} wm=${p.eventTime.get("watermark")} " +
@@ -370,12 +367,8 @@ object Advanced {
           .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
         require(dropped > 0,
           s"the late batch must be dropped by the watermark [$trace]")
-        val out = s.table(sinkName)
-          .select(unix_millis(col("window.start")).as("hour_ms"),
-            col("event_type"), col("n"))
+        sink.select(unix_millis(col("window.start")).as("hour_ms"), col("event_type"), col("n"))
           .localCheckpoint()
-        s.catalog.dropTempView(sinkName)
-        out
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       }
@@ -419,29 +412,27 @@ object Advanced {
         java.nio.file.Files.createFile(marker)
       }
       val ck = java.nio.file.Files.createTempDirectory("graft-q53-ck")
-      val sinkName = "q53_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage.toString)
-      val events = raw.select(
-        Tables.tsAsTimestamp(raw).as("ts"),
-        col("user_id"), col("event_type"), col("value"))
+      val sinkName = "q53_mem"
       // streaming state partitions are fixed at query start from
       // spark.sql.shuffle.partitions — size them to the stream's key
       // cardinality (150 users at sf0.01), not the batch default: every
       // state partition is a per-batch checkpoint file regardless of
-      // how empty it is. Restored once the bounded run finishes;
-      // batch plans are unaffected.
-      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      // how empty it is. Batch plans are unaffected.
+      val out = withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+        val raw = s.readStream.schema(schema)
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(stage.toString)
+        val events = raw.select(
+          Tables.tsAsTimestamp(raw).as("ts"),
+          col("user_id"), col("event_type"), col("value"))
         Sessions.sessionizeStream(Sessions.typedEvents(events)).toDF().writeStream
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
           .awaitTermination()
+        s.table(sinkName).filter(col("user_id") >= 0)
       }
-      val out = s.table(sinkName).filter(col("user_id") >= 0)
-      s.catalog.dropTempView(sinkName)
       org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
@@ -459,44 +450,43 @@ object Advanced {
     "q54_stream_join" -> { (s, d) =>
       val schema = s.read.parquet(s"$d/events.parquet").schema
       val ck = java.nio.file.Files.createTempDirectory("graft-q54-ck")
-      val sinkName = "q54_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      def side(): DataFrame = {
-        val raw = s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(d)
-        raw.select(col("user_id").cast("long").as("user_id"),
-          Tables.tsAsTimestamp(raw).as("ts"),
-          col("event_type"))
-      }
-      val clicks = side().filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-      val buys = side().filter(col("event_type") === "purchase")
-        .select(col("user_id").as("buy_user"), col("ts").as("buy_ts"))
-        .withWatermark("buy_ts", "2 hours")
-      val joined = clicks.join(buys,
-        expr("""user_id = buy_user AND
-                buy_ts > click_ts AND
-                buy_ts <= click_ts + interval 30 minutes"""))
-        .select(col("user_id"),
-          unix_millis(col("click_ts")).as("click_ms"),
-          unix_millis(col("buy_ts")).as("buy_ms"))
+      val sinkName = "q54_mem"
       // a stream-stream join keeps FOUR state stores per partition;
       // size state partitions to key cardinality (see q53) or the
       // per-batch checkpoint fan-out dominates the query — and a
       // stream-stream join keeps FOUR stores per partition, so it gets
       // half the partitions of the single-store operators (16 store
       // instances per batch instead of 32; ~0.4 s/batch saved)
-      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+      val out = withConf(s, "spark.sql.shuffle.partitions" -> "4") { s =>
+        def side(): DataFrame = {
+          val raw = s.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(d)
+          raw.select(col("user_id").cast("long").as("user_id"),
+            Tables.tsAsTimestamp(raw).as("ts"),
+            col("event_type"))
+        }
+        val clicks = side().filter(col("event_type") === "click")
+          .select(col("user_id"), col("ts").as("click_ts"))
+          .withWatermark("click_ts", "2 hours")
+        val buys = side().filter(col("event_type") === "purchase")
+          .select(col("user_id").as("buy_user"), col("ts").as("buy_ts"))
+          .withWatermark("buy_ts", "2 hours")
+        val joined = clicks.join(buys,
+          expr("""user_id = buy_user AND
+                  buy_ts > click_ts AND
+                  buy_ts <= click_ts + interval 30 minutes"""))
+          .select(col("user_id"),
+            unix_millis(col("click_ts")).as("click_ms"),
+            unix_millis(col("buy_ts")).as("buy_ms"))
         joined.writeStream
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", ck.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
           .awaitTermination()
+        s.table(sinkName)
       }
-      val out = s.table(sinkName)
-      s.catalog.dropTempView(sinkName)
       org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       out
     },
@@ -557,40 +547,38 @@ object Advanced {
         stage(sentinel(mx + 20L * 86400000L), "01_advance.parquet", t0 + 300000L)
       }
       val ck = java.nio.file.Files.createTempDirectory("graft-q190-ck")
-      val sinkName = "q190_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val sinkName = "q190_mem"
       try {
         val schema = s.read.parquet(src.getPath).schema
-        def side(): DataFrame = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-        val clicks = side().filter(col("event_type") === "click")
-          .select(col("user_id").cast("long").as("user_id"),
-            col("ts").cast("timestamp").as("click_ts"))
-          .withWatermark("click_ts", "2 hours")
-        val buys = side().filter(col("event_type") === "purchase")
-          .select(col("user_id").cast("long").as("buy_user"),
-            col("ts").cast("timestamp").as("buy_ts"))
-          .withWatermark("buy_ts", "2 hours")
-        val joined = clicks.join(buys,
-          expr("""user_id = buy_user AND
-                  buy_ts > click_ts AND
-                  buy_ts <= click_ts + interval 30 minutes"""),
-          "left_outer")
-          .select(col("user_id"),
-            unix_millis(col("click_ts")).as("click_ms"),
-            coalesce(unix_millis(col("buy_ts")), lit(-1L)).as("buy_ms"))
-        withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+        withConf(s, "spark.sql.shuffle.partitions" -> "4") { s =>
+          def side(): DataFrame = s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(src.getPath)
+          val clicks = side().filter(col("event_type") === "click")
+            .select(col("user_id").cast("long").as("user_id"),
+              col("ts").cast("timestamp").as("click_ts"))
+            .withWatermark("click_ts", "2 hours")
+          val buys = side().filter(col("event_type") === "purchase")
+            .select(col("user_id").cast("long").as("buy_user"),
+              col("ts").cast("timestamp").as("buy_ts"))
+            .withWatermark("buy_ts", "2 hours")
+          val joined = clicks.join(buys,
+            expr("""user_id = buy_user AND
+                    buy_ts > click_ts AND
+                    buy_ts <= click_ts + interval 30 minutes"""),
+            "left_outer")
+            .select(col("user_id"),
+              unix_millis(col("click_ts")).as("click_ms"),
+              coalesce(unix_millis(col("buy_ts")), lit(-1L)).as("buy_ms"))
           joined.writeStream
             .format("memory").queryName(sinkName)
             .option("checkpointLocation", ck.toString)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
             .awaitTermination()
+          s.table(sinkName).filter(col("user_id") >= 0L)
+            .select(col("user_id"), col("click_ms"), col("buy_ms"))
+            .localCheckpoint() // release the memory sink eagerly
         }
-        val out = s.table(sinkName).filter(col("user_id") >= 0L)
-          .select(col("user_id"), col("click_ms"), col("buy_ms"))
-          .localCheckpoint() // release the memory-sink view eagerly
-        s.catalog.dropTempView(sinkName)
-        out
       } finally org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
     },
 

@@ -215,23 +215,23 @@ object Quality {
         }
       }
       val schema = s.read.parquet(src.getPath).schema
-      val raw = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").option("latestFirst", "false")
-        .parquet(src.getPath)
-      val bands = raw
-        // each staged file is ONE input split, so without this the
-        // whole micro-batch's signature map runs on a single core (the
-        // Tables.fanOut lesson); shuffling the skinny (doc_id, text)
-        // rows first parallelizes the md5/affine-hash work 8-way
-        .repartition(8)
-        .select(col("doc_id"), split(col("text"), " ").as("ts"))
-        .withColumn("xs", expr(xsExpr))
-        .withColumn("sig", expr(sigExpr))
-        .select(col("doc_id"), posexplode(expr(bandKeysExpr)).as(Seq("band_idx", "band_key")))
-        .as[BandRow]
       val target = java.nio.file.Files.createTempDirectory("graft-q124-target")
       val ck = java.nio.file.Files.createTempDirectory("graft-q124-ck")
-      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") { s =>
+        val raw = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "2").option("latestFirst", "false")
+          .parquet(src.getPath)
+        val bands = raw
+          // each staged file is ONE input split, so without this the
+          // whole micro-batch's signature map runs on a single core (the
+          // Tables.fanOut lesson); shuffling the skinny (doc_id, text)
+          // rows first parallelizes the md5/affine-hash work 8-way
+          .repartition(8)
+          .select(col("doc_id"), split(col("text"), " ").as("ts"))
+          .withColumn("xs", expr(xsExpr))
+          .withColumn("sig", expr(sigExpr))
+          .select(col("doc_id"), posexplode(expr(bandKeysExpr)).as(Seq("band_idx", "band_key")))
+          .as[BandRow]
         BandDedup.bucketMins(bands).toDF().writeStream
           .foreachBatch { (b: Dataset[Row], id: Long) =>
             b.groupBy(col("doc_id")).agg(min(col("bmin")).as("keeper"))

@@ -82,8 +82,6 @@ object Sketches {
         expr(s"($AlphaX1000 * ${M.toLong * M} * shiftleft(CAST(1 AS BIGINT), $RankCap)) div (1000 * s_total)"))
       .select(col("event_type"), col("est"), col("nreg"), col("reg_digest"))
 
-  private val memSinkId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def tokens(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("t"))
@@ -163,18 +161,17 @@ object Sketches {
           .repartition(2).write.mode("overwrite").parquet(src.getPath)
       }
       val ck = java.nio.file.Files.createTempDirectory("graft-q142-ck")
-      val sinkName = s"graft_q142_sink_${memSinkId.incrementAndGet()}"
+      val sinkName = "graft_q142_sink"
       val schema = s.read.parquet(src.getPath).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.getPath)
       try {
         // state partitions sized to the stream's key cardinality (the
         // q52/q53 discipline): state is event_type × M=32 registers —
         // ~100 keys — and every state partition is a per-batch
         // checkpoint-file commit regardless of fill (the q156/q167
-        // probe finding). Restored when the bounded run finishes.
-        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-          val run = hllRanks(stream)
+        // probe finding).
+        val (q, sink) = withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+          val run = hllRanks(s.readStream.schema(schema)
+              .option("maxFilesPerTrigger", "1").parquet(src.getPath))
             .groupBy(col("event_type"), col("idx"))
             .agg(max(col("rank")).as("m"))
             .writeStream.outputMode("complete")
@@ -183,16 +180,11 @@ object Sketches {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           run.awaitTermination()
-          run
+          (run, s.table(sinkName))
         }
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming HLL must see the feed as multiple micro-batches")
-        val out = registersToEstimate(s.table(sinkName)).localCheckpoint()
-        // the checkpoint is eager — release the memory-sink temp view
-        // now so repeated invocations (bench passes) don't accumulate
-        // register tables in the session catalog
-        s.catalog.dropTempView(sinkName)
-        out
+        registersToEstimate(sink).localCheckpoint()
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       }
@@ -312,19 +304,17 @@ object Sketches {
           .repartition(2).write.mode("overwrite").parquet(src.getPath)
       }
       val ck = java.nio.file.Files.createTempDirectory("graft-q156-ck")
-      val sinkName = s"graft_q156_sink_${memSinkId.incrementAndGet()}"
+      val sinkName = "graft_q156_sink"
       val schema = s.read.parquet(src.getPath).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.getPath)
       try {
         // state partitions sized to the stream's key cardinality (the
         // q52/q53 discipline, r18): state is the FIXED d×w = 2048-key
         // counter table, and every state partition is a per-batch
         // checkpoint-file commit regardless of fill (OPTIMIZATION_r18.md
         // §A: state commit fan-out dominated the 32-partition run).
-        // Restored when the bounded run finishes.
-        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-          val run = stream
+        val (q, sink) = withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+          val run = s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(src.getPath)
             .select(explode(split(col("text"), " ")).as("t"))
             .filter(length(col("t")) > 0)
             .select(col("t"), explode(sequence(lit(0), lit(CmD - 1))).as("r"))
@@ -338,15 +328,12 @@ object Sketches {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           run.awaitTermination()
-          run
+          (run, s.table(sinkName))
         }
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming count-min must see the feed as multiple micro-batches")
-        val out = s.table(sinkName)
-          .select(col("r").cast("long").as("r"), col("b"), col("cnt"))
+        sink.select(col("r").cast("long").as("r"), col("b"), col("cnt"))
           .localCheckpoint()
-        s.catalog.dropTempView(sinkName) // eager checkpoint — release the view
-        out
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       }
@@ -369,20 +356,18 @@ object Sketches {
           .repartition(2).write.mode("overwrite").parquet(src.getPath)
       }
       val ck = java.nio.file.Files.createTempDirectory("graft-q167-ck")
-      val sinkName = s"graft_q167_sink_${memSinkId.incrementAndGet()}"
+      val sinkName = "graft_q167_sink"
       val schema = s.read.parquet(src.getPath).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.getPath)
       try {
         val x = col("n_chars")
         def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
         // state partitions sized to the stream's key cardinality (the
         // q52/q53 discipline, r18): state is 7 values per SOURCE —
         // ~20 keys — while each of the 32 default partitions costs a
-        // per-batch checkpoint-file commit even when empty. Restored
-        // when the bounded run finishes.
-        val q = withConf(s, "spark.sql.shuffle.partitions" -> "8") {
-          val run = stream
+        // per-batch checkpoint-file commit even when empty.
+        val (q, sink) = withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+          val run = s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(src.getPath)
             .groupBy(col("source"))
             .agg(count(lit(1)).as("n"), min(x).as("mn"), max(x).as("mx"),
               sum(dec(x)).as("s1"), sum(dec(x) * dec(x)).as("s2"),
@@ -394,11 +379,11 @@ object Sketches {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           run.awaitTermination()
-          run
+          (run, s.table(sinkName))
         }
         require(q.recentProgress.count(_.numInputRows > 0) >= 2,
           "streaming moments must see the feed as multiple micro-batches")
-        val out = s.table(sinkName)
+        sink
           .withColumn("nD", col("n").cast("decimal(38,0)"))
           .withColumn("m2", expr("nD * s2 - s1 * s1"))
           .withColumn("m3n", expr("nD * nD * s3 - 3 * nD * s1 * s2 + 2 * s1 * s1 * s1"))
@@ -413,8 +398,6 @@ object Sketches {
             expr("CASE WHEN m2 = 0 THEN CAST(0 AS BIGINT) " +
               "ELSE CAST((1000 * nD * m4n) div (m2 * m2) AS BIGINT) END").as("kurt_x1000"))
           .localCheckpoint()
-        s.catalog.dropTempView(sinkName)
-        out
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(ck.toFile)
       }

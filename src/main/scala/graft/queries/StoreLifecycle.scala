@@ -26,6 +26,14 @@ object StoreLifecycle {
     ShardFiles.regions(Paths.get(root, tableDirName))
       .flatMap(ShardFiles.list(_).paths.map(_.getFileName.toString))
 
+  /** The storage-partitioned-join gates' confs: key-grouped scans on,
+    * broadcast off (a broadcast would sidestep co-partitioning, and the
+    * property under test is the sort-merge path). */
+  private val spjConfs = Seq(
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Major compaction through the full store-file mix: versions 1-2
     // land as one bulk segment generation, version 3 as a second
@@ -524,13 +532,6 @@ object StoreLifecycle {
     // the layout fingerprint.
     "q228_cells_storage_partitioned_join" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q228-cells").toString
-      // catalog instances memoize per NAME in the session's
-      // CatalogManager — a per-run unique name keeps re-runs (bench
-      // passes, verify) pointing at THIS run's temp root
-      val cat = "g228_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevPush = s.conf.getOption("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
       try {
         val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
         def seed(table: String, pred: Int, tag: String, vOff: Int): Unit =
@@ -543,33 +544,20 @@ object StoreLifecycle {
             root, BulkLoad.Config(splitPoints = points))
         seed("spja", 14, "SA", 1)
         seed("spjb", 28, "SB", 2)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        // broadcast would sidestep co-partitioning; force the sort-merge
-        // path the property is about (restored below — the bench shares
-        // this session across queries)
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = s.table(s"$cat.spja").as("a")
-          .join(s.table(s"$cat.spjb").as("b"), col("a.rowkey") === col("b.rowkey"))
-          .select(col("a.rowkey").cast("string").as("key_str"),
-            col("a.version").as("version_a"),
-            col("a.body").cast("string").as("body_a_md5"),
-            col("b.version").as("version_b"),
-            col("b.body").cast("string").as("body_b_md5"))
-        val plan = joined.queryExecution.executedPlan.toString
-        require(!plan.contains("Exchange"),
-          s"same-layout catalog tables must storage-partition-join with no exchange:\n$plan")
-        joined.localCheckpoint()
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit =
-          prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        restore("spark.sql.sources.v2.bucketing.enabled", prevBucketing)
-        restore("spark.sql.sources.v2.bucketing.pushPartValues.enabled", prevPush)
-        restore("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      }
+        withConf(s, cellsCatalog("g", root) ++ spjConfs: _*) { s =>
+          val joined = s.table("g.spja").as("a")
+            .join(s.table("g.spjb").as("b"), col("a.rowkey") === col("b.rowkey"))
+            .select(col("a.rowkey").cast("string").as("key_str"),
+              col("a.version").as("version_a"),
+              col("a.body").cast("string").as("body_a_md5"),
+              col("b.version").as("version_b"),
+              col("b.body").cast("string").as("body_b_md5"))
+          val plan = joined.queryExecution.executedPlan.toString
+          require(!plan.contains("Exchange"),
+            s"same-layout catalog tables must storage-partition-join with no exchange:\n$plan")
+          joined.localCheckpoint()
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
     // SQL TIME TRAVEL through the catalog — `VERSION AS OF` as a
@@ -583,7 +571,6 @@ object StoreLifecycle {
     // snapshot read costs the slice, never the table.
     "q229_cells_sql_time_travel" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q229-cells").toString
-      val cat = "g229_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         def seed(v: Int): Unit = BulkLoad.writeCells(
           Tables.documents(s, d).filter(col("doc_id") % 16 === 0)
@@ -593,17 +580,17 @@ object StoreLifecycle {
               expr(s"cast(md5(concat(cast(doc_id as string), 'T', '$v')) as binary)").as("body")),
           root)
         seed(1); seed(2)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val full = s.table(s"$cat.q229").count()
-        val snap = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version,
-                     cast(body as string) AS body_md5
-              FROM $cat.q229 VERSION AS OF 1999999999""")
-          .localCheckpoint()
-        require(full == 2 * snap.count() && snap.count() > 0,
-          s"the snapshot is exactly the first batch: full=$full snap=${snap.count()}")
-        snap
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          val full = s.table("g.q229").count()
+          val snap = s.sql(
+            s"""SELECT cast(rowkey as string) AS key_str, version,
+                       cast(body as string) AS body_md5
+                FROM g.q229 VERSION AS OF 1999999999""")
+            .localCheckpoint()
+          require(full == 2 * snap.count() && snap.count() > 0,
+            s"the snapshot is exactly the first batch: full=$full snap=${snap.count()}")
+          snap
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -619,7 +606,6 @@ object StoreLifecycle {
     // versions, and unmasked carriage end to end.
     "q230_cells_sql_changes" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q230-cells").toString
-      val cat = "g230_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         def seedPut(v: Int): Unit = Tables.documents(s, d).filter(col("doc_id") % 22 === 0)
           .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
@@ -635,22 +621,22 @@ object StoreLifecycle {
           .write.format("graft-cells").mode("append")
           .option("root", root).option("table", "q230")
           .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val puts = Tables.documents(s, d).filter(col("doc_id") % 22 === 0).count() * 2
-        val dels = Tables.documents(s, d).filter(col("doc_id") % 44 === 0).count()
-        val log = s.sql(
-          "SELECT cast(rowkey as string) AS key_str, version, op " +
-            s"FROM $cat.`q230$$changes`")
-          .localCheckpoint()
-        require(log.count() == puts + dels && dels > 0,
-          s"the edit log reports every edit: ${log.count()} vs ${puts + dels}")
-        // the masked BASE face hides exactly the marker-covered puts
-        // (every %44 key's v1+v2 — the marker at v3 covers both)
-        val masked = s.table(s"$cat.q230").count()
-        require(masked == puts - 2 * dels,
-          s"the base table is the masked view: $masked vs ${puts - 2 * dels}")
-        log
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          val puts = Tables.documents(s, d).filter(col("doc_id") % 22 === 0).count() * 2
+          val dels = Tables.documents(s, d).filter(col("doc_id") % 44 === 0).count()
+          val log = s.sql(
+            "SELECT cast(rowkey as string) AS key_str, version, op " +
+              "FROM g.`q230$changes`")
+            .localCheckpoint()
+          require(log.count() == puts + dels && dels > 0,
+            s"the edit log reports every edit: ${log.count()} vs ${puts + dels}")
+          // the masked BASE face hides exactly the marker-covered puts
+          // (every %44 key's v1+v2 — the marker at v3 covers both)
+          val masked = s.table("g.q230").count()
+          require(masked == puts - 2 * dels,
+            s"the base table is the masked view: $masked vs ${puts - 2 * dels}")
+          log
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -671,7 +657,6 @@ object StoreLifecycle {
     // over-deleting.
     "q231_cells_sql_delete" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q231-cells").toString
-      val cat = "g231_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         def seed(v: Int) = Tables.documents(s, d).filter(col("doc_id") % 26 === 0)
           .select(lit("q231").as("tableName"),
@@ -680,33 +665,33 @@ object StoreLifecycle {
             expr(s"cast(md5(concat(cast(doc_id as string), '/', '$v')) as binary)").as("body"))
         BulkLoad.writeCells(seed(1), root)
         BulkLoad.writeCells(seed(2), root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        def inList(pred: Int): String = Tables.documents(s, d)
-          .filter(col("doc_id") % pred === 0).select(col("doc_id").cast("long"))
-          .collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        // bounded: mask batch 1 of every %52 key (marker at the bound)
-        s.sql(s"DELETE FROM $cat.q231 WHERE rowkey IN ${inList(52)} AND version <= 1999999999")
-        // bare: mask EVERYTHING of every %104 key (marker at its latest)
-        s.sql(s"DELETE FROM $cat.q231 WHERE rowkey IN ${inList(104)}")
-        val n52 = Tables.documents(s, d).filter(col("doc_id") % 52 === 0).count()
-        val n104 = Tables.documents(s, d).filter(col("doc_id") % 104 === 0).count()
-        val markers = s.sql(
-          s"SELECT cast(rowkey as string) AS k, version FROM $cat.`q231$$changes` " +
-            "WHERE op = 'delete'").collect().map(r => (r.getString(0), r.getLong(1)))
-        require(markers.length == n52 + n104 && n104 > 0,
-          s"one marker per bounded key + one per bare key: ${markers.length} vs ${n52 + n104}")
-        require(markers.count(_._2 == 1999999999L) == n52,
-          "bounded deletes stamp the statement's bound")
-        require(markers.filter(_._2 != 1999999999L).forall { case (k, v) =>
-          v == 2000000000L + k.stripPrefix("doc-").toLong },
-          "bare deletes stamp each key's current latest version")
-        s.table(s"$cat.q231")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          def inList(pred: Int): String = Tables.documents(s, d)
+            .filter(col("doc_id") % pred === 0).select(col("doc_id").cast("long"))
+            .collect().map(_.getLong(0)).sorted
+            .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
+            .mkString("(", ", ", ")")
+          // bounded: mask batch 1 of every %52 key (marker at the bound)
+          s.sql(s"DELETE FROM g.q231 WHERE rowkey IN ${inList(52)} AND version <= 1999999999")
+          // bare: mask EVERYTHING of every %104 key (marker at its latest)
+          s.sql(s"DELETE FROM g.q231 WHERE rowkey IN ${inList(104)}")
+          val n52 = Tables.documents(s, d).filter(col("doc_id") % 52 === 0).count()
+          val n104 = Tables.documents(s, d).filter(col("doc_id") % 104 === 0).count()
+          val markers = s.sql(
+            "SELECT cast(rowkey as string) AS k, version FROM g.`q231$changes` " +
+              "WHERE op = 'delete'").collect().map(r => (r.getString(0), r.getLong(1)))
+          require(markers.length == n52 + n104 && n104 > 0,
+            s"one marker per bounded key + one per bare key: ${markers.length} vs ${n52 + n104}")
+          require(markers.count(_._2 == 1999999999L) == n52,
+            "bounded deletes stamp the statement's bound")
+          require(markers.filter(_._2 != 1999999999L).forall { case (k, v) =>
+            v == 2000000000L + k.stripPrefix("doc-").toLong },
+            "bare deletes stamp each key's current latest version")
+          s.table("g.q231")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -724,7 +709,6 @@ object StoreLifecycle {
     // holds when each key carries thousands of versions at 100 TB).
     "q232_cells_sql_latest" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q232-cells").toString
-      val cat = "g232_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         // flush policy OFF (r15): the opened==winners invariant counts
         // PER-CELL put opens — a flushed segment opens once for all
@@ -745,28 +729,28 @@ object StoreLifecycle {
           .write.format("graft-cells").mode("append")
           .option("root", root).option("table", "q232")
           .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        graft.sources.CellsSource.filesOpened.set(0)
-        val latest = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version,
-                     cast(body as string) AS body_md5
-              FROM $cat.`q232$$latest`""").localCheckpoint()
-        val opened = graft.sources.CellsSource.filesOpened.get()
-        val expectKeys = Tables.documents(s, d)
-          .filter(col("doc_id") % 18 === 0 && col("doc_id") % 54 =!= 0).count()
-        require(latest.count() == expectKeys,
-          s"one row per surviving key: ${latest.count()} vs $expectKeys")
-        require(opened == expectKeys,
-          s"the latest fold opens ONLY winners ($expectKeys), never history: $opened")
-        // ≡ the base face's max_by fold, both ways
-        val folded = s.table(s"$cat.q232").groupBy(col("rowkey"))
-          .agg(max_by(struct(col("version"), col("body")), col("version")).as("m"))
-          .select(col("rowkey").cast("string").as("key_str"),
-            col("m.version").as("version"), col("m.body").cast("string").as("body_md5"))
-          .localCheckpoint() // evaluated once, compared twice (the q195 note)
-        sameRows(latest, folded, "tbl$latest must equal the base-face max_by fold")
-        latest
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          graft.sources.CellsSource.filesOpened.set(0)
+          val latest = s.sql(
+            s"""SELECT cast(rowkey as string) AS key_str, version,
+                       cast(body as string) AS body_md5
+                FROM g.`q232$$latest`""").localCheckpoint()
+          val opened = graft.sources.CellsSource.filesOpened.get()
+          val expectKeys = Tables.documents(s, d)
+            .filter(col("doc_id") % 18 === 0 && col("doc_id") % 54 =!= 0).count()
+          require(latest.count() == expectKeys,
+            s"one row per surviving key: ${latest.count()} vs $expectKeys")
+          require(opened == expectKeys,
+            s"the latest fold opens ONLY winners ($expectKeys), never history: $opened")
+          // ≡ the base face's max_by fold, both ways
+          val folded = s.table("g.q232").groupBy(col("rowkey"))
+            .agg(max_by(struct(col("version"), col("body")), col("version")).as("m"))
+            .select(col("rowkey").cast("string").as("key_str"),
+              col("m.version").as("version"), col("m.body").cast("string").as("body_md5"))
+            .localCheckpoint() // evaluated once, compared twice (the q195 note)
+          sameRows(latest, folded, "tbl$latest must equal the base-face max_by fold")
+          latest
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -782,10 +766,6 @@ object StoreLifecycle {
     // state, region-by-region where the data lives.
     "q233_cells_latest_spj_join" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q233-cells").toString
-      val cat = "g233_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevPush = s.conf.getOption("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
       try {
         val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
         def seed(table: String, pred: Int, tag: String, vOff: Int): Unit =
@@ -799,34 +779,24 @@ object StoreLifecycle {
             root, BulkLoad.Config(splitPoints = points))
         seed("lspja", 16, "LA", 1) // versions *4+1, *4+2 — latest body tag LA1
         seed("lspjb", 32, "LB", 5) // versions *4+5, *4+6 — latest body tag LB1
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = s.table(s"$cat.`lspja$$latest`").as("a")
-          .join(s.table(s"$cat.`lspjb$$latest`").as("b"), col("a.rowkey") === col("b.rowkey"))
-          .select(col("a.rowkey").cast("string").as("key_str"),
-            col("a.version").as("version_a"),
-            col("a.body").cast("string").as("body_a_md5"),
-            col("b.version").as("version_b"),
-            col("b.body").cast("string").as("body_b_md5"))
-        val plan = joined.queryExecution.executedPlan.toString
-        require(!plan.contains("Exchange"),
-          s"same-layout $$latest faces must storage-partition-join with no exchange:\n$plan")
-        val out = joined.localCheckpoint()
-        val bKeys = Tables.documents(s, d).filter(col("doc_id") % 32 === 0).count()
-        require(out.count() == bKeys,
-          s"one row per co-populated key (fold BEFORE join, no cross-product): ${out.count()} vs $bKeys")
-        out
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit =
-          prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        restore("spark.sql.sources.v2.bucketing.enabled", prevBucketing)
-        restore("spark.sql.sources.v2.bucketing.pushPartValues.enabled", prevPush)
-        restore("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      }
+        withConf(s, cellsCatalog("g", root) ++ spjConfs: _*) { s =>
+          val joined = s.table("g.`lspja$latest`").as("a")
+            .join(s.table("g.`lspjb$latest`").as("b"), col("a.rowkey") === col("b.rowkey"))
+            .select(col("a.rowkey").cast("string").as("key_str"),
+              col("a.version").as("version_a"),
+              col("a.body").cast("string").as("body_a_md5"),
+              col("b.version").as("version_b"),
+              col("b.body").cast("string").as("body_b_md5"))
+          val plan = joined.queryExecution.executedPlan.toString
+          require(!plan.contains("Exchange"),
+            s"same-layout $$latest faces must storage-partition-join with no exchange:\n$plan")
+          val out = joined.localCheckpoint()
+          val bKeys = Tables.documents(s, d).filter(col("doc_id") % 32 === 0).count()
+          require(out.count() == bKeys,
+            s"one row per co-populated key (fold BEFORE join, no cross-product): ${out.count()} vs $bKeys")
+          out
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
     // SQL MERGE INTO — the DML face of the q73 upsert: DSv2 row-level
@@ -855,7 +825,6 @@ object StoreLifecycle {
     // idempotent renames, no coordinator.
     "q234_cells_sql_merge" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q234-cells").toString
-      val cat = "g234_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         // target: %24 keys at v1 ('O' bodies)
         BulkLoad.writeCells(
@@ -865,66 +834,66 @@ object StoreLifecycle {
               expr("doc_id * 4 + 1").as("version"),
               expr("cast(md5(concat(cast(doc_id as string), 'O')) as binary)").as("body")),
           root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        graft.sources.MergeSourcePruning.install(s)
-        graft.sources.CellsSource.filesOpened.set(0)
-        graft.sources.CellsSource.runtimeFilteredKeys.set(0)
-        // source: %16 keys at v2 ('N' bodies); %96 keys are deletions
-        s.sql(
-          s"""MERGE INTO $cat.q234 t
-              USING (SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
-                            cast(doc_id * 4 + 2 as bigint) AS version,
-                            cast(md5(concat(cast(doc_id as string), 'N')) as binary) AS body,
-                            doc_id % 96 = 0 AS del
-                     FROM parquet.`$d/documents.parquet`
-                     WHERE doc_id % 16 = 0) s
-              ON t.rowkey = s.rowkey
-              WHEN MATCHED AND s.del THEN DELETE
-              WHEN MATCHED THEN UPDATE SET version = s.version, body = s.body
-              WHEN NOT MATCHED AND NOT s.del THEN
-                INSERT (rowkey, version, body) VALUES (s.rowkey, s.version, s.body)""")
-        // the I/O shape, captured BEFORE any further read touches the
-        // counters: the pre-pass delivered the source's keys to the
-        // scan, and the scan opened exactly the MATCHED cells (%48 —
-        // target %24 ∩ source %16), not the whole target
-        val mergeOpens = graft.sources.CellsSource.filesOpened.get()
-        val mergeNarrowedKeys = graft.sources.CellsSource.runtimeFilteredKeys.get()
-        val merged = s.table(s"$cat.q234")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        // ≡ the q73 union+argmax upsert over the same logical inputs
-        val docs = Tables.documents(s, d)
-        val target0 = docs.filter(col("doc_id") % 24 === 0)
-          .select(expr("concat('doc-', doc_id)").as("key_str"),
-            expr("cast(doc_id * 4 + 1 as bigint)").as("version"),
-            expr("md5(concat(cast(doc_id as string), 'O'))").as("body_md5"))
-        val source0 = docs.filter(col("doc_id") % 16 === 0)
-          .select(expr("concat('doc-', doc_id)").as("key_str"),
-            expr("cast(doc_id * 4 + 2 as bigint)").as("version"),
-            expr("md5(concat(cast(doc_id as string), 'N'))").as("body_md5"),
-            (col("doc_id") % 96 === 0).as("del"))
-        val upsert = target0.withColumn("del", lit(false)).unionByName(source0)
-          .groupBy(col("key_str"))
-          .agg(max_by(struct(col("version"), col("body_md5"), col("del")), col("version")).as("m"))
-          .filter(!col("m.del"))
-          .select(col("key_str"), col("m.version").as("version"), col("m.body_md5").as("body_md5"))
-        sameRows(merged, upsert,
-          "MERGE must equal the union+argmax upsert (the q73 operator) both ways")
-        // marker physics: exactly one EXACT marker per replaced/deleted
-        // old cell (every matched %48 key's v1), no bound markers
-        val n48 = docs.filter(col("doc_id") % 48 === 0).count()
-        val markers = s.sql(s"SELECT version, op FROM $cat.`q234$$changes` WHERE op != 'put'")
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        require(markers.length == n48 && markers.forall(_._2 == "delete_version"),
-          s"one exact marker per replaced cell, never a bound: ${markers.length} vs $n48")
-        val n16 = docs.filter(col("doc_id") % 16 === 0).count()
-        require(mergeNarrowedKeys == n16,
-          s"the source-key pre-pass must reach the target scan: $mergeNarrowedKeys vs $n16 source keys")
-        require(mergeOpens == n48,
-          s"a narrowed MERGE opens exactly the matched cells (two-sided): $mergeOpens vs $n48")
-        merged
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          graft.sources.MergeSourcePruning.install(s)
+          graft.sources.CellsSource.filesOpened.set(0)
+          graft.sources.CellsSource.runtimeFilteredKeys.set(0)
+          // source: %16 keys at v2 ('N' bodies); %96 keys are deletions
+          s.sql(
+            s"""MERGE INTO g.q234 t
+                USING (SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
+                              cast(doc_id * 4 + 2 as bigint) AS version,
+                              cast(md5(concat(cast(doc_id as string), 'N')) as binary) AS body,
+                              doc_id % 96 = 0 AS del
+                       FROM parquet.`$d/documents.parquet`
+                       WHERE doc_id % 16 = 0) s
+                ON t.rowkey = s.rowkey
+                WHEN MATCHED AND s.del THEN DELETE
+                WHEN MATCHED THEN UPDATE SET version = s.version, body = s.body
+                WHEN NOT MATCHED AND NOT s.del THEN
+                  INSERT (rowkey, version, body) VALUES (s.rowkey, s.version, s.body)""")
+          // the I/O shape, captured BEFORE any further read touches the
+          // counters: the pre-pass delivered the source's keys to the
+          // scan, and the scan opened exactly the MATCHED cells (%48 —
+          // target %24 ∩ source %16), not the whole target
+          val mergeOpens = graft.sources.CellsSource.filesOpened.get()
+          val mergeNarrowedKeys = graft.sources.CellsSource.runtimeFilteredKeys.get()
+          val merged = s.table("g.q234")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+          // ≡ the q73 union+argmax upsert over the same logical inputs
+          val docs = Tables.documents(s, d)
+          val target0 = docs.filter(col("doc_id") % 24 === 0)
+            .select(expr("concat('doc-', doc_id)").as("key_str"),
+              expr("cast(doc_id * 4 + 1 as bigint)").as("version"),
+              expr("md5(concat(cast(doc_id as string), 'O'))").as("body_md5"))
+          val source0 = docs.filter(col("doc_id") % 16 === 0)
+            .select(expr("concat('doc-', doc_id)").as("key_str"),
+              expr("cast(doc_id * 4 + 2 as bigint)").as("version"),
+              expr("md5(concat(cast(doc_id as string), 'N'))").as("body_md5"),
+              (col("doc_id") % 96 === 0).as("del"))
+          val upsert = target0.withColumn("del", lit(false)).unionByName(source0)
+            .groupBy(col("key_str"))
+            .agg(max_by(struct(col("version"), col("body_md5"), col("del")), col("version")).as("m"))
+            .filter(!col("m.del"))
+            .select(col("key_str"), col("m.version").as("version"), col("m.body_md5").as("body_md5"))
+          sameRows(merged, upsert,
+            "MERGE must equal the union+argmax upsert (the q73 operator) both ways")
+          // marker physics: exactly one EXACT marker per replaced/deleted
+          // old cell (every matched %48 key's v1), no bound markers
+          val n48 = docs.filter(col("doc_id") % 48 === 0).count()
+          val markers = s.sql("SELECT version, op FROM g.`q234$changes` WHERE op != 'put'")
+            .collect().map(r => (r.getLong(0), r.getString(1)))
+          require(markers.length == n48 && markers.forall(_._2 == "delete_version"),
+            s"one exact marker per replaced cell, never a bound: ${markers.length} vs $n48")
+          val n16 = docs.filter(col("doc_id") % 16 === 0).count()
+          require(mergeNarrowedKeys == n16,
+            s"the source-key pre-pass must reach the target scan: $mergeNarrowedKeys vs $n16 source keys")
+          require(mergeOpens == n48,
+            s"a narrowed MERGE opens exactly the matched cells (two-sided): $mergeOpens vs $n48")
+          merged
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -940,7 +909,6 @@ object StoreLifecycle {
     // marker physics. 100 TB: same scan/write posture as q234.
     "q235_cells_sql_update" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q235-cells").toString
-      val cat = "g235_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         def seed(v: Int) = Tables.documents(s, d).filter(col("doc_id") % 20 === 0)
           .select(lit("q235").as("tableName"),
@@ -949,27 +917,27 @@ object StoreLifecycle {
             expr(s"cast(md5(concat(cast(doc_id as string), 'W', '$v')) as binary)").as("body"))
         BulkLoad.writeCells(seed(1), root)
         BulkLoad.writeCells(seed(2), root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val n20 = Tables.documents(s, d).filter(col("doc_id") % 20 === 0).count()
-        // IN-PLACE: rewrite every v1 body, coordinates unchanged
-        s.sql(s"UPDATE $cat.q235 SET body = cast(md5(concat(cast(rowkey as string), 'P')) as binary) " +
-          "WHERE version % 4 = 1")
-        require(s.sql(s"SELECT count(*) FROM $cat.`q235$$changes` WHERE op != 'put'")
-          .collect()(0).getLong(0) == 0,
-          "in-place updates are overwrite puts — no markers may land")
-        // MOVE: shift every v2 cell up; old coordinates exact-deleted
-        s.sql(s"UPDATE $cat.q235 SET version = version + 1000000000 WHERE version % 4 = 2")
-        val moveMarkers = s.sql(
-          s"SELECT count(*) FROM $cat.`q235$$changes` WHERE op = 'delete_version'")
-          .collect()(0).getLong(0)
-        require(moveMarkers == n20, s"one exact marker per moved cell: $moveMarkers vs $n20")
-        val out = s.table(s"$cat.q235")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        require(out.count() == 2 * n20, "updates never change the cell count")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          val n20 = Tables.documents(s, d).filter(col("doc_id") % 20 === 0).count()
+          // IN-PLACE: rewrite every v1 body, coordinates unchanged
+          s.sql("UPDATE g.q235 SET body = cast(md5(concat(cast(rowkey as string), 'P')) as binary) " +
+            "WHERE version % 4 = 1")
+          require(s.sql("SELECT count(*) FROM g.`q235$changes` WHERE op != 'put'")
+            .collect()(0).getLong(0) == 0,
+            "in-place updates are overwrite puts — no markers may land")
+          // MOVE: shift every v2 cell up; old coordinates exact-deleted
+          s.sql("UPDATE g.q235 SET version = version + 1000000000 WHERE version % 4 = 2")
+          val moveMarkers = s.sql(
+            "SELECT count(*) FROM g.`q235$changes` WHERE op = 'delete_version'")
+            .collect()(0).getLong(0)
+          require(moveMarkers == n20, s"one exact marker per moved cell: $moveMarkers vs $n20")
+          val out = s.table("g.q235")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+          require(out.count() == 2 * n20, "updates never change the cell count")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -989,41 +957,40 @@ object StoreLifecycle {
     // routing ∘ read-time masking ∘ the major's byte reclaim.
     "q236_cells_sql_alter_retention" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q236-cells").toString
-      val cat = "g236_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q236 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('maxVersions'='5')")
-        // fixture seeding rides the bulk path (the 8.6× heavy-ingest
-        // face; the recorded maxVersions=5 DDL is write-once and
-        // survives) — the gate measures ALTER + retention, not the
-        // put path
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 21 === 0)
-            .select(col("doc_id"), explode(array(lit(1), lit(2), lit(3))).as("g"))
-            .select(lit("q236").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 4 + g").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), '|', cast(g as string))) as binary)").as("body")),
-          root)
-        val n21 = Tables.documents(s, d).filter(col("doc_id") % 21 === 0).count()
-        require(s.table(s"$cat.q236").count() == 3 * n21,
-          "under the cap of 5 all three generations serve")
-        s.sql(s"ALTER TABLE $cat.q236 SET TBLPROPERTIES('maxVersions' = '1')")
-        def view() = s.table(s"$cat.q236")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val before = view().collect().map(_.toString).sorted.toSeq
-        require(before.size == n21,
-          "the altered cap masks over-cap versions on the very next read")
-        require(s.table(s"$cat.`q236$$changes`").count() == 3 * n21,
-          "the hidden generations are still physically present (edit log never masks)")
-        Compaction.major(s, root, "q236")
-        val out = view().localCheckpoint()
-        require(out.collect().map(_.toString).sorted.toSeq == before,
-          "the major reclaims bytes, never changes answers — view identical across it")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q236 (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('maxVersions'='5')")
+          // fixture seeding rides the bulk path (the 8.6× heavy-ingest
+          // face; the recorded maxVersions=5 DDL is write-once and
+          // survives) — the gate measures ALTER + retention, not the
+          // put path
+          BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % 21 === 0)
+              .select(col("doc_id"), explode(array(lit(1), lit(2), lit(3))).as("g"))
+              .select(lit("q236").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                expr("doc_id * 4 + g").as("version"),
+                expr("cast(md5(concat(cast(doc_id as string), '|', cast(g as string))) as binary)").as("body")),
+            root)
+          val n21 = Tables.documents(s, d).filter(col("doc_id") % 21 === 0).count()
+          require(s.table("g.q236").count() == 3 * n21,
+            "under the cap of 5 all three generations serve")
+          s.sql("ALTER TABLE g.q236 SET TBLPROPERTIES('maxVersions' = '1')")
+          def view() = s.table("g.q236")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+          val before = view().collect().map(_.toString).sorted.toSeq
+          require(before.size == n21,
+            "the altered cap masks over-cap versions on the very next read")
+          require(s.table("g.`q236$changes`").count() == 3 * n21,
+            "the hidden generations are still physically present (edit log never masks)")
+          Compaction.major(s, root, "q236")
+          val out = view().localCheckpoint()
+          require(out.collect().map(_.toString).sorted.toSeq == before,
+            "the major reclaims bytes, never changes answers — view identical across it")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1041,59 +1008,58 @@ object StoreLifecycle {
       val root = Files.createTempDirectory("graft-q237-cells").toString
       val ck = Files.createTempDirectory("graft-q237-ck").toString
       val out = Files.createTempDirectory("graft-q237-out").toString + "/rows"
-      val cat = "g237_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // generation DOMINATES the version (v*1e9 + id): the feed's
-        // offset is a global version watermark, so a second generation
-        // must land strictly above the first window's max everywhere —
-        // interleaved versions would be back-dated writes, outside the
-        // delivery guarantee (the documented producer contract)
-        // each generation lands as one BULK load (the 8.6× path): the
-        // feed's watermark reads segment trailers exactly like put
-        // filenames, and this gate measures the catalog stream, not
-        // the put path
-        def seed(pred: Int, v: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-            .select(lit("q237").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr(s"$v * 1000000000 + doc_id").as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), '>', '$v')) as binary)").as("body")),
-          root)
-        def drain(): Unit = {
-          val q = s.readStream.table(s"$cat.`q237$$changes`")
-            .select(col("rowkey").cast("string").as("key_str"), col("version"),
-              col("body").cast("string").as("body_md5"), col("op"))
-            .writeStream
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-              df.write.mode("append").parquet(out)
-            }
-            .option("checkpointLocation", ck.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // generation DOMINATES the version (v*1e9 + id): the feed's
+          // offset is a global version watermark, so a second generation
+          // must land strictly above the first window's max everywhere —
+          // interleaved versions would be back-dated writes, outside the
+          // delivery guarantee (the documented producer contract)
+          // each generation lands as one BULK load (the 8.6× path): the
+          // feed's watermark reads segment trailers exactly like put
+          // filenames, and this gate measures the catalog stream, not
+          // the put path
+          def seed(pred: Int, v: Int): Unit = BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % pred === 0)
+              .select(lit("q237").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                expr(s"$v * 1000000000 + doc_id").as("version"),
+                expr(s"cast(md5(concat(cast(doc_id as string), '>', '$v')) as binary)").as("body")),
+            root)
+          def drain(): Unit = {
+            val q = s.readStream.table("g.`q237$changes`")
+              .select(col("rowkey").cast("string").as("key_str"), col("version"),
+                col("body").cast("string").as("body_md5"), col("op"))
+              .writeStream
+              .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+                df.write.mode("append").parquet(out)
+              }
+              .option("checkpointLocation", ck.toString)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .start()
+            q.awaitTermination()
+          }
+          seed(17, 1)
+          drain()
+          val n17 = Tables.documents(s, d).filter(col("doc_id") % 17 === 0).count()
+          require(s.read.parquet(out).count() == n17, "first drain = the seed window")
+          // between drains: a second put generation and a SQL DELETE of
+          // every third seeded key (marker above both versions)
+          seed(17, 2)
+          val delKeys = Tables.documents(s, d).filter(col("doc_id") % 51 === 0)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
+          val inList = delKeys
+            .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
+            .mkString("(", ", ", ")")
+          s.sql(s"DELETE FROM g.q237 WHERE rowkey IN $inList") // bare: stamps latest (v2)
+          drain()
+          val log = s.read.parquet(out).localCheckpoint()
+          require(log.count() == 2 * n17 + delKeys.length,
+            s"the second drain delivers exactly the new window once: ${log.count()}")
+          require(log.filter(col("op") === "delete").count() == delKeys.length,
+            "markers arrive typed through the catalog stream")
+          log
         }
-        seed(17, 1)
-        drain()
-        val n17 = Tables.documents(s, d).filter(col("doc_id") % 17 === 0).count()
-        require(s.read.parquet(out).count() == n17, "first drain = the seed window")
-        // between drains: a second put generation and a SQL DELETE of
-        // every third seeded key (marker above both versions)
-        seed(17, 2)
-        val delKeys = Tables.documents(s, d).filter(col("doc_id") % 51 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-        val inList = delKeys
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q237 WHERE rowkey IN $inList") // bare: stamps latest (v2)
-        drain()
-        val log = s.read.parquet(out).localCheckpoint()
-        require(log.count() == 2 * n17 + delKeys.length,
-          s"the second drain delivers exactly the new window once: ${log.count()}")
-        require(log.filter(col("op") === "delete").count() == delKeys.length,
-          "markers arrive typed through the catalog stream")
-        log
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
@@ -1123,77 +1089,76 @@ object StoreLifecycle {
     "q238_cells_cdc_replication" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q238-cells").toString
       val ck = Files.createTempDirectory("graft-q238-ck").toString
-      val cat = "g238_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q238r (rowkey BINARY, version BIGINT, body BINARY)")
-        // source generations land as bulk loads (fixture hygiene — the
-        // gate measures the replication loop, not the put path); the
-        // feed ships segment-resident edits identically
-        def seed(v: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 19 === 0)
-            .select(lit("q238s").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr(s"$v * 1000000000 + doc_id").as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), '*', '$v')) as binary)").as("body")),
-          root)
-        def drain(): Unit = {
-          val q = s.readStream.table(s"$cat.`q238s$$changes`")
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-              // the batch frame lives in the STREAM'S cloned session —
-              // views and statements must resolve through it, not the
-              // outer session (same conf, so the catalog resolves)
-              val bs = batch.sparkSession
-              // puts apply as an idempotent MERGE on the cell identity
-              val v = s"q238_win_$id"
-              batch.filter(col("op") === "put")
-                .select("rowkey", "version", "body").createOrReplaceTempView(v)
-              bs.sql(
-                s"""MERGE INTO $cat.q238r t USING $v e
-                    ON t.rowkey = e.rowkey AND t.version = e.version
-                    WHEN MATCHED THEN UPDATE SET body = e.body
-                    WHEN NOT MATCHED THEN
-                      INSERT (rowkey, version, body) VALUES (e.rowkey, e.version, e.body)""")
-              bs.catalog.dropTempView(v)
-              // markers apply through their own write faces, kind-typed
-              Seq(("delete", "false"), ("delete_version", "true")).foreach { case (op, exact) =>
-                val dels = batch.filter(col("op") === op).select("rowkey", "version")
-                  .withColumn("body", lit(Array.emptyByteArray))
-                if (!dels.isEmpty)
-                  dels.write.format("graft-cells").mode("append")
-                    .option("root", root).option("table", "q238r")
-                    .option("tombstone", "true").option("tombstoneExact", exact).save()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q238r (rowkey BINARY, version BIGINT, body BINARY)")
+          // source generations land as bulk loads (fixture hygiene — the
+          // gate measures the replication loop, not the put path); the
+          // feed ships segment-resident edits identically
+          def seed(v: Int): Unit = BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % 19 === 0)
+              .select(lit("q238s").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                expr(s"$v * 1000000000 + doc_id").as("version"),
+                expr(s"cast(md5(concat(cast(doc_id as string), '*', '$v')) as binary)").as("body")),
+            root)
+          def drain(): Unit = {
+            val q = s.readStream.table("g.`q238s$changes`")
+              .writeStream
+              .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+                // the batch frame lives in the STREAM'S cloned session —
+                // views and statements must resolve through it, not the
+                // outer session (same conf, so the catalog resolves)
+                val bs = batch.sparkSession
+                // puts apply as an idempotent MERGE on the cell identity
+                val v = s"q238_win_$id"
+                batch.filter(col("op") === "put")
+                  .select("rowkey", "version", "body").createOrReplaceTempView(v)
+                bs.sql(
+                  s"""MERGE INTO g.q238r t USING $v e
+                      ON t.rowkey = e.rowkey AND t.version = e.version
+                      WHEN MATCHED THEN UPDATE SET body = e.body
+                      WHEN NOT MATCHED THEN
+                        INSERT (rowkey, version, body) VALUES (e.rowkey, e.version, e.body)""")
+                bs.catalog.dropTempView(v)
+                // markers apply through their own write faces, kind-typed
+                Seq(("delete", "false"), ("delete_version", "true")).foreach { case (op, exact) =>
+                  val dels = batch.filter(col("op") === op).select("rowkey", "version")
+                    .withColumn("body", lit(Array.emptyByteArray))
+                  if (!dels.isEmpty)
+                    dels.write.format("graft-cells").mode("append")
+                      .option("root", root).option("table", "q238r")
+                      .option("tombstone", "true").option("tombstoneExact", exact).save()
+                }
               }
-            }
-            .option("checkpointLocation", ck)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+              .option("checkpointLocation", ck)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .start()
+            q.awaitTermination()
+          }
+          seed(1)
+          drain()
+          val n19 = Tables.documents(s, d).filter(col("doc_id") % 19 === 0).count()
+          require(s.table("g.q238r").count() == n19,
+            "after the first drain the replica carries exactly the seed window")
+          // between drains: a second generation and a bare SQL DELETE of
+          // every third seeded key (stamps its latest — masks everything)
+          seed(2)
+          val inList = Tables.documents(s, d).filter(col("doc_id") % 57 === 0)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
+            .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
+            .mkString("(", ", ", ")")
+          s.sql(s"DELETE FROM g.q238s WHERE rowkey IN $inList")
+          drain()
+          def view(t: String) = s.table(s"g.$t")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+          val src = view("q238s").localCheckpoint() // the q195 note
+          val rep = view("q238r").localCheckpoint()
+          sameRows(rep, src,
+            "the replica's masked view must equal the source's — the replication contract")
+          rep
         }
-        seed(1)
-        drain()
-        val n19 = Tables.documents(s, d).filter(col("doc_id") % 19 === 0).count()
-        require(s.table(s"$cat.q238r").count() == n19,
-          "after the first drain the replica carries exactly the seed window")
-        // between drains: a second generation and a bare SQL DELETE of
-        // every third seeded key (stamps its latest — masks everything)
-        seed(2)
-        val inList = Tables.documents(s, d).filter(col("doc_id") % 57 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q238s WHERE rowkey IN $inList")
-        drain()
-        def view(t: String) = s.table(s"$cat.$t")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val src = view("q238s").localCheckpoint() // the q195 note
-        val rep = view("q238r").localCheckpoint()
-        sameRows(rep, src,
-          "the replica's masked view must equal the source's — the replication contract")
-        rep
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
@@ -1212,47 +1177,46 @@ object StoreLifecycle {
     // driver hash pins truncate ∘ reload ∘ marker clearance.
     "q239_cells_sql_insert_overwrite" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q239-cells").toString
-      val cat = "g239_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q239 (rowkey BINARY, version BIGINT, body BINARY)")
-        s.sql(
-          s"""INSERT INTO $cat.q239
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast(doc_id * 4 + 2 as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'OLD')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 22 = 0""")
-        // bare-delete every second seeded key: markers at *4+2
-        val inList = Tables.documents(s, d).filter(col("doc_id") % 44 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q239 WHERE rowkey IN $inList")
-        // overwrite with a generation at versions BELOW the old marker
-        // bounds: only a real truncate (markers included) makes the
-        // %132 keys (44∩33) visible
-        s.sql(
-          s"""INSERT OVERWRITE $cat.q239
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast(doc_id * 4 + 1 as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'NEW')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 33 = 0""")
-        val n33 = Tables.documents(s, d).filter(col("doc_id") % 33 === 0).count()
-        val out = s.table(s"$cat.q239")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        require(out.count() == n33, s"exactly the new generation: ${out.count()} vs $n33")
-        val overlap = Tables.documents(s, d).filter(col("doc_id") % 132 === 0).count()
-        require(overlap > 0 && out.filter(col("key_str").isin(
-          Tables.documents(s, d).filter(col("doc_id") % 132 === 0)
-            .select(expr("concat('doc-', doc_id)")).collect().map(_.getString(0)).toSeq: _*))
-          .count() == overlap,
-          "keys the old markers covered are visible below the old bounds — markers cleared")
-        require(s.sql(s"SELECT count(*) FROM $cat.`q239$$changes` WHERE op != 'put'")
-          .collect()(0).getLong(0) == 0, "no marker survives an overwrite")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q239 (rowkey BINARY, version BIGINT, body BINARY)")
+          s.sql(
+            s"""INSERT INTO g.q239
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast(doc_id * 4 + 2 as bigint),
+                       cast(md5(concat(cast(doc_id as string), 'OLD')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % 22 = 0""")
+          // bare-delete every second seeded key: markers at *4+2
+          val inList = Tables.documents(s, d).filter(col("doc_id") % 44 === 0)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
+            .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
+            .mkString("(", ", ", ")")
+          s.sql(s"DELETE FROM g.q239 WHERE rowkey IN $inList")
+          // overwrite with a generation at versions BELOW the old marker
+          // bounds: only a real truncate (markers included) makes the
+          // %132 keys (44∩33) visible
+          s.sql(
+            s"""INSERT OVERWRITE g.q239
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast(doc_id * 4 + 1 as bigint),
+                       cast(md5(concat(cast(doc_id as string), 'NEW')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % 33 = 0""")
+          val n33 = Tables.documents(s, d).filter(col("doc_id") % 33 === 0).count()
+          val out = s.table("g.q239")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+          require(out.count() == n33, s"exactly the new generation: ${out.count()} vs $n33")
+          val overlap = Tables.documents(s, d).filter(col("doc_id") % 132 === 0).count()
+          require(overlap > 0 && out.filter(col("key_str").isin(
+            Tables.documents(s, d).filter(col("doc_id") % 132 === 0)
+              .select(expr("concat('doc-', doc_id)")).collect().map(_.getString(0)).toSeq: _*))
+            .count() == overlap,
+            "keys the old markers covered are visible below the old bounds — markers cleared")
+          require(s.sql("SELECT count(*) FROM g.`q239$changes` WHERE op != 'put'")
+            .collect()(0).getLong(0) == 0, "no marker survives an overwrite")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1269,41 +1233,40 @@ object StoreLifecycle {
     // descriptor carriage ∘ cutoff derivation ∘ the GC.
     "q240_cells_sql_ttl_ddl" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q240-cells").toString
-      val cat = "g240_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q240 (rowkey BINARY, version BIGINT, body BINARY)")
-        // versions are epoch-millis-like stamps: an OLD generation for
-        // every %13 key, a RECENT one for every %26 key — so %13∧¬%26
-        // keys hold ONLY expired versions (the minVersions=1 case)
-        def seed(pred: Int, base: Long, tag: String): Unit =
-          s.sql(s"""INSERT INTO $cat.q240
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($base + doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), '$tag')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % $pred = 0""")
-        seed(13, 0L, "T1")
-        seed(26, 5000000L, "T2")
-        val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
-        val n26 = Tables.documents(s, d).filter(col("doc_id") % 26 === 0).count()
-        // no TTL yet: a major expires nothing
-        Compaction.major(s, root, "q240", nowMillis = () => 5600000L)
-        require(s.table(s"$cat.q240").count() == n13 + n26,
-          "the FOREVER default expires nothing")
-        s.sql(s"ALTER TABLE $cat.q240 SET TBLPROPERTIES('ttlMillis' = '1000000')")
-        val props = s.sql(s"SHOW TBLPROPERTIES $cat.q240")
-          .collect().map(r => (r.getString(0), r.getString(1))).toMap
-        require(props.get("ttlMillis").contains("1000000"), s"$props")
-        // cutoff = 5,600,000 − 1,000,000: the old generation expires
-        // EXCEPT where it is a key's only (latest) version
-        Compaction.major(s, root, "q240", nowMillis = () => 5600000L)
-        val out = s.table(s"$cat.q240")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        require(out.count() == n13, s"one survivor per key: ${out.count()} vs $n13")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q240 (rowkey BINARY, version BIGINT, body BINARY)")
+          // versions are epoch-millis-like stamps: an OLD generation for
+          // every %13 key, a RECENT one for every %26 key — so %13∧¬%26
+          // keys hold ONLY expired versions (the minVersions=1 case)
+          def seed(pred: Int, base: Long, tag: String): Unit =
+            s.sql(s"""INSERT INTO g.q240
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast($base + doc_id as bigint),
+                       cast(md5(concat(cast(doc_id as string), '$tag')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % $pred = 0""")
+          seed(13, 0L, "T1")
+          seed(26, 5000000L, "T2")
+          val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
+          val n26 = Tables.documents(s, d).filter(col("doc_id") % 26 === 0).count()
+          // no TTL yet: a major expires nothing
+          Compaction.major(s, root, "q240", nowMillis = () => 5600000L)
+          require(s.table("g.q240").count() == n13 + n26,
+            "the FOREVER default expires nothing")
+          s.sql("ALTER TABLE g.q240 SET TBLPROPERTIES('ttlMillis' = '1000000')")
+          val props = s.sql("SHOW TBLPROPERTIES g.q240")
+            .collect().map(r => (r.getString(0), r.getString(1))).toMap
+          require(props.get("ttlMillis").contains("1000000"), s"$props")
+          // cutoff = 5,600,000 − 1,000,000: the old generation expires
+          // EXCEPT where it is a key's only (latest) version
+          Compaction.major(s, root, "q240", nowMillis = () => 5600000L)
+          val out = s.table("g.q240")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+          require(out.count() == n13, s"one survivor per key: ${out.count()} vs $n13")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1322,55 +1285,41 @@ object StoreLifecycle {
     // driver hash pins DDL split routing ∘ catalog SPJ ∘ join rows.
     "q241_cells_sql_presplit_join" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q241-cells").toString
-      val cat = "g241_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevPush = s.conf.getOption("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8").map(b => f"$b%02x").mkString)
-          .mkString(",")
-        def create(tbl: String): Unit = s.sql(
-          s"CREATE TABLE $cat.$tbl (rowkey BINARY, version BIGINT, body BINARY) " +
-            s"TBLPROPERTIES('splitPoints' = '$points')")
-        create("pja"); create("pjb")
-        def load(tbl: String, pred: Int, tag: String, v: Int): Unit = s.sql(
-          s"""INSERT INTO $cat.$tbl
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast(doc_id * 2 + $v as bigint),
-                     cast(md5(concat(cast(doc_id as string), '$tag')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % $pred = 0""")
-        load("pja", 14, "PA", 1)
-        load("pjb", 28, "PB", 2)
-        val props = s.sql(s"SHOW TBLPROPERTIES $cat.pja")
-          .collect().map(r => (r.getString(0), r.getString(1))).toMap
-        require(props.get("splitPoints").contains(points),
-          s"the declared boundaries echo back: $props")
-        require(segShardDirs(root, "pja").size > 1 && segShardDirs(root, "pjb").size > 1,
-          "the declared split actually routed writes across regions")
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = s.table(s"$cat.pja").as("a")
-          .join(s.table(s"$cat.pjb").as("b"), col("a.rowkey") === col("b.rowkey"))
-          .select(col("a.rowkey").cast("string").as("key_str"),
-            col("a.version").as("version_a"),
-            col("a.body").cast("string").as("body_a_md5"),
-            col("b.version").as("version_b"),
-            col("b.body").cast("string").as("body_b_md5"))
-        val plan = joined.queryExecution.executedPlan.toString
-        require(!plan.contains("Exchange"),
-          s"identical DDL must storage-partition-join with no exchange:\n$plan")
-        joined.localCheckpoint()
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit =
-          prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        restore("spark.sql.sources.v2.bucketing.enabled", prevBucketing)
-        restore("spark.sql.sources.v2.bucketing.pushPartValues.enabled", prevPush)
-        restore("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      }
+        withConf(s, cellsCatalog("g", root) ++ spjConfs: _*) { s =>
+          val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8").map(b => f"$b%02x").mkString)
+            .mkString(",")
+          def create(tbl: String): Unit = s.sql(
+            s"CREATE TABLE g.$tbl (rowkey BINARY, version BIGINT, body BINARY) " +
+              s"TBLPROPERTIES('splitPoints' = '$points')")
+          create("pja"); create("pjb")
+          def load(tbl: String, pred: Int, tag: String, v: Int): Unit = s.sql(
+            s"""INSERT INTO g.$tbl
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast(doc_id * 2 + $v as bigint),
+                       cast(md5(concat(cast(doc_id as string), '$tag')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % $pred = 0""")
+          load("pja", 14, "PA", 1)
+          load("pjb", 28, "PB", 2)
+          val props = s.sql("SHOW TBLPROPERTIES g.pja")
+            .collect().map(r => (r.getString(0), r.getString(1))).toMap
+          require(props.get("splitPoints").contains(points),
+            s"the declared boundaries echo back: $props")
+          require(segShardDirs(root, "pja").size > 1 && segShardDirs(root, "pjb").size > 1,
+            "the declared split actually routed writes across regions")
+          val joined = s.table("g.pja").as("a")
+            .join(s.table("g.pjb").as("b"), col("a.rowkey") === col("b.rowkey"))
+            .select(col("a.rowkey").cast("string").as("key_str"),
+              col("a.version").as("version_a"),
+              col("a.body").cast("string").as("body_a_md5"),
+              col("b.version").as("version_b"),
+              col("b.body").cast("string").as("body_b_md5"))
+          val plan = joined.queryExecution.executedPlan.toString
+          require(!plan.contains("Exchange"),
+            s"identical DDL must storage-partition-join with no exchange:\n$plan")
+          joined.localCheckpoint()
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
     // MAINTENANCE AS SQL — Spark 4 ProcedureCatalog: `CALL
@@ -1386,42 +1335,41 @@ object StoreLifecycle {
     // pins procedure resolution ∘ argument binding ∘ the GC.
     "q242_cells_sql_call_maintenance" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q242-cells").toString
-      val cat = "g242_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q242 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('maxVersions'='2')")
-        // three generations through BULK segments (bulk loads bypass
-        // the put path's eager prune, so the major has real GC to do)
-        (1 to 3).foreach { v =>
-          BulkLoad.writeCells(
-            Tables.documents(s, d).filter(col("doc_id") % 15 === 0)
-              .select(lit("q242").as("tableName"),
-                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-                expr(s"doc_id * 8 + $v").as("version"),
-                expr(s"cast(md5(concat(cast(doc_id as string), '=', '$v')) as binary)").as("body")),
-            root)
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q242 (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('maxVersions'='2')")
+          // three generations through BULK segments (bulk loads bypass
+          // the put path's eager prune, so the major has real GC to do)
+          (1 to 3).foreach { v =>
+            BulkLoad.writeCells(
+              Tables.documents(s, d).filter(col("doc_id") % 15 === 0)
+                .select(lit("q242").as("tableName"),
+                  expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                  expr(s"doc_id * 8 + $v").as("version"),
+                  expr(s"cast(md5(concat(cast(doc_id as string), '=', '$v')) as binary)").as("body")),
+              root)
+          }
+          val n15 = Tables.documents(s, d).filter(col("doc_id") % 15 === 0).count()
+          // r15 read-time retention: the maxVersions=2 DDL masks the
+          // oldest generation on every read ALREADY — the CALL below
+          // only reclaims its bytes (all 3 generations are on disk:
+          // the $changes edit log, which never masks, sees them)
+          require(s.table("g.q242").count() == 2 * n15,
+            "the read face caps to maxVersions immediately")
+          require(s.table("g.`q242$changes`").count() == 3 * n15,
+            "the edit log proves all 3 generations physically present")
+          val rep = s.sql("CALL g.compact_major(`table` => 'q242')").collect()(0)
+          require(rep.getLong(0) == 2 * n15,
+            s"the CALL reports the retained count: ${rep.getLong(0)} vs ${2 * n15}")
+          require(segFiles(root, "q242").forall(n =>
+            CellSegment.isSegment(n) || n.startsWith("_")),
+            "post-compact the store holds only fresh segments")
+          s.table("g.q242")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
         }
-        val n15 = Tables.documents(s, d).filter(col("doc_id") % 15 === 0).count()
-        // r15 read-time retention: the maxVersions=2 DDL masks the
-        // oldest generation on every read ALREADY — the CALL below
-        // only reclaims its bytes (all 3 generations are on disk:
-        // the $changes edit log, which never masks, sees them)
-        require(s.table(s"$cat.q242").count() == 2 * n15,
-          "the read face caps to maxVersions immediately")
-        require(s.table(s"$cat.`q242$$changes`").count() == 3 * n15,
-          "the edit log proves all 3 generations physically present")
-        val rep = s.sql(s"CALL $cat.compact_major(`table` => 'q242')").collect()(0)
-        require(rep.getLong(0) == 2 * n15,
-          s"the CALL reports the retained count: ${rep.getLong(0)} vs ${2 * n15}")
-        require(segFiles(root, "q242").forall(n =>
-          CellSegment.isSegment(n) || n.startsWith("_")),
-          "post-compact the store holds only fresh segments")
-        s.table(s"$cat.q242")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1440,7 +1388,6 @@ object StoreLifecycle {
     // and shipping a winner-sized dimension to it.
     "q243_cells_latest_broadcast_enrich" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q243-cells").toString
-      val cat = "g243_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         // one bulk load carries both versions (fixture hygiene: the
         // gate measures stats-earned broadcast, not the put path)
@@ -1461,22 +1408,22 @@ object StoreLifecycle {
           .write.format("graft-cells").mode("append")
           .option("root", root).option("table", "q243")
           .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val fact = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
-          .select(col("doc_id").cast("long").as("doc_id"),
-            expr("concat('doc-', doc_id)").as("key_str"))
-        val enriched = fact.join(
-          s.table(s"$cat.`q243$$latest`")
-            .select(col("rowkey").cast("string").as("key_str"),
-              col("version").as("state_version"),
-              col("body").cast("string").as("state_md5")),
-          Seq("key_str"))
-          .select(col("key_str"), col("doc_id"), col("state_version"), col("state_md5"))
-        val plan = enriched.queryExecution.executedPlan.toString
-        require(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
-          s"the live-winner statistics must earn the broadcast under the default threshold:\n$plan")
-        enriched.localCheckpoint()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          val fact = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
+            .select(col("doc_id").cast("long").as("doc_id"),
+              expr("concat('doc-', doc_id)").as("key_str"))
+          val enriched = fact.join(
+            s.table("g.`q243$latest`")
+              .select(col("rowkey").cast("string").as("key_str"),
+                col("version").as("state_version"),
+                col("body").cast("string").as("state_md5")),
+            Seq("key_str"))
+            .select(col("key_str"), col("doc_id"), col("state_version"), col("state_md5"))
+          val plan = enriched.queryExecution.executedPlan.toString
+          require(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
+            s"the live-winner statistics must earn the broadcast under the default threshold:\n$plan")
+          enriched.localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1496,7 +1443,6 @@ object StoreLifecycle {
     // never the bodies that dominate bytes.
     "q244_cells_agg_pushdown" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q244-cells").toString
-      val cat = "g244_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         // flush policy OFF (r15): the gate's hard case IS a per-cell
         // put backlog alongside segments and markers — the default
@@ -1526,23 +1472,23 @@ object StoreLifecycle {
           .write.format("graft-cells").mode("append")
           .option("root", root).option("table", "q244")
           .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        def pushed(df: org.apache.spark.sql.DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.collectFirst {
-            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-              if r.scan.isInstanceOf[graft.sources.CellsAggScan] => r
-          }.isDefined
-        graft.sources.CellsSource.filesOpened.set(0)
-        val base = s.sql(
-          s"SELECT count(*) AS n_cells, min(version) AS min_v, max(version) AS max_v FROM $cat.q244")
-        val latest = s.sql(s"SELECT count(*) AS n_latest FROM $cat.`q244$$latest`")
-        require(pushed(base) && pushed(latest),
-          "both aggregates must push into the metadata scan")
-        val out = base.crossJoin(latest).localCheckpoint()
-        require(graft.sources.CellsSource.filesOpened.get() == 0,
-          s"pushed aggregates must read ZERO file contents, opened ${graft.sources.CellsSource.filesOpened.get()}")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          def pushed(df: org.apache.spark.sql.DataFrame): Boolean =
+            df.queryExecution.optimizedPlan.collectFirst {
+              case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+                if r.scan.isInstanceOf[graft.sources.CellsAggScan] => r
+            }.isDefined
+          graft.sources.CellsSource.filesOpened.set(0)
+          val base = s.sql(
+            "SELECT count(*) AS n_cells, min(version) AS min_v, max(version) AS max_v FROM g.q244")
+          val latest = s.sql("SELECT count(*) AS n_latest FROM g.`q244$latest`")
+          require(pushed(base) && pushed(latest),
+            "both aggregates must push into the metadata scan")
+          val out = base.crossJoin(latest).localCheckpoint()
+          require(graft.sources.CellsSource.filesOpened.get() == 0,
+            s"pushed aggregates must read ZERO file contents, opened ${graft.sources.CellsSource.filesOpened.get()}")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1561,10 +1507,6 @@ object StoreLifecycle {
     // shape that exists; compaction is what buys it.
     "q245_cells_sorted_merge_join" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q245-cells").toString
-      val cat = "g245_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      val prevBucketing = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-      val prevPush = s.conf.getOption("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
-      val prevBroadcast = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
       try {
         val points = (1 to 9).map(i => s"doc-$i".getBytes("UTF-8"))
         def seed(table: String, pred: Int, tag: String): Unit =
@@ -1577,47 +1519,37 @@ object StoreLifecycle {
             root, BulkLoad.Config(splitPoints = points))
         seed("smja", 16, "SA")
         seed("smjb", 32, "SB")
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = s.table(s"$cat.smja").as("a")
-          .join(s.table(s"$cat.smjb").as("b"), col("a.rowkey") === col("b.rowkey"))
-          .select(col("a.rowkey").cast("string").as("key_str"),
-            col("a.version").as("version"),
-            col("a.body").cast("string").as("body_a_md5"),
-            col("b.body").cast("string").as("body_b_md5"))
-        val out = joined.localCheckpoint()
-        var sorts = 0
-        var smj = 0
-        var exchanges = 0
-        def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-          p match {
-            case _: org.apache.spark.sql.execution.SortExec => sorts += 1
-            case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => smj += 1
-            case _: org.apache.spark.sql.execution.exchange.Exchange => exchanges += 1
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              walk(a.executedPlan)
-            case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-              walk(q.plan) // stages hang their subtree off .plan, not children
-            case _ => ()
+        withConf(s, cellsCatalog("g", root) ++ spjConfs: _*) { s =>
+          val joined = s.table("g.smja").as("a")
+            .join(s.table("g.smjb").as("b"), col("a.rowkey") === col("b.rowkey"))
+            .select(col("a.rowkey").cast("string").as("key_str"),
+              col("a.version").as("version"),
+              col("a.body").cast("string").as("body_a_md5"),
+              col("b.body").cast("string").as("body_b_md5"))
+          val out = joined.localCheckpoint()
+          var sorts = 0
+          var smj = 0
+          var exchanges = 0
+          def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
+            p match {
+              case _: org.apache.spark.sql.execution.SortExec => sorts += 1
+              case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => smj += 1
+              case _: org.apache.spark.sql.execution.exchange.Exchange => exchanges += 1
+              case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+                walk(a.executedPlan)
+              case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+                walk(q.plan) // stages hang their subtree off .plan, not children
+              case _ => ()
+            }
+            p.children.foreach(walk)
           }
-          p.children.foreach(walk)
+          walk(joined.queryExecution.executedPlan)
+          require(smj == 1 && exchanges == 0 && sorts == 0,
+            s"co-located merge join must be exchange-free AND sort-free: smj=$smj ex=$exchanges sorts=$sorts\n" +
+              joined.queryExecution.executedPlan)
+          out
         }
-        walk(joined.queryExecution.executedPlan)
-        require(smj == 1 && exchanges == 0 && sorts == 0,
-          s"co-located merge join must be exchange-free AND sort-free: smj=$smj ex=$exchanges sorts=$sorts\n" +
-            joined.queryExecution.executedPlan)
-        out
-      } finally {
-        def restore(key: String, prev: Option[String]): Unit =
-          prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        restore("spark.sql.sources.v2.bucketing.enabled", prevBucketing)
-        restore("spark.sql.sources.v2.bucketing.pushPartValues.enabled", prevPush)
-        restore("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
     // $VERSIONS STORE-FILE INVENTORY — the DESCRIBE HISTORY face
@@ -1634,7 +1566,6 @@ object StoreLifecycle {
     // (distinct first bytes of the key digests = populated regions).
     "q246_cells_versions_inventory" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q246-cells").toString
-      val cat = "g246_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         // flush policy OFF (r15): the inventory oracle counts the RAW
         // put backlog one file per cell — the operator override for
@@ -1662,26 +1593,26 @@ object StoreLifecycle {
         face(30, 2, Map.empty)
         face(60, 1, Map("tombstone" -> "true"))
         face(90, 2, Map("tombstone" -> "true", "tombstoneExact" -> "true"))
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        graft.sources.CellsSource.filesOpened.set(0)
-        val inv = s.sql(
-          s"""SELECT kind, count(*) AS files, sum(cells) AS cells,
-                     sum(distinct_keys) AS dkeys, min(min_version) AS min_v,
-                     max(max_version) AS max_v, max(seq_no) AS max_seq
-              FROM $cat.`q246$$versions` GROUP BY kind""")
-          .localCheckpoint()
-        // the watermark is discoverable: VERSION AS OF it sees everything
-        val watermark = s.sql(s"SELECT max(max_version) FROM $cat.`q246$$versions`")
-          .collect()(0).getLong(0)
-        val full = s.table(s"$cat.q246").count()
-        val asOf = s.sql(s"SELECT count(*) FROM $cat.q246 VERSION AS OF $watermark")
-          .collect()(0).getLong(0)
-        require(asOf == full,
-          s"max(max_version) must be the usable time-travel watermark: $asOf vs $full")
-        require(graft.sources.CellsSource.filesOpened.get() == 0,
-          "the inventory face must read zero file contents")
-        inv
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          graft.sources.CellsSource.filesOpened.set(0)
+          val inv = s.sql(
+            s"""SELECT kind, count(*) AS files, sum(cells) AS cells,
+                       sum(distinct_keys) AS dkeys, min(min_version) AS min_v,
+                       max(max_version) AS max_v, max(seq_no) AS max_seq
+                FROM g.`q246$$versions` GROUP BY kind""")
+            .localCheckpoint()
+          // the watermark is discoverable: VERSION AS OF it sees everything
+          val watermark = s.sql("SELECT max(max_version) FROM g.`q246$versions`")
+            .collect()(0).getLong(0)
+          val full = s.table("g.q246").count()
+          val asOf = s.sql(s"SELECT count(*) FROM g.q246 VERSION AS OF $watermark")
+            .collect()(0).getLong(0)
+          require(asOf == full,
+            s"max(max_version) must be the usable time-travel watermark: $asOf vs $full")
+          require(graft.sources.CellsSource.filesOpened.get() == 0,
+            "the inventory face must read zero file contents")
+          inv
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1699,7 +1630,6 @@ object StoreLifecycle {
     // "read ~k rows per region" versus "read the table, then sort".
     "q247_cells_limit_pushdown" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q247-cells").toString
-      val cat = "g247_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         BulkLoad.writeCells(
           Tables.documents(s, d).filter(col("doc_id") % 4 === 0)
@@ -1708,24 +1638,24 @@ object StoreLifecycle {
               expr("doc_id * 2 + 1").as("version"),
               expr("cast(md5(concat(cast(doc_id as string), 'L')) as binary)").as("body")),
           root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val total = Tables.documents(s, d).filter(col("doc_id") % 4 === 0).count()
-        graft.sources.CellsSource.cappedRowsEmitted.set(0)
-        val top = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version
-              FROM $cat.q247 ORDER BY rowkey LIMIT 20""")
-        val pushed = top.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(pushed.contains("topK=20"), s"top-N must reach the scan: $pushed")
-        val out = top.localCheckpoint()
-        val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
-        val regions = graft.ingest.FileStore(root).splitsOf("q247").size
-        require(emitted > 0 && emitted <= 20L * regions && emitted < total,
-          s"per-region truncation must be real: emitted $emitted, regions $regions, total $total")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          val total = Tables.documents(s, d).filter(col("doc_id") % 4 === 0).count()
+          graft.sources.CellsSource.cappedRowsEmitted.set(0)
+          val top = s.sql(
+            s"""SELECT cast(rowkey as string) AS key_str, version
+                FROM g.q247 ORDER BY rowkey LIMIT 20""")
+          val pushed = top.queryExecution.optimizedPlan.collectFirst {
+            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              r.scan.description()
+          }.getOrElse("")
+          require(pushed.contains("topK=20"), s"top-N must reach the scan: $pushed")
+          val out = top.localCheckpoint()
+          val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
+          val regions = graft.ingest.FileStore(root).splitsOf("q247").size
+          require(emitted > 0 && emitted <= 20L * regions && emitted < total,
+            s"per-region truncation must be real: emitted $emitted, regions $regions, total $total")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1748,72 +1678,71 @@ object StoreLifecycle {
     "q248_cells_streaming_sink_replication" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q248-cells").toString
       val cks = (1 to 3).map(_ => Files.createTempDirectory("graft-q248-ck").toString)
-      val cat = "g248_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q248r (rowkey BINARY, version BIGINT, body BINARY)")
-        def seed(v: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 23 === 0)
-            .select(lit("q248s").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              lit(v.toLong * 1000000000L).as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), '~', '$v')) as binary)").as("body")),
-          root)
-        // the replication consumer: three persistent streams, one per
-        // edit kind — no driver code touches a row
-        def drain(): Unit = {
-          val feed = () => s.readStream.table(s"$cat.`q248s$$changes`")
-          val streams = Seq(
-            feed().filter(col("op") === "put").select("rowkey", "version", "body")
-              .writeStream.format("graft-cells")
-              .option("root", root).option("table", "q248r")
-              .option("checkpointLocation", cks(0)),
-            feed().filter(col("op") === "delete").select("rowkey", "version")
-              .writeStream.format("graft-cells")
-              .option("root", root).option("table", "q248r")
-              .option("tombstone", "true")
-              .option("checkpointLocation", cks(1)),
-            feed().filter(col("op") === "delete_version").select("rowkey", "version")
-              .writeStream.format("graft-cells")
-              .option("root", root).option("table", "q248r")
-              .option("tombstone", "true").option("tombstoneExact", "true")
-              .option("checkpointLocation", cks(2)))
-          streams.foreach { w =>
-            val q = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-            q.awaitTermination()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q248r (rowkey BINARY, version BIGINT, body BINARY)")
+          def seed(v: Int): Unit = BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % 23 === 0)
+              .select(lit("q248s").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                lit(v.toLong * 1000000000L).as("version"),
+                expr(s"cast(md5(concat(cast(doc_id as string), '~', '$v')) as binary)").as("body")),
+            root)
+          // the replication consumer: three persistent streams, one per
+          // edit kind — no driver code touches a row
+          def drain(): Unit = {
+            val feed = () => s.readStream.table("g.`q248s$changes`")
+            val streams = Seq(
+              feed().filter(col("op") === "put").select("rowkey", "version", "body")
+                .writeStream.format("graft-cells")
+                .option("root", root).option("table", "q248r")
+                .option("checkpointLocation", cks(0)),
+              feed().filter(col("op") === "delete").select("rowkey", "version")
+                .writeStream.format("graft-cells")
+                .option("root", root).option("table", "q248r")
+                .option("tombstone", "true")
+                .option("checkpointLocation", cks(1)),
+              feed().filter(col("op") === "delete_version").select("rowkey", "version")
+                .writeStream.format("graft-cells")
+                .option("root", root).option("table", "q248r")
+                .option("tombstone", "true").option("tombstoneExact", "true")
+                .option("checkpointLocation", cks(2)))
+            streams.foreach { w =>
+              val q = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+              q.awaitTermination()
+            }
           }
+          seed(1)
+          drain()
+          val n23 = Tables.documents(s, d).filter(col("doc_id") % 23 === 0).count()
+          require(s.table("g.q248r").count() == n23,
+            "after the first drain the replica carries exactly the seed window")
+          seed(2)
+          def keyList(m: Int): String = Tables.documents(s, d)
+            .filter(col("doc_id") % m === 0)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
+            .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
+            .mkString("(", ", ", ")")
+          // a bare delete (stamps the current latest → bound marker) and
+          // an exact-version delete masking ONLY generation 2. Both land
+          // at version 2e9 — ABOVE drain 1's committed watermark (1e9),
+          // per the feed's delivery contract (q237: edits at or below a
+          // committed offset are outside the incremental window — an
+          // exact delete of an already-streamed old version is a batch
+          // repair, not a feed event)
+          s.sql(s"DELETE FROM g.q248s WHERE rowkey IN ${keyList(69)}")
+          s.sql(s"DELETE FROM g.q248s WHERE rowkey IN ${keyList(115)} " +
+            "AND version = 2000000000")
+          drain()
+          def view(t: String) = s.table(s"g.$t")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+          val src = view("q248s").localCheckpoint() // the q195 note
+          val rep = view("q248r").localCheckpoint()
+          sameRows(rep, src,
+            "the replica's masked view must equal the source's — with zero foreachBatch")
+          rep
         }
-        seed(1)
-        drain()
-        val n23 = Tables.documents(s, d).filter(col("doc_id") % 23 === 0).count()
-        require(s.table(s"$cat.q248r").count() == n23,
-          "after the first drain the replica carries exactly the seed window")
-        seed(2)
-        def keyList(m: Int): String = Tables.documents(s, d)
-          .filter(col("doc_id") % m === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        // a bare delete (stamps the current latest → bound marker) and
-        // an exact-version delete masking ONLY generation 2. Both land
-        // at version 2e9 — ABOVE drain 1's committed watermark (1e9),
-        // per the feed's delivery contract (q237: edits at or below a
-        // committed offset are outside the incremental window — an
-        // exact delete of an already-streamed old version is a batch
-        // repair, not a feed event)
-        s.sql(s"DELETE FROM $cat.q248s WHERE rowkey IN ${keyList(69)}")
-        s.sql(s"DELETE FROM $cat.q248s WHERE rowkey IN ${keyList(115)} " +
-          "AND version = 2000000000")
-        drain()
-        def view(t: String) = s.table(s"$cat.$t")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val src = view("q248s").localCheckpoint() // the q195 note
-        val rep = view("q248r").localCheckpoint()
-        sameRows(rep, src,
-          "the replica's masked view must equal the source's — with zero foreachBatch")
-        rep
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         cks.foreach(ck => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck)))
@@ -1835,7 +1764,6 @@ object StoreLifecycle {
     // never cell count.
     "q249_cells_vacuum" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q249-cells").toString
-      val cat = "g249_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         BulkLoad.writeCells(
           Tables.documents(s, d).filter(col("doc_id") % 11 === 0)
@@ -1844,31 +1772,31 @@ object StoreLifecycle {
               expr("doc_id * 3 + 1").as("version"),
               expr("cast(md5(concat(cast(doc_id as string), 'VAC')) as binary)").as("body")),
           root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // the three orphan classes a crash leaves behind
-        val staging = java.nio.file.Paths.get(root, "_overwrite_staging", "crashed", "q249")
-        Files.createDirectories(staging)
-        Files.write(staging.resolve("junk.bin"), Array.fill[Byte](128)(1))
-        val trash = java.nio.file.Paths.get(root, "_overwrite_trash", "torn", "q249")
-        Files.createDirectories(trash)
-        Files.write(trash.resolve("old.bin"), Array.fill[Byte](64)(2))
-        val shard = ShardFiles.regions(Paths.get(root, "q249")).head
-        Files.write(shard.resolve("put-torn.tmp"), Array.fill[Byte](32)(3))
-        // fresh artifacts survive the default 24h age gate
-        val r0 = s.sql(s"CALL $cat.vacuum()").collect()(0)
-        require((0 to 3).map(r0.getLong).sum == 0L,
-          s"the age gate must protect fresh (possibly-live) artifacts: $r0")
-        // the known-crash override sweeps all three classes, bytes accounted
-        val r1 = s.sql(s"CALL $cat.vacuum(older_than_ms => 0)").collect()(0)
-        require(r1.getLong(0) == 1 && r1.getLong(1) == 1 && r1.getLong(2) == 1 &&
-          r1.getLong(3) >= 128 + 64 + 32, s"sweep exactly the planted orphans: $r1")
-        val r2 = s.sql(s"CALL $cat.vacuum(older_than_ms => 0)").collect()(0)
-        require((0 to 3).map(r2.getLong).sum == 0L, s"vacuum is idempotent: $r2")
-        s.table(s"$cat.q249")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // the three orphan classes a crash leaves behind
+          val staging = java.nio.file.Paths.get(root, "_overwrite_staging", "crashed", "q249")
+          Files.createDirectories(staging)
+          Files.write(staging.resolve("junk.bin"), Array.fill[Byte](128)(1))
+          val trash = java.nio.file.Paths.get(root, "_overwrite_trash", "torn", "q249")
+          Files.createDirectories(trash)
+          Files.write(trash.resolve("old.bin"), Array.fill[Byte](64)(2))
+          val shard = ShardFiles.regions(Paths.get(root, "q249")).head
+          Files.write(shard.resolve("put-torn.tmp"), Array.fill[Byte](32)(3))
+          // fresh artifacts survive the default 24h age gate
+          val r0 = s.sql("CALL g.vacuum()").collect()(0)
+          require((0 to 3).map(r0.getLong).sum == 0L,
+            s"the age gate must protect fresh (possibly-live) artifacts: $r0")
+          // the known-crash override sweeps all three classes, bytes accounted
+          val r1 = s.sql("CALL g.vacuum(older_than_ms => 0)").collect()(0)
+          require(r1.getLong(0) == 1 && r1.getLong(1) == 1 && r1.getLong(2) == 1 &&
+            r1.getLong(3) >= 128 + 64 + 32, s"sweep exactly the planted orphans: $r1")
+          val r2 = s.sql("CALL g.vacuum(older_than_ms => 0)").collect()(0)
+          require((0 to 3).map(r2.getLong).sum == 0L, s"vacuum is idempotent: $r2")
+          s.table("g.q249")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1883,46 +1811,45 @@ object StoreLifecycle {
     // the FS layer, no cell rewrite.
     "q250_cells_sql_truncate" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q250-cells").toString
-      val cat = "g250_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q250 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('maxVersions'='4')")
-        // generation 1 (%13 keys) + a marker on every %39 key at a HIGH
-        // version — if truncate left it, the reload below would be masked
-        BulkLoad.writeCells(
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q250 (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('maxVersions'='4')")
+          // generation 1 (%13 keys) + a marker on every %39 key at a HIGH
+          // version — if truncate left it, the reload below would be masked
+          BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
+              .select(lit("q250").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                expr("doc_id * 5 + 1").as("version"),
+                expr("cast(md5(concat(cast(doc_id as string), 'OLD')) as binary)").as("body")),
+            root)
+          val marked = Tables.documents(s, d).filter(col("doc_id") % 39 === 0)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
+            .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
+            .mkString("(", ", ", ")")
+          s.sql(s"DELETE FROM g.q250 WHERE rowkey IN $marked AND version <= 9000000000")
+          val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
+          val n39 = Tables.documents(s, d).filter(col("doc_id") % 39 === 0).count()
+          require(s.table("g.q250").count() == n13 - n39, "markers mask before the truncate")
+          s.sql("TRUNCATE TABLE g.q250")
+          require(s.table("g.q250").count() == 0, "truncate empties the table")
+          val props = s.sql("SHOW TBLPROPERTIES g.q250")
+            .collect().map(r => (r.getString(0), r.getString(1))).toMap
+          require(props("maxVersions") == "4", "truncate_preserve keeps the descriptor")
+          // generation 2 reloads at versions the old markers covered —
+          // visible only because the truncate swept the markers too
           Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
-            .select(lit("q250").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 5 + 1").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'OLD')) as binary)").as("body")),
-          root)
-        val marked = Tables.documents(s, d).filter(col("doc_id") % 39 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q250 WHERE rowkey IN $marked AND version <= 9000000000")
-        val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
-        val n39 = Tables.documents(s, d).filter(col("doc_id") % 39 === 0).count()
-        require(s.table(s"$cat.q250").count() == n13 - n39, "markers mask before the truncate")
-        s.sql(s"TRUNCATE TABLE $cat.q250")
-        require(s.table(s"$cat.q250").count() == 0, "truncate empties the table")
-        val props = s.sql(s"SHOW TBLPROPERTIES $cat.q250")
-          .collect().map(r => (r.getString(0), r.getString(1))).toMap
-        require(props("maxVersions") == "4", "truncate_preserve keeps the descriptor")
-        // generation 2 reloads at versions the old markers covered —
-        // visible only because the truncate swept the markers too
-        Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 5 + 2").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), 'NEW')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q250").save()
-        s.table(s"$cat.q250")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
+            .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+              expr("doc_id * 5 + 2").as("version"),
+              expr("cast(md5(concat(cast(doc_id as string), 'NEW')) as binary)").as("body"))
+            .write.format("graft-cells").mode("append")
+            .option("root", root).option("table", "q250").save()
+          s.table("g.q250")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1940,7 +1867,6 @@ object StoreLifecycle {
     // string a serving user can actually write.
     "q251_cells_sql_rowkey_function" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q251-cells").toString
-      val cat = "g251_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         graft.functions.GraftFunctions.register(s)
         BulkLoad.writeCells(
@@ -1951,28 +1877,28 @@ object StoreLifecycle {
               expr("doc_id * 7 + 1").as("version"),
               expr("cast(md5(concat(cast(doc_id as string), 'RK')) as binary)").as("body")),
           root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val probeIds = Tables.documents(s, d).filter(col("doc_id") % 85 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-        val inList = probeIds
-          .map(id => s"""$cat.rowkey_of('{"id":"doc-$id"}')""")
-          .mkString("(", ", ", ")")
-        graft.sources.CellsSource.filesOpened.set(0)
-        val got = s.sql(
-          s"""SELECT version, cast(body as string) AS body_md5
-              FROM $cat.q251 WHERE rowkey IN $inList""")
-        val desc = got.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains(s"keys=${probeIds.length}"),
-          s"the folded rowkey_of literals must push as point keys: $desc")
-        val out = got.localCheckpoint()
-        val opened = graft.sources.CellsSource.filesOpened.get()
-        require(opened > 0 && opened <= probeIds.length,
-          s"a ${probeIds.length}-key batched GET must open at most that many files, opened $opened")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          val probeIds = Tables.documents(s, d).filter(col("doc_id") % 85 === 0)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
+          val inList = probeIds
+            .map(id => s"""g.rowkey_of('{"id":"doc-$id"}')""")
+            .mkString("(", ", ", ")")
+          graft.sources.CellsSource.filesOpened.set(0)
+          val got = s.sql(
+            s"""SELECT version, cast(body as string) AS body_md5
+                FROM g.q251 WHERE rowkey IN $inList""")
+          val desc = got.queryExecution.optimizedPlan.collectFirst {
+            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              r.scan.description()
+          }.getOrElse("")
+          require(desc.contains(s"keys=${probeIds.length}"),
+            s"the folded rowkey_of literals must push as point keys: $desc")
+          val out = got.localCheckpoint()
+          val opened = graft.sources.CellsSource.filesOpened.get()
+          require(opened > 0 && opened <= probeIds.length,
+            s"a ${probeIds.length}-key batched GET must open at most that many files, opened $opened")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -1988,7 +1914,6 @@ object StoreLifecycle {
     // file; the column materializes only when named.
     "q252_cells_metadata_columns" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q252-cells").toString
-      val cat = "g252_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         // flush policy OFF (r15): the audit counts the RAW put backlog
         // one file per cell — the operator override
@@ -2009,19 +1934,19 @@ object StoreLifecycle {
             expr("cast(md5(concat(cast(doc_id as string), 'P')) as binary)").as("body"))
           .write.format("graft-cells").mode("append")
           .option("root", root).option("table", "q252").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // every provenance pair names a real inventory file
-        val orphan = s.sql(
-          s"""SELECT t._shard, t._file FROM $cat.q252 t
-              LEFT ANTI JOIN $cat.`q252$$versions` v
-              ON t._shard = v.shard AND t._file = v.file""").count()
-        require(orphan == 0, s"provenance must name real inventory files, $orphan orphans")
-        s.sql(
-          s"""SELECT _kind AS kind, count(*) AS n,
-                     count(DISTINCT _file) AS files
-              FROM $cat.q252 GROUP BY _kind""")
-          .localCheckpoint()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // every provenance pair names a real inventory file
+          val orphan = s.sql(
+            s"""SELECT t._shard, t._file FROM g.q252 t
+                LEFT ANTI JOIN g.`q252$$versions` v
+                ON t._shard = v.shard AND t._file = v.file""").count()
+          require(orphan == 0, s"provenance must name real inventory files, $orphan orphans")
+          s.sql(
+            s"""SELECT _kind AS kind, count(*) AS n,
+                       count(DISTINCT _file) AS files
+                FROM g.q252 GROUP BY _kind""")
+            .localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -2034,32 +1959,31 @@ object StoreLifecycle {
     // The returned frame is the namespaced table's content.
     "q253_cells_namespaces" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q253-cells").toString
-      val cat = "g253_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE NAMESPACE $cat.prod")
-        s.sql(s"CREATE TABLE $cat.prod.docs (rowkey BINARY, version BIGINT, body BINARY)")
-        s.sql(s"CREATE TABLE $cat.stage.docs (rowkey BINARY, version BIGINT, body BINARY)")
-        Tables.documents(s, d).filter(col("doc_id") % 29 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("doc_id * 9 + 1").as("version"),
-            expr("cast(md5(concat(cast(doc_id as string), 'NS')) as binary)").as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "prod:docs").save()
-        val ns = s.sql(s"SHOW NAMESPACES IN $cat").collect().map(_.getString(0)).toSet
-        require(ns == Set("prod", "stage"), s"explicit + implicit namespaces list: $ns")
-        require(s.table(s"$cat.stage.docs").count() == 0,
-          "same table name in another namespace is a different store table")
-        require(scala.util.Try(s.sql(s"DROP NAMESPACE $cat.stage")).isFailure,
-          "non-empty drop must refuse without CASCADE")
-        s.sql(s"DROP NAMESPACE $cat.stage CASCADE")
-        require(s.sql(s"SHOW NAMESPACES IN $cat").collect().map(_.getString(0)).toSet
-          == Set("prod"), "cascade removes the namespace and its tables")
-        s.table(s"$cat.prod.docs")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE NAMESPACE g.prod")
+          s.sql("CREATE TABLE g.prod.docs (rowkey BINARY, version BIGINT, body BINARY)")
+          s.sql("CREATE TABLE g.stage.docs (rowkey BINARY, version BIGINT, body BINARY)")
+          Tables.documents(s, d).filter(col("doc_id") % 29 === 0)
+            .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+              expr("doc_id * 9 + 1").as("version"),
+              expr("cast(md5(concat(cast(doc_id as string), 'NS')) as binary)").as("body"))
+            .write.format("graft-cells").mode("append")
+            .option("root", root).option("table", "prod:docs").save()
+          val ns = s.sql("SHOW NAMESPACES IN g").collect().map(_.getString(0)).toSet
+          require(ns == Set("prod", "stage"), s"explicit + implicit namespaces list: $ns")
+          require(s.table("g.stage.docs").count() == 0,
+            "same table name in another namespace is a different store table")
+          require(scala.util.Try(s.sql("DROP NAMESPACE g.stage")).isFailure,
+            "non-empty drop must refuse without CASCADE")
+          s.sql("DROP NAMESPACE g.stage CASCADE")
+          require(s.sql("SHOW NAMESPACES IN g").collect().map(_.getString(0)).toSet
+            == Set("prod"), "cascade removes the namespace and its tables")
+          s.table("g.prod.docs")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -2074,7 +1998,6 @@ object StoreLifecycle {
     // face holds 2× the keys in live winners alone.
     "q254_cells_latest_topn" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q254-cells").toString
-      val cat = "g254_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         BulkLoad.writeCells(
           Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
@@ -2084,24 +2007,24 @@ object StoreLifecycle {
               expr("doc_id * 2 + g").as("version"),
               expr("cast(md5(concat(cast(doc_id as string), 'T', cast(g as string))) as binary)").as("body")),
           root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val keys = Tables.documents(s, d).filter(col("doc_id") % 7 === 0).count()
-        graft.sources.CellsSource.cappedRowsEmitted.set(0)
-        val top = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version
-              FROM $cat.`q254$$latest` ORDER BY rowkey LIMIT 25""")
-        val desc = top.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains("topK=25") && desc.contains("latest"),
-          s"top-N must push into the serving face: $desc")
-        val out = top.localCheckpoint()
-        val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
-        require(emitted > 0 && emitted < keys,
-          s"the fold holds $keys winners (2x that in cells); emitted $emitted must be capped")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          val keys = Tables.documents(s, d).filter(col("doc_id") % 7 === 0).count()
+          graft.sources.CellsSource.cappedRowsEmitted.set(0)
+          val top = s.sql(
+            s"""SELECT cast(rowkey as string) AS key_str, version
+                FROM g.`q254$$latest` ORDER BY rowkey LIMIT 25""")
+          val desc = top.queryExecution.optimizedPlan.collectFirst {
+            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              r.scan.description()
+          }.getOrElse("")
+          require(desc.contains("topK=25") && desc.contains("latest"),
+            s"top-N must push into the serving face: $desc")
+          val out = top.localCheckpoint()
+          val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
+          require(emitted > 0 && emitted < keys,
+            s"the fold holds $keys winners (2x that in cells); emitted $emitted must be capped")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -2120,7 +2043,6 @@ object StoreLifecycle {
     "q255_cells_streaming_upsert_mv" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q255-cells").toString
       val ck = Files.createTempDirectory("graft-q255-ck").toString
-      val cat = "g255_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       // HISTORY (r17): this gate's rare undercount (one re-edited
       // key's count stuck at 1 — observed twice in sweep-level runs,
       // never isolated) was NOT streaming state at all. The forensic
@@ -2134,87 +2056,86 @@ object StoreLifecycle {
       // flush/minor/major sweeps; FlushReplaceRaceSpec drives the
       // interleaving deterministically through the absorb seam).
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q255mv (rowkey BINARY, version BIGINT, body BINARY)")
-        def seed(pred: Int, g: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % pred === 0)
-            .select(lit("q255s").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              lit(g.toLong * 1000000000L).as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), '#$g')) as binary)").as("body")),
-          root)
-        // RESTART-FROM-CHECKPOINT on failure (r15 verdict: one bench
-        // sweep under an ambient-slow window recorded a [STREAM_FAILED]
-        // here — a single transient state-store/checkpoint IO error
-        // kills a local[n] stream outright, since local mode has no
-        // task retries). The production posture for ANY checkpointed
-        // stream is restart: the state checkpoint + the sink's
-        // idempotent put-by-coordinate make the replay converge
-        // exactly-once BY DESIGN — this is the recovery the checkpoint
-        // exists for, not error suppression (bounded retries; the
-        // require()s below still pin exact results).
-        // state partitions sized to the stream's key cardinality (the
-        // q52/q53/q161 discipline): state is one count per seeded key
-        // (~docs/27), and every state partition costs a per-batch
-        // checkpoint commit PLUS a sink task that serializes on the
-        // MV shard's maintenance monitor — Profile r18 attributed
-        // 2x774ms of addBatch wall to 32+ sink tasks logging ~19s of
-        // blocked task-time (0.8s CPU) in a lock convoy on the single
-        // shard. Restored once the bounded drain finishes.
-        def drain(): Unit = withConf(s, "spark.sql.shuffle.partitions" -> "8")(drainWith())
-        def drainWith(): Unit = {
-          var attempts = 0
-          var done = false
-          while (!done) {
-            val q = s.readStream.table(s"$cat.`q255s$$changes`")
-              .groupBy(col("rowkey"))
-              .agg(count(lit(1)).as("edits"))
-              .select(col("rowkey"), lit(0L).as("version"),
-                col("edits").cast("string").cast("binary").as("body"))
-              .writeStream.format("graft-cells")
-              .outputMode("update")
-              .option("root", root).option("table", "q255mv")
-              .option("checkpointLocation", ck)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-            try { q.awaitTermination(); done = true }
-            catch {
-              case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-                attempts += 1
-                if (attempts > 2) throw e
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q255mv (rowkey BINARY, version BIGINT, body BINARY)")
+          def seed(pred: Int, g: Int): Unit = BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % pred === 0)
+              .select(lit("q255s").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                lit(g.toLong * 1000000000L).as("version"),
+                expr(s"cast(md5(concat(cast(doc_id as string), '#$g')) as binary)").as("body")),
+            root)
+          // RESTART-FROM-CHECKPOINT on failure (r15 verdict: one bench
+          // sweep under an ambient-slow window recorded a [STREAM_FAILED]
+          // here — a single transient state-store/checkpoint IO error
+          // kills a local[n] stream outright, since local mode has no
+          // task retries). The production posture for ANY checkpointed
+          // stream is restart: the state checkpoint + the sink's
+          // idempotent put-by-coordinate make the replay converge
+          // exactly-once BY DESIGN — this is the recovery the checkpoint
+          // exists for, not error suppression (bounded retries; the
+          // require()s below still pin exact results).
+          // state partitions sized to the stream's key cardinality (the
+          // q52/q53/q161 discipline): state is one count per seeded key
+          // (~docs/27), and every state partition costs a per-batch
+          // checkpoint commit PLUS a sink task that serializes on the
+          // MV shard's maintenance monitor — Profile r18 attributed
+          // 2x774ms of addBatch wall to 32+ sink tasks logging ~19s of
+          // blocked task-time (0.8s CPU) in a lock convoy on the single
+          // shard.
+          def drain(): Unit = withConf(s, "spark.sql.shuffle.partitions" -> "8") { s =>
+            var attempts = 0
+            var done = false
+            while (!done) {
+              val q = s.readStream.table("g.`q255s$changes`")
+                .groupBy(col("rowkey"))
+                .agg(count(lit(1)).as("edits"))
+                .select(col("rowkey"), lit(0L).as("version"),
+                  col("edits").cast("string").cast("binary").as("body"))
+                .writeStream.format("graft-cells")
+                .outputMode("update")
+                .option("root", root).option("table", "q255mv")
+                .option("checkpointLocation", ck)
+                .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+              try { q.awaitTermination(); done = true }
+              catch {
+                case e: org.apache.spark.sql.streaming.StreamingQueryException =>
+                  attempts += 1
+                  if (attempts > 2) throw e
+              }
             }
           }
+          seed(27, 1)
+          drain()
+          val n27 = Tables.documents(s, d).filter(col("doc_id") % 27 === 0).count()
+          require(s.table("g.q255mv").count() == n27,
+            "after drain 1 the MV holds one row per key")
+          seed(54, 2) // a SUBSET re-edits — their counts must move to 2
+          drain()
+          require(s.table("g.q255mv").count() == n27,
+            "in-place upsert: re-edited keys REPLACED their row, no version litter")
+          // FORENSIC INVARIANT (r17): the MV must agree per-key with the
+          // change log's BATCH face. A mismatch here separates the two
+          // failure classes a bare hash-diff can't: if the batch face
+          // holds the missing edit, the incremental state lost it (the
+          // snapshot hazard above); if not, the feed itself under-
+          // delivered — and the message says which, per offending key.
+          val mvRows = s.table("g.q255mv")
+            .select(col("rowkey").cast("string"), col("body").cast("string"))
+            .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+          val logRows = s.table("g.`q255s$changes`")
+            .groupBy(col("rowkey").cast("string").as("k")).agg(count(lit(1)).as("n"))
+            .collect().map(r => r.getString(0) -> r.getLong(1).toString).toMap
+          val off = (mvRows.keySet ++ logRows.keySet)
+            .filter(k => mvRows.get(k) != logRows.get(k))
+          require(off.isEmpty, "MV diverged from the change log's batch face: " +
+            off.toSeq.sorted.map(k =>
+              s"$k mv=${mvRows.get(k)} log=${logRows.get(k)}").mkString("; "))
+          s.table("g.q255mv")
+            .select(col("rowkey").cast("string").as("key_str"),
+              col("body").cast("string").as("edit_count"))
+            .localCheckpoint()
         }
-        seed(27, 1)
-        drain()
-        val n27 = Tables.documents(s, d).filter(col("doc_id") % 27 === 0).count()
-        require(s.table(s"$cat.q255mv").count() == n27,
-          "after drain 1 the MV holds one row per key")
-        seed(54, 2) // a SUBSET re-edits — their counts must move to 2
-        drain()
-        require(s.table(s"$cat.q255mv").count() == n27,
-          "in-place upsert: re-edited keys REPLACED their row, no version litter")
-        // FORENSIC INVARIANT (r17): the MV must agree per-key with the
-        // change log's BATCH face. A mismatch here separates the two
-        // failure classes a bare hash-diff can't: if the batch face
-        // holds the missing edit, the incremental state lost it (the
-        // snapshot hazard above); if not, the feed itself under-
-        // delivered — and the message says which, per offending key.
-        val mvRows = s.table(s"$cat.q255mv")
-          .select(col("rowkey").cast("string"), col("body").cast("string"))
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        val logRows = s.table(s"$cat.`q255s$$changes`")
-          .groupBy(col("rowkey").cast("string").as("k")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1).toString).toMap
-        val off = (mvRows.keySet ++ logRows.keySet)
-          .filter(k => mvRows.get(k) != logRows.get(k))
-        require(off.isEmpty, "MV diverged from the change log's batch face: " +
-          off.toSeq.sorted.map(k =>
-            s"$k mv=${mvRows.get(k)} log=${logRows.get(k)}").mkString("; "))
-        s.table(s"$cat.q255mv")
-          .select(col("rowkey").cast("string").as("key_str"),
-            col("body").cast("string").as("edit_count"))
-          .localCheckpoint()
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
@@ -2226,8 +2147,8 @@ object StoreLifecycle {
     // fold itself ([[graft.ingest.Retention]], the HBase StoreScanner
     // contract), so a capped/TTL'd table answers IDENTICALLY before
     // and after its major — the major reclaims bytes, never changes
-    // answers. Clock pinned via spark.graft.retention.nowMillis =
-    // 5e12; DDL maxVersions=2, ttl=2.5e12 ⇒ cutoff 2.5e12. Three
+    // answers. Clock pinned at 5e12 by each read's `retentionNowMillis`
+    // option; DDL maxVersions=2, ttl=2.5e12 ⇒ cutoff 2.5e12. Three
     // disjoint key classes exercise each rule: A (%9) holds gens
     // 1/2/3e12 — g1 dies by RANK, g2 by TTL (rank 2 ≤ cap but
     // expired), g3 serves; B (%10=5 ∧ ¬%9) holds gens 1/2e12, both
@@ -2242,81 +2163,77 @@ object StoreLifecycle {
     // metadata, O(live versions) longs, only on retention-active DDL.
     "q256_cells_read_time_retention" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q256-cells").toString
-      val cat = "g256_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       val T = 1000000000000L
       try {
-        s.conf.set("spark.graft.retention.nowMillis", (5 * T).toString)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // flush OFF: the gate pins EXACT physical counts through the
-        // edit log, and a mid-wave flush moves a put into a segment
-        // where the put path's eager pruner can no longer see it — the
-        // over-cap version then survives physically (masked by
-        // read-time retention either way, reclaimed by the major), so
-        // the physical count would depend on task interleaving
-        s.sql(s"CREATE TABLE $cat.q256 (rowkey BINARY, version BIGINT, body BINARY) " +
-          s"TBLPROPERTIES('maxVersions'='2', 'ttlMillis'='${5 * T / 2}', " +
-          "'compactionThreshold'='0')")
-        val docs = Tables.documents(s, d)
-        val predA = col("doc_id") % 9 === 0
-        val predB = col("doc_id") % 10 === 5 && col("doc_id") % 9 =!= 0
-        val predC = col("doc_id") % 11 === 3 && col("doc_id") % 9 =!= 0 &&
-          col("doc_id") % 10 =!= 5
-        def rows(pred: org.apache.spark.sql.Column, versions: Seq[(Long, String)]) =
-          docs.filter(pred)
-            .select(col("doc_id"),
-              explode(array(versions.map { case (base, tag) =>
-                struct(lit(base).as("base"), lit(tag).as("tag")) }: _*)).as("g"))
-            .select(lit("q256").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              (col("g.base") + col("doc_id")).as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), g.tag)) as binary)").as("body"))
-        // A and B by bulk segment, C by the put path — the fold must
-        // rank across both store-file kinds
-        BulkLoad.writeCells(rows(predA, Seq((T, "R1"), (2 * T, "R2"), (3 * T, "R3"))), root)
-        BulkLoad.writeCells(rows(predB, Seq((T, "R1"), (2 * T, "R2"))), root)
-        rows(predC, Seq((13 * T / 5, "C26"), (3 * T, "C3"), (4 * T, "C4")))
-          .drop("tableName").write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q256").save()
-        val (na, nb, nc) =
-          (docs.filter(predA).count(), docs.filter(predB).count(), docs.filter(predC).count())
-        def view() = s.table(s"$cat.q256")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val before = view().collect().map(_.toString).sorted.toSeq
-        require(before.size == na + nb + 2 * nc,
-          s"rank/TTL/floor/cap fold: ${before.size} vs ${na + nb + 2 * nc}")
-        // A and B keep every seeded version on disk (bulk bypasses the
-        // put path); C's put path eagerly pruned its over-cap oldest
-        // at WRITE time (the W-side half of retention) — read-time
-        // masking owns everything the writer can't see (segments,
-        // later ALTERs, TTL)
-        require(s.table(s"$cat.`q256$$changes`").count() == 3 * na + 2 * nb + 2 * nc,
-          "hidden-but-unreclaimed versions stay physically present (edit log never masks)")
-        // F5 agrees cell-by-cell on a pinned key: doc-0 is class A
-        val store = graft.ingest.FileStore(root)
-        def cell(v: Long) = PushTableSink.CellPut("q256",
-          "doc-0".getBytes("UTF-8"), v, Array.emptyByteArray)
-        require(store.existsAt("q256", Seq(cell(3 * T), cell(2 * T), cell(T)), 5 * T)
-          == Seq(true, false, false),
-          "existence runs the same masked read path (hidden versions read absent)")
-        // the pushed aggregate composes: COUNT over the capped table
-        // runs the same retention fold on metadata — zero body bytes
-        graft.sources.CellsSource.filesOpened.set(0)
-        val aggN = s.sql(s"SELECT count(*) FROM $cat.q256").collect()(0).getLong(0)
-        require(aggN == before.size.toLong,
-          s"pushed COUNT must equal the masked view: $aggN vs ${before.size}")
-        require(graft.sources.CellsSource.filesOpened.get() == 0,
-          "the retention-aware pushed COUNT reads zero file contents")
-        Compaction.major(s, root, "q256", nowMillis = () => 5 * T)
-        val out = view().localCheckpoint()
-        require(out.collect().map(_.toString).sorted.toSeq == before,
-          "the major reclaims bytes, never changes answers — view identical across it")
-        out
-      } finally {
-        s.conf.unset("spark.graft.retention.nowMillis")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      }
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // flush OFF: the gate pins EXACT physical counts through the
+          // edit log, and a mid-wave flush moves a put into a segment
+          // where the put path's eager pruner can no longer see it — the
+          // over-cap version then survives physically (masked by
+          // read-time retention either way, reclaimed by the major), so
+          // the physical count would depend on task interleaving
+          s.sql("CREATE TABLE g.q256 (rowkey BINARY, version BIGINT, body BINARY) " +
+            s"TBLPROPERTIES('maxVersions'='2', 'ttlMillis'='${5 * T / 2}', " +
+            "'compactionThreshold'='0')")
+          val docs = Tables.documents(s, d)
+          val predA = col("doc_id") % 9 === 0
+          val predB = col("doc_id") % 10 === 5 && col("doc_id") % 9 =!= 0
+          val predC = col("doc_id") % 11 === 3 && col("doc_id") % 9 =!= 0 &&
+            col("doc_id") % 10 =!= 5
+          def rows(pred: org.apache.spark.sql.Column, versions: Seq[(Long, String)]) =
+            docs.filter(pred)
+              .select(col("doc_id"),
+                explode(array(versions.map { case (base, tag) =>
+                  struct(lit(base).as("base"), lit(tag).as("tag")) }: _*)).as("g"))
+              .select(lit("q256").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                (col("g.base") + col("doc_id")).as("version"),
+                expr("cast(md5(concat(cast(doc_id as string), g.tag)) as binary)").as("body"))
+          // A and B by bulk segment, C by the put path — the fold must
+          // rank across both store-file kinds
+          BulkLoad.writeCells(rows(predA, Seq((T, "R1"), (2 * T, "R2"), (3 * T, "R3"))), root)
+          BulkLoad.writeCells(rows(predB, Seq((T, "R1"), (2 * T, "R2"))), root)
+          rows(predC, Seq((13 * T / 5, "C26"), (3 * T, "C3"), (4 * T, "C4")))
+            .drop("tableName").write.format("graft-cells").mode("append")
+            .option("root", root).option("table", "q256").save()
+          val (na, nb, nc) =
+            (docs.filter(predA).count(), docs.filter(predB).count(), docs.filter(predC).count())
+          def masked() = s.read.option("retentionNowMillis", (5 * T).toString).table("g.q256")
+          def view() = masked()
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+          val before = view().collect().map(_.toString).sorted.toSeq
+          require(before.size == na + nb + 2 * nc,
+            s"rank/TTL/floor/cap fold: ${before.size} vs ${na + nb + 2 * nc}")
+          // A and B keep every seeded version on disk (bulk bypasses the
+          // put path); C's put path eagerly pruned its over-cap oldest
+          // at WRITE time (the W-side half of retention) — read-time
+          // masking owns everything the writer can't see (segments,
+          // later ALTERs, TTL)
+          require(s.table("g.`q256$changes`").count() == 3 * na + 2 * nb + 2 * nc,
+            "hidden-but-unreclaimed versions stay physically present (edit log never masks)")
+          // F5 agrees cell-by-cell on a pinned key: doc-0 is class A
+          val store = graft.ingest.FileStore(root)
+          def cell(v: Long) = PushTableSink.CellPut("q256",
+            "doc-0".getBytes("UTF-8"), v, Array.emptyByteArray)
+          require(store.existsAt("q256", Seq(cell(3 * T), cell(2 * T), cell(T)), 5 * T)
+            == Seq(true, false, false),
+            "existence runs the same masked read path (hidden versions read absent)")
+          // the pushed aggregate composes: COUNT over the capped table
+          // runs the same retention fold on metadata — zero body bytes
+          graft.sources.CellsSource.filesOpened.set(0)
+          val aggN = masked().count()
+          require(aggN == before.size.toLong,
+            s"pushed COUNT must equal the masked view: $aggN vs ${before.size}")
+          require(graft.sources.CellsSource.filesOpened.get() == 0,
+            "the retention-aware pushed COUNT reads zero file contents")
+          Compaction.major(s, root, "q256", nowMillis = () => 5 * T)
+          val out = view().localCheckpoint()
+          require(out.collect().map(_.toString).sorted.toSeq == before,
+            "the major reclaims bytes, never changes answers — view identical across it")
+          out
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
     // AUTOMATIC SHARD FLUSH — the memstore-flush / hbase.hstore.
@@ -2341,56 +2258,55 @@ object StoreLifecycle {
     "q257_cells_auto_flush_policy" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q257-cells").toString
       val ck = Files.createTempDirectory("graft-q257-ck").toString
-      val cat = "g257_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q257 (rowkey BINARY, version BIGINT, body BINARY)")
-        val threshold = 10L // the recorded default
-        def maxBacklog(): Long = {
-          val r = s.sql(s"SELECT coalesce(max(cnt), 0) FROM (SELECT shard, count(*) AS cnt " +
-            s"FROM $cat.`q257$$versions` WHERE kind = 'put' GROUP BY shard) t").collect()(0)
-          r.getLong(0)
-        }
-        def wave(g: Int): Unit = {
-          s.sql(s"""INSERT INTO $cat.q257
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'F', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 13 = 0""")
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q257 (rowkey BINARY, version BIGINT, body BINARY)")
+          val threshold = 10L // the recorded default
+          def maxBacklog(): Long = {
+            val r = s.sql("SELECT coalesce(max(cnt), 0) FROM (SELECT shard, count(*) AS cnt " +
+              "FROM g.`q257$versions` WHERE kind = 'put' GROUP BY shard) t").collect()(0)
+            r.getLong(0)
+          }
+          def wave(g: Int): Unit = {
+            s.sql(s"""INSERT INTO g.q257
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
+                       cast(md5(concat(cast(doc_id as string), 'F', '$g')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % 13 = 0""")
+            require(maxBacklog() <= threshold,
+              s"wave $g left a put backlog above the threshold: ${maxBacklog()}")
+          }
+          val flushesBefore = graft.ingest.FileStore.autoFlushes.get()
+          (1 to 3).foreach(wave)
+          // the streaming-sink face rides the same hook: generation 4
+          // arrives as a $changes replication drain into the same table
+          BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
+              .select(lit("q257s").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                expr("4000000000 + doc_id").as("version"),
+                expr("cast(md5(concat(cast(doc_id as string), 'F', '4')) as binary)").as("body")),
+            root)
+          val q = s.readStream.table("g.`q257s$changes`")
+            .filter(col("op") === "put").select("rowkey", "version", "body")
+            .writeStream.format("graft-cells")
+            .option("root", root).option("table", "q257")
+            .option("checkpointLocation", ck)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+          q.awaitTermination()
           require(maxBacklog() <= threshold,
-            s"wave $g left a put backlog above the threshold: ${maxBacklog()}")
+            s"the streaming sink's puts flush too: ${maxBacklog()}")
+          require(graft.ingest.FileStore.autoFlushes.get() > flushesBefore,
+            "the hook must actually have fired (13-class keys share one region)")
+          val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
+          val out = s.table("g.q257")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+          require(out.count() == 4 * n13,
+            "flushing moves bytes between store-file kinds, never changes the view")
+          out
         }
-        val flushesBefore = graft.ingest.FileStore.autoFlushes.get()
-        (1 to 3).foreach(wave)
-        // the streaming-sink face rides the same hook: generation 4
-        // arrives as a $changes replication drain into the same table
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 13 === 0)
-            .select(lit("q257s").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("4000000000 + doc_id").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'F', '4')) as binary)").as("body")),
-          root)
-        val q = s.readStream.table(s"$cat.`q257s$$changes`")
-          .filter(col("op") === "put").select("rowkey", "version", "body")
-          .writeStream.format("graft-cells")
-          .option("root", root).option("table", "q257")
-          .option("checkpointLocation", ck)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        require(maxBacklog() <= threshold,
-          s"the streaming sink's puts flush too: ${maxBacklog()}")
-        require(graft.ingest.FileStore.autoFlushes.get() > flushesBefore,
-          "the hook must actually have fired (13-class keys share one region)")
-        val n13 = Tables.documents(s, d).filter(col("doc_id") % 13 === 0).count()
-        val out = s.table(s"$cat.q257")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
-        require(out.count() == 4 * n13,
-          "flushing moves bytes between store-file kinds, never changes the view")
-        out
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
@@ -2420,78 +2336,77 @@ object StoreLifecycle {
     // listing per touched shard on opted-in tables only.
     "q261_cells_auto_region_split" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q261-cells").toString
-      val cat = "g261_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // split OFF at create — wave 1 calibrates the bound to the data
-        // scale so the gate splits O(log) times at every sf
-        s.sql(s"CREATE TABLE $cat.q261 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2')")
-        def wave(g: Int): Unit =
-          s.sql(s"""INSERT INTO $cat.q261
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'G', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 7 = 0""")
-        wave(1)
-        // markers BEFORE any split: %21 keys mask their gen-1 — the
-        // split must carry them to whichever daughter owns the key
-        Tables.documents(s, d).filter(col("doc_id") % 21 === 0)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("1500000000 + doc_id").as("version"),
-            lit(Array.emptyByteArray).as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q261")
-          .option("tombstone", "true").save()
-        val store = FileStore(root)
-        val hot = Paths.get(root, "q261", "64")
-        val b1 = graft.ingest.RegionSplit.shardBytes(hot)
-        require(b1 > 0, "wave 1 must land in region 64 (keys lead with 'd')")
-        val table1 = s.table(s"$cat.q261")
-        val count1 = table1.count()
-        // (a) the MID-SPLIT pin: force one split NOW with a stage hook
-        // that re-counts through the connector at every protocol stage
-        // — the pushed COUNT walks filenames + segment indexes + the
-        // satellite, so this pins satellite-aware metadata reads too
-        graft.ingest.RegionSplit.probeHook = { stage =>
-          val n = s.table(s"$cat.q261").count()
-          require(n == count1, s"mid-split count diverged at $stage: $n != $count1")
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // split OFF at create — wave 1 calibrates the bound to the data
+          // scale so the gate splits O(log) times at every sf
+          s.sql("CREATE TABLE g.q261 (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('compactionThreshold'='2')")
+          def wave(g: Int): Unit =
+            s.sql(s"""INSERT INTO g.q261
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
+                       cast(md5(concat(cast(doc_id as string), 'G', '$g')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % 7 = 0""")
+          wave(1)
+          // markers BEFORE any split: %21 keys mask their gen-1 — the
+          // split must carry them to whichever daughter owns the key
+          Tables.documents(s, d).filter(col("doc_id") % 21 === 0)
+            .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+              expr("1500000000 + doc_id").as("version"),
+              lit(Array.emptyByteArray).as("body"))
+            .write.format("graft-cells").mode("append")
+            .option("root", root).option("table", "q261")
+            .option("tombstone", "true").save()
+          val store = FileStore(root)
+          val hot = Paths.get(root, "q261", "64")
+          val b1 = graft.ingest.RegionSplit.shardBytes(hot)
+          require(b1 > 0, "wave 1 must land in region 64 (keys lead with 'd')")
+          val table1 = s.table("g.q261")
+          val count1 = table1.count()
+          // (a) the MID-SPLIT pin: force one split NOW with a stage hook
+          // that re-counts through the connector at every protocol stage
+          // — the pushed COUNT walks filenames + segment indexes + the
+          // satellite, so this pins satellite-aware metadata reads too
+          graft.ingest.RegionSplit.probeHook = { stage =>
+            val n = s.table("g.q261").count()
+            require(n == count1, s"mid-split count diverged at $stage: $n != $count1")
+          }
+          val forced =
+            try graft.ingest.RegionSplit.maybeSplit(root, "q261", "64",
+              maxRegionBytes = math.max(2048L, b1 / 2), maxSplits = 1)
+            finally graft.ingest.RegionSplit.probeHook = _ => ()
+          require(forced == 1, s"the calibration split must fire once, got $forced")
+          require(s.table("g.q261").count() == count1, "post-split count diverged")
+          // (b) arm the automatic policy and drive the remaining waves
+          val bound = math.max(4096L, b1)
+          s.sql(s"ALTER TABLE g.q261 SET TBLPROPERTIES('maxRegionBytes' = '$bound')")
+          val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
+          wave(2); wave(3)
+          require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
+            "the put waves must split the hot region automatically")
+          val layout = store.splitsOf("q261")
+          require(layout.size > 257, s"layout must outgrow the forced split: ${layout.size}")
+          // (c) the policy's fixed point: every region ≤ bound, no debris
+          segShardDirs(root, "q261").foreach { sh =>
+            val b = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q261", sh))
+            require(b <= bound, s"region $sh holds $b > $bound after the waves")
+          }
+          require(!segFiles(root, "q261").exists(_.startsWith("_split")),
+            "no satellite/staging debris may survive completed splits")
+          // (e) point GET + F5 through the NEW layout
+          val probed = s.sql("SELECT count(*) AS n FROM g.q261 " +
+            "WHERE rowkey = cast('doc-7' as binary)").collect()(0).getLong(0)
+          require(probed == 3, s"doc-7 must serve its 3 generations post-split, got $probed")
+          require(store.exists("q261", Seq(graft.ingest.PushTableSink.CellPut(
+            "q261", "doc-7".getBytes("UTF-8"), 3000000007L, Array.emptyByteArray))) == Seq(true),
+            "F5 existence must route through the split layout")
+          // (d) rides the oracle: %21 keys' gen-1 stays masked everywhere
+          s.table("g.q261")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
         }
-        val forced =
-          try graft.ingest.RegionSplit.maybeSplit(root, "q261", "64",
-            maxRegionBytes = math.max(2048L, b1 / 2), maxSplits = 1)
-          finally graft.ingest.RegionSplit.probeHook = _ => ()
-        require(forced == 1, s"the calibration split must fire once, got $forced")
-        require(s.table(s"$cat.q261").count() == count1, "post-split count diverged")
-        // (b) arm the automatic policy and drive the remaining waves
-        val bound = math.max(4096L, b1)
-        s.sql(s"ALTER TABLE $cat.q261 SET TBLPROPERTIES('maxRegionBytes' = '$bound')")
-        val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
-        wave(2); wave(3)
-        require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
-          "the put waves must split the hot region automatically")
-        val layout = store.splitsOf("q261")
-        require(layout.size > 257, s"layout must outgrow the forced split: ${layout.size}")
-        // (c) the policy's fixed point: every region ≤ bound, no debris
-        segShardDirs(root, "q261").foreach { sh =>
-          val b = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q261", sh))
-          require(b <= bound, s"region $sh holds $b > $bound after the waves")
-        }
-        require(!segFiles(root, "q261").exists(_.startsWith("_split")),
-          "no satellite/staging debris may survive completed splits")
-        // (e) point GET + F5 through the NEW layout
-        val probed = s.sql(s"SELECT count(*) AS n FROM $cat.q261 " +
-          "WHERE rowkey = cast('doc-7' as binary)").collect()(0).getLong(0)
-        require(probed == 3, s"doc-7 must serve its 3 generations post-split, got $probed")
-        require(store.exists("q261", Seq(graft.ingest.PushTableSink.CellPut(
-          "q261", "doc-7".getBytes("UTF-8"), 3000000007L, Array.emptyByteArray))) == Seq(true),
-          "F5 existence must route through the split layout")
-        // (d) rides the oracle: %21 keys' gen-1 stays masked everywhere
-        s.table(s"$cat.q261")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -2520,72 +2435,71 @@ object StoreLifecycle {
     // same contract q265 pins.
     "q267_cells_check_delete_append" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q267-cells").toString
-      val cat = "g267_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q267 (rowkey BINARY, version BIGINT, body BINARY)")
-        val ids = Tables.documents(s, d)
-          .filter(col("doc_id") % 13 === 0 && col("doc_id") < 2000)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
-        require(ids.nonEmpty, "fixture ids must exist")
-        val rootB = root
-        // (a) per-key chains: seed by expect-absent CAS, then three
-        // appends IN ORDER — the whole chain inside one task, so the
-        // final body is exactly 'S<id>-x-y-z' for every key
-        s.sparkContext.parallelize(ids.toSeq, 32).foreach { id =>
-          val st = graft.ingest.FileStore(rootB)
-          val k = s"app-$id".getBytes("UTF-8")
-          require(st.checkAndPut("q267", k, None, s"S$id".getBytes("UTF-8")))
-          Seq("-x", "-y", "-z").foreach(t => st.append("q267", k, t.getBytes("UTF-8")))
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q267 (rowkey BINARY, version BIGINT, body BINARY)")
+          val ids = Tables.documents(s, d)
+            .filter(col("doc_id") % 13 === 0 && col("doc_id") < 2000)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+          require(ids.nonEmpty, "fixture ids must exist")
+          val rootB = root
+          // (a) per-key chains: seed by expect-absent CAS, then three
+          // appends IN ORDER — the whole chain inside one task, so the
+          // final body is exactly 'S<id>-x-y-z' for every key
+          s.sparkContext.parallelize(ids.toSeq, 32).foreach { id =>
+            val st = graft.ingest.FileStore(rootB)
+            val k = s"app-$id".getBytes("UTF-8")
+            require(st.checkAndPut("q267", k, None, s"S$id".getBytes("UTF-8")))
+            Seq("-x", "-y", "-z").foreach(t => st.append("q267", k, t.getBytes("UTF-8")))
+          }
+          // (b) the lost-update pin: 24 racing appends of distinct
+          // 4-byte tokens — every token present exactly once
+          val raceK = "race-app".getBytes("UTF-8")
+          s.sparkContext.parallelize(0 until 24, 24).foreach { i =>
+            graft.ingest.FileStore(rootB).append("q267", raceK,
+              f"<$i%02d>".getBytes("UTF-8")); ()
+          }
+          val raceBody = new String(
+            graft.ingest.FileStore(root).getLatest("q267", raceK).get._2, "UTF-8")
+          require(raceBody.length == 24 * 4, s"append lost updates: '$raceBody'")
+          (0 until 24).foreach(i => require(raceBody.contains(f"<$i%02d>"),
+            s"append dropped token $i: '$raceBody'"))
+          // (c) CAS-delete contention: exactly one of 32 wins
+          val cadK = "race-cad".getBytes("UTF-8")
+          require(graft.ingest.FileStore(root).checkAndPut("q267", cadK, None,
+            "init".getBytes("UTF-8")))
+          val wins = s.sparkContext.parallelize(1 to 32, 32).map { _ =>
+            if (graft.ingest.FileStore(rootB).checkAndDelete("q267", cadK,
+              Some("init".getBytes("UTF-8")))) 1 else 0
+          }.sum().toLong
+          require(wins == 1L, s"exactly one checkAndDelete must win, got $wins")
+          // (d) + the real delete workload: %26 rows go by value-checked
+          // delete; a WRONG expected on a survivor is refused
+          ids.filter(_ % 26 == 0).foreach { id =>
+            require(graft.ingest.FileStore(root).checkAndDelete("q267",
+              s"app-$id".getBytes("UTF-8"), Some(s"S$id-x-y-z".getBytes("UTF-8"))),
+              s"value-checked delete must apply for app-$id")
+          }
+          val survivor = ids.find(_ % 26 != 0).get
+          require(!graft.ingest.FileStore(root).checkAndDelete("q267",
+            s"app-$survivor".getBytes("UTF-8"), Some("wrong".getBytes("UTF-8"))),
+            "a mismatched expected must refuse the delete")
+          // (e) the SQL shell agrees: append('') echoes the body; a
+          // mismatched CALL check_and_delete reports applied=false
+          val echoed = s.sql("CALL g.append(table => 'q267', " +
+            s"rowkey => 'app-$survivor', value => '')").collect()(0).getString(0)
+          require(echoed == s"S$survivor-x-y-z", s"CALL append echoed '$echoed'")
+          require(!s.sql("CALL g.check_and_delete(table => 'q267', " +
+            s"rowkey => 'app-$survivor', expected => 'nope')")
+            .collect()(0).getBoolean(0), "CALL check_and_delete must refuse mismatch")
+          // the serving view: deleted rows masked, chains complete
+          s.sql(
+            s"""SELECT cast(rowkey as string) AS key_str,
+                       cast(body as string) AS body
+                FROM g.`q267$$latest`
+                WHERE cast(rowkey as string) LIKE 'app-%'""")
+            .localCheckpoint()
         }
-        // (b) the lost-update pin: 24 racing appends of distinct
-        // 4-byte tokens — every token present exactly once
-        val raceK = "race-app".getBytes("UTF-8")
-        s.sparkContext.parallelize(0 until 24, 24).foreach { i =>
-          graft.ingest.FileStore(rootB).append("q267", raceK,
-            f"<$i%02d>".getBytes("UTF-8")); ()
-        }
-        val raceBody = new String(
-          graft.ingest.FileStore(root).getLatest("q267", raceK).get._2, "UTF-8")
-        require(raceBody.length == 24 * 4, s"append lost updates: '$raceBody'")
-        (0 until 24).foreach(i => require(raceBody.contains(f"<$i%02d>"),
-          s"append dropped token $i: '$raceBody'"))
-        // (c) CAS-delete contention: exactly one of 32 wins
-        val cadK = "race-cad".getBytes("UTF-8")
-        require(graft.ingest.FileStore(root).checkAndPut("q267", cadK, None,
-          "init".getBytes("UTF-8")))
-        val wins = s.sparkContext.parallelize(1 to 32, 32).map { _ =>
-          if (graft.ingest.FileStore(rootB).checkAndDelete("q267", cadK,
-            Some("init".getBytes("UTF-8")))) 1 else 0
-        }.sum().toLong
-        require(wins == 1L, s"exactly one checkAndDelete must win, got $wins")
-        // (d) + the real delete workload: %26 rows go by value-checked
-        // delete; a WRONG expected on a survivor is refused
-        ids.filter(_ % 26 == 0).foreach { id =>
-          require(graft.ingest.FileStore(root).checkAndDelete("q267",
-            s"app-$id".getBytes("UTF-8"), Some(s"S$id-x-y-z".getBytes("UTF-8"))),
-            s"value-checked delete must apply for app-$id")
-        }
-        val survivor = ids.find(_ % 26 != 0).get
-        require(!graft.ingest.FileStore(root).checkAndDelete("q267",
-          s"app-$survivor".getBytes("UTF-8"), Some("wrong".getBytes("UTF-8"))),
-          "a mismatched expected must refuse the delete")
-        // (e) the SQL shell agrees: append('') echoes the body; a
-        // mismatched CALL check_and_delete reports applied=false
-        val echoed = s.sql(s"CALL $cat.append(table => 'q267', " +
-          s"rowkey => 'app-$survivor', value => '')").collect()(0).getString(0)
-        require(echoed == s"S$survivor-x-y-z", s"CALL append echoed '$echoed'")
-        require(!s.sql(s"CALL $cat.check_and_delete(table => 'q267', " +
-          s"rowkey => 'app-$survivor', expected => 'nope')")
-          .collect()(0).getBoolean(0), "CALL check_and_delete must refuse mismatch")
-        // the serving view: deleted rows masked, chains complete
-        s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str,
-                     cast(body as string) AS body
-              FROM $cat.`q267$$latest`
-              WHERE cast(rowkey as string) LIKE 'app-%'""")
-          .localCheckpoint()
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -2611,63 +2525,62 @@ object StoreLifecycle {
     // metadata work, never data movement.
     "q268_cells_restore_snapshot" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q268-cells").toString
-      val cat = "g268_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q268 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2')")
-        def wave(g: Int, mod: Int): Unit =
-          s.sql(s"""INSERT INTO $cat.q268
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'R', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % $mod = 0""")
-        wave(1, 7)
-        val n7 = Tables.documents(s, d).filter(col("doc_id") % 7 === 0).count()
-        def checksum(): Long =
-          s.table(s"$cat.q268").select(sum(crc32(concat_ws("|",
-            col("rowkey").cast("string"), col("version").cast("string"),
-            col("body").cast("string")))).as("c")).collect()(0).getLong(0)
-        val sum1 = checksum()
-        val pinned = s.sql(s"CALL $cat.snapshot(table => 'q268', name => 'r1')")
-          .collect()(0).getLong(0)
-        require(pinned > 0, "the snapshot must pin store files")
-        // (a) diverge the live table every way, then restore
-        wave(2, 7)
-        s.sql(s"DELETE FROM $cat.q268 WHERE rowkey = cast('doc-7' as binary) " +
-          "AND version = 1000000007")
-        s.sql(s"CALL $cat.compact_major(table => 'q268')")
-        require(s.table(s"$cat.q268").count() == 2 * n7 - 1 && checksum() != sum1,
-          "the live table must have diverged before restore")
-        // (d) the metadata face, pre-restore
-        val listed = s.sql(s"CALL $cat.list_snapshots()").collect()
-        require(listed.length == 1 && listed(0).getString(0) == "r1" &&
-          listed(0).getString(1) == "q268" && listed(0).getLong(2) == pinned,
-          s"list_snapshots must report the pin: ${listed.mkString(",")}")
-        val restored = s.sql(s"CALL $cat.restore_snapshot(name => 'r1')")
-          .collect()(0).getLong(0)
-        require(restored > 0, "restore must link files")
-        require(s.table(s"$cat.q268").count() == n7 && checksum() == sum1,
-          "restore must return the snapshot-time view checksum-identically")
-        // (b) repeatable: diverge again, restore again
-        wave(4, 35)
-        require(checksum() != sum1, "the second divergence must land")
-        s.sql(s"CALL $cat.restore_snapshot(name => 'r1')")
-        require(checksum() == sum1, "restore must be repeatable — links, not moves")
-        val listedAfter = s.sql(s"CALL $cat.list_snapshots()").collect()
-        require(listedAfter.length == 1 && listedAfter(0).getLong(2) == pinned,
-          "the snapshot survives its own restore with a stable file count")
-        // (c) the restored table is live; (e) the drop releases pins
-        wave(3, 21)
-        s.sql(s"CALL $cat.drop_snapshot(name => 'r1')")
-        val n21 = Tables.documents(s, d).filter(col("doc_id") % 21 === 0).count()
-        require(s.table(s"$cat.q268").count() == n7 + n21,
-          "the restored table must accept and serve new writes after the drop")
-        s.table(s"$cat.q268")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q268 (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('compactionThreshold'='2')")
+          def wave(g: Int, mod: Int): Unit =
+            s.sql(s"""INSERT INTO g.q268
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
+                       cast(md5(concat(cast(doc_id as string), 'R', '$g')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % $mod = 0""")
+          wave(1, 7)
+          val n7 = Tables.documents(s, d).filter(col("doc_id") % 7 === 0).count()
+          def checksum(): Long =
+            s.table("g.q268").select(sum(crc32(concat_ws("|",
+              col("rowkey").cast("string"), col("version").cast("string"),
+              col("body").cast("string")))).as("c")).collect()(0).getLong(0)
+          val sum1 = checksum()
+          val pinned = s.sql("CALL g.snapshot(table => 'q268', name => 'r1')")
+            .collect()(0).getLong(0)
+          require(pinned > 0, "the snapshot must pin store files")
+          // (a) diverge the live table every way, then restore
+          wave(2, 7)
+          s.sql("DELETE FROM g.q268 WHERE rowkey = cast('doc-7' as binary) " +
+            "AND version = 1000000007")
+          s.sql("CALL g.compact_major(table => 'q268')")
+          require(s.table("g.q268").count() == 2 * n7 - 1 && checksum() != sum1,
+            "the live table must have diverged before restore")
+          // (d) the metadata face, pre-restore
+          val listed = s.sql("CALL g.list_snapshots()").collect()
+          require(listed.length == 1 && listed(0).getString(0) == "r1" &&
+            listed(0).getString(1) == "q268" && listed(0).getLong(2) == pinned,
+            s"list_snapshots must report the pin: ${listed.mkString(",")}")
+          val restored = s.sql("CALL g.restore_snapshot(name => 'r1')")
+            .collect()(0).getLong(0)
+          require(restored > 0, "restore must link files")
+          require(s.table("g.q268").count() == n7 && checksum() == sum1,
+            "restore must return the snapshot-time view checksum-identically")
+          // (b) repeatable: diverge again, restore again
+          wave(4, 35)
+          require(checksum() != sum1, "the second divergence must land")
+          s.sql("CALL g.restore_snapshot(name => 'r1')")
+          require(checksum() == sum1, "restore must be repeatable — links, not moves")
+          val listedAfter = s.sql("CALL g.list_snapshots()").collect()
+          require(listedAfter.length == 1 && listedAfter(0).getLong(2) == pinned,
+            "the snapshot survives its own restore with a stable file count")
+          // (c) the restored table is live; (e) the drop releases pins
+          wave(3, 21)
+          s.sql("CALL g.drop_snapshot(name => 'r1')")
+          val n21 = Tables.documents(s, d).filter(col("doc_id") % 21 === 0).count()
+          require(s.table("g.q268").count() == n7 + n21,
+            "the restored table must accept and serve new writes after the drop")
+          s.table("g.q268")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -2696,84 +2609,83 @@ object StoreLifecycle {
     "q269_cells_stream_lifecycle_race" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q269-cells").toString
       val ck = Files.createTempDirectory("graft-q269-ck").toString
-      val cat = "g269_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // source pre-split at 'doc-3'/'doc-6'; replica starts single-region
-        s.sql(s"CREATE TABLE $cat.q269s (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2', " +
-          "'splitPoints'='646f632d33,646f632d36')")
-        s.sql(s"CREATE TABLE $cat.q269r (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2')")
-        def wave(g: Int): Unit =
-          s.sql(s"""INSERT INTO $cat.q269s
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'L', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 8 = 0""")
-        def drain(): Unit = {
-          val q = s.readStream.table(s"$cat.`q269s$$changes`")
-            .filter(col("op") === "put").select("rowkey", "version", "body")
-            .writeStream.format("graft-cells")
-            .option("root", root).option("table", "q269r")
-            .option("checkpointLocation", ck)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        val n8 = Tables.documents(s, d).filter(col("doc_id") % 8 === 0).count()
-        wave(1); drain()
-        require(s.table(s"$cat.q269r").count() == n8,
-          "drain 1 must deliver exactly the seed window")
-        wave(2)
-        // (a) the feed side: full drains INSIDE the merge, at the two
-        // observable mid-merge layouts; the replica must hold exactly
-        // the 2-generation window after each (no loss at 'unbound', no
-        // duplication at 'parked' — puts are idempotent renames, so a
-        // duplicate would be invisible in counts; the EXACTNESS pin is
-        // the source/replica view equality below, this pins delivery)
-        val midDrains = new java.util.concurrent.atomic.AtomicInteger(0)
-        val inHook = new java.util.concurrent.atomic.AtomicBoolean(false)
-        graft.ingest.RegionSplit.probeHook = { stage =>
-          if ((stage.startsWith("unbound:") || stage.startsWith("parked:")) &&
-            inHook.compareAndSet(false, true)) {
-            try {
-              drain()
-              val n = s.table(s"$cat.q269r").count()
-              require(n == 2 * n8, s"mid-merge drain at $stage delivered $n != ${2 * n8}")
-              midDrains.incrementAndGet()
-            } finally inHook.set(false)
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // source pre-split at 'doc-3'/'doc-6'; replica starts single-region
+          s.sql("CREATE TABLE g.q269s (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('compactionThreshold'='2', " +
+            "'splitPoints'='646f632d33,646f632d36')")
+          s.sql("CREATE TABLE g.q269r (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('compactionThreshold'='2')")
+          def wave(g: Int): Unit =
+            s.sql(s"""INSERT INTO g.q269s
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
+                       cast(md5(concat(cast(doc_id as string), 'L', '$g')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % 8 = 0""")
+          def drain(): Unit = {
+            val q = s.readStream.table("g.`q269s$changes`")
+              .filter(col("op") === "put").select("rowkey", "version", "body")
+              .writeStream.format("graft-cells")
+              .option("root", root).option("table", "q269r")
+              .option("checkpointLocation", ck)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+            q.awaitTermination()
           }
+          val n8 = Tables.documents(s, d).filter(col("doc_id") % 8 === 0).count()
+          wave(1); drain()
+          require(s.table("g.q269r").count() == n8,
+            "drain 1 must deliver exactly the seed window")
+          wave(2)
+          // (a) the feed side: full drains INSIDE the merge, at the two
+          // observable mid-merge layouts; the replica must hold exactly
+          // the 2-generation window after each (no loss at 'unbound', no
+          // duplication at 'parked' — puts are idempotent renames, so a
+          // duplicate would be invisible in counts; the EXACTNESS pin is
+          // the source/replica view equality below, this pins delivery)
+          val midDrains = new java.util.concurrent.atomic.AtomicInteger(0)
+          val inHook = new java.util.concurrent.atomic.AtomicBoolean(false)
+          graft.ingest.RegionSplit.probeHook = { stage =>
+            if ((stage.startsWith("unbound:") || stage.startsWith("parked:")) &&
+              inHook.compareAndSet(false, true)) {
+              try {
+                drain()
+                val n = s.table("g.q269r").count()
+                require(n == 2 * n8, s"mid-merge drain at $stage delivered $n != ${2 * n8}")
+                midDrains.incrementAndGet()
+              } finally inHook.set(false)
+            }
+          }
+          try {
+            val merged = s.sql("CALL g.merge_regions(table => 'q269s', " +
+              "region => '646f632d33')").collect()(0).getBoolean(0)
+            require(merged, "the merge must apply")
+          } finally graft.ingest.RegionSplit.probeHook = _ => ()
+          require(midDrains.get() == 2, s"both mid-merge drains must run: ${midDrains.get()}")
+          require(FileStore(root).splitsOf("q269s").size == 2, "the source layout shrank")
+          // (b) the sink side: arm the replica's split policy so drain 3's
+          // own puts split it mid-drain
+          val repShard = FileStore.shardOf("doc-0".getBytes("UTF-8"))
+          val repBytes = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q269r", repShard))
+          require(repBytes > 0, s"the replica region $repShard must hold bytes")
+          s.sql("ALTER TABLE g.q269r SET TBLPROPERTIES('maxRegionBytes' = " +
+            s"'${math.max(2048L, repBytes / 2)}')")
+          val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
+          val layoutBefore = FileStore(root).splitsOf("q269r").size
+          wave(3); drain()
+          require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
+            "the drain's sink puts must auto-split the replica mid-drain")
+          require(FileStore(root).splitsOf("q269r").size > layoutBefore,
+            "the replica layout grew")
+          // the contract: views equal both ways across every race
+          def view(t: String) = s.table(s"g.$t")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+          val src = view("q269s").localCheckpoint() // the q195 note
+          val rep = view("q269r").localCheckpoint()
+          sameRows(rep, src, "replica and source must agree after the lifecycle races")
+          rep
         }
-        try {
-          val merged = s.sql(s"CALL $cat.merge_regions(table => 'q269s', " +
-            "region => '646f632d33')").collect()(0).getBoolean(0)
-          require(merged, "the merge must apply")
-        } finally graft.ingest.RegionSplit.probeHook = _ => ()
-        require(midDrains.get() == 2, s"both mid-merge drains must run: ${midDrains.get()}")
-        require(FileStore(root).splitsOf("q269s").size == 2, "the source layout shrank")
-        // (b) the sink side: arm the replica's split policy so drain 3's
-        // own puts split it mid-drain
-        val repShard = FileStore.shardOf("doc-0".getBytes("UTF-8"))
-        val repBytes = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q269r", repShard))
-        require(repBytes > 0, s"the replica region $repShard must hold bytes")
-        s.sql(s"ALTER TABLE $cat.q269r SET TBLPROPERTIES('maxRegionBytes' = " +
-          s"'${math.max(2048L, repBytes / 2)}')")
-        val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
-        val layoutBefore = FileStore(root).splitsOf("q269r").size
-        wave(3); drain()
-        require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
-          "the drain's sink puts must auto-split the replica mid-drain")
-        require(FileStore(root).splitsOf("q269r").size > layoutBefore,
-          "the replica layout grew")
-        // the contract: views equal both ways across every race
-        def view(t: String) = s.table(s"$cat.$t")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-        val src = view("q269s").localCheckpoint() // the q195 note
-        val rep = view("q269r").localCheckpoint()
-        sameRows(rep, src, "replica and source must agree after the lifecycle races")
-        rep
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
@@ -2799,70 +2711,69 @@ object StoreLifecycle {
     // data bytes.
     "q266_cells_region_merge" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q266-cells").toString
-      val cat = "g266_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // three regions pre-split at 'doc-3' and 'doc-6'
-        s.sql(s"CREATE TABLE $cat.q266 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2', " +
-          "'splitPoints'='646f632d33,646f632d36')")
-        (1 to 2).foreach { g =>
-          s.sql(s"""INSERT INTO $cat.q266
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // three regions pre-split at 'doc-3' and 'doc-6'
+          s.sql("CREATE TABLE g.q266 (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('compactionThreshold'='2', " +
+            "'splitPoints'='646f632d33,646f632d36')")
+          (1 to 2).foreach { g =>
+            s.sql(s"""INSERT INTO g.q266
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
+                       cast(md5(concat(cast(doc_id as string), 'M', '$g')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % 4 = 0""")
+          }
+          // a marker inside the region about to be absorbed ('doc-4…'
+          // sorts into ['doc-3','doc-6')): gen-1 of %44 keys masked
+          Tables.documents(s, d).filter(col("doc_id") % 44 === 0 && col("doc_id") % 10 === 4)
+            .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+              expr("1500000000 + doc_id").as("version"),
+              lit(Array.emptyByteArray).as("body"))
+            .write.format("graft-cells").mode("append")
+            .option("root", root).option("table", "q266")
+            .option("tombstone", "true").save()
+          val count0 = s.table("g.q266").count()
+          graft.ingest.RegionSplit.probeHook = { stage =>
+            val n = s.table("g.q266").count()
+            require(n == count0, s"mid-merge count diverged at $stage: $n != $count0")
+          }
+          try {
+            val merged = s.sql("CALL g.merge_regions(table => 'q266', " +
+              "region => '646f632d33')").collect()(0).getBoolean(0)
+            require(merged, "the merge must apply")
+          } finally graft.ingest.RegionSplit.probeHook = _ => ()
+          val store = FileStore(root)
+          require(store.splitsOf("q266").size == 2,
+            s"boundary gone: ${store.splitsOf("q266").names}")
+          require(!Files.isDirectory(Paths.get(root, "q266", "646f632d33")),
+            "the absorbed directory is gone")
+          require(s.table("g.q266").count() == count0, "merging never changes the view")
+          // (d) the lifecycle round-trip: the fat merged region splits
+          // back automatically once the policy arms
+          val fatBytes = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q266", "-"))
+          require(fatBytes > 0)
+          s.sql("ALTER TABLE g.q266 SET TBLPROPERTIES('maxRegionBytes' = " +
+            s"'${math.max(2048L, fatBytes / 2)}')")
+          val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
+          // one more wave re-triggers the policy on the touched region
+          s.sql(s"""INSERT INTO g.q266
               SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'M', '$g')) as binary)
+                     cast(3000000000 + doc_id as bigint),
+                     cast(md5(concat(cast(doc_id as string), 'M3')) as binary)
               FROM parquet.`$d/documents.parquet` WHERE doc_id % 4 = 0""")
+          require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
+            "the merged region must split back under the armed bound")
+          require(store.splitsOf("q266").size > 2, "the lifecycle round-trip grew the layout")
+          // (e) point read + F5 through the final layout
+          val probed = s.sql("SELECT count(*) AS n FROM g.q266 " +
+            "WHERE rowkey = cast('doc-4' as binary)").collect()(0).getLong(0)
+          require(probed == 3, s"doc-4 must serve its three generations, got $probed")
+          s.table("g.q266")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
         }
-        // a marker inside the region about to be absorbed ('doc-4…'
-        // sorts into ['doc-3','doc-6')): gen-1 of %44 keys masked
-        Tables.documents(s, d).filter(col("doc_id") % 44 === 0 && col("doc_id") % 10 === 4)
-          .select(expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-            expr("1500000000 + doc_id").as("version"),
-            lit(Array.emptyByteArray).as("body"))
-          .write.format("graft-cells").mode("append")
-          .option("root", root).option("table", "q266")
-          .option("tombstone", "true").save()
-        val count0 = s.table(s"$cat.q266").count()
-        graft.ingest.RegionSplit.probeHook = { stage =>
-          val n = s.table(s"$cat.q266").count()
-          require(n == count0, s"mid-merge count diverged at $stage: $n != $count0")
-        }
-        try {
-          val merged = s.sql(s"CALL $cat.merge_regions(table => 'q266', " +
-            "region => '646f632d33')").collect()(0).getBoolean(0)
-          require(merged, "the merge must apply")
-        } finally graft.ingest.RegionSplit.probeHook = _ => ()
-        val store = FileStore(root)
-        require(store.splitsOf("q266").size == 2,
-          s"boundary gone: ${store.splitsOf("q266").names}")
-        require(!Files.isDirectory(Paths.get(root, "q266", "646f632d33")),
-          "the absorbed directory is gone")
-        require(s.table(s"$cat.q266").count() == count0, "merging never changes the view")
-        // (d) the lifecycle round-trip: the fat merged region splits
-        // back automatically once the policy arms
-        val fatBytes = graft.ingest.RegionSplit.shardBytes(Paths.get(root, "q266", "-"))
-        require(fatBytes > 0)
-        s.sql(s"ALTER TABLE $cat.q266 SET TBLPROPERTIES('maxRegionBytes' = " +
-          s"'${math.max(2048L, fatBytes / 2)}')")
-        val splitsBefore = graft.ingest.RegionSplit.splitsDone.get()
-        // one more wave re-triggers the policy on the touched region
-        s.sql(s"""INSERT INTO $cat.q266
-            SELECT cast(concat('doc-', doc_id) as binary),
-                   cast(3000000000 + doc_id as bigint),
-                   cast(md5(concat(cast(doc_id as string), 'M3')) as binary)
-            FROM parquet.`$d/documents.parquet` WHERE doc_id % 4 = 0""")
-        require(graft.ingest.RegionSplit.splitsDone.get() > splitsBefore,
-          "the merged region must split back under the armed bound")
-        require(store.splitsOf("q266").size > 2, "the lifecycle round-trip grew the layout")
-        // (e) point read + F5 through the final layout
-        val probed = s.sql(s"SELECT count(*) AS n FROM $cat.q266 " +
-          "WHERE rowkey = cast('doc-4' as binary)").collect()(0).getLong(0)
-        require(probed == 3, s"doc-4 must serve its three generations, got $probed")
-        s.table(s"$cat.q266")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -2884,54 +2795,53 @@ object StoreLifecycle {
     // work, never a scan.
     "q265_cells_atomic_mutations" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q265-cells").toString
-      val cat = "g265_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q265 (rowkey BINARY, version BIGINT, body BINARY)")
-        // (a) the lost-update pin: per %11 doc under id 2000, 3
-        // increments of (doc_id % 5 + 1) land from a 32-way parallel
-        // job — the final counter must be exactly 3×(doc_id%5+1),
-        // every update kept. The id BOUND is the point: atomic verbs
-        // are per-row point ops whose cost must not scale with corpus
-        // size, so the gate drives a FIXED contention workload at
-        // every sf (the scaling row should be flat — that IS the
-        // 100 TB property)
-        val ids = Tables.documents(s, d)
-          .filter(col("doc_id") % 11 === 0 && col("doc_id") < 2000)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
-        val work = (for (id <- ids.toSeq; _ <- 1 to 3) yield (id, id % 5 + 1))
-        val rootB = root
-        s.sparkContext.parallelize(new scala.util.Random(42).shuffle(work), 32)
-          .foreach { case (id, delta) =>
-            graft.ingest.FileStore(rootB).increment("q265",
-              s"ctr-$id".getBytes("UTF-8"), delta)
-          }
-        // (b) CAS contention: exactly one of 32 concurrent winners
-        require(graft.ingest.FileStore(root).checkAndPut("q265",
-          "cas".getBytes("UTF-8"), None, 1L, "init".getBytes("UTF-8")),
-          "expect-absent must succeed on a fresh key")
-        val winners = s.sparkContext.parallelize(1 to 32, 32).map { i =>
-          if (graft.ingest.FileStore(rootB).checkAndPut("q265",
-            "cas".getBytes("UTF-8"), Some("init".getBytes("UTF-8")),
-            1000L + i, s"winner-$i".getBytes("UTF-8"))) 1 else 0
-        }.sum().toLong
-        require(winners == 1L, s"exactly one CAS must win, got $winners")
-        // (c) expect-absent now fails (the key exists)
-        require(!graft.ingest.FileStore(root).checkAndPut("q265",
-          "cas".getBytes("UTF-8"), None, 9999L, "x".getBytes("UTF-8")),
-          "expect-absent must fail on an existing key")
-        // (d) the SQL shell's face agrees: one more bump via CALL
-        val viaSql = s.sql(s"CALL $cat.increment(table => 'q265', " +
-          s"rowkey => 'ctr-${ids.min}', delta => 0)").collect()(0).getLong(0)
-        require(viaSql == 3 * (ids.min % 5 + 1), s"CALL increment read $viaSql")
-        // the counters as the serving view — big-endian 8-byte bodies
-        s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str,
-                     cast(conv(hex(body), 16, 10) as bigint) AS value
-              FROM $cat.`q265$$latest`
-              WHERE cast(rowkey as string) LIKE 'ctr-%'""")
-          .localCheckpoint()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q265 (rowkey BINARY, version BIGINT, body BINARY)")
+          // (a) the lost-update pin: per %11 doc under id 2000, 3
+          // increments of (doc_id % 5 + 1) land from a 32-way parallel
+          // job — the final counter must be exactly 3×(doc_id%5+1),
+          // every update kept. The id BOUND is the point: atomic verbs
+          // are per-row point ops whose cost must not scale with corpus
+          // size, so the gate drives a FIXED contention workload at
+          // every sf (the scaling row should be flat — that IS the
+          // 100 TB property)
+          val ids = Tables.documents(s, d)
+            .filter(col("doc_id") % 11 === 0 && col("doc_id") < 2000)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0))
+          val work = (for (id <- ids.toSeq; _ <- 1 to 3) yield (id, id % 5 + 1))
+          val rootB = root
+          s.sparkContext.parallelize(new scala.util.Random(42).shuffle(work), 32)
+            .foreach { case (id, delta) =>
+              graft.ingest.FileStore(rootB).increment("q265",
+                s"ctr-$id".getBytes("UTF-8"), delta)
+            }
+          // (b) CAS contention: exactly one of 32 concurrent winners
+          require(graft.ingest.FileStore(root).checkAndPut("q265",
+            "cas".getBytes("UTF-8"), None, 1L, "init".getBytes("UTF-8")),
+            "expect-absent must succeed on a fresh key")
+          val winners = s.sparkContext.parallelize(1 to 32, 32).map { i =>
+            if (graft.ingest.FileStore(rootB).checkAndPut("q265",
+              "cas".getBytes("UTF-8"), Some("init".getBytes("UTF-8")),
+              1000L + i, s"winner-$i".getBytes("UTF-8"))) 1 else 0
+          }.sum().toLong
+          require(winners == 1L, s"exactly one CAS must win, got $winners")
+          // (c) expect-absent now fails (the key exists)
+          require(!graft.ingest.FileStore(root).checkAndPut("q265",
+            "cas".getBytes("UTF-8"), None, 9999L, "x".getBytes("UTF-8")),
+            "expect-absent must fail on an existing key")
+          // (d) the SQL shell's face agrees: one more bump via CALL
+          val viaSql = s.sql("CALL g.increment(table => 'q265', " +
+            s"rowkey => 'ctr-${ids.min}', delta => 0)").collect()(0).getLong(0)
+          require(viaSql == 3 * (ids.min % 5 + 1), s"CALL increment read $viaSql")
+          // the counters as the serving view — big-endian 8-byte bodies
+          s.sql(
+            s"""SELECT cast(rowkey as string) AS key_str,
+                       cast(conv(hex(body), 16, 10) as bigint) AS value
+                FROM g.`q265$$latest`
+                WHERE cast(rowkey as string) LIKE 'ctr-%'""")
+            .localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -2953,70 +2863,69 @@ object StoreLifecycle {
     // post-compaction — and zero data bytes.
     "q264_cells_snapshot_clone" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q264-cells").toString
-      val cat = "g264_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE TABLE $cat.q264 (rowkey BINARY, version BIGINT, body BINARY) " +
-          "TBLPROPERTIES('compactionThreshold'='2')")
-        def wave(g: Int): Unit =
-          s.sql(s"""INSERT INTO $cat.q264
-              SELECT cast(concat('doc-', doc_id) as binary),
-                     cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
-                     cast(md5(concat(cast(doc_id as string), 'S', '$g')) as binary)
-              FROM parquet.`$d/documents.parquet` WHERE doc_id % 9 = 0""")
-        (1 to 3).foreach(wave)
-        val n9 = Tables.documents(s, d).filter(col("doc_id") % 9 === 0).count()
-        val pinned = s.sql(s"CALL $cat.snapshot(table => 'q264', name => 'snap1')")
-          .collect()(0).getLong(0)
-        require(pinned > 0, "the snapshot must pin store files")
-        def snapDf = s.read.format("graft-cells")
-          .option("root", graft.ingest.Snapshots.rootOf(root, "snap1"))
-          .option("table", "q264").load()
-        def checksum(df: org.apache.spark.sql.DataFrame): Long =
-          df.select(sum(crc32(concat_ws("|", col("rowkey").cast("string"),
-            col("version").cast("string"), col("body").cast("string")))).as("c"))
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          s.sql("CREATE TABLE g.q264 (rowkey BINARY, version BIGINT, body BINARY) " +
+            "TBLPROPERTIES('compactionThreshold'='2')")
+          def wave(g: Int): Unit =
+            s.sql(s"""INSERT INTO g.q264
+                SELECT cast(concat('doc-', doc_id) as binary),
+                       cast($g as bigint) * 1000000000 + cast(doc_id as bigint),
+                       cast(md5(concat(cast(doc_id as string), 'S', '$g')) as binary)
+                FROM parquet.`$d/documents.parquet` WHERE doc_id % 9 = 0""")
+          (1 to 3).foreach(wave)
+          val n9 = Tables.documents(s, d).filter(col("doc_id") % 9 === 0).count()
+          val pinned = s.sql("CALL g.snapshot(table => 'q264', name => 'snap1')")
             .collect()(0).getLong(0)
-        val snapSum0 = checksum(snapDf)
-        require(snapDf.count() == 3 * n9, "the snapshot pins the full 3-generation view")
-        // (a) GC the LIVE table hard: cap 1 + major — live keeps one
-        // version per key, the snapshot must not move a byte
-        s.sql(s"ALTER TABLE $cat.q264 SET TBLPROPERTIES('maxVersions' = '1')")
-        s.sql(s"CALL $cat.compact_major(table => 'q264')")
-        require(s.table(s"$cat.q264").count() == n9, "the major GC'd the live table")
-        require(snapDf.count() == 3 * n9 && checksum(snapDf) == snapSum0,
-          "the snapshot survives the major + retention sweep byte-identically")
-        // (b) vacuum never collects pinned files
-        s.sql(s"CALL $cat.vacuum(older_than_ms => 0)")
-        require(checksum(snapDf) == snapSum0, "vacuum must not touch pinned files")
-        // (c) the clone: full pre-GC content under the snapshot-time DDL
-        s.sql(s"CALL $cat.clone_snapshot(name => 'snap1', new_table => 'q264c')")
-        require(s.table(s"$cat.q264c").count() == 3 * n9, "the clone is the pinned view")
-        val cloneSpec = PushTableSink.TableSpec.fromJson(
-          FileStore(root).readSpecJson("q264c").get)
-        require(cloneSpec.maxVersions == Int.MaxValue && cloneSpec.compactionThreshold == 2,
-          "the clone carries the SNAPSHOT-time DDL, not the later ALTER")
-        // (d) independence: mutate the CLONE only
-        s.sql(s"DELETE FROM $cat.q264c WHERE rowkey = cast('doc-9' as binary) " +
-          "AND version <= 2000000009")
-        s.sql(s"""INSERT INTO $cat.q264c
-            SELECT cast(concat('doc-', doc_id) as binary),
-                   cast(9000000000 + doc_id as bigint),
-                   cast(md5(concat(cast(doc_id as string), 'S9')) as binary)
-            FROM parquet.`$d/documents.parquet` WHERE doc_id % 36 = 0""")
-        require(s.table(s"$cat.q264").count() == n9,
-          "clone mutations must not touch the live table")
-        require(checksum(snapDf) == snapSum0,
-          "clone mutations must not touch the snapshot")
-        // (e) dropping the snapshot releases pins, never clone content
-        s.sql(s"CALL $cat.drop_snapshot(name => 'snap1')")
-        val n36 = Tables.documents(s, d).filter(col("doc_id") % 36 === 0).count()
-        require(s.table(s"$cat.q264c").count() == 3 * n9 - 2 + n36,
-          "the clone serves everything after the snapshot is dropped")
-        s.table(s"$cat.q264c")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
+          require(pinned > 0, "the snapshot must pin store files")
+          def snapDf = s.read.format("graft-cells")
+            .option("root", graft.ingest.Snapshots.rootOf(root, "snap1"))
+            .option("table", "q264").load()
+          def checksum(df: org.apache.spark.sql.DataFrame): Long =
+            df.select(sum(crc32(concat_ws("|", col("rowkey").cast("string"),
+              col("version").cast("string"), col("body").cast("string")))).as("c"))
+              .collect()(0).getLong(0)
+          val snapSum0 = checksum(snapDf)
+          require(snapDf.count() == 3 * n9, "the snapshot pins the full 3-generation view")
+          // (a) GC the LIVE table hard: cap 1 + major — live keeps one
+          // version per key, the snapshot must not move a byte
+          s.sql("ALTER TABLE g.q264 SET TBLPROPERTIES('maxVersions' = '1')")
+          s.sql("CALL g.compact_major(table => 'q264')")
+          require(s.table("g.q264").count() == n9, "the major GC'd the live table")
+          require(snapDf.count() == 3 * n9 && checksum(snapDf) == snapSum0,
+            "the snapshot survives the major + retention sweep byte-identically")
+          // (b) vacuum never collects pinned files
+          s.sql("CALL g.vacuum(older_than_ms => 0)")
+          require(checksum(snapDf) == snapSum0, "vacuum must not touch pinned files")
+          // (c) the clone: full pre-GC content under the snapshot-time DDL
+          s.sql("CALL g.clone_snapshot(name => 'snap1', new_table => 'q264c')")
+          require(s.table("g.q264c").count() == 3 * n9, "the clone is the pinned view")
+          val cloneSpec = PushTableSink.TableSpec.fromJson(
+            FileStore(root).readSpecJson("q264c").get)
+          require(cloneSpec.maxVersions == Int.MaxValue && cloneSpec.compactionThreshold == 2,
+            "the clone carries the SNAPSHOT-time DDL, not the later ALTER")
+          // (d) independence: mutate the CLONE only
+          s.sql("DELETE FROM g.q264c WHERE rowkey = cast('doc-9' as binary) " +
+            "AND version <= 2000000009")
+          s.sql(s"""INSERT INTO g.q264c
+              SELECT cast(concat('doc-', doc_id) as binary),
+                     cast(9000000000 + doc_id as bigint),
+                     cast(md5(concat(cast(doc_id as string), 'S9')) as binary)
+              FROM parquet.`$d/documents.parquet` WHERE doc_id % 36 = 0""")
+          require(s.table("g.q264").count() == n9,
+            "clone mutations must not touch the live table")
+          require(checksum(snapDf) == snapSum0,
+            "clone mutations must not touch the snapshot")
+          // (e) dropping the snapshot releases pins, never clone content
+          s.sql("CALL g.drop_snapshot(name => 'snap1')")
+          val n36 = Tables.documents(s, d).filter(col("doc_id") % 36 === 0).count()
+          require(s.table("g.q264c").count() == 3 * n9 - 2 + n36,
+            "the clone serves everything after the snapshot is dropped")
+          s.table("g.q264c")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -3035,48 +2944,47 @@ object StoreLifecycle {
     // finalizes — pushes are partial, truncation is I/O savings only).
     "q263_cells_reverse_scan" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q263-cells").toString
-      val cat = "g263_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // three versions per %6 key, ONE bulk segment per region (the
-        // compacted steady state the reverse walk rides)
-        graft.ingest.FileStore(root).ensureTable("q263",
-          PushTableSink.TableSpec(compactionThreshold = 0))
-        BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
-            .select(col("doc_id"), explode(array(lit(1), lit(2), lit(3))).as("g"))
-            .select(lit("q263").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr("doc_id * 4 + g").as("version"),
-              expr("cast(md5(concat(cast(doc_id as string), 'Z', cast(g as string))) as binary)").as("body")),
-          root)
-        // the LAST key in DESC order gets a bound marker at its g=3
-        // version: the reverse walk must mask it and serve g<3 plus
-        // the next keys instead — pinned through the oracle hash
-        val lastId = Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
-          .agg(max(expr("concat('doc-', doc_id)"))).collect()(0).getString(0)
-        val lastMaxV = s.sql(s"SELECT max(version) AS v FROM $cat.q263 " +
-          s"WHERE rowkey = cast('$lastId' as binary)").collect()(0).getLong(0)
-        s.sql(s"DELETE FROM $cat.q263 WHERE rowkey = cast('$lastId' as binary) " +
-          s"AND version = $lastMaxV")
-        graft.sources.CellsSource.cappedRowsEmitted.set(0)
-        val q = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version
-              FROM $cat.q263 ORDER BY rowkey DESC, version DESC LIMIT 10""")
-        val desc = q.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains("topK=10 rev"), s"the reverse top-N must push: $desc")
-        val out = q.localCheckpoint()
-        val total = s.table(s"$cat.q263").count()
-        val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
-        // every 'doc-*' key shares region 64, so ONE shard serves the
-        // reverse walk: the exact two-column shape stops at exactly k
-        require(emitted > 0 && emitted <= 10 && emitted < total,
-          s"reverse truncation must bound emission: $emitted of $total rows")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // three versions per %6 key, ONE bulk segment per region (the
+          // compacted steady state the reverse walk rides)
+          graft.ingest.FileStore(root).ensureTable("q263",
+            PushTableSink.TableSpec(compactionThreshold = 0))
+          BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
+              .select(col("doc_id"), explode(array(lit(1), lit(2), lit(3))).as("g"))
+              .select(lit("q263").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                expr("doc_id * 4 + g").as("version"),
+                expr("cast(md5(concat(cast(doc_id as string), 'Z', cast(g as string))) as binary)").as("body")),
+            root)
+          // the LAST key in DESC order gets a bound marker at its g=3
+          // version: the reverse walk must mask it and serve g<3 plus
+          // the next keys instead — pinned through the oracle hash
+          val lastId = Tables.documents(s, d).filter(col("doc_id") % 6 === 0)
+            .agg(max(expr("concat('doc-', doc_id)"))).collect()(0).getString(0)
+          val lastMaxV = s.sql("SELECT max(version) AS v FROM g.q263 " +
+            s"WHERE rowkey = cast('$lastId' as binary)").collect()(0).getLong(0)
+          s.sql(s"DELETE FROM g.q263 WHERE rowkey = cast('$lastId' as binary) " +
+            s"AND version = $lastMaxV")
+          graft.sources.CellsSource.cappedRowsEmitted.set(0)
+          val q = s.sql(
+            s"""SELECT cast(rowkey as string) AS key_str, version
+                FROM g.q263 ORDER BY rowkey DESC, version DESC LIMIT 10""")
+          val desc = q.queryExecution.optimizedPlan.collectFirst {
+            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              r.scan.description()
+          }.getOrElse("")
+          require(desc.contains("topK=10 rev"), s"the reverse top-N must push: $desc")
+          val out = q.localCheckpoint()
+          val total = s.table("g.q263").count()
+          val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
+          // every 'doc-*' key shares region 64, so ONE shard serves the
+          // reverse walk: the exact two-column shape stops at exactly k
+          require(emitted > 0 && emitted <= 10 && emitted < total,
+            s"reverse truncation must bound emission: $emitted of $total rows")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -3097,76 +3005,75 @@ object StoreLifecycle {
     // distributed cell-put path as any load; commit is O(1) renames.
     "q262_cells_ctas_rtas" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q262-cells").toString
-      val cat = "g262_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // (a) the poisoned CTAS: one in ~50 rows raises — the job dies
-        // mid-write, the staged generation aborts, NO table appears
-        val poisoned =
-          try {
-            s.sql(s"""CREATE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
-                AS SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
-                          cast(1000000000 + doc_id as bigint) AS version,
-                          cast(IF(doc_id % 50 = 49, raise_error('q262 poison'),
-                                  md5(concat(cast(doc_id as string), 'C1'))) as binary) AS body
-                FROM parquet.`$d/documents.parquet`""")
-            false
-          } catch { case _: Exception => true }
-        require(poisoned, "the poisoned CTAS must fail")
-        require(!Files.isDirectory(Paths.get(root, "q262")),
-          "a crashed CTAS must leave NO table")
-        require(s.sql(s"SHOW TABLES IN $cat").collect().isEmpty,
-          "nothing may be listed after the failed CTAS")
-        val stagingDir = Paths.get(root, "_ctas_staging")
-        val orphans =
-          if (!Files.isDirectory(stagingDir)) 0
-          else { val l = Files.list(stagingDir)
-                 try l.iterator().asScala.size finally l.close() }
-        require(orphans == 0, s"abort must sweep its staged generation, found $orphans")
-        // (b) the real CTAS: DDL properties + a pre-split layout ride
-        // into the committed table ('doc-5…' keys go to the second
-        // region — hex 646f632d35 = "doc-5")
-        s.sql(s"""CREATE TABLE $cat.q262
-            TBLPROPERTIES('compactionThreshold'='0', 'maxVersions'='5',
-                          'splitPoints'='646f632d35')
-            AS SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
-                      cast(1000000000 + doc_id as bigint) AS version,
-                      cast(md5(concat(cast(doc_id as string), 'C1')) as binary) AS body
-            FROM parquet.`$d/documents.parquet` WHERE doc_id % 8 = 0""")
-        val store = FileStore(root)
-        val layout = store.splitsOf("q262")
-        require(layout.size == 2 && layout.names == Vector("-", "646f632d35"),
-          s"the pre-split layout must commit with the table: ${layout.names}")
-        val spec = PushTableSink.TableSpec.fromJson(store.readSpecJson("q262").get)
-        require(spec.maxVersions == 5 && spec.compactionThreshold == 0,
-          "TBLPROPERTIES must commit with the table")
-        Seq("-", "646f632d35").foreach { sh =>
-          val n = ShardFiles.list(Paths.get(root, "q262", sh)).paths.size
-          require(n > 0, s"region $sh must hold cells (placement honors the CTAS layout)")
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // (a) the poisoned CTAS: one in ~50 rows raises — the job dies
+          // mid-write, the staged generation aborts, NO table appears
+          val poisoned =
+            try {
+              s.sql(s"""CREATE TABLE g.q262 TBLPROPERTIES('compactionThreshold'='0')
+                  AS SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
+                            cast(1000000000 + doc_id as bigint) AS version,
+                            cast(IF(doc_id % 50 = 49, raise_error('q262 poison'),
+                                    md5(concat(cast(doc_id as string), 'C1'))) as binary) AS body
+                  FROM parquet.`$d/documents.parquet`""")
+              false
+            } catch { case _: Exception => true }
+          require(poisoned, "the poisoned CTAS must fail")
+          require(!Files.isDirectory(Paths.get(root, "q262")),
+            "a crashed CTAS must leave NO table")
+          require(s.sql("SHOW TABLES IN g").collect().isEmpty,
+            "nothing may be listed after the failed CTAS")
+          val stagingDir = Paths.get(root, "_ctas_staging")
+          val orphans =
+            if (!Files.isDirectory(stagingDir)) 0
+            else { val l = Files.list(stagingDir)
+                   try l.iterator().asScala.size finally l.close() }
+          require(orphans == 0, s"abort must sweep its staged generation, found $orphans")
+          // (b) the real CTAS: DDL properties + a pre-split layout ride
+          // into the committed table ('doc-5…' keys go to the second
+          // region — hex 646f632d35 = "doc-5")
+          s.sql(s"""CREATE TABLE g.q262
+              TBLPROPERTIES('compactionThreshold'='0', 'maxVersions'='5',
+                            'splitPoints'='646f632d35')
+              AS SELECT cast(concat('doc-', doc_id) as binary) AS rowkey,
+                        cast(1000000000 + doc_id as bigint) AS version,
+                        cast(md5(concat(cast(doc_id as string), 'C1')) as binary) AS body
+              FROM parquet.`$d/documents.parquet` WHERE doc_id % 8 = 0""")
+          val store = FileStore(root)
+          val layout = store.splitsOf("q262")
+          require(layout.size == 2 && layout.names == Vector("-", "646f632d35"),
+            s"the pre-split layout must commit with the table: ${layout.names}")
+          val spec = PushTableSink.TableSpec.fromJson(store.readSpecJson("q262").get)
+          require(spec.maxVersions == 5 && spec.compactionThreshold == 0,
+            "TBLPROPERTIES must commit with the table")
+          Seq("-", "646f632d35").foreach { sh =>
+            val n = ShardFiles.list(Paths.get(root, "q262", sh)).paths.size
+            require(n > 0, s"region $sh must hold cells (placement honors the CTAS layout)")
+          }
+          val n8 = Tables.documents(s, d).filter(col("doc_id") % 8 === 0).count()
+          require(s.table("g.q262").count() == n8, "CTAS content = the query")
+          // (c) self-referential RTAS: the source scan reads the OLD
+          // generation for the whole job (the staged dir is invisible)
+          s.sql(s"""REPLACE TABLE g.q262 TBLPROPERTIES('compactionThreshold'='0')
+              AS SELECT rowkey, version + 1000000000 AS version, body FROM g.q262""")
+          require(s.table("g.q262").count() == n8,
+            "RTAS over itself must see the old generation exactly once")
+          // (d) a poisoned RTAS leaves the old table intact
+          val poisoned2 =
+            try {
+              s.sql(s"""REPLACE TABLE g.q262 TBLPROPERTIES('compactionThreshold'='0')
+                  AS SELECT rowkey, version,
+                            cast(raise_error('q262 rtas poison') as binary) AS body
+                  FROM g.q262""")
+              false
+            } catch { case _: Exception => true }
+          require(poisoned2, "the poisoned RTAS must fail")
+          s.table("g.q262")
+            .select(col("rowkey").cast("string").as("key_str"), col("version"),
+              col("body").cast("string").as("body_md5"))
+            .localCheckpoint()
         }
-        val n8 = Tables.documents(s, d).filter(col("doc_id") % 8 === 0).count()
-        require(s.table(s"$cat.q262").count() == n8, "CTAS content = the query")
-        // (c) self-referential RTAS: the source scan reads the OLD
-        // generation for the whole job (the staged dir is invisible)
-        s.sql(s"""REPLACE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
-            AS SELECT rowkey, version + 1000000000 AS version, body FROM $cat.q262""")
-        require(s.table(s"$cat.q262").count() == n8,
-          "RTAS over itself must see the old generation exactly once")
-        // (d) a poisoned RTAS leaves the old table intact
-        val poisoned2 =
-          try {
-            s.sql(s"""REPLACE TABLE $cat.q262 TBLPROPERTIES('compactionThreshold'='0')
-                AS SELECT rowkey, version,
-                          cast(raise_error('q262 rtas poison') as binary) AS body
-                FROM $cat.q262""")
-            false
-          } catch { case _: Exception => true }
-        require(poisoned2, "the poisoned RTAS must fail")
-        s.table(s"$cat.q262")
-          .select(col("rowkey").cast("string").as("key_str"), col("version"),
-            col("body").cast("string").as("body_md5"))
-          .localCheckpoint()
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -3184,7 +3091,6 @@ object StoreLifecycle {
     // (still in the registry) pins that pushdown changed nothing.
     "q258_cells_versions_pushdown" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q258-cells").toString
-      val cat = "g258_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         // raw put backlog (threshold 0) — the inventory counts files
         graft.ingest.FileStore(root).ensureTable("q258",
@@ -3209,32 +3115,32 @@ object StoreLifecycle {
           .write.format("graft-cells").mode("append")
           .option("root", root).option("table", "q258")
           .option("tombstone", "true").save()
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        // the single-shard probe: doc-0 is a %6 key, its digest's
-        // first byte IS its region
-        val shardName = org.apache.commons.codec.digest.DigestUtils
-          .md5Hex("doc-0").substring(0, 2)
-        graft.sources.CellsVersions.shardsListed.set(0)
-        val probe = s.sql(s"SELECT count(*) AS n FROM $cat.`q258$$versions` " +
-          s"WHERE shard = '$shardName'")
-        val desc = probe.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains("shards=1"), s"the shard predicate must reach the scan: $desc")
-        require(probe.collect()(0).getLong(0) > 0, "the probed region holds files")
-        require(graft.sources.CellsVersions.shardsListed.get() == 1,
-          s"ONE directory listed out of the whole region set: ${graft.sources.CellsVersions.shardsListed.get()}")
-        // the per-kind fold under a pushed kind filter
-        val out = s.sql(
-          s"""SELECT kind, count(*) AS files, min(min_version) AS min_v,
-                     max(max_version) AS max_v
-              FROM $cat.`q258$$versions`
-              WHERE kind IN ('put', 'marker_bound') GROUP BY kind""")
-          .localCheckpoint()
-        require(out.count() >= 1, "at least one backlog kind present")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          // the single-shard probe: doc-0 is a %6 key, its digest's
+          // first byte IS its region
+          val shardName = org.apache.commons.codec.digest.DigestUtils
+            .md5Hex("doc-0").substring(0, 2)
+          graft.sources.CellsVersions.shardsListed.set(0)
+          val probe = s.sql("SELECT count(*) AS n FROM g.`q258$versions` " +
+            s"WHERE shard = '$shardName'")
+          val desc = probe.queryExecution.optimizedPlan.collectFirst {
+            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              r.scan.description()
+          }.getOrElse("")
+          require(desc.contains("shards=1"), s"the shard predicate must reach the scan: $desc")
+          require(probe.collect()(0).getLong(0) > 0, "the probed region holds files")
+          require(graft.sources.CellsVersions.shardsListed.get() == 1,
+            s"ONE directory listed out of the whole region set: ${graft.sources.CellsVersions.shardsListed.get()}")
+          // the per-kind fold under a pushed kind filter
+          val out = s.sql(
+            s"""SELECT kind, count(*) AS files, min(min_version) AS min_v,
+                       max(max_version) AS max_v
+                FROM g.`q258$$versions`
+                WHERE kind IN ('put', 'marker_bound') GROUP BY kind""")
+            .localCheckpoint()
+          require(out.count() >= 1, "at least one backlog kind present")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -3253,7 +3159,6 @@ object StoreLifecycle {
     // out of a 4-versions-per-key table — far under the row count.
     "q259_cells_latest_k_versions" -> { (s, d) =>
       val root = Files.createTempDirectory("graft-q259-cells").toString
-      val cat = "g259_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
         // one bulk load ⇒ one sorted segment per shard (compacted form)
         BulkLoad.writeCells(
@@ -3264,24 +3169,24 @@ object StoreLifecycle {
               expr("doc_id * 8 + g").as("version"),
               expr("cast(md5(concat(cast(doc_id as string), 'K', cast(g as string))) as binary)").as("body")),
           root)
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val total = 4 * Tables.documents(s, d).filter(col("doc_id") % 5 === 0).count()
-        graft.sources.CellsSource.cappedRowsEmitted.set(0)
-        val top = s.sql(
-          s"""SELECT cast(rowkey as string) AS key_str, version
-              FROM $cat.q259 ORDER BY rowkey ASC, version DESC LIMIT 10""")
-        val desc = top.queryExecution.optimizedPlan.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.description()
-        }.getOrElse("")
-        require(desc.contains("topK=10 vdesc"),
-          s"the DESC-version top-N must reach the scan: $desc")
-        val out = top.localCheckpoint()
-        val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
-        require(emitted >= 10 && emitted <= 12 && emitted < total,
-          s"key-group truncation: emitted $emitted of $total (expect 10..12)")
-        out
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          val total = 4 * Tables.documents(s, d).filter(col("doc_id") % 5 === 0).count()
+          graft.sources.CellsSource.cappedRowsEmitted.set(0)
+          val top = s.sql(
+            s"""SELECT cast(rowkey as string) AS key_str, version
+                FROM g.q259 ORDER BY rowkey ASC, version DESC LIMIT 10""")
+          val desc = top.queryExecution.optimizedPlan.collectFirst {
+            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              r.scan.description()
+          }.getOrElse("")
+          require(desc.contains("topK=10 vdesc"),
+            s"the DESC-version top-N must reach the scan: $desc")
+          val out = top.localCheckpoint()
+          val emitted = graft.sources.CellsSource.cappedRowsEmitted.get()
+          require(emitted >= 10 && emitted <= 12 && emitted < total,
+            s"key-group truncation: emitted $emitted of $total (expect 10..12)")
+          out
+        }
       } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     },
 
@@ -3303,57 +3208,56 @@ object StoreLifecycle {
       val root = Files.createTempDirectory("graft-q260-cells").toString
       val ck = Files.createTempDirectory("graft-q260-ck").toString
       val outDir = Files.createTempDirectory("graft-q260-out").toString + "/rows"
-      val cat = "g260_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       try {
-        s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.CellsCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        def seed(g: Int): Unit = BulkLoad.writeCells(
-          Tables.documents(s, d).filter(col("doc_id") % 14 === 0)
-            .select(lit("q260").as("tableName"),
-              expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
-              expr(s"$g * 1000000000 + doc_id").as("version"),
-              expr(s"cast(md5(concat(cast(doc_id as string), 'P', '$g')) as binary)").as("body")),
-          root)
-        def drain(): Unit = {
-          val q = s.readStream.format("graft-cells")
-            .option("root", root).option("table", "q260")
-            .option("changeFeed", "true").option("provenance", "true").load()
-            .select(col("rowkey").cast("string").as("key_str"), col("version"),
-              col("op"), col("_shard"), col("_file"), col("_kind"))
-            .writeStream
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-              df.write.mode("append").parquet(outDir)
-            }
-            .option("checkpointLocation", ck)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+        withConf(s, cellsCatalog("g", root): _*) { s =>
+          def seed(g: Int): Unit = BulkLoad.writeCells(
+            Tables.documents(s, d).filter(col("doc_id") % 14 === 0)
+              .select(lit("q260").as("tableName"),
+                expr("cast(concat('doc-', doc_id) as binary)").as("rowkey"),
+                expr(s"$g * 1000000000 + doc_id").as("version"),
+                expr(s"cast(md5(concat(cast(doc_id as string), 'P', '$g')) as binary)").as("body")),
+            root)
+          def drain(): Unit = {
+            val q = s.readStream.format("graft-cells")
+              .option("root", root).option("table", "q260")
+              .option("changeFeed", "true").option("provenance", "true").load()
+              .select(col("rowkey").cast("string").as("key_str"), col("version"),
+                col("op"), col("_shard"), col("_file"), col("_kind"))
+              .writeStream
+              .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+                df.write.mode("append").parquet(outDir)
+              }
+              .option("checkpointLocation", ck)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .start()
+            q.awaitTermination()
+          }
+          seed(1)
+          drain()
+          val n14 = Tables.documents(s, d).filter(col("doc_id") % 14 === 0).count()
+          require(s.read.parquet(outDir).count() == n14, "drain 1 = the seed window")
+          seed(2)
+          val delKeys = Tables.documents(s, d).filter(col("doc_id") % 42 === 0)
+            .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
+          val inList = delKeys
+            .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
+            .mkString("(", ", ", ")")
+          s.sql(s"DELETE FROM g.q260 WHERE rowkey IN $inList") // bare: stamps gen-2 latest
+          drain()
+          val log = s.read.parquet(outDir).localCheckpoint()
+          require(log.count() == 2 * n14 + delKeys.length,
+            s"exactly-once across the restart: ${log.count()}")
+          require(log.filter(col("_file") === "").count() == 0,
+            "every streamed edit names its serving file")
+          require(log.filter(col("op") === "put").select("_kind").distinct()
+            .collect().map(_.getString(0)).toSet == Set("segment"),
+            "bulk-seeded puts attribute to their segment")
+          require(log.filter(col("op") === "delete").select("_kind").distinct()
+            .collect().map(_.getString(0)).toSet == Set("marker_bound"),
+            "markers attribute to their marker file")
+          log.select(col("key_str"), col("version"), col("op"), col("_kind"))
+            .localCheckpoint()
         }
-        seed(1)
-        drain()
-        val n14 = Tables.documents(s, d).filter(col("doc_id") % 14 === 0).count()
-        require(s.read.parquet(outDir).count() == n14, "drain 1 = the seed window")
-        seed(2)
-        val delKeys = Tables.documents(s, d).filter(col("doc_id") % 42 === 0)
-          .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).sorted
-        val inList = delKeys
-          .map(id => "X'" + s"doc-$id".getBytes("UTF-8").map(b => f"$b%02x").mkString + "'")
-          .mkString("(", ", ", ")")
-        s.sql(s"DELETE FROM $cat.q260 WHERE rowkey IN $inList") // bare: stamps gen-2 latest
-        drain()
-        val log = s.read.parquet(outDir).localCheckpoint()
-        require(log.count() == 2 * n14 + delKeys.length,
-          s"exactly-once across the restart: ${log.count()}")
-        require(log.filter(col("_file") === "").count() == 0,
-          "every streamed edit names its serving file")
-        require(log.filter(col("op") === "put").select("_kind").distinct()
-          .collect().map(_.getString(0)).toSet == Set("segment"),
-          "bulk-seeded puts attribute to their segment")
-        require(log.filter(col("op") === "delete").select("_kind").distinct()
-          .collect().map(_.getString(0)).toSet == Set("marker_bound"),
-          "markers attribute to their marker file")
-        log.select(col("key_str"), col("version"), col("op"), col("_kind"))
-          .localCheckpoint()
       } finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))

@@ -889,22 +889,14 @@ case class CellsScanBuilder(root: String, table: String, stable: Boolean = false
   /** READ-TIME RETENTION policy of this table ([[graft.ingest.
     * Retention]]) — resolved ONCE at planning time, clock snapshotted
     * here (scan-open time, the HBase scanner contract): scan option
-    * `retentionNowMillis` wins, then session conf
-    * `spark.graft.retention.nowMillis`, then the wall clock. The
-    * change-feed face never applies retention (it is an edit log, same
-    * rule as delete masks); the streaming face likewise (replayed
-    * offset windows must regenerate identical rows) — both get None
-    * downstream of this builder. */
+    * `retentionNowMillis`, else the wall clock. The change-feed face
+    * never applies retention (it is an edit log, same rule as delete
+    * masks); the streaming face likewise (replayed offset windows must
+    * regenerate identical rows) — both get None downstream of this
+    * builder. */
   private lazy val retentionPolicy: Option[graft.ingest.Retention.Policy] =
     if (changeFeed) None
-    else {
-      val now = retentionNowOpt
-        .orElse(org.apache.spark.sql.SparkSession.getActiveSession
-          .flatMap(s => Option(s.conf.get("spark.graft.retention.nowMillis", null)))
-          .flatMap(_.toLongOption))
-        .getOrElse(System.currentTimeMillis())
-      graft.ingest.Retention.of(root, table, now)
-    }
+    else graft.ingest.Retention.of(root, table, retentionNowOpt.getOrElse(System.currentTimeMillis()))
   // rowkey point predicates, resolved to cell-file digests AND the
   // probed key bytes themselves (range-coverage shard pruning): None =
   // no point predicate, Some(empty) = a provably-empty scan

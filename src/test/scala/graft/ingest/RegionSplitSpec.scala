@@ -168,6 +168,49 @@ class RegionSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("puts after a crash at `recorded` fold with the satellite and keep their coordinates") {
+    val root = Files.createTempDirectory("rsplit-crash-put").toString
+    val t = "crashput"
+    val store = FileStore(root)
+    store.ensureTable(t, TableSpec(compactionThreshold = 2))
+    (0 until 8).foreach(w => store.putBatch(t, cells(t, (w * 25) until (w * 25 + 25), 1L)))
+    RegionSplit.probeHook = { stage =>
+      if (stage.startsWith("recorded:")) throw new java.io.IOException(s"crash at $stage")
+    }
+    try RegionSplit.maybeSplit(root, t, "5a", maxRegionBytes = 2048)
+    finally RegionSplit.probeHook = _ => ()
+    val sats = {
+      val l = Files.list(Paths.get(root, t, "5a"))
+      try l.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("_split-")).toVector
+      finally l.close()
+    }
+    assert(sats.size == 1, s"one parked satellite after the crash: $sats")
+    val start = FileStore.Splits.startOf(ShardFiles.satelliteTargetOf(sats.head).get).get
+    val upper = (0 until 200).filter(i => java.util.Arrays.compareUnsigned(key(i), start) >= 0)
+    assert(upper.size > 4, s"upper keys: ${upper.size}")
+    // the daughter's directory is born from the layout: first one put
+    // file, then a batch over the flush threshold, which lands as a
+    // segment stamped from the new directory's own history
+    def rewrite(ks: Seq[Int]) = ks.map(i => CellPut(t, key(i), 1L, s"new-$i".getBytes("UTF-8")))
+    store.putBatch(t, rewrite(upper.take(1)))
+    store.putBatch(t, rewrite(upper.slice(1, 4)))
+    RegionSplit.completePending(root, t)
+    val rewritten = upper.take(4).toSet
+    def body(i: Int) = if (rewritten(i)) s"new-$i" else s"body-$i-1"
+    val expected = (0 until 200).map(i => (new String(key(i), "UTF-8"), 1L, body(i))).toSet
+    assert(scanAll(root, t) == expected, "the scan after recovery")
+    Fixtures.assertPointFacesAgree(store, t, expected, "after recovery with post-crash puts")
+    val upperSeen = upper.count(i =>
+      store.getLatest(t, key(i)).exists { case (_, b) => new String(b, "UTF-8") == body(i) })
+    assert(upperSeen == upper.size, s"getLatest sees $upperSeen of ${upper.size} upper keys")
+    shardDirs(root, t).foreach { d =>
+      val l = Files.list(d)
+      val leftover = try l.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("_split")).toVector finally l.close()
+      assert(leftover.isEmpty, s"satellite left after recovery: $d $leftover")
+    }
+  }
+
   test("split changes the layout fingerprint — SPJ against a pre-split partner declines") {
     val root = Files.createTempDirectory("rsplit-fp").toString
     val t = "fpt"

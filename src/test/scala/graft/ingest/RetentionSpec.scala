@@ -184,31 +184,28 @@ class RetentionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val shard = java.nio.file.Paths.get(root, "t", FileStore.shardOf(k))
     CellSegment.write(shard,
       (1 to 4).iterator.map(i => (k, now - 500L + i * 100L, s"b$i".getBytes)), seqNo = 1L)
-    spark.conf.set("spark.graft.retention.nowMillis", now.toString)
-    try {
-      val batch = spark.read.format("graft-cells")
-        .option("root", root).option("table", "t")
-        .option("retentionNowMillis", now.toString).load()
-      assert(batch.count() == 2, "the batch face masks to the newest cap")
-      // the plain STREAM face drains everything — all four versions
-      val outDir = java.nio.file.Files.createTempDirectory("ret-stream-out").toString
-      val ck = java.nio.file.Files.createTempDirectory("ret-stream-ck").toString
-      val q = spark.readStream.format("graft-cells")
-        .option("root", root).option("table", "t").load()
-        .select(col("version"))
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val streamed = spark.read.parquet(outDir).count()
-      assert(streamed == 4,
-        s"the stream feed must deliver retention-hidden edits (WALs carry expired edits): $streamed")
-      // the $changes batch face likewise reports every edit
-      val feed = spark.read.format("graft-cells")
-        .option("root", root).option("table", "t")
-        .option("changeFeed", "true").load()
-      assert(feed.count() == 4)
-    } finally spark.conf.unset("spark.graft.retention.nowMillis")
+    val batch = spark.read.format("graft-cells")
+      .option("root", root).option("table", "t")
+      .option("retentionNowMillis", now.toString).load()
+    assert(batch.count() == 2, "the batch face masks to the newest cap")
+    // the plain STREAM face drains everything — all four versions
+    val outDir = java.nio.file.Files.createTempDirectory("ret-stream-out").toString
+    val ck = java.nio.file.Files.createTempDirectory("ret-stream-ck").toString
+    val q = spark.readStream.format("graft-cells")
+      .option("root", root).option("table", "t").load()
+      .select(col("version"))
+      .writeStream.format("parquet")
+      .option("path", outDir).option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val streamed = spark.read.parquet(outDir).count()
+    assert(streamed == 4,
+      s"the stream feed must deliver retention-hidden edits (WALs carry expired edits): $streamed")
+    // the $changes batch face likewise reports every edit
+    val feed = spark.read.format("graft-cells")
+      .option("root", root).option("table", "t")
+      .option("changeFeed", "true").load()
+    assert(feed.count() == 4)
   }
 
   test("aggregate pushdown stays metadata-only on a retention-active table and counts the masked view") {

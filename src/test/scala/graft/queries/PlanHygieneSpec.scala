@@ -79,17 +79,29 @@ class PlanHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       "q178_rrf_fusion",  // the 1-row query vector broadcasts against the corpus (q18's shape)
       "q180_ccf",         // the 1-row reference-denominator scalar broadcasts
       "q183_hll_intersect") // |types|² sketch pairs — corpus-independent
+    // every query also leaves the session as it found it: a conf or an
+    // optimizer rule it needs lives on its own child session
+    // (`withConf`), never on the shared one
+    val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
     val failures = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(sanctioned)
       .flatMap { q =>
+        val confBefore = spark.conf.getAll
+        val rulesBefore = spark.experimental.extraOptimizations
         val df = SparkEntry.queries(q)(spark, sf)
         df.collect()
+        val (before, after) = (confBefore.toSet, spark.conf.getAll.toSet)
+        val changed = ((after diff before) ++ (before diff after)).map(_._1)
+        if (changed.nonEmpty) leaks += s"$q conf: ${changed.toSeq.sorted.mkString(", ")}"
+        if (spark.experimental.extraOptimizations != rulesBefore)
+          leaks += s"$q rules: ${spark.experimental.extraOptimizations.map(_.ruleName)}"
         val s = df.queryExecution.executedPlan.toString
         if (s.contains("CartesianProduct") || s.contains("BroadcastNestedLoopJoin"))
           Some(q)
         else None
       }
     assert(failures.isEmpty, s"cartesian/nested-loop in: $failures")
+    assert(leaks.isEmpty, s"queries changed the shared session: ${leaks.mkString("; ")}")
   }
 
   test("q49: bucketed join reads bucket-aligned scans with no exchange on the join keys") {
