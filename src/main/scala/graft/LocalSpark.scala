@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 /** The one local session every driver-side tool builds (Bench, Verify,
   * SmokeMain and the `graft.tools` mains): `local[$SPARK_GRAFT_CPUS]`
   * (default 4), UTC, nanosecond parquet timestamps read as longs (see
-  * `queries.Tables.events`), AQE on, UI off, log level WARN.
+  * `queries.Tables.events`), AQE on, UI off, artifact isolation off,
+  * log level WARN.
   * `IngestMain` keeps its own builder: under `spark-submit` the master
   * comes from the submitter, not from this program.
   */
@@ -27,6 +28,10 @@ object LocalSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // an artifact-isolated session gets its own executor class loader,
+      // and generated code is cached per loader: every session
+      // `queries.withConf` clones would compile its plans afresh
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
