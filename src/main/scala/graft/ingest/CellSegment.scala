@@ -30,7 +30,10 @@ import java.security.MessageDigest
   * trailer's version bounds give the segment-level analog of the
   * filename version prune (a time-travel slice skips whole segments).
   * Segments are immutable once placed (rename-only lifecycle), so
-  * loaded indexes are cacheable per JVM forever.
+  * loaded indexes are cacheable per JVM forever. A loaded index stays
+  * the raw 48 B/entry block it was read as ([[Index]]): probes compare
+  * digest bytes in place, and the cache charges that block plus a fixed
+  * per-index overhead, the way HBase's block cache holds index blocks.
   *
   * The bloom block is a ROW bloom over the segment's DISTINCT key
   * digests (~10 bits/key, 7 probes ⇒ ≈1% false positives) — the HBase
@@ -61,8 +64,6 @@ object CellSegment {
                         maxVersion: Long, dataBytes: Long, distinctKeys: Int = 0,
                         seqNo: Long = 0L)
 
-  final case class IndexEntry(digestHex: String, version: Long, offset: Long)
-
   /** GSE3 trailer: alongside the v2 prune bounds it carries the
     * STATISTICS the planner wants without an index walk —
     * `distinctKeys` (the segment's key cardinality, the $latest face's
@@ -79,16 +80,14 @@ object CellSegment {
   /** ROW bloom over key digests. `words` is the bit array; probes are
     * the Kirsch-Mitzenmacher composite h1 + i·h2 of the digest's own
     * first two big-endian words — sha256 output is uniform, so no
-    * further mixing is needed. */
+    * further mixing is needed. Probes take the 32 digest bytes and read
+    * h1/h2 straight off them: no hex on the absent-key fast path this
+    * bloom exists for. */
   final case class Bloom(words: Array[Long]) {
     private val bits = words.length.toLong * 64
-    // h1/h2 parsed ONCE per probe call, not once per probe BIT: the
-    // absent-key fast path this bloom exists for would otherwise spend
-    // 14 hex parses per mightContain — string work on the path that is
-    // supposed to cost ~1.25 B/key of bit tests
-    def add(digestHex: String): Unit = {
-      val h1 = java.lang.Long.parseUnsignedLong(digestHex.substring(0, 16), 16)
-      val h2 = java.lang.Long.parseUnsignedLong(digestHex.substring(16, 32), 16)
+    def add(digest: Array[Byte]): Unit = {
+      val h1 = longAt(digest, 0)
+      val h2 = longAt(digest, 8)
       var i = 0
       while (i < BloomProbes) {
         val b = java.lang.Long.remainderUnsigned(h1 + i * h2, bits)
@@ -96,9 +95,9 @@ object CellSegment {
         i += 1
       }
     }
-    def mightContain(digestHex: String): Boolean = {
-      val h1 = java.lang.Long.parseUnsignedLong(digestHex.substring(0, 16), 16)
-      val h2 = java.lang.Long.parseUnsignedLong(digestHex.substring(16, 32), 16)
+    def mightContain(digest: Array[Byte]): Boolean = {
+      val h1 = longAt(digest, 0)
+      val h2 = longAt(digest, 8)
       var i = 0
       while (i < BloomProbes) {
         val b = java.lang.Long.remainderUnsigned(h1 + i * h2, bits)
@@ -107,6 +106,14 @@ object CellSegment {
       }
       true
     }
+  }
+
+  /** The big-endian long at `b[at, at + 8)`. */
+  private def longAt(b: Array[Byte], at: Int): Long = {
+    var v = 0L
+    var i = at
+    while (i < at + 8) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
+    v
   }
 
   private def emptyBloom(distinctKeys: Int): Bloom =
@@ -160,7 +167,8 @@ object CellSegment {
     val indexOut = new DataOutputStream(index)
     // distinct key digests for the ROW bloom — input is key-sorted, so
     // a key's digest repeats only consecutively (one entry per key)
-    val bloomKeys = Vector.newBuilder[String]
+    val bloomKeys = Vector.newBuilder[Array[Byte]]
+    var keyDigest: Array[Byte] = null
     var bloomKeyCount = 0
     var count = 0
     var minV = Long.MaxValue
@@ -186,9 +194,10 @@ object CellSegment {
           digest.update(header.putInt(key.length).putLong(version).putInt(body.length).array())
           digest.update(key); digest.update(body)
           if (prevKey == null || !java.util.Arrays.equals(prevKey, key)) {
-            bloomKeys += keyHex; bloomKeyCount += 1
+            keyDigest = FileStore.unhex(keyHex)
+            bloomKeys += keyDigest; bloomKeyCount += 1
           }
-          indexOut.write(FileStore.unhex(keyHex))
+          indexOut.write(keyDigest)
           indexOut.writeLong(version)
           indexOut.writeLong(offset)
           offset += entryLen
@@ -284,16 +293,56 @@ object CellSegment {
     * short-circuits absent-key probes before any index load. */
   private[graft] val indexReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Full index read (48 B/entry) — still no data-region I/O. Cached
-    * per JVM in [[indexOf]]; segments are immutable so the cache never
-    * invalidates. */
-  def readIndex(path: Path): Vector[IndexEntry] = loadIndex(path).entries
+  /** Full index read (48 B/entry) — still no data-region I/O, and
+    * uncached: the read faces go through the cache in [[indexOf]]. */
+  def readIndex(path: Path): Index = loadIndex(path)
 
-  /** A segment's index entries plus the end of its data region (the
-    * trailer's `indexOffset`): entry i spans [offset(i), [[endOf]](i)),
-    * so a point read fetches it in one positional read. */
-  final class Index(val entries: Vector[IndexEntry], val dataEnd: Long) {
-    def endOf(i: Int): Long = if (i + 1 < entries.length) entries(i + 1).offset else dataEnd
+  /** A loaded segment index: the `entryCount × 48` bytes of the file's
+    * index region, kept as read, plus the end of its data region (the
+    * trailer's `indexOffset`). Accessors read entry i in place; entry i
+    * spans [[[offset]](i), [[endOf]](i)), so a point read fetches it in
+    * one positional read. Digest tests compare bytes; [[digestHex]]
+    * builds the hex `String` only for a caller that keys a map by it. */
+  final class Index(private[graft] val block: Array[Byte], val dataEnd: Long) {
+    private val words = java.nio.ByteBuffer.wrap(block)
+    val length: Int = block.length / IndexEntryLen
+    def version(i: Int): Long = words.getLong(i * IndexEntryLen + 32)
+    def offset(i: Int): Long = words.getLong(i * IndexEntryLen + 40)
+    def endOf(i: Int): Long = if (i + 1 < length) offset(i + 1) else dataEnd
+    /** Is entry i's key digest the 32 bytes of `digest`? */
+    def digestIs(i: Int, digest: Array[Byte]): Boolean = {
+      val at = i * IndexEntryLen
+      java.util.Arrays.equals(block, at, at + 32, digest, 0, 32)
+    }
+    /** Is entry i's key digest one of `ds`? */
+    def digestIn(i: Int, ds: DigestSet): Boolean = ds.contains(block, i * IndexEntryLen)
+    /** Entry i's key digest as [[FileStore.keyDigest]] spells it. */
+    def digestHex(i: Int): String = {
+      val at = i * IndexEntryLen
+      FileStore.hex(block, at, at + 32)
+    }
+  }
+
+  /** A fixed set of key digests (a point predicate's probe keys) for
+    * byte-level index tests: sorted by their first big-endian word, so
+    * a test is a binary search over longs and a 32-byte compare only on
+    * a word match. */
+  final class DigestSet(hexes: Iterable[String]) {
+    /** The digests' bytes, for bloom probes. */
+    val digests: Array[Array[Byte]] = hexes.iterator.map(FileStore.unhex).toArray.sortBy(longAt(_, 0))
+    private val firstWords = digests.map(longAt(_, 0))
+    /** Is the digest at `b[at, at + 32)` one of the set? */
+    def contains(b: Array[Byte], at: Int): Boolean = {
+      val w = longAt(b, at)
+      var i = java.util.Arrays.binarySearch(firstWords, w)
+      if (i < 0) return false
+      while (i > 0 && firstWords(i - 1) == w) i -= 1
+      while (i < firstWords.length && firstWords(i) == w) {
+        if (java.util.Arrays.equals(digests(i), 0, 32, b, at, at + 32)) return true
+        i += 1
+      }
+      false
+    }
   }
 
   /** Trailer and index through one open. */
@@ -303,11 +352,7 @@ object CellSegment {
       val t = trailerOf(ch, path)
       val buf = java.nio.ByteBuffer.allocate(t.entryCount * IndexEntryLen)
       readFully(ch, buf, t.indexOffset)
-      val a = buf.array()
-      new Index(Vector.tabulate(t.entryCount) { i =>
-        val at = i * IndexEntryLen
-        IndexEntry(FileStore.hex(a, at, at + 32), buf.getLong(at + 32), buf.getLong(at + 40))
-      }, t.indexOffset)
+      new Index(buf.array(), t.indexOffset)
     }
   }
 
@@ -317,11 +362,13 @@ object CellSegment {
   // cached entries never go STALE — but residency must be BOUNDED: an
   // unbounded memo would pin ~48 B/cell of every segment a long-lived
   // executor ever probes (F5 existence checks, connector point/range
-  // reads), heap-fatal against a 100 TB table. LRU by estimated index
-  // weight, default 64 MB (`graft.segment.index.cache.bytes`); an
-  // evicted index reloads from its segment file on the next touch
-  // (trailer + index readFully), identical answers either way.
-  private val IndexEntryWeight = 144L // 48 B payload + digest String + Vector boxing
+  // reads), heap-fatal against a 100 TB table. LRU by index weight,
+  // default 64 MB (`graft.segment.index.cache.bytes`); an evicted index
+  // reloads from its segment file on the next touch (trailer + index
+  // readFully), identical answers either way. The weight is the index's
+  // byte block (its only per-entry storage, 48 B/entry) plus a fixed
+  // overhead for the Index object, its buffer view and the map entry
+  // keyed by the path string.
   private val EntryOverhead = 256L
   private def configuredMaxBytes: Long =
     // deploy knob: spark.graft.segment.index.cache.bytes reaches every
@@ -340,7 +387,7 @@ object CellSegment {
   private val indexCache = new java.util.LinkedHashMap[String, Index](64, 0.75f, true)
   private var cacheBytes = 0L
 
-  private def weightOf(v: Index): Long = EntryOverhead + IndexEntryWeight * v.entries.length
+  private def weightOf(v: Index): Long = EntryOverhead + v.block.length
 
   private def evictToCap(): Unit = {
     val it = indexCache.entrySet().iterator()
@@ -360,15 +407,12 @@ object CellSegment {
     prev
   }
 
-  /** (resident entries, estimated resident bytes) — inspection only. */
+  /** (resident indexes, resident bytes) — inspection only. */
   private[graft] def indexCacheStats: (Int, Long) =
     indexCache.synchronized((indexCache.size, cacheBytes))
 
-  def indexOf(path: Path): Vector[IndexEntry] = indexWithEnd(path).entries
-
-  /** [[indexOf]] with the data-region end, for point reads by entry
-    * number ([[entryAt]]). */
-  def indexWithEnd(path: Path): Index = {
+  /** A segment's index through the per-JVM cache. */
+  def indexOf(path: Path): Index = {
     val key = path.toAbsolutePath.toString
     val hit = indexCache.synchronized(indexCache.get(key))
     if (hit != null) hit
@@ -435,10 +479,17 @@ object CellSegment {
     }
   }
 
-  /** ROW-bloom membership probe: false ⇒ the segment DEFINITELY holds
-    * no cell of this key, with no index I/O spent to learn it. */
-  def mightContain(path: Path, digestHex: String): Boolean =
-    bloomOf(path).mightContain(digestHex)
+  /** ROW-bloom membership probe of a 32-byte key digest: false ⇒ the
+    * segment DEFINITELY holds no cell of this key, with no index I/O
+    * spent to learn it. */
+  def mightContain(path: Path, digest: Array[Byte]): Boolean =
+    bloomOf(path).mightContain(digest)
+
+  /** [[mightContain]] for any digest of `ds`, off one bloom lookup. */
+  def mightContainAny(path: Path, ds: DigestSet): Boolean = {
+    val bloom = bloomOf(path)
+    ds.digests.exists(bloom.mightContain)
+  }
 
   /** Data-region iterator whose underlying stream can be released
     * EARLY: exhaustion closes it (the common scan), and `close()` lets
@@ -447,17 +498,19 @@ object CellSegment {
     * idempotent. */
   trait EntryIterator extends Iterator[(Array[Byte], Long, Array[Byte])] with AutoCloseable
 
-  /** Stream the data region in (key, version) order. `needBody = false`
-    * skips every body's bytes (the column-pruned key-only scan). */
-  def entries(path: Path, needBody: Boolean): EntryIterator = {
-    val t = readTrailer(path)
+  /** Stream the data region, which ends at `dataEnd` (the trailer's
+    * `indexOffset`, or [[Index.dataEnd]], which every caller already
+    * holds: the stream is the only open), in (key, version) order.
+    * `needBody = false` skips every body's bytes (the column-pruned
+    * key-only scan). */
+  def entries(path: Path, needBody: Boolean, dataEnd: Long): EntryIterator = {
     val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(path), 1 << 16))
     var read = 0L
     new EntryIterator {
       private var closed = false
       override def close(): Unit = if (!closed) { closed = true; in.close() }
       override def hasNext: Boolean = {
-        val h = !closed && read < t.indexOffset
+        val h = !closed && read < dataEnd
         if (!h) close()
         h
       }
@@ -496,5 +549,5 @@ object CellSegment {
 
   /** [[entryAt]] of entry `i` of `index`. */
   def entryAt(path: Path, index: Index, i: Int, needBody: Boolean): (Array[Byte], Long, Array[Byte]) =
-    entryAt(path, index.entries(i).offset, index.endOf(i), needBody)
+    entryAt(path, index.offset(i), index.endOf(i), needBody)
 }

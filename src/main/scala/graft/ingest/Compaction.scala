@@ -207,7 +207,7 @@ object Compaction {
           // inputs close on exhaustion in the happy path; the finally
           // releases every NON-exhausted input's stream if the merge or
           // the segment write throws mid-way (close is idempotent)
-          val segIts = segInfo.map(i => CellSegment.entries(i._1, needBody = true))
+          val segIts = segInfo.map { case (p, t) => CellSegment.entries(p, needBody = true, t.indexOffset) }
           val tagged = segIts.zip(segInfo).map { case (it, (_, t)) =>
             it.map { case (k, v, b) => (k, v, b, t.seqNo) }
           }

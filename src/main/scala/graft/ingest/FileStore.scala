@@ -62,10 +62,14 @@ object FileStore {
     * per-byte format boxing was measurable across every store row. */
   private val sha256TL: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("SHA-256"))
-  def keyDigest(rowkey: Array[Byte]): String = {
+  def keyDigest(rowkey: Array[Byte]): String = hex(keyDigestBytes(rowkey))
+
+  /** The 32 bytes [[keyDigest]] spells in hex — what a segment index
+    * and its bloom hold. */
+  def keyDigestBytes(rowkey: Array[Byte]): Array[Byte] = {
     val md = sha256TL.get()
     md.reset()
-    hex(md.digest(rowkey))
+    md.digest(rowkey)
   }
 
   private val HexChars = "0123456789abcdef".toCharArray
@@ -577,9 +581,16 @@ final case class FileStore(rootDir: String) extends Store {
       // split/merge windows' outside files
       val entries = ShardFiles.pointEntries(tdir, splits, shardIdx)
       entries.foreach(e => if (e.isPut) bump(e.digest, e.version))
+      val probe = new CellSegment.DigestSet(wanted.keys)
       ShardFiles.segmentsOf(entries).foreach { seg =>
-        if (wanted.keysIterator.exists(CellSegment.mightContain(seg, _)))
-          CellSegment.indexOf(seg).foreach(e => bump(e.digestHex, e.version))
+        if (CellSegment.mightContainAny(seg, probe)) {
+          val index = CellSegment.indexOf(seg)
+          var i = 0
+          while (i < index.length) {
+            if (index.digestIn(i, probe)) bump(index.digestHex(i), index.version(i))
+            i += 1
+          }
+        }
       }
       wanted.foreach { case (d, idxs) =>
         val v = best.get(d)
@@ -632,13 +643,19 @@ final case class FileStore(rootDir: String) extends Store {
     // the ingest DDL leaves retention unbounded).
     val policies = scala.collection.mutable.HashMap.empty[String, Option[Retention.Policy]]
     val verMemo = scala.collection.mutable.HashMap.empty[(Path, String), Seq[Long]]
-    def liveVersionsOf(shardDir: Path, ls: Listed, digest: String): Seq[Long] =
+    def liveVersionsOf(shardDir: Path, ls: Listed, digest: String, digestBytes: Array[Byte]): Seq[Long] =
       verMemo.getOrElseUpdate((shardDir, digest), {
         val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
         ls.entries.foreach(e => if (e.isPut && e.digest == digest) buf += e.version)
         ls.segments.foreach { seg =>
-          if (CellSegment.mightContain(seg, digest))
-            CellSegment.indexOf(seg).foreach(e => if (e.digestHex == digest) buf += e.version)
+          if (CellSegment.mightContain(seg, digestBytes)) {
+            val index = CellSegment.indexOf(seg)
+            var i = 0
+            while (i < index.length) {
+              if (index.digestIs(i, digestBytes)) buf += index.version(i)
+              i += 1
+            }
+          }
         }
         buf.toSeq.distinct.filterNot(ls.mask.masked(digest, _))
       })
@@ -652,22 +669,29 @@ final case class FileStore(rootDir: String) extends Store {
       })
       val shardIdx = splits.shardIdxOf(c.rowkey)
       val shardDir = tdir.resolve(splits.names(shardIdx))
-      val d = keyDigest(c.rowkey)
+      val db = FileStore.keyDigestBytes(c.rowkey)
+      val d = FileStore.hex(db)
+      def inSegment(seg: Path): Boolean = {
+        val index = CellSegment.indexOf(seg)
+        var i = 0
+        while (i < index.length) {
+          if (index.version(i) == c.version && index.digestIs(i, db)) return true
+          i += 1
+        }
+        false
+      }
       def probe(): Boolean = {
         val ls = listed.getOrElseUpdate(shardDir,
           new Listed(ShardFiles.pointEntries(tdir, splits, shardIdx)))
+        // ROW bloom first: an absent key — the common ingest probe —
+        // answers off ~1.25 B/key with no index load at all
         val raw = ls.puts((d, c.version)) ||
-          ls.segments.exists { seg =>
-            // ROW bloom first: an absent key — the common ingest probe —
-            // answers off ~1.25 B/key with no index load at all
-            CellSegment.mightContain(seg, d) &&
-              CellSegment.indexOf(seg).exists(e => e.version == c.version && e.digestHex == d)
-          }
+          ls.segments.exists(seg => CellSegment.mightContain(seg, db) && inSegment(seg))
         // the mask is consulted only for raw hits (an absent cell can't
         // be masked INTO existence)
         raw && !ls.mask.masked(d, c.version) &&
           policies.getOrElseUpdate(c.tableName, Retention.of(specOf(c.tableName), nowMillis))
-            .forall(_.admits(c.version, liveVersionsOf(shardDir, ls, d)))
+            .forall(_.admits(c.version, liveVersionsOf(shardDir, ls, d, db)))
       }
       // VANISH RESILIENCE (the connector readers' posture): automatic
       // maintenance (flush / tier merge / region split) deletes
@@ -718,7 +742,8 @@ final case class FileStore(rootDir: String) extends Store {
     * Driver-side majors remain unlocked and covered by the bounded
     * retry, as before. */
   def getLatest(tableName: String, rowkey: Array[Byte]): Option[(Long, Array[Byte])] = {
-    val d = keyDigest(rowkey)
+    val db = FileStore.keyDigestBytes(rowkey)
+    val d = FileStore.hex(db)
     val tdir = tableDir(tableName)
     var attempts = 0
     while (true) {
@@ -746,17 +771,18 @@ final case class FileStore(rootDir: String) extends Store {
           def seqNo(seg: Path): Long =
             seqNos.getOrElseUpdate(seg, CellSegment.readTrailer(seg).seqNo)
           ShardFiles.segmentsOf(entries).foreach { seg =>
-            if (CellSegment.mightContain(seg, d)) {
-              val index = CellSegment.indexWithEnd(seg)
+            if (CellSegment.mightContain(seg, db)) {
+              val index = CellSegment.indexOf(seg)
               var i = 0
-              while (i < index.entries.length) {
-                val e = index.entries(i)
-                if (e.digestHex == d)
-                  cand.get(e.version) match {
+              while (i < index.length) {
+                if (index.digestIs(i, db)) {
+                  val v = index.version(i)
+                  cand.get(v) match {
                     case Some(Left(_)) => () // a put file always wins its coordinate
                     case Some(Right((s0, _, _))) if seqNo(s0) >= seqNo(seg) => ()
-                    case _ => cand(e.version) = Right((seg, index, i))
+                    case _ => cand(v) = Right((seg, index, i))
                   }
+                }
                 i += 1
               }
             }
@@ -1267,13 +1293,15 @@ final case class FileStore(rootDir: String) extends Store {
       // segment body (put files already drained and hold overall
       // precedence via `seen`)
       ShardFiles.newestFirst(ShardFiles.segmentsOf(entries)).foreach { seg =>
-        CellSegment.entries(seg, needBody = true).zip(CellSegment.indexOf(seg).iterator)
-          .foreach { case ((k, v, b), e) =>
-            if (!mask.masked(e.digestHex, v)) {
-              val keyHex = FileStore.hex(k)
-              if (seen.add((keyHex, v))) out += ((keyHex, v, b))
-            }
+        val index = CellSegment.indexOf(seg)
+        var i = 0
+        CellSegment.entries(seg, needBody = true, index.dataEnd).foreach { case (k, v, b) =>
+          if (mask.isEmpty || !mask.masked(index.digestHex(i), v)) {
+            val keyHex = FileStore.hex(k)
+            if (seen.add((keyHex, v))) out += ((keyHex, v, b))
           }
+          i += 1
+        }
       }
     }
     out.result()

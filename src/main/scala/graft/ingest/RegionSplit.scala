@@ -135,7 +135,7 @@ object RegionSplit {
         var prev: Array[Byte] = null
         var below: (Array[Byte], Array[Byte]) = null // last key change at index ≤ mid
         var above: (Array[Byte], Array[Byte]) = null // first key change after mid
-        val it = CellSegment.entries(n, needBody = false)
+        val it = CellSegment.entries(n, needBody = false, t.indexOffset)
         try {
           while (it.hasNext && above == null) {
             val (k, _, _) = it.next()
@@ -295,13 +295,13 @@ object RegionSplit {
     * hash), highest first, so a replay after a crash mid-lift lifts
     * the done ones again and `dir`'s own order still holds. */
   private def outrank(dir: Path, sat: Path): Unit = {
-    def seqs(d: Path) = ShardFiles.list(d).own.filter(_.isSegment)
-      .map(e => (e.path, CellSegment.readTrailer(e.path).seqNo))
-    val ceiling = seqs(sat).map(_._2).foldLeft(0L)(math.max)
-    val mine = seqs(dir).sortBy(-_._2)
-    if (mine.exists(_._2 <= ceiling)) mine.foreach { case (p, seq) =>
-      val it = CellSegment.entries(p, needBody = true)
-      try CellSegment.write(dir, it, seq + ceiling + 1) finally it.close()
+    def trailers(d: Path) = ShardFiles.list(d).own.filter(_.isSegment)
+      .map(e => (e.path, CellSegment.readTrailer(e.path)))
+    val ceiling = trailers(sat).map(_._2.seqNo).foldLeft(0L)(math.max)
+    val mine = trailers(dir).sortBy(-_._2.seqNo)
+    if (mine.exists(_._2.seqNo <= ceiling)) mine.foreach { case (p, t) =>
+      val it = CellSegment.entries(p, needBody = true, t.indexOffset)
+      try CellSegment.write(dir, it, t.seqNo + ceiling + 1) finally it.close()
     }
   }
 
@@ -439,7 +439,7 @@ object RegionSplit {
     // same seqNo rule as minorShard; both daughters inherit it (they
     // live in different directories, precedence is per-shard)
     val outSeq = if (puts.nonEmpty) shardMaxSeq + 1 else shardMaxSeq
-    val segIts = segInfo.map(i => CellSegment.entries(i._1, needBody = true))
+    val segIts = segInfo.map { case (p, t) => CellSegment.entries(p, needBody = true, t.indexOffset) }
     val stage = Files.createTempDirectory(shardDir, "_splitstage")
     val (lowerMeta, upperMeta) =
       try {

@@ -226,9 +226,11 @@ object ShardFiles {
     * order: at a colliding (rowkey, version) identity the newer
     * segment's body wins (legal collisions exist once an in-place SQL
     * UPDATE has been minor-compacted while a stale copy stayed in an
-    * unmerged segment). One trailer read per segment. */
+    * unmerged segment). One trailer read per segment, none for a
+    * single segment: it has nothing to be ordered against. */
   def newestFirst(segments: Seq[Path]): Vector[Path] =
-    segments.map(p => (CellSegment.readTrailer(p).seqNo, p))
+    if (segments.size <= 1) segments.toVector
+    else segments.map(p => (CellSegment.readTrailer(p).seqNo, p))
       .sortBy { case (sq, p) => (-sq, p.getFileName.toString) }
       .map(_._2).toVector
 

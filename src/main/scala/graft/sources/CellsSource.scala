@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.ingest.ShardFiles
+import graft.ingest.{CellSegment, ShardFiles}
 import java.nio.file.{Files, Path, Paths}
 
 /** DataSource V2 read connector over the [[graft.ingest.FileStore]]
@@ -262,6 +262,17 @@ final case class CellsKeyPred(
 
   /** can this cell file (digest filename) hold a match? (point tier) */
   def fileOk(digestHex: String): Boolean = digests.forall(_.contains(digestHex))
+
+  /** [[digests]] as bytes, for segment bloom and index probes. */
+  @transient lazy val digestSet: Option[CellSegment.DigestSet] = digests.map(new CellSegment.DigestSet(_))
+
+  /** can segment index entry `i` hold a match? ([[fileOk]] on the
+    * entry's digest bytes) */
+  def entryOk(index: CellSegment.Index, i: Int): Boolean =
+    digestSet.isEmpty || index.digestIn(i, digestSet.get)
+
+  /** can this segment's ROW bloom hold a match? */
+  def bloomOk(seg: Path): Boolean = digestSet.forall(CellSegment.mightContainAny(seg, _))
 
   def hasRange: Boolean = lo.isDefined || hi.isDefined
 
@@ -1358,21 +1369,26 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
 
             // stream a segment's live in-window index entries; None if
             // the trailer excludes the segment outright, else
-            // Some(dataRegionBytes) with f applied to each entry
-            def foldSeg(p: Path)(f: graft.ingest.CellSegment.IndexEntry => Unit): Option[Long] = {
-              val t = graft.ingest.CellSegment.readTrailer(p)
+            // Some(dataRegionBytes) with f applied to each entry (by
+            // number: f builds an entry's hex only if it keys a map)
+            def foldSeg(p: Path)(f: (CellSegment.Index, Int) => Unit): Option[Long] = {
+              val t = CellSegment.readTrailer(p)
               if (t.entryCount == 0 || t.minVersion > hi || t.maxVersion < lo) None
               else {
                 var any = false
-                graft.ingest.CellSegment.indexOf(p).foreach { e =>
-                  if (e.version >= lo && e.version <= hi && keys.fileOk(e.digestHex) &&
-                    live(e.digestHex, e.version)) { f(e); any = true }
+                val index = CellSegment.indexOf(p)
+                var i = 0
+                while (i < index.length) {
+                  val v = index.version(i)
+                  if (v >= lo && v <= hi && keys.entryOk(index, i) &&
+                    (noMasks || live(index.digestHex(i), v))) { f(index, i); any = true }
+                  i += 1
                 }
                 if (any) Some(t.indexOffset) else None
               }
             }
             // tier-1 eligibility (whole-segment trailer answer)
-            def wholeWindow(t: graft.ingest.CellSegment.Trailer): Boolean =
+            def wholeWindow(t: CellSegment.Trailer): Boolean =
               noMasks && keys.digests.isEmpty && t.entryCount > 0 &&
                 t.minVersion >= lo && t.maxVersion <= hi
 
@@ -1384,9 +1400,9 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
               // distinctKeys bounds the winner count from above with
               // no index I/O at all.
               if (puts.isEmpty && noMasks && keys.digests.isEmpty &&
-                segs.forall(p => wholeWindow(graft.ingest.CellSegment.readTrailer(p)))) {
+                segs.forall(p => wholeWindow(CellSegment.readTrailer(p)))) {
                 segs.foreach { p =>
-                  val t = graft.ingest.CellSegment.readTrailer(p)
+                  val t = CellSegment.readTrailer(p)
                   n += t.distinctKeys
                   b += t.indexOffset
                 }
@@ -1398,9 +1414,9 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
                 }
                 var segBytes = 0L
                 segs.foreach { p =>
-                  foldSeg(p) { e =>
-                    if (winners.getOrElse(e.digestHex, (Long.MinValue, -1L))._1 < e.version)
-                      winners(e.digestHex) = (e.version, -1L)
+                  foldSeg(p) { (index, i) =>
+                    val (d, v) = (index.digestHex(i), index.version(i))
+                    if (winners.getOrElse(d, (Long.MinValue, -1L))._1 < v) winners(d) = (v, -1L)
                   }.foreach(segBytes += _)
                 }
                 n += winners.size
@@ -1417,11 +1433,11 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
               // fold otherwise; cross-segment duplicate identities
               // (bulk replay) only overcount, never under
               segs.foreach { p =>
-                val t = graft.ingest.CellSegment.readTrailer(p)
+                val t = CellSegment.readTrailer(p)
                 if (wholeWindow(t)) { n += t.entryCount.toLong; b += t.indexOffset }
                 else {
                   var cnt = 0L
-                  foldSeg(p)(_ => cnt += 1).foreach { db => n += cnt; b += db }
+                  foldSeg(p)((_, _) => cnt += 1).foreach { db => n += cnt; b += db }
                 }
               }
             } else {
@@ -1433,7 +1449,7 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
               puts.foreach { case (d, v, sz) => cells((d, v)) = sz }
               var segBytes = 0L
               segs.foreach { p =>
-                foldSeg(p)(e => cells.getOrElseUpdate((e.digestHex, e.version), -1L))
+                foldSeg(p)((index, i) => cells.getOrElseUpdate((index.digestHex(i), index.version(i)), -1L))
                   .foreach(segBytes += _)
               }
               n += cells.size
@@ -1647,23 +1663,25 @@ case class CellsMicroBatch(root: String, table: String, lo: Long, hi: Long,
               // listing, or the next planning pass's — a momentarily
               // lower report just means "no new data yet", never a
               // committed-offset regression)
-              val t = try graft.ingest.CellSegment.readTrailer(p)
+              val t = try CellSegment.readTrailer(p)
                       catch { case _: java.io.IOException =>
-                        graft.ingest.CellSegment.Trailer(0, 0, 0, 0, 0, 0, 0) }
+                        CellSegment.Trailer(0, 0, 0, 0, 0, 0, 0) }
               if (t.entryCount > 0 && t.minVersion <= hi && t.maxVersion >= lo) {
                 val segMax = try {
-                  keys.digests match {
-                    case None if t.maxVersion <= hi => t.maxVersion
-                    case None => graft.ingest.CellSegment.indexOf(p).iterator
-                      .filter(e => e.version >= lo && e.version <= hi)
-                      .foldLeft(Long.MinValue)((m, e) => math.max(m, e.version))
-                    // ROW bloom: a segment none of the probed keys can
-                    // be in never advances the watermark — skip its index
-                    case Some(ds) if !ds.exists(graft.ingest.CellSegment.mightContain(p, _)) =>
-                      Long.MinValue
-                    case Some(ds) => graft.ingest.CellSegment.indexOf(p).iterator
-                      .filter(e => ds.contains(e.digestHex) && e.version >= lo && e.version <= hi)
-                      .foldLeft(Long.MinValue)((m, e) => math.max(m, e.version))
+                  if (keys.digests.isEmpty && t.maxVersion <= hi) t.maxVersion
+                  // ROW bloom: a segment none of the probed keys can
+                  // be in never advances the watermark — skip its index
+                  else if (!keys.bloomOk(p)) Long.MinValue
+                  else {
+                    val index = CellSegment.indexOf(p)
+                    var m = Long.MinValue
+                    var i = 0
+                    while (i < index.length) {
+                      val v = index.version(i)
+                      if (v >= lo && v <= hi && v > m && keys.entryOk(index, i)) m = v
+                      i += 1
+                    }
+                    m
                   }
                 } catch { case _: java.io.IOException => Long.MinValue } // vanished mid-sweep
                 if (segMax > mx) mx = segMax
@@ -2081,18 +2099,19 @@ object CellsReaders {
       val seg = segs.head.path
       // masks from the same covered listing
       val mask = ShardFiles.maskOf(covered)
-      val index = graft.ingest.CellSegment.indexWithEnd(seg)
-      val idx = index.entries
+      val index = CellSegment.indexOf(seg)
       // read-time retention over the key's FULL live version list —
       // one O(index) metadata fold, only on retention-active tables
       lazy val retained: Map[String, Set[Long]] = {
         val pol = retention.get
         val byDigest = scala.collection.mutable.HashMap
           .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-        idx.foreach { e =>
-          if (keys.fileOk(e.digestHex) && !mask.masked(e.digestHex, e.version))
-            byDigest.getOrElseUpdate(e.digestHex,
-              scala.collection.mutable.ArrayBuffer.empty[Long]) += e.version
+        (0 until index.length).foreach { i =>
+          if (keys.entryOk(index, i)) {
+            val (d, v) = (index.digestHex(i), index.version(i))
+            if (!mask.masked(d, v))
+              byDigest.getOrElseUpdate(d, scala.collection.mutable.ArrayBuffer.empty[Long]) += v
+          }
         }
         byDigest.map { case (d, vs) => d -> pol.admitted(vs.toSeq) }.toMap
       }
@@ -2104,7 +2123,7 @@ object CellsReaders {
       val fileU8 = org.apache.spark.unsafe.types.UTF8String
         .fromString(seg.getFileName.toString)
       Some(new PartitionReader[InternalRow] {
-        private var i = idx.length - 1
+        private var i = index.length - 1
         private var emitted = 0L
         private var lastDigest: String = _
         private var row: InternalRow = _
@@ -2113,29 +2132,32 @@ object CellsReaders {
           if (done) return false
           while (i >= 0) {
             val at = i
-            val e = idx(at); i -= 1
-            if (e.version >= lo && e.version <= hi && keys.fileOk(e.digestHex) &&
-              !mask.masked(e.digestHex, e.version) && admitted(e.digestHex, e.version) &&
-              !seen((e.digestHex, e.version))) {
+            i -= 1
+            val version = index.version(at)
+            // byte-level tests first; hex only for an entry that passes
+            val d = if (version >= lo && version <= hi && keys.entryOk(index, at))
+              index.digestHex(at) else null
+            if ((d ne null) && !mask.masked(d, version) && admitted(d, version) &&
+              !seen((d, version))) {
               // the cap: exact shape stops at k; key-only shape stops
               // at the first key change once ≥ k rows are out
               if (exactOrder && emitted >= k) { done = true; return false }
               if (!exactOrder && emitted >= k && (lastDigest ne null) &&
-                lastDigest != e.digestHex) { done = true; return false }
+                lastDigest != d) { done = true; return false }
               val built: Option[InternalRow] =
-                if (!readsContent) Some(mk(null, e.version, null))
+                if (!readsContent) Some(mk(null, version, null))
                 else {
                   if (!opened) { opened = true
                     CellsSource.filesOpened.incrementAndGet()
                     if (taskMetrics ne null) taskMetrics.filesOpened += 1
                   }
-                  val (key, v, b) = graft.ingest.CellSegment.entryAt(seg, index, at, needBody)
+                  val (key, v, b) = CellSegment.entryAt(seg, index, at, needBody)
                   if (!keys.keyOk(key)) None else Some(mk(key, v, b))
                 }
               built match {
                 case Some(r) =>
-                  seen += ((e.digestHex, e.version))
-                  lastDigest = e.digestHex
+                  seen += ((d, version))
+                  lastDigest = d
                   emitted += 1
                   row = r
                   return true
@@ -2355,14 +2377,16 @@ object CellsReaders {
         val byDigest = scala.collection.mutable.HashMap
           .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
         def add(d: String, v: Long): Unit =
-          if (keys.fileOk(d) && !masked(d, v))
+          if (!masked(d, v))
             byDigest.getOrElseUpdate(d, scala.collection.mutable.ArrayBuffer.empty[Long]) += v
-        entries.foreach(e => if (e.isPut) add(e.digest, e.version))
+        entries.foreach(e => if (e.isPut && keys.fileOk(e.digest)) add(e.digest, e.version))
         segPaths.foreach { seg =>
-          val skip = keys.digests.exists(ds =>
-            !ds.exists(graft.ingest.CellSegment.mightContain(seg, _)))
-          if (!skip)
-            graft.ingest.CellSegment.indexOf(seg).foreach(e => add(e.digestHex, e.version))
+          if (keys.bloomOk(seg)) {
+            val index = CellSegment.indexOf(seg)
+            (0 until index.length).foreach { i =>
+              if (keys.entryOk(index, i)) add(index.digestHex(i), index.version(i))
+            }
+          }
         }
         byDigest.map { case (d, vs) => d -> pol.admitted(vs.toSeq) }
       }
@@ -2384,13 +2408,14 @@ object CellsReaders {
           if (!suppressed(d, v) && best.getOrElse(d, Long.MinValue) < v) best(d) = v
         listed.foreach(e => if (e.isPut) bump(e.digest, e.version))
         segPaths.foreach { seg =>
-          val t = graft.ingest.CellSegment.readTrailer(seg)
+          val t = CellSegment.readTrailer(seg)
           if (t.entryCount > 0 && t.minVersion <= hi && t.maxVersion >= lo) {
-            val skip = keys.digests.exists(ds =>
-              !ds.exists(graft.ingest.CellSegment.mightContain(seg, _))) // ROW bloom, as everywhere
-            if (!skip) graft.ingest.CellSegment.indexOf(seg).foreach { e =>
-              if (e.version >= lo && e.version <= hi && keys.fileOk(e.digestHex))
-                bump(e.digestHex, e.version)
+            if (keys.bloomOk(seg)) { // ROW bloom, as everywhere
+              val index = CellSegment.indexOf(seg)
+              (0 until index.length).foreach { i =>
+                val v = index.version(i)
+                if (v >= lo && v <= hi && keys.entryOk(index, i)) bump(index.digestHex(i), v)
+              }
             }
           }
         }
@@ -2411,44 +2436,50 @@ object CellsReaders {
       // the dedup set is complete; one iterator of ready rows per cell
       private lazy val segmentRows: Iterator[InternalRow] = {
         segPaths.iterator.flatMap { seg =>
-          val t = graft.ingest.CellSegment.readTrailer(seg)
+          val t = CellSegment.readTrailer(seg)
           if (t.entryCount == 0 || t.minVersion > hi || t.maxVersion < lo) Iterator.empty
           else {
-            keys.digests match {
+            keys.digestSet match {
               // ROW bloom rejects every probed key: definitely no
               // match in this segment — its index is never loaded
-              case Some(ds) if !ds.exists(graft.ingest.CellSegment.mightContain(seg, _)) =>
+              case Some(ds) if !CellSegment.mightContainAny(seg, ds) =>
                 Iterator.empty
               case Some(ds) =>
                 // point lookup: seek straight to the probed entries
-                val index = graft.ingest.CellSegment.indexWithEnd(seg)
-                index.entries.indices.iterator
+                val index = CellSegment.indexOf(seg)
+                Iterator.range(0, index.length)
                   .filter { i =>
-                    val e = index.entries(i)
-                    ds.contains(e.digestHex) && e.version >= lo && e.version <= hi &&
-                      !suppressed(e.digestHex, e.version) &&
-                      isWinner(e.digestHex, e.version) &&
-                      !seen.contains((e.digestHex, e.version))
+                    val v = index.version(i)
+                    v >= lo && v <= hi && index.digestIn(i, ds) && {
+                      val d = index.digestHex(i)
+                      !suppressed(d, v) && isWinner(d, v) && !seen.contains((d, v))
+                    }
                   }
                   .flatMap { i =>
-                    val e = index.entries(i)
+                    val d = index.digestHex(i)
                     if (!readsContent) {
-                      markEmitted(e.digestHex, e.version); Some(mkRow(null, e.version, null, src = seg))
+                      val v = index.version(i)
+                      markEmitted(d, v); Some(mkRow(null, v, null, src = seg))
                     } else {
                       openedOne()
-                      val (k, v, b) = graft.ingest.CellSegment.entryAt(seg, index, i, needBody)
+                      val (k, v, b) = CellSegment.entryAt(seg, index, i, needBody)
                       if (!keys.keyOk(k)) None
-                      else { markEmitted(e.digestHex, e.version); Some(mkRow(k, v, b, src = seg)) }
+                      else { markEmitted(d, v); Some(mkRow(k, v, b, src = seg)) }
                     }
                   }
               case None if !readsContent =>
                 // version-only projection: the index IS the result —
                 // the data region is never read
-                graft.ingest.CellSegment.indexOf(seg).iterator
-                  .filter(e => e.version >= lo && e.version <= hi &&
-                    !suppressed(e.digestHex, e.version) &&
-                    isWinner(e.digestHex, e.version) && markEmitted(e.digestHex, e.version))
-                  .map(e => mkRow(null, e.version, null, src = seg))
+                val index = CellSegment.indexOf(seg)
+                Iterator.range(0, index.length)
+                  .filter { i =>
+                    val v = index.version(i)
+                    v >= lo && v <= hi && {
+                      val d = index.digestHex(i)
+                      !suppressed(d, v) && isWinner(d, v) && markEmitted(d, v)
+                    }
+                  }
+                  .map(i => mkRow(null, index.version(i), null, src = seg))
               case None =>
                 // scan: stream the data region zipped with the cached
                 // index (same order), so dedup needs no re-hashing. On
@@ -2458,12 +2489,13 @@ object CellsReaders {
                 // bytes; post-major segments (~1 version/key) stay on
                 // the stream path — seeks would cost more than the
                 // sequential read they replace.
-                lazy val index = graft.ingest.CellSegment.indexWithEnd(seg)
-                lazy val winnersHere = index.entries.indices.filter { i =>
-                  val e = index.entries(i)
-                  e.version >= lo && e.version <= hi &&
-                    isWinner(e.digestHex, e.version) &&
-                    !seen.contains((e.digestHex, e.version))
+                val index = CellSegment.indexOf(seg)
+                lazy val winnersHere = (0 until index.length).filter { i =>
+                  val v = index.version(i)
+                  v >= lo && v <= hi && {
+                    val d = index.digestHex(i)
+                    isWinner(d, v) && !seen.contains((d, v))
+                  }
                 }
                 if (latestOnly && winnersHere.size.toLong * 4 < t.entryCount.toLong) {
                   // a segment with NO winners is never opened at all —
@@ -2472,22 +2504,23 @@ object CellsReaders {
                   else {
                     openedOne()
                     winnersHere.iterator.flatMap { i =>
-                      val e = index.entries(i)
-                      val (k, v, b) = graft.ingest.CellSegment.entryAt(seg, index, i, needBody)
+                      val (k, v, b) = CellSegment.entryAt(seg, index, i, needBody)
                       if (!keys.keyOk(k)) None
-                      else if (!markEmitted(e.digestHex, v)) None
+                      else if (!markEmitted(index.digestHex(i), v)) None
                       else Some(mkRow(k, v, b, src = seg))
                     }
                   }
                 } else {
                   openedOne()
-                  graft.ingest.CellSegment.entries(seg, needBody)
-                    .zip(graft.ingest.CellSegment.indexOf(seg).iterator).flatMap {
-                    case ((k, v, b), e) =>
-                      if (v < lo || v > hi || !keys.keyOk(k) || suppressed(e.digestHex, v) ||
-                        !isWinner(e.digestHex, v)) None
-                      else if (!markEmitted(e.digestHex, v)) None
+                  var i = -1 // the streamed entry's number in the index
+                  CellSegment.entries(seg, needBody, t.indexOffset).flatMap { case (k, v, b) =>
+                    i += 1
+                    if (v < lo || v > hi || !keys.keyOk(k)) None
+                    else {
+                      val d = index.digestHex(i)
+                      if (suppressed(d, v) || !isWinner(d, v) || !markEmitted(d, v)) None
                       else Some(mkRow(k, v, b, src = seg))
+                    }
                   }
                 }
             }
@@ -2585,7 +2618,7 @@ object CellsReaders {
             if (markerKind == 1) "marker_bound"
             else if (markerKind == 2) "marker_exact"
             else if (src != null &&
-              graft.ingest.CellSegment.isSegment(src.getFileName.toString)) "segment"
+              CellSegment.isSegment(src.getFileName.toString)) "segment"
             else "put")
         }
         new GenericInternalRow(values.asInstanceOf[Array[Any]])

@@ -60,20 +60,20 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.indexOffset == entries.map(e => 16L + e._1.length + e._3.length).sum,
       "indexOffset IS the data-region byte size")
     val idx = CellSegment.readIndex(path)
-    assert(idx.map(_.version) == Vector(5L, 9L, 1L))
-    assert(idx.map(_.digestHex) ==
+    assert((0 until idx.length).map(idx.version) == Vector(5L, 9L, 1L))
+    assert((0 until idx.length).map(idx.digestHex) ==
       Vector(FileStore.keyDigest(k("aa")), FileStore.keyDigest(k("aa")), FileStore.keyDigest(k("ab"))))
-    val back = CellSegment.entries(path, needBody = true).toSeq
+    val back = CellSegment.entries(path, needBody = true, t.indexOffset).toSeq
     assert(back.map { case (kk, v, b) => (new String(kk), v, new String(b)) } ==
       Seq(("aa", 5L, "b1"), ("aa", 9L, "b2"), ("ab", 1L, "b3")))
     // point read of the span from one index offset to the next
-    val (pk, pv, pb) = CellSegment.entryAt(path, idx(1).offset, idx(2).offset, needBody = true)
+    val (pk, pv, pb) = CellSegment.entryAt(path, idx.offset(1), idx.offset(2), needBody = true)
     assert(new String(pk) == "aa" && pv == 9L && new String(pb) == "b2")
     // the last entry ends where the index begins, which the cached index carries
-    val (lk, lv, lb) = CellSegment.entryAt(path, CellSegment.indexWithEnd(path), 2, needBody = true)
+    val (lk, lv, lb) = CellSegment.entryAt(path, CellSegment.indexOf(path), 2, needBody = true)
     assert(new String(lk) == "ab" && lv == 1L && new String(lb) == "b3")
     // key-only streaming skips bodies without losing position
-    val keysOnly = CellSegment.entries(path, needBody = false).toSeq
+    val keysOnly = CellSegment.entries(path, needBody = false, t.indexOffset).toSeq
     assert(keysOnly.map { case (kk, v, b) => (new String(kk), v, b) } ==
       Seq(("aa", 5L, null), ("aa", 9L, null), ("ab", 1L, null)))
   }

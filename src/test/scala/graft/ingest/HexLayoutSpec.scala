@@ -65,12 +65,12 @@ class HexLayoutSpec extends AnyFunSuite {
     segs.foreach { seg =>
       assert(seg.getFileName.toString.matches("bulk-[0-9a-f]{16}\\.seg"))
       val index = CellSegment.readIndex(seg)
-      val data = CellSegment.entries(seg, needBody = false).toVector
-      assert(index.size == data.size && index.nonEmpty)
-      index.zip(data).foreach { case (e, (key, version, _)) =>
-        assert(e.digestHex.matches("[0-9a-f]{64}"))
-        assert(e.digestHex == FileStore.keyDigest(key))
-        assert(e.version == version)
+      val data = CellSegment.entries(seg, needBody = false, index.dataEnd).toVector
+      assert(index.length == data.size && index.length > 0)
+      data.zipWithIndex.foreach { case ((key, version, _), i) =>
+        assert(index.digestHex(i).matches("[0-9a-f]{64}"))
+        assert(index.digestHex(i) == FileStore.keyDigest(key))
+        assert(index.version(i) == version)
       }
     }
   }

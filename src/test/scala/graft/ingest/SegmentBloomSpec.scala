@@ -35,12 +35,32 @@ class SegmentBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cells = (0 until 500).map(i => (k(f"key-$i%04d"), 1L, k(s"body-$i")))
     val meta = CellSegment.write(dir, cells.iterator)
     val seg = dir.resolve(meta.fileName)
-    val present = (0 until 500).map(i => FileStore.keyDigest(k(f"key-$i%04d")))
+    val present = (0 until 500).map(i => FileStore.keyDigestBytes(k(f"key-$i%04d")))
     assert(present.forall(CellSegment.mightContain(seg, _)), "a bloom never false-negatives")
     val falsePos = (0 until 2000)
-      .map(i => FileStore.keyDigest(k(s"absent-$i")))
+      .map(i => FileStore.keyDigestBytes(k(s"absent-$i")))
       .count(CellSegment.mightContain(seg, _))
     assert(falsePos <= 100, s"10 bits/key + 7 probes must stay near 1% FPR, got $falsePos/2000")
+  }
+
+  test("bloom words read off digest bytes equal the hex-parsed h1/h2 construction") {
+    val dir = Files.createTempDirectory("bloom-words")
+    val keys = (0 until 300).map(i => k(f"fixed-$i%04d"))
+    // two versions of some keys: the bloom holds each distinct key once
+    val cells = keys.flatMap(key => if (key.last % 3 == 0) Seq((key, 1L, key), (key, 2L, key)) else Seq((key, 1L, key)))
+    val seg = dir.resolve(CellSegment.write(dir, cells.iterator).fileName)
+    // the bits as first written: h1/h2 parsed from the digest's hex
+    val expected = new Array[Long](math.max(1, (keys.size * 10 + 63) / 64))
+    val bits = expected.length.toLong * 64
+    keys.map(FileStore.keyDigest).foreach { hex =>
+      val h1 = java.lang.Long.parseUnsignedLong(hex.substring(0, 16), 16)
+      val h2 = java.lang.Long.parseUnsignedLong(hex.substring(16, 32), 16)
+      (0 until 7).foreach { i =>
+        val b = java.lang.Long.remainderUnsigned(h1 + i * h2, bits)
+        expected((b >>> 6).toInt) |= 1L << (b & 63)
+      }
+    }
+    assert(CellSegment.bloomOf(seg).words.toSeq == expected.toSeq, "the written bloom's words")
   }
 
   test("F5 exists() answers absent-key probes with zero index reads") {
@@ -87,13 +107,13 @@ class SegmentBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     System.setProperty("graft.segment.bloom.cache.bytes", "600") // ~2-3 blooms
     try {
       val answers = segs.zipWithIndex.map { case (seg, g) =>
-        CellSegment.mightContain(seg, FileStore.keyDigest(k(f"g$g-key-050")))
+        CellSegment.mightContain(seg, FileStore.keyDigestBytes(k(f"g$g-key-050")))
       }
       assert(answers.forall(identity), "eviction must never change an answer")
       // probe them all again in reverse — every answer still correct
       assert(segs.zipWithIndex.reverse.forall { case (seg, g) =>
-        CellSegment.mightContain(seg, FileStore.keyDigest(k(f"g$g-key-007"))) &&
-          !CellSegment.mightContain(seg, FileStore.keyDigest(k(s"g$g-definitely-absent-x")))
+        CellSegment.mightContain(seg, FileStore.keyDigestBytes(k(f"g$g-key-007"))) &&
+          !CellSegment.mightContain(seg, FileStore.keyDigestBytes(k(s"g$g-definitely-absent-x")))
       })
     } finally {
       if (prev == null) System.clearProperty("graft.segment.bloom.cache.bytes")
