@@ -6,7 +6,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 
 /** HFile-style BULK-LOAD write path for the cell store — the idiomatic
   * heavy-ingest alternative to [[PushTableSink]]'s per-batch puts
@@ -20,9 +19,10 @@ import org.apache.spark.sql.internal.SQLConf
   *  1. number the load's regions (the store's range unit, the HBase
   *     region model) globally — tables in name order, regions in key
   *     order — and `repartitionById` so each write task owns a
-  *     contiguous range of whole regions: one writer per region, P =
-  *     min(regions, max(cores, ⌈key+body bytes / advisory partition
-  *     size⌉)) tasks, whatever `spark.sql.shuffle.partitions` says;
+  *     contiguous range of whole regions: one writer per region, the
+  *     tasks of [[RegionJobs.plan]] (each region weighing an even share
+  *     of its table's key+body bytes), whatever
+  *     `spark.sql.shuffle.partitions` says;
   *  2. sortWithinPartitions (region, rowkey, version) — Spark's
   *     BinaryType sort is unsigned-lexicographic, the segment order;
   *  3. mapPartitions: each task creates its regions' live directories
@@ -119,10 +119,13 @@ object BulkLoad {
     val regionNames = layouts.flatMap { case (t, s) => s.names.map(t -> _) }.toVector
     val placement = layouts.zip(layouts.scanLeft(0)(_ + _._2.size))
       .map { case ((t, s), first) => t -> (first, s) }.toMap
-    val regions = regionNames.size
-    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val p = math.min(regions.toLong, math.max(spark.sparkContext.defaultParallelism.toLong,
-      (bytesByTable.values.sum + advisory - 1) / advisory)).toInt
+    // the load's tasks: contiguous region ranges, each region weighing
+    // an even share of its table's bytes (the shares sum to the table's)
+    val groups = RegionJobs.plan(spark, layouts.flatMap { case (t, s) =>
+      val b = bytesByTable(t)
+      (0 until s.size).map(i => b * (i + 1) / s.size - b * i / s.size)
+    }.zipWithIndex.map(_.swap))
+    val taskOfRegion = groups.zipWithIndex.flatMap { case (g, task) => g.map(_ => task) }.toArray
 
     val staging = Files.createDirectories(
       Paths.get(rootDir, "_bulk_staging", java.util.UUID.randomUUID().toString))
@@ -132,13 +135,13 @@ object BulkLoad {
       val (from, splits) = placement(t)
       from + splits.shardIdxOf(key)
     }
+    val taskOf = udf((region: Int) => taskOfRegion(region))
 
     try { // staging goes with the load, failed or not ([[Vacuum]] after a dead driver)
       val staged = cellsDf
         .select(regionOf(col("tableName"), col("rowkey")).as("region"),
           col("rowkey"), col("version"), col("body"))
-        // task i owns regions [i·R/P, (i+1)·R/P) (an exact quotient: region·P ≪ 2^53)
-        .repartitionById(p, (col("region").cast("long") * p / regions).cast("int"))
+        .repartitionById(groups.size, taskOf(col("region")))
         .sortWithinPartitions(col("region"), col("rowkey"), col("version"))
         .mapPartitions { it =>
           // a retried or speculative twin stages apart from the committed attempt

@@ -57,19 +57,19 @@ object Catalog {
     * data is only dropped. */
   def listPairs(spark: SparkSession, prefixes: Seq[String]): Seq[FilePair] = {
     val conf = spark.sparkContext.hadoopConfiguration
+    // walked through listStatus (one LIST per directory on S3A): listFiles
+    // builds a LocatedFileStatus per object, whose constructor reads the
+    // permission, which on a local filesystem without native Hadoop runs
+    // `ls -ld` as a child process
+    def walk(fs: FileSystem, dir: Path): Seq[(String, Long)] = fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) walk(fs, st.getPath)
+      else if (st.isFile) Seq((st.getPath.toString, st.getLen))
+      else Nil
+    }
     val all: Seq[(String, Long)] = prefixes.flatMap { prefix =>
       val p = new Path(prefix)
       val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
-      else {
-        val it = fs.listFiles(p, true)
-        val buf = Seq.newBuilder[(String, Long)]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile) buf += ((st.getPath.toString, st.getLen))
-        }
-        buf.result()
-      }
+      if (fs.exists(p)) walk(fs, p) else Nil
     }
     val byStem = all.flatMap { case (path, size) =>
       val name = new Path(path).getName

@@ -139,14 +139,11 @@ object Compaction {
     * `maxInputBytes` into one fresh sorted segment; inputs are then
     * deleted (snapshot-bounded — the same racing-writer contract as
     * [[major]]: only the files read are deletable). Returns the cells
-    * merged and files removed. Idempotent: a shard with ≤1 input and
-    * no puts is untouched. */
+    * merged and files removed, in the tasks of [[RegionJobs.plan]].
+    * Idempotent: a shard with ≤1 input and no puts is untouched. */
   def minor(spark: SparkSession, root: String, table: String,
             maxInputBytes: Long = 32L << 20): Report = {
-    val shards = ShardFiles.regions(Paths.get(root, table.replace(':', '~'))).map(_.toString)
-    if (shards.isEmpty) return Report(0L, 0L, Seq.empty)
-    val results = spark.sparkContext
-      .parallelize(shards, shards.size)
+    val results = RegionJobs.overDirs(spark, ShardFiles.regions(Paths.get(root, table.replace(':', '~'))))
       .map(shardPath => minorShard(Paths.get(shardPath), maxInputBytes))
       .collect()
     Report(results.map(_._1).sum, results.map(_._2).sum, results.flatMap(_._3).toSeq)
@@ -236,6 +233,13 @@ object Compaction {
         }
   }
 
+  /** A put or marker file's (size, mtimeNanos); None once it is gone. */
+  private def stampOf(p: Path): Option[(Long, Long)] =
+    try {
+      val a = Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
+      Some((a.size(), a.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS)))
+    } catch { case _: java.io.IOException => None }
+
   def major(spark: SparkSession, root: String, table: String,
             ttlCutoff: Option[Long] = None,
             config: BulkLoad.Config = BulkLoad.Config(),
@@ -284,15 +288,7 @@ object Compaction {
         // staging belong to a concurrent region split/merge, and are
         // never sweep targets (the lifecycle ops own them)
         shard.getFileName.toString -> ShardFiles.list(shard).own.map { e =>
-          val stamp =
-            if (e.isSegment) None
-            else try {
-              val a = Files.readAttributes(e.path,
-                classOf[java.nio.file.attribute.BasicFileAttributes])
-              Some((a.size(), a.lastModifiedTime().to(
-                java.util.concurrent.TimeUnit.NANOSECONDS)))
-            } catch { case _: java.io.IOException => Some((-1L, -1L)) }
-          e.name -> stamp
+          e.name -> (if (e.isSegment) None else Some(stampOf(e.path).getOrElse((-1L, -1L))))
         }.toMap
       }.toMap
 
@@ -328,53 +324,43 @@ object Compaction {
 
     beforeSweep()
 
-    // sweep phase: fan the per-shard deletes out over the cluster; a
+    // sweep phase: the per-shard deletes run in RegionJobs' tasks; a
     // shard only ever holds cell files and segments (the DDL json
     // lives at table level). Deletable = in the pre-scan SNAPSHOT and
     // not a fresh segment — files landed since the snapshot belong to
     // concurrent writers and are left alone.
-    val shards = snapshot.keys.map(tableDir0.resolve(_).toString).toSeq.sorted
     val keepB = spark.sparkContext.broadcast(keepNames)
     val snapB = spark.sparkContext.broadcast(snapshot)
-    val removed =
-      if (shards.isEmpty) 0L
-      else spark.sparkContext
-        .parallelize(shards, math.max(1, math.min(shards.size, 32)))
-        .map { shardPath =>
-          val shard = Paths.get(shardPath)
-          val shardName = shard.getFileName.toString
-          val keep = keepB.value.getOrElse(shardName, Set.empty)
-          val snap = snapB.value.getOrElse(shardName,
-            Map.empty[String, Option[(Long, Long)]])
-          var n = 0L
-          snap.foreach { case (name, stamp) =>
-            if (!keep.contains(name)) stamp match {
-              case None => // immutable segment — plain delete
-                if (Files.deleteIfExists(shard.resolve(name))) n += 1
-              case Some(st) =>
-                // put/marker: delete ONLY if byte-identical with what
-                // the rewrite absorbed, verified as (size, mtimeNanos)
-                // under the shard's maintenance monitor — the replacing
-                // rename takes the same monitor, so no replace can land
-                // between this check and the delete. A mismatch (a
-                // replace since the snapshot) skips the delete: the
-                // newer put outranks the rewritten segment and the next
-                // maintenance pass absorbs it — fail-safe, bytes linger
-                // at worst.
-                FileStore.shardLockFor(shard).synchronized {
-                  val p = shard.resolve(name)
-                  val cur = try {
-                    val a = Files.readAttributes(p,
-                      classOf[java.nio.file.attribute.BasicFileAttributes])
-                    Some((a.size(), a.lastModifiedTime().to(
-                      java.util.concurrent.TimeUnit.NANOSECONDS)))
-                  } catch { case _: java.io.IOException => None }
-                  if (cur.contains(st) && Files.deleteIfExists(p)) n += 1
-                }
-            }
+    val removed = RegionJobs.overDirs(spark, snapshot.keys.toSeq.sorted.map(tableDir0.resolve))
+      .map { shardPath =>
+        val shard = Paths.get(shardPath)
+        val shardName = shard.getFileName.toString
+        val keep = keepB.value.getOrElse(shardName, Set.empty)
+        val snap = snapB.value.getOrElse(shardName,
+          Map.empty[String, Option[(Long, Long)]])
+        var n = 0L
+        snap.foreach { case (name, stamp) =>
+          if (!keep.contains(name)) stamp match {
+            case None => // immutable segment — plain delete
+              if (Files.deleteIfExists(shard.resolve(name))) n += 1
+            case Some(st) =>
+              // put/marker: delete ONLY if byte-identical with what
+              // the rewrite absorbed, verified as (size, mtimeNanos)
+              // under the shard's maintenance monitor — the replacing
+              // rename takes the same monitor, so no replace can land
+              // between this check and the delete. A mismatch (a
+              // replace since the snapshot) skips the delete: the
+              // newer put outranks the rewritten segment and the next
+              // maintenance pass absorbs it — fail-safe, bytes linger
+              // at worst.
+              FileStore.shardLockFor(shard).synchronized {
+                val p = shard.resolve(name)
+                if (stampOf(p).contains(st) && Files.deleteIfExists(p)) n += 1
+              }
           }
-          n
-        }.sum().toLong
+        }
+        n
+      }.sum().toLong
 
     // REGION SPLIT policy (HBase evaluates its split policy after every
     // compaction): a major can leave a freshly-compacted region still

@@ -600,9 +600,6 @@ final case class FileStore(rootDir: String) extends Store {
     out.toSeq
     }
 
-  def latestVersionOf(tableName: String, rowkey: Array[Byte]): Option[Long] =
-    latestVersionsOf(tableName, Seq(rowkey)).head
-
   /** F5 consults BOTH store-file kinds: a cell exists if its per-cell
     * put file is present OR any bulk [[CellSegment]] in its shard
     * indexes its (key digest, version) — the HBase semantics where an

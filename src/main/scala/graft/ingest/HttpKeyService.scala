@@ -28,26 +28,26 @@ import java.time.Duration
   * and truststore (server trust) paths — both PKCS12 — and the client
   * presents its certificate during the handshake. The config carries
   * only paths and passwords, so the case class stays
-  * serialization-safe; the SSLContext is built lazily per JVM with the
-  * client. A DKS that requires client auth rejects a certificate-less
-  * caller at the handshake, which surfaces as a retried-then-thrown
-  * connection failure (TlsSeamSpec pins both directions).
+  * serialization-safe; the SSLContext is built with the client. A DKS
+  * that requires client auth rejects a certificate-less caller at the
+  * handshake, which surfaces as a retried-then-thrown connection
+  * failure (TlsSeamSpec pins both directions).
   *
-  * Instances are created lazily inside `mapPartitions` (the class holds
-  * no client state across serialization) — never call this from a SQL
-  * expression.
+  * The class holds no client state across serialization: every copy
+  * of a service on one JVM sends through the same shared client —
+  * never call this from a SQL expression.
   */
 final case class HttpKeyService(baseUrl: String,
                                 policy: Retry.Policy = Retry.Policy.dks,
                                 timeoutMs: Long = 10000L,
                                 tls: Option[HttpKeyService.TlsConfig] = None) extends KeyService {
 
-  @transient private lazy val client: HttpClient = {
+  private[ingest] def client: HttpClient = HttpKeyService.clients.computeIfAbsent((timeoutMs, tls), _ => {
     val b = HttpClient.newBuilder().connectTimeout(Duration.ofMillis(timeoutMs))
     tls.fold(b)(t => b.sslContext(HttpKeyService.sslContext(
       keystore = Some((t.keystorePath, t.keystorePassword)),
       truststore = Some((t.truststorePath, t.truststorePassword))))).build()
-  }
+  })
 
   override def decryptKey(keyId: String, encryptedKey: String): String = {
     val cacheKey = s"$encryptedKey/$keyId"
@@ -90,6 +90,11 @@ final case class HttpKeyService(baseUrl: String,
 object HttpKeyService {
   /** per-executor (per-JVM) decrypt cache — HttpKeyService.kt:39-41 */
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** One client per JVM and (timeout, TLS config), shared by every task's
+    * deserialized copy of the service: each new client brings its own
+    * selector thread and, with TLS, loads both stores and handshakes. */
+  private val clients = new java.util.concurrent.ConcurrentHashMap[(Long, Option[TlsConfig]), HttpClient]()
 
   /** Mutual-TLS material, by path so the service stays serializable:
     * `keystore` = this client's identity (certificate + private key),

@@ -3,6 +3,7 @@ package graft.ingest
 import graft.core._
 import graft.core.RecordProcessor._
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -130,10 +131,14 @@ object IngestPipeline {
              timeFilter: TimeFilter = TimeFilter(),
              ivStrategy: IvStrategy = IvStrategy.Random): Dataset[IngestedRow] = {
     import spark.implicits._
-    val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    spark.createDataset(fileSlices(spark, tasks)
-      .flatMap(task => fileRows(task, hadoopOpen(task, hadoopConf), keys, identity, timeFilter, ivStrategy, hadoopConf)))
+    val confB = broadcastConf(spark)
+    spark.createDataset(fileSlices(spark, tasks).flatMap(task =>
+      fileRows(task, hadoopOpen(task, confB.value), keys, identity, timeFilter, ivStrategy, confB.value)))
   }
+
+  /** The driver's Hadoop configuration, shipped to a job's tasks once. */
+  private[graft] def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
   /** The batch opener: the data file through its Hadoop FileSystem. */
   private def hadoopOpen(task: FileTask, hadoopConf: SerializableConfiguration): () => java.io.InputStream =
@@ -394,9 +399,10 @@ object IngestPipeline {
                         store: Option[() => PushTableSink.Store],
                         config: PushTableSink.Config,
                         manifestDir: Option[String]): Array[(Map[(String, String), Long], Long)] = {
-    val hadoopConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val manifests = manifestDir.map(ManifestStore.HadoopFs(_, hadoopConf))
+    val confB = broadcastConf(spark)
     fileSlices(spark, tasks).map { task =>
+      val hadoopConf = confB.value
+      val manifests = manifestDir.map(ManifestStore.HadoopFs(_, hadoopConf))
       val counts = mutable.HashMap.empty[(String, String), Long]
       def stream(emit: String => Unit): Long = {
         val rows = fileRows(task, hadoopOpen(task, hadoopConf), keys, identity, timeFilter, ivStrategy,

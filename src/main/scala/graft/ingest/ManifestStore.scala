@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.Path
+import java.nio.file.{Files, StandardCopyOption}
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.util.SerializableConfiguration
 
 /** W5's upload boundary — where a finished manifest spool file becomes a
@@ -29,15 +30,26 @@ object ManifestStore {
     ObjectMetadata(contentType = "text/plain", title = fileName)
 
   /** Hadoop-filesystem-backed store (local dirs, HDFS, s3a, ...): a
-    * plain `create(overwrite=true)` + stream copy. FS semantics have no
-    * object-metadata channel; the S3 metadata contract rides along in
-    * the signature so swapping in a real S3 client changes one class. */
+    * plain `create(overwrite=true)` + stream copy, or a file copy into a
+    * local directory. FS semantics have no object-metadata channel; the
+    * S3 metadata contract rides along in the signature so swapping in a
+    * real S3 client changes one class. */
   final case class HadoopFs(manifestDir: String, conf: SerializableConfiguration) extends ManifestStore {
     override def upload(fileName: String, spool: java.io.File, metadata: ObjectMetadata): Unit = {
       val out = new Path(manifestDir, fileName)
-      val fs = out.getFileSystem(conf.value)
-      val o = fs.create(out, true)
-      try java.nio.file.Files.copy(spool.toPath, o) finally o.close()
+      out.getFileSystem(conf.value) match {
+        // a local directory is written through java.nio: without native
+        // Hadoop the local FileSystem's create runs `chmod` as a child
+        // process on the file, its .crc sidecar and a new directory
+        case local: LocalFileSystem =>
+          val target = local.pathToFile(out).toPath
+          Files.createDirectories(target.getParent)
+          Files.copy(spool.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+          Files.deleteIfExists(target.resolveSibling(s".$fileName.crc")) // would fail checksummed reads
+        case fs =>
+          val o = fs.create(out, true)
+          try Files.copy(spool.toPath, o) finally o.close()
+      }
     }
   }
 }

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * plan for good, and the operator returns the new root's report so
   * the caller owns the cutover.
   *
-  * 100 TB shape: one connector scan (parallelism = OLD region count)
-  * into one hash exchange on the NEW region names (parallelism = new
-  * region count) — no driver-side data, no per-cell puts; cost is the
+  * 100 TB shape: one connector scan over the OLD regions into one
+  * exchange onto the NEW ones, each in the tasks of [[RegionJobs.plan]]
+  * — no driver-side data, no per-cell puts; cost is the
   * same single-shuffle bill as the original bulk load. The typical
   * driver of this operator is [[graft.operators.GlobalRank]]'s
   * equi-depth planner (q204): measure the live key distribution, then

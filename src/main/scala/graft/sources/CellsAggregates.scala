@@ -29,9 +29,9 @@ import java.nio.file.Paths
   * level, identities deduped across store-file kinds, exactly the rows
   * the metadata-only scan would have produced — and Spark's final
   * aggregate folds the ≤regions rows. The scan plans like every other
-  * face ([[CellsShards.plan]]): the regions ride in a few packed
-  * partitions, each reading its regions in turn and emitting one row
-  * per region. A region with no matching cells emits (0, null, null),
+  * face ([[CellsShards.plan]]): the regions ride in the byte-balanced
+  * groups of [[graft.ingest.RegionJobs.plan]], each reading its regions
+  * in turn and emitting one row per region. A region with no matching cells emits (0, null, null),
   * so empty tables still count 0.
   *
   * 100 TB: a full-table count costs one directory listing + index

@@ -53,10 +53,9 @@ import java.nio.file.{Files, Path, Paths}
   *    the name) — a `count(version)` query is pure directory listing.
   *
   * Parallelism: every read face plans through [[CellsShards.plan]] —
-  * the pruned shard directories packed into a few byte-balanced
-  * partitions, one shard per partition only under the key-grouped
-  * catalog report. Shards are 256 uniform buckets (CRC32 leading
-  * byte) by default, so shard work is balanced by construction.
+  * the pruned shard directories packed into the byte-balanced groups of
+  * [[graft.ingest.RegionJobs.plan]], one shard per partition only under
+  * the key-grouped catalog report.
   *
   * DELETES (HBase Delete-marker model, both Delete types): a tombstone
   * file `<digest>.<version>.d` masks every cell of its rowkey with
@@ -358,46 +357,16 @@ object CellsShards {
     if (keyGrouped) shards.toArray else pack(shards)
   }
 
-  /** Packs pruned shards into a few byte-balanced partitions by the rule
-    * of Spark's [[org.apache.spark.sql.execution.datasources.FilePartition]]:
-    * each shard weighs its resident store-file bytes
-    * ([[graft.ingest.RegionSplit.shardBytes]]) plus `spark.sql.files.openCostInBytes`,
-    * the target is `min(maxPartitionBytes, max(openCost, total / parallelism))`
-    * with parallelism `spark.sql.files.minPartitionNum`, else
-    * `spark.sql.leafNodeDefaultParallelism`, else the context's default,
-    * and partitions fill next-fit in KEY order, never re-sorted by size.
-    * Shards are disjoint key ranges, so a group of sorted shards read in
-    * order is itself sorted. A scan of no more non-empty shards than the
-    * parallelism keeps one of them per partition; an empty shard (no
-    * resident store files) weighs 0 in the fit test, so it joins the open
-    * group unless that group is already over the target. */
-  def pack(shards: Seq[CellsShard]): Array[InputPartition] = {
-    import org.apache.spark.sql.internal.SQLConf
-    val conf = SQLConf.get
-    val openCost = conf.filesOpenCostInBytes
-    val parallelism = conf.filesMinPartitionNum
-      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
-      .getOrElse(org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .fold(1)(_.sparkContext.defaultParallelism))
-    val bytes = shards.map(s => graft.ingest.RegionSplit.shardBytes(Paths.get(s.dir)))
-    val target = math.min(conf.filesMaxPartitionBytes,
-      math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
-    val groups = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    val cur = scala.collection.mutable.ArrayBuffer.empty[CellsShard]
-    var curBytes = 0L
-    shards.iterator.zip(bytes.iterator).foreach { case (s, b) =>
-      if (cur.nonEmpty && curBytes + b > target) {
-        groups += CellsShardGroup(cur.toVector)
-        cur.clear()
-        curBytes = 0L
-      }
-      curBytes += b + openCost
-      cur += s
-    }
-    if (cur.nonEmpty) groups += CellsShardGroup(cur.toVector)
-    groups.toArray
-  }
+  /** Packs pruned shards into the byte-balanced, key-ordered groups of
+    * [[graft.ingest.RegionJobs.plan]], each shard weighing its resident
+    * store-file bytes ([[graft.ingest.RegionSplit.shardBytes]]). Shards
+    * are disjoint key ranges, so a group of sorted shards read in order
+    * is itself sorted; a scan of no more shards than the cores keeps
+    * one of them per partition. */
+  def pack(shards: Seq[CellsShard]): Array[InputPartition] =
+    graft.ingest.RegionJobs.plan(org.apache.spark.sql.SparkSession.active,
+      shards.map(s => s -> graft.ingest.RegionSplit.shardBytes(Paths.get(s.dir))))
+      .map(g => CellsShardGroup(g): InputPartition).toArray
 
   /** Opens a planned partition with `shard` as each shard's reader: a
     * packed group through a [[CellsChainedReader]] capped at `limit`
@@ -935,11 +904,6 @@ case class CellsScanBuilder(root: String, table: String, stable: Boolean = false
     case _ => None
   }
 
-  // the table's split layout, read once at planning time — point
-  // probes must route to the same shard the writer placed them in,
-  // whatever the region boundaries are
-  private lazy val tableSplits = graft.ingest.FileStore(root).splitsOf(table)
-
   private def intersectPoints(keys: Seq[Array[Byte]]): Unit = {
     val ds = keys.map(graft.ingest.FileStore.keyDigest).toSet
     keyDigests = Some(keyDigests.fold(ds)(_ intersect ds))
@@ -1467,11 +1431,10 @@ case class CellsScan(root: String, table: String, lo: Long, hi: Long,
     // a rowkey point lookup plans ONLY its shard — 1 input partition
     // out of the table's whole region set (a region-server point read,
     // not a table scan); a range/prefix scan plans the contiguous
-    // shard span it covers. The pruned shards are then packed into a
-    // few byte-balanced partitions ([[CellsShards.plan]]), so a table
-    // scan costs about as many tasks as cores, not one per region —
-    // except under the key-grouped report below, which needs one
-    // region per partition.
+    // shard span it covers. The pruned shards are then packed
+    // ([[CellsShards.plan]]): a table scan costs as many tasks as
+    // cores until its bytes outgrow them, not one per region — except
+    // under the key-grouped report below (one region per partition).
     //
     // The key predicate rides IN each partition, not in the reader
     // factory: Spark may create the factory during planning — BEFORE

@@ -201,12 +201,6 @@ case class CellsVersionsReaderFactory(cols: Array[String], kinds: Option[Set[Str
       private val shard = Paths.get(part.dir)
       private val shardName = shard.getFileName.toString
       private val shardU8 = UTF8String.fromString(shardName)
-      // trailers open only when a trailer-derived column survives the
-      // projection; Files.size only when `bytes` does
-      private val needTrailer = cols.exists(c =>
-        c == "cells" || c == "distinct_keys" || c == "min_version" ||
-          c == "max_version" || c == "seq_no")
-      private val needBytes = cols.contains("bytes")
       private val rows: Iterator[InternalRow] = {
         CellsVersions.shardsListed.incrementAndGet()
         // covered listing (satellite subdirs of a mid-protocol region
@@ -228,6 +222,7 @@ case class CellsVersionsReaderFactory(cols: Array[String], kinds: Option[Set[Str
       }
 
       private def buildRow(e: graft.ingest.ShardFiles.Entry, file: String): InternalRow = {
+        // the trailer opens only for a trailer-derived column of a segment
         lazy val trailer = graft.ingest.CellSegment.readTrailer(e.path)
         val values: Array[Any] = cols.map {
           case "shard" => shardU8
@@ -242,7 +237,7 @@ case class CellsVersionsReaderFactory(cols: Array[String], kinds: Option[Set[Str
             if (e.isSegment) trailer.minVersion else e.version
           case "max_version" =>
             if (e.isSegment) trailer.maxVersion else e.version
-          case "bytes" => if (needBytes) Files.size(e.path) else 0L
+          case "bytes" => Files.size(e.path)
           case "seq_no" =>
             if (e.isSegment) (trailer.seqNo: Any) else null
         }

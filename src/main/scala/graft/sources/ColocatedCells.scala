@@ -42,8 +42,8 @@ import org.apache.spark.sql.types._
   * 100 TB: memory per task is two REGION-sized maps — bounded by the
   * split layout, the same knob that bounds an HBase region; a hot
   * range splits finer ([[graft.ingest.BulkLoad.Config.splitPoints]],
-  * q204's planner) and task memory follows. Parallelism = populated
-  * region count.
+  * q204's planner) and task memory follows. The planned regions run in
+  * the tasks of [[graft.ingest.RegionJobs.plan]], one region at a time.
   */
 object ColocatedCells {
 
@@ -74,8 +74,6 @@ object ColocatedCells {
       case "left" => aShards
       case "full" => aShards union bShards
     }).toSeq.sorted
-    if (shards.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], OutSchema)
 
     val cols = Array("rowkey", "version", "body")
     // read-time retention rides the same reader ([[graft.ingest.
@@ -85,7 +83,9 @@ object ColocatedCells {
     val now = System.currentTimeMillis()
     val retA = graft.ingest.Retention.of(root, tableA, now)
     val retB = graft.ingest.Retention.of(root, tableB, now)
-    val rdd = spark.sparkContext.parallelize(shards, shards.size).flatMap { shard =>
+    val weighed = shards.map(shard => shard -> Seq(tableA, tableB).map(t =>
+      graft.ingest.RegionSplit.shardBytes(Paths.get(root, t.replace(':', '~'), shard))).sum)
+    val rdd = graft.ingest.RegionJobs.tasks(spark, weighed).flatMap { shard =>
       def latest(t: String): collection.mutable.HashMap[Seq[Byte], (Array[Byte], Long, Array[Byte])] = {
         val m = collection.mutable.HashMap.empty[Seq[Byte], (Array[Byte], Long, Array[Byte])]
         val dir = Paths.get(root, t.replace(':', '~'), shard)
@@ -105,6 +105,12 @@ object ColocatedCells {
       }
       val a = latest(tableA)
       val b = latest(tableB)
+      def leftRows = a.iterator.map { case (key, av) =>
+        b.get(key) match {
+          case Some(bv) => Row(av._1, av._2, av._3, bv._2, bv._3)
+          case None => Row(av._1, av._2, av._3, null, null)
+        }
+      }
       joinType match {
         case "inner" =>
           // probe the smaller side into the larger — classic hash join
@@ -116,20 +122,9 @@ object ColocatedCells {
               Row(av._1, av._2, av._3, bv._2, bv._3)
             }
           }
-        case "left" =>
-          a.iterator.map { case (key, av) =>
-            b.get(key) match {
-              case Some(bv) => Row(av._1, av._2, av._3, bv._2, bv._3)
-              case None => Row(av._1, av._2, av._3, null, null)
-            }
-          }
+        case "left" => leftRows
         case "full" =>
-          a.iterator.map { case (key, av) =>
-            b.get(key) match {
-              case Some(bv) => Row(av._1, av._2, av._3, bv._2, bv._3)
-              case None => Row(av._1, av._2, av._3, null, null)
-            }
-          } ++ b.iterator.collect {
+          leftRows ++ b.iterator.collect {
             case (key, bv) if !a.contains(key) => Row(bv._1, null, null, bv._2, bv._3)
           }
       }

@@ -41,8 +41,7 @@ object StreamingIngest {
     // ship the session's Hadoop configuration to the decode tasks so the
     // sidecar read resolves the same filesystems (s3a credentials,
     // endpoints, custom schemes) as every other executor-side read
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val confB = IngestPipeline.broadcastConf(spark)
     val files = spark.readStream
       .format("binaryFile")
       // the binaryFile source's fixed schema — streaming sources require
@@ -58,7 +57,7 @@ object StreamingIngest {
         RecordProcessor.parseFilename(path).iterator.flatMap { case (db, coll, n) =>
           val task = IngestPipeline.FileTask(path, path.replaceFirst("\\.gz\\.enc$", ".encryption.json"), db, coll, n)
           IngestPipeline.fileRows(task, () => new java.io.ByteArrayInputStream(content),
-            keys, identity, timeFilter, ivStrategy, hadoopConf)
+            keys, identity, timeFilter, ivStrategy, confB.value)
         }
       }
     }

@@ -3,7 +3,6 @@ package graft.ingest
 import graft.ingest.IngestPipeline.{IngestedRow, Status}
 import graft.ingest.PushTableSink.{CellPut, TableSpec}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import graft.sources.CellsSource
 import org.apache.spark.sql.functions._
@@ -337,26 +336,7 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- region-packed exchange ----
 
-  /** numTasks of every stage `body` submits, in submission order; a
-    * marker job drains the listener bus before the listener goes. */
-  private def stageTasks(body: => Unit): Seq[Int] = {
-    val sc = spark.sparkContext
-    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val marked = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.spec.marker") != null)) marked.countDown()
-        else tasks.add(e.stageInfo.numTasks)
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("graft.spec.marker", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
-      assert(marked.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker stage never seen")
-    } finally sc.removeSparkListener(listener)
-    tasks.asScala.toSeq
-  }
+  private def stageTasks(body: => Unit): Seq[Int] = Fixtures.stageTasks(spark.sparkContext)(body)
 
   private def withSessionConf[A](key: String, value: String)(body: => A): A = {
     val prev = spark.conf.getOption(key)

@@ -11,6 +11,29 @@ object Fixtures {
   def dumpLines(db: String, coll: String, n: Int): Seq[String] = FixtureDumps.dumpLines(db, coll, n)
   def writeDumpFile(dir: JPath, db: String, coll: String, n: Int): Unit = FixtureDumps.writeDumpFile(dir, db, coll, n)
 
+  /** numTasks of every stage `body` submits on `sc`, in submission
+    * order; a marker job drains the listener bus before the listener
+    * goes. */
+  def stageTasks(sc: org.apache.spark.SparkContext)(body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.marker") != null)) marked.countDown()
+        else tasks.add(e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+      org.scalatest.Assertions.assert(marked.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "marker stage never seen")
+    } finally sc.removeSparkListener(listener)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(tasks).asScala.toSeq
+  }
+
   /** Every point face and `scanTable` agree with a scan's view
     * `expected` of (rowkey, version, body) strings: each key's
     * `getLatest` and `latestVersionsOf` name its newest cell, `exists`

@@ -54,6 +54,14 @@ class S3SeamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(meta.initialisationVector.nonEmpty && meta.keyEncryptionKeyId.nonEmpty)
   }
 
+  test("catalog listing of a flat prefix lists its directory once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.s3count.impl", classOf[CountingStubFileSystem].getName)
+    CountingStubFileSystem.listed.set(0)
+    assert(Catalog.listPairs(spark, Seq(s"s3count://$in")).size == 1)
+    assert(CountingStubFileSystem.listed.get() == 1, s"${CountingStubFileSystem.listed.get()} listings")
+  }
+
   test("full pipeline over s3stub listing + s3stub manifest upload lands the golden manifest") {
     val manifestDir = s"s3stub://$out/manifests"
     val r = IngestPipeline.run(spark,
@@ -102,10 +110,15 @@ class S3SeamSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 /** The s3stub FileSystem under its own scheme (`s3count://`), counting
-  * the input streams it opens and the ones closed. */
+  * its directory listings, the input streams it opens and the ones
+  * closed. */
 class CountingStubFileSystem extends S3StubFileSystem {
-  import org.apache.hadoop.fs.{FSDataInputStream, Path}
+  import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
   override def getScheme: String = "s3count"
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingStubFileSystem.listed.incrementAndGet()
+    super.listStatus(f)
+  }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val in = super.open(f, bufferSize)
     CountingStubFileSystem.opened.incrementAndGet()
@@ -120,6 +133,7 @@ class CountingStubFileSystem extends S3StubFileSystem {
 }
 
 object CountingStubFileSystem {
+  val listed = new java.util.concurrent.atomic.AtomicLong(0)
   val opened = new java.util.concurrent.atomic.AtomicLong(0)
   val closed = new java.util.concurrent.atomic.AtomicLong(0)
 }

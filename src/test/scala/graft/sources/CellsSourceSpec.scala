@@ -651,42 +651,40 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(parts.length < 256, s"${parts.length} partitions for 256 shards — nothing packed")
   }
 
-  /** the partition count Spark's file rule predicts for `t`'s shards,
-    * restated: weight = listed bytes + openCost; target =
-    * min(maxPartitionBytes, max(openCost, total / parallelism)); next-fit */
-  private def predicted(parallelism: Int, t: String = packTable): Int = {
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-    val openCost = conf.filesOpenCostInBytes
-    val bytes = CellsShards.pruneListed(java.nio.file.Paths.get(root, t), CellsKeyPred.All)
-      .map { ls =>
-        val s = java.nio.file.Files.walk(ls.path)
-        try s.filter(java.nio.file.Files.isRegularFile(_)).mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-    val target = math.min(conf.filesMaxPartitionBytes,
-      math.max(openCost, bytes.map(_ + openCost).sum / parallelism))
-    var n = 0
-    var cur = -1L // no open partition
-    bytes.foreach { b =>
-      if (cur < 0 || cur + b > target) { n += 1; cur = 0L }
-      cur += b + openCost
-    }
-    n
+  /** the partition count the region-job rule predicts for `t`'s shards,
+    * restated: min(shards, max(cores, ⌈listed bytes / advisory size⌉)) */
+  private def predicted(t: String = packTable): Int = {
+    val advisory = org.apache.spark.sql.internal.SQLConf.get
+      .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val bytes = shardBytes(t)
+    math.min(bytes.size.toLong, math.max(4L, (bytes.sum + advisory - 1) / advisory)).toInt
   }
 
-  test("packing: 256 shards pack to the count Spark's file rule predicts; a 3-shard range stays 3") {
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-    assert(spark.sparkContext.defaultParallelism == 4 && conf.filesMinPartitionNum.isEmpty &&
-      conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).isEmpty)
+  /** each pruned shard's listed bytes, in key order */
+  private def shardBytes(t: String): Seq[Long] =
+    CellsShards.pruneListed(java.nio.file.Paths.get(root, t), CellsKeyPred.All).map { ls =>
+      val s = java.nio.file.Files.walk(ls.path)
+      try s.filter(java.nio.file.Files.isRegularFile(_)).mapToLong(java.nio.file.Files.size(_)).sum()
+      finally s.close()
+    }
+
+  test("packing: 256 shards pack to the cores, and past them once their bytes outgrow the advisory size") {
+    assert(spark.sparkContext.defaultParallelism == 4)
     val parts = packScan().planInputPartitions()
-    assert(parts.length == predicted(4), s"planned ${parts.length}, the rule predicts ${predicted(4)}")
-    assert(predicted(4) > 1 && predicted(4) <= 16, s"${predicted(4)}")
-    // spark.sql.files.minPartitionNum overrides the parallelism, as on file sources
-    spark.conf.set("spark.sql.files.minPartitionNum", "64")
+    assert(parts.length == 4 && predicted() == 4, s"planned ${parts.length}")
+    // byte-balanced groups: none strays from an even share by more than one shard's bytes
+    val bytes = packScan().plannedShards.map(_.dir).zip(shardBytes(packTable)).toMap
+    val loads = parts.toSeq.map(_.asInstanceOf[CellsShardGroup].shards.map(s => bytes(s.dir)).sum)
+    assert(loads.forall(l => math.abs(l - bytes.values.sum / 4.0) <= bytes.values.max), s"group bytes $loads")
+    // an advisory size a tenth of the table's bytes: about ten groups, never more than shards
+    val total = shardBytes(packTable).sum
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", (total / 10).toString)
     try {
-      val wide = packScan().planInputPartitions().length
-      assert(wide == predicted(64) && wide > parts.length, s"planned $wide, the rule predicts ${predicted(64)}")
-    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
+      val wide = packScan().planInputPartitions()
+      assert(wide.length == predicted() && wide.length > 4, s"planned ${wide.length}, the rule predicts ${predicted()}")
+      assert(wide.toSeq.flatMap(_.asInstanceOf[CellsShardGroup].shards).map(_.dir) ==
+        parts.toSeq.flatMap(_.asInstanceOf[CellsShardGroup].shards).map(_.dir), "each shard once, in key order")
+    } finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     // a range over first bytes [05, 08): three shards, three partitions
     val sb = CellsScanBuilder(root, packTable)
     sb.pushFilters(Array(
@@ -807,7 +805,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val listed = CellsShards.pruneListed(java.nio.file.Paths.get(root, packTable), CellsKeyPred.All)
       .map(_.path.toString)
     assert(listed.size == 256 && flat.map(_.dir) == listed, "each shard exactly once, in key order")
-    assert(parts.length == predicted(4), s"planned ${parts.length}, the rule predicts ${predicted(4)}")
+    assert(parts.length == predicted(), s"planned ${parts.length}, the rule predicts ${predicted()}")
     assert(flat.forall(s => s.lo == Long.MinValue && s.hi == end.v), "the batch window rides in each shard")
   }
 
@@ -818,7 +816,7 @@ class CellsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = java.nio.file.Files.createTempDirectory("graft-pack-stream-out").toString
     def delivered = spark.read.parquet(out).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val first = streamOnce(t, out, ck)
-    assert(first.inputPartitions.length == predicted(4, t) && first.inputPartitions.length < 256)
+    assert(first.inputPartitions.length == predicted(t) && first.inputPartitions.length < 256)
     assert(delivered.length == 256 && delivered.toSet.size == 256)
     // 256 more cells above the watermark, and a re-put below it
     store.putBatch(t, (0 until 256).map(b =>

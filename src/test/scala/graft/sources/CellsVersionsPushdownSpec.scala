@@ -110,17 +110,17 @@ class CellsVersionsPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
       finally rd.close()
       out.toSeq
     }
-    // one partition for the whole table: both shards in one group
-    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    // two shards, under the cores: one planned group each; the packed
+    // read chains both planned shards in one group
     val scan = CellsVersionsScan(root, "t", required = StructType(
       CellsVersions.Schema.filter(f => f.name == "shard" || f.name == "file")))
-    val parts = try scan.planInputPartitions() finally spark.conf.unset("spark.sql.files.minPartitionNum")
-    assert(parts.length == 1)
-    val shards = parts.head.asInstanceOf[CellsShardGroup].shards
+    val parts = scan.planInputPartitions()
+    assert(parts.length == 2)
+    val shards = parts.toVector.flatMap(_.asInstanceOf[CellsShardGroup].shards)
     assert(shards.map(s => java.nio.file.Paths.get(s.dir).getFileName.toString) == Vector("41", "5a"))
     val fac = scan.createReaderFactory()
     CellsVersions.shardsListed.set(0)
-    val packed = rowsOf(fac.createReader(parts.head))
+    val packed = rowsOf(fac.createReader(CellsShardGroup(shards)))
     assert(CellsVersions.shardsListed.get() == 2)
     val perShard = shards.flatMap(s => rowsOf(fac.createReader(s)))
     assert(packed.size == 5 && packed == perShard, s"$packed vs $perShard")

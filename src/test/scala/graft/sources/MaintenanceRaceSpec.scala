@@ -229,7 +229,9 @@ class MaintenanceRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store = FileStore(root)
     // flush on (threshold 2) builds segments; split only on request
     store.ensureTable(t, TableSpec(compactionThreshold = 2))
-    val cold = for (r <- "ABCDEFGH"; i <- 0 until 3) yield s"$r-$i"
+    // cold regions each weigh most of the hot one, so byte-balanced
+    // packing gives the hot (last) shard a neighbour
+    val cold = for (r <- "ABCDEFGH"; i <- 0 until 150) yield s"$r-$i"
     store.putBatch(t, cold.map(k => CellPut(t, k.getBytes("UTF-8"), 1L, k.getBytes("UTF-8"))))
     val hot = (0 until 200).map(i => f"Z-$i%04d")
     hot.grouped(25).foreach(w =>
