@@ -113,7 +113,7 @@ object Catalog {
     readMetadata(path, spark.sparkContext.hadoopConfiguration)
 
   def parseMetadata(text: String, context: String): EncryptionMetadata = {
-    import graft.core.{JObj, JStr, Json}
+    import graft.core.{JStr, Json}
     val o = try Json.parseObject(text)
     catch { case e: Exception => throw CatalogException(s"unparseable metadata $context: ${e.getMessage}") }
     def str(k: String): String = o.get(k) match {

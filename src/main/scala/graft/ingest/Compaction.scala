@@ -46,7 +46,10 @@ import org.apache.spark.sql.functions._
   * segments under a size threshold) into one fresh segment per shard —
   * no Spark shuffle anywhere, no retention applied (HBase minor
   * compactions never GC versions; only majors do), large segments left
-  * untouched. Colliding (rowkey, version) identities with different
+  * untouched. Every put-and-segment region merge — the write path's put
+  * flush (a puts-only merge) and tier merge, [[minor]], and
+  * [[RegionSplit]]'s phase 1 — runs through [[mergeRegion]].
+  * Colliding (rowkey, version) identities with different
   * bodies — legal once an in-place SQL UPDATE has re-put a
   * segment-resident cell — resolve by the READ faces' precedence (put
   * beats segment, newer segment beats older; [[resolveSorted]]), and
@@ -84,7 +87,7 @@ object Compaction {
   /** k-way merge of (key, version)-sorted cell iterators — a min-heap
     * of one buffered head per input, so the merged run materializes
     * NOTHING: memory is O(inputs), the HBase store-file merge shape. */
-  private[ingest] def mergeSorted(its: Seq[Iterator[Cell]]): Iterator[Cell] = new Iterator[Cell] {
+  private def mergeSorted(its: Seq[Iterator[Cell]]): Iterator[Cell] = new Iterator[Cell] {
     private val pq = new java.util.PriorityQueue[scala.collection.BufferedIterator[Cell]](
       math.max(1, its.size),
       (x: scala.collection.BufferedIterator[Cell], y: scala.collection.BufferedIterator[Cell]) =>
@@ -108,7 +111,7 @@ object Compaction {
     * two copies of one source class and must be byte-identical (the F5
     * invariant) — differing bodies there are a corrupt input and
     * throw, as in [[BulkLoad.dedupSorted]]. */
-  private[ingest] def resolveSorted(it: Iterator[Cell]): Iterator[(Array[Byte], Long, Array[Byte])] =
+  private def resolveSorted(it: Iterator[Cell]): Iterator[(Array[Byte], Long, Array[Byte])] =
     new Iterator[(Array[Byte], Long, Array[Byte])] {
       private val in = it.buffered
       override def hasNext: Boolean = in.hasNext
@@ -128,11 +131,109 @@ object Compaction {
       }
     }
 
-  /** Diagnostic/spec seam: the largest per-shard IN-CORE cell buffer
-    * any minor() pass ever held (the sorted put backlog — segment
-    * entries stream and are never buffered). CompactionSpec pins
+  /** Diagnostic/spec seam: the largest IN-CORE cell buffer any region
+    * merge ([[mergeRegion]]) ever held — the sorted put backlog;
+    * segment entries stream and are never buffered. CompactionSpec pins
     * max-buffered ≪ total merged input under a tiny threshold. */
   private[graft] val minorMaxBuffered = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** The small-segment size class: [[minor]]'s default input ceiling and
+    * the write path's segment tier. A segment past it has graduated out
+    * of the tier and waits for an operator minor or a major. */
+  private[ingest] val SmallSegmentBytes: Long = 32L << 20
+
+  /** One region's own store files, listed once: its put entries and, on
+    * first use, the trailer of every segment. A segment that a sibling
+    * merge deleted between the listing and the read is skipped: its cells
+    * moved into an output whose seqNo is ≥ its own, so the region's
+    * ceiling stays sound. The write path's upkeep policy and the merge
+    * it decides on read this one snapshot. */
+  private[ingest] final class RegionFiles(val dir: Path, val own: Vector[ShardFiles.Entry]) {
+    val puts: Vector[ShardFiles.Entry] = own.filter(_.isPut)
+    lazy val segments: Vector[(Path, CellSegment.Trailer)] = own.filter(_.isSegment).flatMap { e =>
+      try Some((e.path, CellSegment.readTrailer(e.path)))
+      catch { case _: java.io.IOException => None }
+    }
+    /** the region's precedence ceiling: its highest segment seqNo */
+    def maxSeqNo: Long = segments.map(_._2.seqNo).foldLeft(0L)(math.max)
+    /** the seqNo of a segment that takes in puts (merged or landed
+      * directly): above the whole region, so a put keeps outranking any
+      * stale segment copy of its coordinate */
+    def putSeqNo: Long = maxSeqNo + 1
+    def smallSegments: Int = segments.count(_._2.indexOffset <= SmallSegmentBytes)
+  }
+
+  private[ingest] object RegionFiles {
+    def apply(dir: Path): RegionFiles = new RegionFiles(dir, ShardFiles.list(dir).own)
+  }
+
+  /** A region merge's segments written, its inputs (the listed put
+    * files, then the admitted segments) and how many inputs it deleted. */
+  private[ingest] final case class Merged(outputs: Seq[CellSegment.Meta], inputs: Seq[Path],
+                                          removed: Long)
+
+  /** ONE REGION MERGE — the put flush, the write path's tier merge,
+    * [[minor]] and [[RegionSplit]]'s phase 1 all run through here. The
+    * inputs are every put file of `files` (a put that vanished since the
+    * listing is skipped: a sibling flush absorbed it) plus the segments
+    * whose trailer `admit` accepts. Only the put backlog is sorted
+    * in-core (put files are small by construction — the memstore
+    * analog); each segment streams its own sorted entries, and the k-way
+    * merge hands `write` the precedence-resolved, key-sorted cells with
+    * no intermediate materialization — task memory is O(puts + open
+    * iterators) whatever the admitted bytes — together with the output
+    * seqNo: [[RegionFiles.putSeqNo]] when puts were absorbed (they must
+    * keep outranking every segment of the region, admitted or not); a
+    * put-free merge is exactly as new as its newest input, its standing
+    * against unmerged segments unchanged.
+    *
+    * Nothing is written (None) when no put was read and fewer than
+    * `minSegments` segments were admitted. With `sweep`, the inputs are
+    * deleted after the write, except a name the write produced (a
+    * single-input merge can reuse its input's content-hash name), and
+    * [[FileStore.absorbProbe]] runs in between. The caller holds the
+    * region's maintenance monitor ([[FileStore.shardLockFor]]) or the
+    * table write lock across the whole absorb→delete window. */
+  private[ingest] def mergeRegion(files: RegionFiles, admit: CellSegment.Trailer => Boolean,
+                                  minSegments: Int = 2, sweep: Boolean = true)(
+      write: (Iterator[(Array[Byte], Long, Array[Byte])], Long) => Seq[CellSegment.Meta]
+  ): Option[Merged] = {
+    val putCells = files.puts.flatMap { e =>
+      try {
+        val (key, body) = ShardFiles.read(e.path)
+        Some((key, e.version, body, Long.MaxValue))
+      } catch { case _: java.io.IOException => None }
+    }.sortWith(cellCmp(_, _) < 0)
+    val segs = files.segments.filter { case (_, t) => admit(t) }
+    if (putCells.isEmpty && segs.size < minSegments) return None
+    minorMaxBuffered.updateAndGet(m => math.max(m, putCells.size.toLong))
+    val seqNo =
+      if (putCells.nonEmpty) files.putSeqNo
+      else segs.map(_._2.seqNo).foldLeft(0L)(math.max)
+    // inputs close on exhaustion in the happy path; the finally
+    // releases every NON-exhausted input's stream if the merge or the
+    // write throws mid-way (close is idempotent)
+    val segIts = segs.map { case (p, t) => CellSegment.entries(p, needBody = true, t.indexOffset) }
+    val tagged = segIts.zip(segs).map { case (it, (_, t)) =>
+      it.map { case (k, v, b) => (k, v, b, t.seqNo) }
+    }
+    val outputs =
+      try write(resolveSorted(mergeSorted(putCells.iterator +: tagged)), seqNo)
+      finally segIts.foreach(it => try it.close() catch { case _: Exception => () })
+    val inputs = files.puts.map(_.path) ++ segs.map(_._1)
+    var removed = 0L
+    if (sweep) {
+      // test seam: the absorb→delete window a replace-by-coordinate
+      // must never land inside (it can't — the replace takes the
+      // region's monitor; FlushReplaceRaceSpec drives the interleaving)
+      FileStore.absorbProbe(files.dir)
+      val written = outputs.map(_.fileName).toSet
+      inputs.foreach { p =>
+        if (!written(p.getFileName.toString) && Files.deleteIfExists(p)) removed += 1
+      }
+    }
+    Some(Merged(outputs, inputs, removed))
+  }
 
   /** Region-local minor compaction: per shard, merge every per-cell
     * put file plus every segment whose DATA REGION is under
@@ -142,19 +243,16 @@ object Compaction {
     * merged and files removed, in the tasks of [[RegionJobs.plan]].
     * Idempotent: a shard with ≤1 input and no puts is untouched. */
   def minor(spark: SparkSession, root: String, table: String,
-            maxInputBytes: Long = 32L << 20): Report = {
+            maxInputBytes: Long = SmallSegmentBytes): Report = {
     val results = RegionJobs.overDirs(spark, ShardFiles.regions(Paths.get(root, table.replace(':', '~'))))
       .map(shardPath => minorShard(Paths.get(shardPath), maxInputBytes))
       .collect()
     Report(results.map(_._1).sum, results.map(_._2).sum, results.flatMap(_._3).toSeq)
   }
 
-  /** ONE shard's region-local minor merge — the body of [[minor]],
-    * runnable without Spark so [[FileStore]]'s segment-count policy
-    * hook (the write-path tier of the HBase compaction model) can
-    * invoke it executor-locally. Same contract as [[minor]]: no
-    * retention, snapshot-bounded deletes, put precedence preserved by
-    * seqNo, idempotent on a merged shard. */
+  /** ONE shard's minor — the body of [[minor]] and the write path's tier
+    * merge: a [[mergeRegion]] admitting the segments under
+    * `maxInputBytes`, into one fresh segment in the shard itself. */
   private[ingest] def minorShard(shard: Path,
                                  maxInputBytes: Long): (Long, Long, Seq[BulkLoad.SegDesc]) =
     // the shard's maintenance monitor spans the whole absorb→delete
@@ -169,69 +267,15 @@ object Compaction {
     // duration, the region-server-local pause HBase's store lock
     // models.
     FileStore.shardLockFor(shard).synchronized {
-    minorShardInner(shard, maxInputBytes)
-  }
-
-  private def minorShardInner(shard: Path,
-                              maxInputBytes: Long): (Long, Long, Seq[BulkLoad.SegDesc]) = {
-    val table = shard.getParent.getFileName.toString.replace('~', ':')
-    val shardName = shard.getFileName.toString
-    // snapshot the merge inputs NOW: puts + small segments (every
-    // segment's trailer is read anyway for the size filter, so the
-    // shard's max seqNo — the precedence ceiling — is free)
-    val (puts, segInfo, shardMaxSeq) = {
-      val own = ShardFiles.list(shard).own
-      val all = own.filter(_.isSegment).map(e => (e.path, CellSegment.readTrailer(e.path)))
-      val g = all.filter(_._2.indexOffset <= maxInputBytes)
-      (own.filter(_.isPut), g, all.map(_._2.seqNo).foldLeft(0L)(math.max))
+      mergeRegion(RegionFiles(shard), _.indexOffset <= maxInputBytes)(
+        (cells, seqNo) => Seq(CellSegment.write(shard, cells, seqNo))) match {
+        case Some(Merged(Seq(meta), _, removed)) =>
+          val table = shard.getParent.getFileName.toString.replace('~', ':')
+          (meta.entryCount.toLong, removed, Seq(BulkLoad.SegDesc(table, shard.getFileName.toString,
+            meta.fileName, meta.entryCount.toLong, meta.minVersion, meta.maxVersion)))
+        case _ => (0L, 0L, Seq.empty)
+      }
     }
-    val segs = segInfo.map(_._1)
-    if (puts.isEmpty && segs.size <= 1) (0L, 0L, Seq.empty[BulkLoad.SegDesc])
-    else {
-          // ONLY the put backlog is buffered and sorted in-core (put
-          // files are small by construction — the memstore analog);
-          // each input segment contributes its own already-sorted
-          // streaming iterator, and the k-way merge feeds the segment
-          // writer (which streams too) with no intermediate
-          // materialization: task memory = O(puts + open iterators),
-          // whatever maxInputBytes says — including the q221 serving
-          // flush that passes Long.MaxValue
-          val putCells = puts.map { e =>
-            val (key, body) = ShardFiles.read(e.path)
-            (key, e.version, body, Long.MaxValue)
-          }.sortWith(cellCmp(_, _) < 0)
-          minorMaxBuffered.updateAndGet(m => math.max(m, putCells.size.toLong))
-          // inputs close on exhaustion in the happy path; the finally
-          // releases every NON-exhausted input's stream if the merge or
-          // the segment write throws mid-way (close is idempotent)
-          val segIts = segInfo.map { case (p, t) => CellSegment.entries(p, needBody = true, t.indexOffset) }
-          val tagged = segIts.zip(segInfo).map { case (it, (_, t)) =>
-            it.map { case (k, v, b) => (k, v, b, t.seqNo) }
-          }
-          // the fresh segment's precedence: absorbed puts must keep
-          // outranking every segment in the SHARD (including large ones
-          // outside this merge — they could hold a stale body the put
-          // superseded), so puts lift the output above the shard's max;
-          // a put-free merge is exactly as new as its newest input —
-          // its standing against unmerged segments is unchanged
-          val segSeq =
-            if (puts.nonEmpty) shardMaxSeq + 1
-            else segInfo.map(_._2.seqNo).foldLeft(0L)(math.max)
-          val meta =
-            try CellSegment.write(shard,
-              resolveSorted(mergeSorted(putCells.iterator +: tagged)), segSeq)
-            finally segIts.foreach(it => try it.close() catch { case _: Exception => () })
-          var removed = 0L
-          (puts.map(_.path) ++ segs).foreach { p =>
-            // the fresh segment may REUSE an input's content-hash name
-            // (single-input merge) — never delete what was just written
-            if (p.getFileName.toString != meta.fileName && Files.deleteIfExists(p)) removed += 1
-          }
-          (meta.entryCount.toLong, removed,
-            Seq(BulkLoad.SegDesc(table, shardName, meta.fileName,
-              meta.entryCount.toLong, meta.minVersion, meta.maxVersion)))
-        }
-  }
 
   /** A put or marker file's (size, mtimeNanos); None once it is gone. */
   private def stampOf(p: Path): Option[(Long, Long)] =

@@ -48,10 +48,8 @@ object FileStore {
     * interleaves better across concurrent same-shard sink tasks than a
     * monitor-held direct window; above it, tiny-file churn dominates
     * (BENCH_SCALING.md, round 18 "directFlush wave physics": capped
-    * 15 k-cell wave 5.5 s per-cell vs 0.14 s direct). Overridable for
-    * tests via system property. */
-  private[ingest] def CappedDirectFloor: Int =
-    Integer.getInteger("graft.store.cappedDirectFloor", 1024)
+    * 15 k-cell wave 5.5 s per-cell vs 0.14 s direct). */
+  private[ingest] val CappedDirectFloor: Int = 1024
 
   /** The cell-file naming digest. Public because the read face
     * ([[graft.sources.CellsSource]]) must route rowkey point lookups
@@ -533,19 +531,14 @@ final case class FileStore(rootDir: String) extends Store {
       }
     }
 
-  /** All live DELETE MARKERS of a table as (rowkey, version) pairs —
-    * marker files carry the length-prefixed true key, so the listing
-    * recovers exactly what [[deleteCells]] was given. Bounded by the
-    * live marker count (majors purge markers, so this is the
-    * between-compactions delete backlog, not the table); one
-    * directory listing + one small read per marker. */
-  def listTombstones(tableName: String): Seq[(Array[Byte], Long)] =
-    listMarkers(tableName).collect { case (k, v, false) => (k, v) }
-
-  /** All live markers of BOTH kinds as (rowkey, version, exact) — the
-    * backup export face (a chain must carry exact deletes exactly as it
-    * carries bound ones). Same boundedness as [[listTombstones]]: the
-    * between-majors delete backlog. */
+  /** All live DELETE MARKERS of both kinds as (rowkey, version, exact)
+    * — the backup export face (a chain must carry exact deletes exactly
+    * as it carries bound ones). Marker files carry the length-prefixed
+    * true key, so the listing recovers exactly what [[deleteCells]] and
+    * [[deleteCellsExact]] were given. Bounded by the live marker count
+    * (majors purge markers, so this is the between-compactions delete
+    * backlog, not the table); one directory listing + one small read
+    * per marker. */
   def listMarkers(tableName: String): Seq[(Array[Byte], Long, Boolean)] =
     ShardFiles.regions(tableDir(tableName)).flatMap { shard =>
       ShardFiles.list(shard).own.filter(_.isMarker).map { e =>
@@ -922,11 +915,15 @@ final case class FileStore(rootDir: String) extends Store {
     * outrank every resident segment at any colliding identity.
     * Driver-side, one trailer read per segment. */
   def maxSeqNo(tableName: String): Long =
-    ShardFiles.regions(tableDir(tableName)).iterator.flatMap { shard =>
-      ShardFiles.list(shard).own.iterator.filter(_.isSegment)
-        .map(e => CellSegment.readTrailer(e.path).seqNo)
-    }.foldLeft(0L)(math.max)
+    ShardFiles.regions(tableDir(tableName)).iterator
+      .map(Compaction.RegionFiles(_).maxSeqNo).foldLeft(0L)(math.max)
 
+  /** Land a batch: per touched region, as put files, or — a group past
+    * the DDL's flush threshold — directly as one segment
+    * ([[directFlush]]); then the version-cap prune, the region upkeep
+    * ([[upkeep]]) and the split policy. A flush is a puts-only region
+    * merge ([[Compaction.mergeRegion]] admitting no segment); the
+    * small-segment tier merges through the same function. */
   override def putBatch(tableName: String, cells: Seq[CellPut]): Unit = {
     // shard names of the batch's touched shards, for the split-policy
     // check that must run AFTER the read lock releases
@@ -1025,10 +1022,12 @@ final case class FileStore(rootDir: String) extends Store {
     // POST-COMMIT FLUSH HOOK (the memstore-flush / hbase.hstore.
     // compactionThreshold analog): after the batch is durable, any
     // touched shard whose per-cell put backlog exceeds the DDL
-    // threshold flushes that backlog into ONE sorted segment. The
-    // policy check costs one directory listing per touched shard; the
-    // flush itself reads only the put files it absorbs (segments are
-    // never re-merged here — no write quadratics; minors/majors own
+    // threshold flushes that backlog into ONE sorted segment — a
+    // puts-only region merge ([[Compaction.mergeRegion]]). The policy
+    // check costs one directory listing per touched shard, which the
+    // flush reuses; the flush reads only the put files it absorbs
+    // (segments join only the size-tiered merge of the small-segment
+    // tier — no write quadratics; minors/majors own the rest of
     // segment-count hygiene). Publication stays crash-safe: the fresh
     // segment lands by atomic rename BEFORE its inputs are deleted, so
     // every read face sees each cell exactly once at any instant
@@ -1069,19 +1068,9 @@ final case class FileStore(rootDir: String) extends Store {
       FileStore.flushChecks.incrementAndGet()
       // ONE listing: existing puts (replace routing, the version-cap
       // prune, the backlog count) + segment trailers (precedence
-      // ceiling + tier population)
-      val own = ShardFiles.list(shardDir).own
-      val puts = own.filter(_.isPut)
-      // trailer reads are LAZY (r18): an all-replace batch (the
-      // streaming-upsert MV shape) needs neither the seqNo ceiling nor
-      // the tier population — reading every segment trailer per batch
-      // under the shard monitor was measurable contention on hot
-      // single-shard MV drains
-      lazy val trailers = own.filter(_.isSegment)
-        .flatMap(e => try Some(CellSegment.readTrailer(e.path))
-                      catch { case _: java.io.IOException => None })
-      def maxSeq = trailers.map(_.seqNo).foldLeft(0L)(math.max)
-      def smallSegs = trailers.count(_.indexOffset <= SmallSegmentBytes)
+      // ceiling + tier population), the trailers read on first use
+      val files = Compaction.RegionFiles(shardDir)
+      val puts = files.puts
       val existing = puts.iterator.map(e => (e.digest, e.version)).toSet
       val byCoord = scala.collection.mutable.LinkedHashMap
         .empty[(String, Long), (Array[Byte], Long, Array[Byte], String)]
@@ -1130,7 +1119,7 @@ final case class FileStore(rootDir: String) extends Store {
           val c = java.util.Arrays.compareUnsigned(a._1, b._1)
           if (c != 0) c < 0 else a._2 < b._2
         }
-        CellSegment.writeDigested(shardDir, sorted.iterator, maxSeq + 1)
+        CellSegment.writeDigested(shardDir, sorted.iterator, files.putSeqNo)
         FileStore.autoFlushes.incrementAndGet()
       }
       replaces.foreach { case (rowkey, version, body, d) =>
@@ -1138,40 +1127,50 @@ final case class FileStore(rootDir: String) extends Store {
       }
       // HOOK PARITY (ADVICE r17): a PRE-EXISTING put backlog (left by
       // ≤-threshold batches) must not outlive a direct-path batch just
-      // because the fresh cells bypassed it — when the leftover put
-      // files (including this batch's replaces) still exceed the
-      // threshold, absorb them exactly as the hook would (the monitor
-      // is reentrant, so the absorb stays inside this batch's
-      // decide→write window and runs its own tier check). Otherwise
-      // run the segment-tier check here — even when the batch was all
-      // replaces (fresh empty), matching the hook's `smallSegs >
-      // threshold` trigger.
-      if (puts.size - prunedResidents.size + replaces.size > threshold)
-        flushShardIfBacklogged(shardDir, threshold)
-      else if (smallSegs + (if (fresh.nonEmpty) 1 else 0) > threshold)
-        try {
-          Compaction.minorShard(shardDir, SmallSegmentBytes)
-          FileStore.autoMinors.incrementAndGet()
-        } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+      // because the fresh cells bypassed it — the leftover put files
+      // and the tier, which counts the fresh segment, go through the
+      // hook's own policy. A replace rewrote a listed put file, so the
+      // backlog is the listed puts the prune left. Its flush re-lists
+      // (the monitor is reentrant, so the absorb stays inside this
+      // batch's decide→write window).
+      upkeep(shardDir, threshold, puts.size - prunedResidents.size,
+        files.smallSegments + (if (fresh.nonEmpty) 1 else 0))(
+        flushShardIfBacklogged(shardDir, threshold))
     }
 
-  /** Small-segment ceiling for the write-path SEGMENT TIER — the same
-    * size class [[Compaction.minor]] merges by default: a segment past
-    * this graduated out of the tier and waits for an operator minor /
-    * major. */
-  private val SmallSegmentBytes = 32L << 20
+  /** The write path's ONE upkeep policy for a region a batch just
+    * touched, fed from the listing and trailers its caller holds: a put
+    * `backlog` past the threshold flushes; otherwise a small-segment
+    * tier past it merges. `smallSegments` is by name, so its trailers
+    * are read only when the backlog does not decide. */
+  private def upkeep(shardDir: Path, threshold: Int, backlog: Int,
+                     smallSegments: => Int)(flush: => Unit): Unit =
+    if (backlog > threshold) flush
+    else if (smallSegments > threshold) tierMerge(shardDir)
 
-  /** One policy check + (maybe) one flush + (maybe) one segment-tier
-    * merge for a single shard — see the [[putBatch]] hook. Two tiers,
-    * the full LSM write discipline:
+  /** The segment tier's merge ([[Compaction.minorShard]] of the small
+    * segments), BEST-EFFORT: a concurrent sibling task may delete an
+    * input mid-read (its own merge won the race) — the policy then
+    * simply waits for the next batch; the put batch itself is already
+    * durable and must never fail on maintenance. */
+  private def tierMerge(shardDir: Path): Unit =
+    try {
+      Compaction.minorShard(shardDir, Compaction.SmallSegmentBytes)
+      FileStore.autoMinors.incrementAndGet()
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+
+  /** One policy check ([[upkeep]]) + (maybe) one flush + (maybe) one
+    * segment-tier merge for a single shard — see the [[putBatch]] hook.
+    * Two tiers, the full LSM write discipline:
     *
     *  1. **PUT FLUSH** (memstore flush): > threshold put files fold
-    *     into ONE fresh segment — reads only the backlog, never
-    *     resident segments, so flushes alone can't amplify writes.
+    *     into ONE fresh segment — a puts-only region merge
+    *     ([[Compaction.mergeRegion]] admitting no segment), so flushes
+    *     alone can't amplify writes.
     *  2. **SEGMENT TIER** (the hbase.hstore.compactionThreshold minor
     *     trigger): each flush leaves one more small segment; when the
     *     SMALL-segment population itself exceeds the threshold, the
-    *     existing region-local minor merge ([[Compaction.minorShard]])
+    *     region-local minor merge ([[Compaction.minorShard]])
     *     folds them — size-tiered (only segments ≤ 32 MB join; a
     *     merged segment past that graduates out), so each byte is
     *     rewritten O(log(32 MB / flush size)) times, the classic LSM
@@ -1193,59 +1192,19 @@ final case class FileStore(rootDir: String) extends Store {
     // best-effort (one won, the others burned a listing + vanished-input
     // retries; same outcome, less waste). Region-scoped, never table-wide.
     FileStore.shardLockFor(shardDir).synchronized {
-    FileStore.flushChecks.incrementAndGet()
-    val (puts, shardMaxSeq, smallSegs) = {
-      val own = ShardFiles.list(shardDir).own
-      // a sibling task's merge may delete a listed segment mid-scan —
-      // skip vanished ones (their content moved into a merge output
-      // whose seqNo is ≥ theirs, so the maxSeq floor stays sound)
-      val trailers = own.filter(_.isSegment)
-        .flatMap(e => try Some(CellSegment.readTrailer(e.path))
-                      catch { case _: java.io.IOException => None })
-      (own.filter(_.isPut), trailers.map(_.seqNo).foldLeft(0L)(math.max),
-        trailers.count(_.indexOffset <= SmallSegmentBytes))
-    }
-    // BEST-EFFORT tier merge: a concurrent sibling task may delete an
-    // input mid-read (its own merge won the race) — the policy then
-    // simply waits for the next batch; the put batch itself is already
-    // durable and must never fail on maintenance
-    def tryTierMerge(): Unit =
-      try {
-        Compaction.minorShard(shardDir, SmallSegmentBytes)
-        FileStore.autoMinors.incrementAndGet()
-      } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-    // tier 2 first when tier 1 won't fire: the small-segment check
-    // also runs after a flush below (the flush adds one)
-    if (puts.size <= threshold) {
-      if (smallSegs > threshold) tryTierMerge()
-      return
-    }
-    // the backlog is small by construction (threshold-bounded batches
-    // of memstore-sized cells) — sort in-core, stream to the writer
-    val cells = puts.flatMap { e =>
-      // a racing flush may have absorbed this put already
-      try {
-        val (key, body) = ShardFiles.read(e.path)
-        Some((key, e.version, body))
-      } catch { case _: java.io.IOException => None }
-    }.sortWith { (a, b) =>
-      val c = java.util.Arrays.compareUnsigned(a._1, b._1)
-      if (c != 0) c < 0 else a._2 < b._2
-    }
-    if (cells.isEmpty) return
-    // flushed puts must KEEP outranking every resident segment at any
-    // colliding identity (an in-place re-put over a segment cell) —
-    // the same precedence rule Compaction.minor applies
-    val meta = CellSegment.write(shardDir, cells.iterator, shardMaxSeq + 1)
-    // test seam: the absorb→delete window a replace-by-coordinate must
-    // never land inside (it can't — the replace takes this shard's
-    // monitor, held here; FlushReplaceRaceSpec drives the interleaving)
-    FileStore.absorbProbe(shardDir)
-    puts.foreach(e => Files.deleteIfExists(e.path))
-    FileStore.autoFlushes.incrementAndGet()
-    // tier 2: the flush just added one more small segment — merge the
-    // tier once it outgrows the threshold (see the scaladoc above)
-    if (smallSegs + 1 > threshold) tryTierMerge()
+      FileStore.flushChecks.incrementAndGet()
+      val files = Compaction.RegionFiles(shardDir)
+      upkeep(shardDir, threshold, files.puts.size, files.smallSegments) {
+        // the put flush: a region merge admitting no segment, so it
+        // reads only the backlog and flushes alone can't amplify writes
+        val flushed = Compaction.mergeRegion(files, _ => false)(
+          (cells, seqNo) => Seq(CellSegment.write(shardDir, cells, seqNo))).isDefined
+        if (flushed) {
+          FileStore.autoFlushes.incrementAndGet()
+          // tier 2: the flush just added one more small segment
+          if (files.smallSegments + 1 > threshold) tierMerge(shardDir)
+        }
+      }
     }
   }
 

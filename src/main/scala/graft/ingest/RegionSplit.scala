@@ -18,13 +18,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *
   * == The protocol (parent shard S = [a, b), split key m) ==
   *
-  *  1. '''merge''' — snapshot S's store files; k-way-merge them
-  *     (identical physics to [[Compaction.minorShard]]: puts in-core,
-  *     segments streaming, read-precedence resolution) and write TWO
-  *     fresh sorted segments: keys < m into S itself, keys ≥ m into a
-  *     staging directory. Intra-directory duplication with the parents
-  *     is the same flip-in state every compaction passes through —
-  *     readers dedup on the cell identity.
+  *  1. '''merge''' — snapshot S's store files and merge them
+  *     through [[Compaction.mergeRegion]] (every segment admitted; puts
+  *     in-core, segments streaming, read-precedence resolution), cutting
+  *     the stream at m into TWO fresh sorted segments: keys < m into S
+  *     itself, keys ≥ m into a staging directory. Intra-directory
+  *     duplication with the parents is the same flip-in state every
+  *     compaction passes through — readers dedup on the cell identity.
   *  2. '''publish''' — one atomic rename lands the staging directory as
   *     the SATELLITE `S/_split-<hex(m)>/` (with copies of S's upper-key
   *     delete markers and a `_split.json` recovery manifest). The
@@ -79,8 +79,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   */
 object RegionSplit {
 
-  /** spec/gate seams: policy evaluations vs splits actually performed. */
-  private[graft] val splitChecks = new java.util.concurrent.atomic.AtomicLong(0)
+  /** spec/gate seam: splits actually performed. */
   private[graft] val splitsDone = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** test seam: invoked with `"<stage>:<detail>"` just AFTER each
@@ -121,11 +120,8 @@ object RegionSplit {
     * median key boundary when the region has no segments (flush
     * disabled). None when the region holds < 2 distinct keys — an
     * unsplittable region, exactly HBase's single-row-region behavior. */
-  private[graft] def chooseSplitKey(shardDir: Path): Option[Array[Byte]] = {
-    val own = ShardFiles.list(shardDir).own
-    val (puts, segs) = (own.filter(_.isPut), own.filter(_.isSegment).map(_.path))
-    val fromSegment = segs
-      .map(p => (p, CellSegment.readTrailer(p)))
+  private def chooseSplitKey(files: Compaction.RegionFiles): Option[Array[Byte]] = {
+    val fromSegment = files.segments
       .sortBy(-_._2.indexOffset)
       .headOption
       .filter(_._2.distinctKeys >= 2)
@@ -152,7 +148,7 @@ object RegionSplit {
     fromSegment.orElse {
       // no usable segment: median boundary of the put backlog's keys
       // (key headers only — 4 + keyLen bytes per file)
-      val keys = puts.flatMap { e =>
+      val keys = files.puts.flatMap { e =>
         try Some(ShardFiles.readKey(e.path, _ => false)._1)
         catch { case _: java.io.IOException => None }
       }.distinctBy(_.toSeq).sortWith(cmp(_, _) < 0)
@@ -169,7 +165,6 @@ object RegionSplit {
     * and the put batch that triggered the check is already durable. */
   def maybeSplit(root: String, table: String, shardName: String,
                  maxRegionBytes: Long, maxSplits: Int = 64): Int = {
-    splitChecks.incrementAndGet()
     val tableDir = Paths.get(root, table.replace(':', '~'))
     // lock-free pre-check: the common under-bound case must not
     // serialize concurrent writers behind a write-lock acquisition
@@ -295,10 +290,8 @@ object RegionSplit {
     * hash), highest first, so a replay after a crash mid-lift lifts
     * the done ones again and `dir`'s own order still holds. */
   private def outrank(dir: Path, sat: Path): Unit = {
-    def trailers(d: Path) = ShardFiles.list(d).own.filter(_.isSegment)
-      .map(e => (e.path, CellSegment.readTrailer(e.path)))
-    val ceiling = trailers(sat).map(_._2.seqNo).foldLeft(0L)(math.max)
-    val mine = trailers(dir).sortBy(-_._2.seqNo)
+    val ceiling = Compaction.RegionFiles(sat).maxSeqNo
+    val mine = Compaction.RegionFiles(dir).segments.sortBy(-_._2.seqNo)
     if (mine.exists(_._2.seqNo <= ceiling)) mine.foreach { case (p, t) =>
       val it = CellSegment.entries(p, needBody = true, t.indexOffset)
       try CellSegment.write(dir, it, t.seqNo + ceiling + 1) finally it.close()
@@ -405,7 +398,9 @@ object RegionSplit {
     val shardDir = tableDir.resolve(shardName)
     if (!Files.isDirectory(shardDir)) return None
     if (shardBytes(shardDir) > bound) () else return None
-    val m = chooseSplitKey(shardDir).getOrElse(return None)
+    // ONE snapshot: the split key and the merge read the same listing
+    val files = Compaction.RegionFiles(shardDir)
+    val m = chooseSplitKey(files).getOrElse(return None)
     val mName = FileStore.Splits.nameOf(m)
     // the boundary must fall strictly inside the region's range — a
     // misplaced straggler key (outside placement, legal only for the
@@ -419,43 +414,26 @@ object RegionSplit {
     if (cmp(m, myStart) <= 0 || nextStart.exists(cmp(m, _) >= 0)) return None
     probeHook(s"chosen:$mName")
 
-    // ---- phase 1: merge (the minorShard physics, two outputs) ----
-    val (puts, segInfo, markers, shardMaxSeq) = {
-      val own = ShardFiles.list(shardDir).own
-      val segs = own.filter(_.isSegment).map(e => (e.path, CellSegment.readTrailer(e.path)))
-      (own.filter(_.isPut), segs, own.filter(_.isMarker), segs.map(_._2.seqNo).foldLeft(0L)(math.max))
-    }
-    if (puts.isEmpty && segInfo.isEmpty) return None
-    val putCells = puts.flatMap { e =>
-      try {
-        val (key, body) = ShardFiles.read(e.path)
-        Some((key, e.version, body, Long.MaxValue))
-      } catch { case _: java.io.IOException => None }
-    }.sortWith { (a, b) =>
-      val c = cmp(a._1, b._1)
-      if (c != 0) c < 0 else a._2 < b._2
-    }
-    // absorbed puts must keep outranking every resident segment — the
-    // same seqNo rule as minorShard; both daughters inherit it (they
-    // live in different directories, precedence is per-shard)
-    val outSeq = if (puts.nonEmpty) shardMaxSeq + 1 else shardMaxSeq
-    val segIts = segInfo.map { case (p, t) => CellSegment.entries(p, needBody = true, t.indexOffset) }
+    // ---- phase 1: merge — the region merge, every segment admitted,
+    // its stream cut at m: keys < m into S itself, the rest into the
+    // staging directory. Both daughters inherit the output seqNo (they
+    // live in different directories, precedence is per-shard); the
+    // inputs are swept only after the publish, from the manifest ----
     val stage = Files.createTempDirectory(shardDir, "_splitstage")
-    val (lowerMeta, upperMeta) =
-      try {
-        val tagged = segIts.zip(segInfo).map { case (it, (_, t)) =>
-          it.map { case (k, v, b) => (k, v, b, t.seqNo) }
+    val merged = Compaction.mergeRegion(files, _ => true, minSegments = 1, sweep = false) {
+      (cells, seqNo) =>
+        val in = cells.buffered
+        val lower = new Iterator[(Array[Byte], Long, Array[Byte])] {
+          override def hasNext: Boolean = in.hasNext && cmp(in.head._1, m) < 0
+          override def next(): (Array[Byte], Long, Array[Byte]) = in.next()
         }
-        val merged = Compaction.resolveSorted(
-          Compaction.mergeSorted(putCells.iterator +: tagged)).buffered
-        val lowerIt = new Iterator[(Array[Byte], Long, Array[Byte])] {
-          override def hasNext: Boolean = merged.hasNext && cmp(merged.head._1, m) < 0
-          override def next(): (Array[Byte], Long, Array[Byte]) = merged.next()
-        }
-        val lo = CellSegment.write(shardDir, lowerIt, outSeq)
-        val hiM = CellSegment.write(stage, merged, outSeq)
-        (lo, hiM)
-      } finally segIts.foreach(it => try it.close() catch { case _: Exception => () })
+        val lo = CellSegment.write(shardDir, lower, seqNo)
+        Seq(lo, CellSegment.write(stage, in, seqNo))
+    }.getOrElse {
+      org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
+      return None
+    }
+    val Seq(lowerMeta, upperMeta) = merged.outputs
     if (lowerMeta.entryCount == 0 || upperMeta.entryCount == 0) {
       // chooseSplitKey guarantees both halves nonempty; defend anyway —
       // an aborted split must leave the shard exactly as it was (the
@@ -466,7 +444,7 @@ object RegionSplit {
     }
     // upper-key delete markers ride with their cells (they carry the
     // length-prefixed true key, so membership is one small read each)
-    val upperMarkers = markers.map(_.path).filter { p =>
+    val upperMarkers = files.own.filter(_.isMarker).map(_.path).filter { p =>
       try cmp(ShardFiles.read(p)._1, m) >= 0
       catch { case _: java.io.IOException => false }
     }
@@ -476,7 +454,7 @@ object RegionSplit {
     // recovery manifest: everything the sweep may delete from the
     // parent (the fresh lower segment explicitly excluded — a
     // single-input identity merge can reuse an absorbed file's name)
-    val parents = (puts.map(_.path) ++ segInfo.map(_._1) ++ upperMarkers)
+    val parents = (merged.inputs ++ upperMarkers)
       .map(_.getFileName.toString).filterNot(_ == lowerMeta.fileName)
     val manifest = ("""{"target":"""" + mName + """","parents":[""" +
       parents.map(p => "\"" + p + "\"").mkString(",") + "]}").getBytes("UTF-8")

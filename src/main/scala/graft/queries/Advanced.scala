@@ -25,10 +25,13 @@ object Advanced {
     s"${path}_$fp"
   }
 
+  /** A staged layout's directory under the JVM temp dir, keyed by
+    * [[layoutTag]] so a regenerated source invalidates it. */
+  private[queries] def stageDir(d: String, name: String, files: String*): java.io.File =
+    new java.io.File(sys.props("java.io.tmpdir"), s"graft_${name}_${layoutTag(d, files: _*)}")
+
   /** q161's staged-feed directory. */
-  private def q161StagedDir(d: String): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_q161_" + layoutTag(d, "events.parquet"))
+  private def q161StagedDir(d: String): java.io.File = stageDir(d, "q161", "events.parquet")
 
   /** Gaps-and-islands batch sessions in DuckDB — the oracle for BOTH
     * q25 (batch) and q53 (streaming): same SQL, two execution models. */

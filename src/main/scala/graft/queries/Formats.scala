@@ -29,15 +29,6 @@ object Formats {
 
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSS"
 
-  private def stageDir(d: String, name: String, files: String*): java.io.File = {
-    val path = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_|_$", "")
-    val fp = files.map { f =>
-      val jf = new java.io.File(s"$d/$f")
-      java.lang.Long.toHexString(jf.length) + "t" + java.lang.Long.toHexString(jf.lastModified)
-    }.mkString("_")
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_${name}_${path}_$fp")
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // CSV sink + source. orders exercises the delimited-text hazards:
@@ -45,7 +36,7 @@ object Formats {
     // Written with header+explicit timestampFormat; read back with the
     // explicit schema (never inferSchema) and the same format.
     "q85_csv_roundtrip" -> { (s, d) =>
-      val dir = new java.io.File(stageDir(d, "csv", "orders.parquet"), "orders_csv")
+      val dir = new java.io.File(Advanced.stageDir(d, "csv", "orders.parquet"), "orders_csv")
       val src = Tables.orders(s, d)
       if (!dir.exists()) {
         src.write.mode("overwrite")
@@ -65,7 +56,7 @@ object Formats {
     // pipeline. lineitem brings four doubles (price/discount/tax/qty)
     // and a timestamp through Jackson and back.
     "q86_json_roundtrip" -> { (s, d) =>
-      val dir = new java.io.File(stageDir(d, "json", "lineitem.parquet"), "lineitem_json")
+      val dir = new java.io.File(Advanced.stageDir(d, "json", "lineitem.parquet"), "lineitem_json")
       val src = Tables.lineitem(s, d)
       if (!dir.exists()) {
         src.write.mode("overwrite").option("timestampFormat", TsFmt).json(dir.getPath)
@@ -83,7 +74,7 @@ object Formats {
     // construction; the query proves the engine's ORC path end to end
     // (events: nanos-normalized timestamp, double, strings).
     "q87_orc_roundtrip" -> { (s, d) =>
-      val dir = new java.io.File(stageDir(d, "orc", "events.parquet"), "events_orc")
+      val dir = new java.io.File(Advanced.stageDir(d, "orc", "events.parquet"), "events_orc")
       if (!dir.exists()) {
         Tables.events(s, d).write.mode("overwrite").orc(dir.getPath)
       }
@@ -99,7 +90,7 @@ object Formats {
     // reader: the oracle reads the snappy original. The query also
     // fail-fasts if the rewrite silently fell back to another codec.
     "q98_zstd_roundtrip" -> { (s, d) =>
-      val dir = new java.io.File(stageDir(d, "zstd", "lineitem.parquet"), "lineitem_zstd")
+      val dir = new java.io.File(Advanced.stageDir(d, "zstd", "lineitem.parquet"), "lineitem_zstd")
       if (!dir.exists()) {
         Tables.lineitem(s, d).write.mode("overwrite")
           .option("compression", "zstd").parquet(dir.getPath)

@@ -12,18 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  /** Staging dir keyed to the source's full path + (length, mtime) so a
-    * regenerated source invalidates the cache — same contract as
-    * Advanced.layoutTag. */
-  private def stageDir(d: String, name: String, files: String*): java.io.File = {
-    val path = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_|_$", "")
-    val fp = files.map { f =>
-      val jf = new java.io.File(s"$d/$f")
-      java.lang.Long.toHexString(jf.length) + "t" + java.lang.Long.toHexString(jf.lastModified)
-    }.mkString("_")
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_${name}_${path}_$fp")
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Small-file compaction — the OPTIMIZE step every streaming-fed
@@ -36,7 +24,7 @@ object Maintenance {
     // compacted table; the oracle reads the ORIGINAL — content
     // equality is the whole point.
     "q83_compaction" -> { (s, d) =>
-      val base = stageDir(d, "compact", "documents.parquet")
+      val base = Advanced.stageDir(d, "compact", "documents.parquet")
       val small = new java.io.File(base, "small")
       val compacted = new java.io.File(base, "compacted")
       if (!compacted.exists()) {
@@ -61,7 +49,7 @@ object Maintenance {
     // pins the table schema in a catalog and validates writers against
     // it; mergeSchema is the discovery path.
     "q84_schema_evolution" -> { (s, d) =>
-      val base = stageDir(d, "schema", "documents.parquet")
+      val base = Advanced.stageDir(d, "schema", "documents.parquet")
       val v1 = new java.io.File(base, "v1")
       val v2 = new java.io.File(base, "v2")
       if (!v2.exists()) {

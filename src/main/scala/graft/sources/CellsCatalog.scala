@@ -496,7 +496,7 @@ case class CellsStagedTable(liveRoot: String, stagingRoot: String, table: String
         // (non-empty) target — FileAlreadyExistsException or ENOTEMPTY
         // depending on the filesystem. The staged generation stays
         // orphaned (Vacuum's), the statement fails loudly.
-        case e: java.nio.file.FileSystemException if Files.isDirectory(live) =>
+        case _: java.nio.file.FileSystemException if Files.isDirectory(live) =>
           throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
             org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, table))
       }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{BinaryType, LongType, StructType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** SQL ROW-LEVEL OPERATIONS (MERGE INTO / UPDATE / predicate DELETE)

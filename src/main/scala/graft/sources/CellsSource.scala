@@ -243,7 +243,7 @@ final case class CellsKeyPred(
     * (layout already names a daughter whose directory is not yet
     * promoted) still routes to the LISTED directory covering the key,
     * which the split protocol guarantees physically serves it. */
-  def shardRangeOk(name: String, start: Array[Byte], end: Option[Array[Byte]],
+  def shardRangeOk(start: Array[Byte], end: Option[Array[Byte]],
                    isFirst: Boolean): Boolean = {
     val s0 = if (isFirst) Array.emptyByteArray else start
     points.forall(_.exists { k =>
@@ -324,7 +324,7 @@ object CellsShards {
       (n, graft.ingest.FileStore.Splits.startOf(n).get, p)
     }
     named.zipWithIndex.collect {
-      case ((n, st, p), i) if keys.shardRangeOk(n, st,
+      case ((n, st, p), i) if keys.shardRangeOk(st,
         if (i + 1 < named.size) Some(named(i + 1)._2) else None, i == 0) =>
         ListedShard(p, n, st, if (i + 1 < named.size) Some(named(i + 1)._1) else None, i == 0)
     }
@@ -2246,9 +2246,9 @@ object CellsReaders {
                         retention: Option[graft.ingest.Retention.Policy],
                         seen: scala.collection.mutable.HashSet[(String, Long)],
                         seenKeys: scala.collection.mutable.HashSet[String],
-                        endName: Option[String] = None,
-                        plannedFp: String = "",
-                        firstShard: Boolean = false): CellsShardReader =
+                        endName: Option[String],
+                        plannedFp: String,
+                        firstShard: Boolean): CellsShardReader =
     new CellsShardReader {
       require(!(latestOnly && emitOps), "the edit log has no latest fold")
       require(retention.isEmpty || maskDeletes,
@@ -2557,7 +2557,7 @@ object CellsReaders {
       private lazy val shardNameU8 = org.apache.spark.unsafe.types.UTF8String
         .fromString(Paths.get(shardDir).getFileName.toString)
       private def mkRow(key: Array[Byte], version: Long, body: Array[Byte],
-                        markerKind: Int = 0, src: Path = null): InternalRow = {
+                        markerKind: Int = 0, src: Path): InternalRow = {
         val values = cols.map {
           case "rowkey" => key
           case "version" => version

@@ -103,7 +103,7 @@ object MergeSourcePruning extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def pruneUnder(q: LogicalPlan): Unit = q.foreach {
-    case j @ Join(left, right, jt, Some(cond), _) =>
+    case Join(left, right, jt, Some(cond), _) =>
       (targetScanOf(left), targetScanOf(right)) match {
         case (Some(scan), None) if prunable(jt, targetOnLeft = true) =>
           tryPrune(scan, left, right, cond)

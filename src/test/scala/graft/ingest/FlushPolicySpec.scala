@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * segment once it exceeds the DDL threshold. Pins: the no-op-cheap
   * posture (one listing per touched shard, no flush under threshold),
   * the bounded-backlog invariant, view preservation, precedence over
-  * stale segment copies, and the '0'-disables override. */
+  * stale segment copies, the flushed segment byte for byte, and the
+  * '0'-disables override. */
 class FlushPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -164,10 +165,6 @@ class FlushPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
     "flush — beyond-cap residents, replaces and fresh cells never survive") {
     val root = Files.createTempDirectory("flush-direct-capped").toString
     val refRoot = Files.createTempDirectory("flush-capped-ref").toString
-    // the capped direct path floors at ~1k cells in production (small
-    // concurrent groups interleave better per-cell); drop the floor so
-    // this gate-sized wave exercises the direct branch
-    System.setProperty("graft.store.cappedDirectFloor", "1")
     try {
       val spec = TableSpec(maxVersions = 2, compactionThreshold = 10)
       val store = FileStore(root)
@@ -176,7 +173,7 @@ class FlushPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
       // threshold the batch never exceeds) — the end state the direct
       // path must replicate
       val ref = FileStore(refRoot)
-      ref.ensureTable("t", TableSpec(maxVersions = 2, compactionThreshold = 1000))
+      ref.ensureTable("t", TableSpec(maxVersions = 2, compactionThreshold = 10000))
       def put(s: FileStore, cs: Seq[CellPut]): Unit = s.putBatch("t", cs)
       val z0 = "Z-000".getBytes("UTF-8")
       val zi = "Z-intra".getBytes("UTF-8")
@@ -187,7 +184,9 @@ class FlushPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
       // batch 1 (over threshold → direct on `store`): a beyond-cap
       // REPLACE of (Z-000, 2), fresh Z-000 @ 3 and 4 (cap keeps 3, 4 —
       // residents 1, 2 and the replace must all die), an intra-batch
-      // multi-version key (keep newest 2 of 3), plus filler
+      // multi-version key (keep newest 2 of 3), plus filler that lifts
+      // the same-shard wave past the capped direct path's 1,024-cell
+      // floor (smaller capped groups stay per-cell)
       val wave = Seq(
         CellPut("t", z0, 2L, "v2-replaced".getBytes),
         CellPut("t", z0, 3L, "v3".getBytes),
@@ -195,8 +194,9 @@ class FlushPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
         CellPut("t", zi, 1L, "i1".getBytes),
         CellPut("t", zi, 2L, "i2".getBytes),
         CellPut("t", zi, 3L, "i3".getBytes)) ++
-        (100 until 112).map(i =>
+        (100 until 1200).map(i =>
           CellPut("t", f"Z-$i%03d".getBytes("UTF-8"), 9L, s"b-$i-9".getBytes))
+      assert(wave.size > FileStore.CappedDirectFloor)
       val flushes0 = FileStore.autoFlushes.get()
       put(store, wave); put(ref, wave)
       assert(FileStore.autoFlushes.get() == flushes0 + 1,
@@ -221,10 +221,40 @@ class FlushPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got.filter(_._1 == "Z-intra").map(_._2) == Set(2L, 3L),
         s"intra-batch cap applies: $got")
     } finally {
-      System.clearProperty("graft.store.cappedDirectFloor")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(refRoot))
     }
+  }
+
+  test("the put flush writes a pinned segment: file name, trailer seqNo and SHA-256") {
+    val root = Files.createTempDirectory("flush-bytes").toString
+    try {
+      val sp = spark; import sp.implicits._
+      val store = FileStore(root)
+      store.ensureTable("t", TableSpec(compactionThreshold = 10))
+      // a resident bulk segment (seqNo 1), one of whose coordinates the
+      // backlog re-puts with a new body
+      BulkLoad.writeCells(Seq(("t", "Z-000", 5L, "OLD"))
+        .map(t => (t._1, t._2.getBytes("UTF-8"), t._3, t._4.getBytes("UTF-8")))
+        .toDF("tableName", "rowkey", "version", "body"), root)
+      val shard = Paths.get(root, "t", FileStore.shardOf("Z".getBytes("UTF-8")))
+      def segments: Set[java.nio.file.Path] =
+        ShardFiles.list(shard).own.filter(_.isSegment).map(_.path).toSet
+      val resident = segments
+      // 6 then 7 per-cell puts: the second batch's hook flushes all 13
+      store.putBatch("t",
+        CellPut("t", "Z-000".getBytes("UTF-8"), 5L, "NEW".getBytes("UTF-8")) +: cells("t", 5, 1L))
+      store.putBatch("t", cells("t", 12, 2L).drop(5))
+      assert(putFiles(root, "t").isEmpty, "the backlog flushed")
+      val flushed = (segments -- resident).toSeq
+      assert(flushed.size == 1, s"one flushed segment: $flushed")
+      val seg = flushed.head
+      val sha = FileStore.hex(java.security.MessageDigest.getInstance("SHA-256")
+        .digest(Files.readAllBytes(seg)))
+      assert(seg.getFileName.toString == "bulk-a0a52acdff89f466.seg")
+      assert(CellSegment.readTrailer(seg).seqNo == 2L, "the flush lifts above the resident segment")
+      assert(sha == "72aedc8299526381ccccda04a96c8e698e7ae8fbaa5f6e8ee42b9f64e8c2982a")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("a flushed put outranks a stale segment copy at its coordinate") {
