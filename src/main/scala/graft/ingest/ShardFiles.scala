@@ -1,6 +1,7 @@
 package graft.ingest
 
 import java.nio.file.{Files, NoSuchFileException, NotDirectoryException, Path, StandardCopyOption}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import scala.jdk.CollectionConverters._
 
 /** The REGION-DIRECTORY FORMAT of [[FileStore]]: the one module that
@@ -151,6 +152,7 @@ object ShardFiles {
 
   /** List `dir` once. A missing directory lists as empty. */
   def list(dir: Path): Listing = {
+    listings.incrementAndGet()
     val s =
       try Files.list(dir)
       catch {
@@ -185,10 +187,40 @@ object ShardFiles {
     *    region's `_split-<name>/` satellite;
     *  - a merge between unbinding and parking: the right region's
     *    directory still stands, named by a merge link in this one.
-    * Steady state this is the one listing of the region directory. */
-  def pointEntries(tableDir: Path, splits: FileStore.Splits, idx: Int): Vector[Entry] = {
+    *
+    * '''The listing cache.''' Steady state this is one listing of the
+    * region directory, served from a bounded per-JVM cache (LRU, at
+    * most [[PointCacheEntries]] entries) that is VALIDATED on every
+    * read and never invalidated by writers, so it stays exact against
+    * this JVM's writers, other JVMs', crash recovery and plain
+    * file-system edits alike. A cached listing keeps the directory's
+    * file key (inode) and mtime from a stat taken BEFORE the listing,
+    * and answers a later read only while a fresh stat shows the same
+    * (file key, mtime): a warm point read costs one stat. A listing is
+    * cached only when it started more than G after that mtime (git's
+    * racy-clean rule, [[cleanAt]]), so any entry change made after the
+    * listing started stamps a different mtime, even one landing in the
+    * listing's own timestamp tick. G covers the file system's mtime
+    * granularity: 50 ms when mtimes carry sub-second digits (ext4's
+    * coarse tick is at most 10 ms), 2 s when they do not. The rule
+    * assumes a local POSIX file system, where a create, rename or
+    * unlink stamps the parent directory's mtime from the clock the JVM
+    * reads; [[FileStore]] is one. Never cached: a missing region
+    * directory, and a listing that holds satellites or merge links (a
+    * mid-split or mid-merge window, whose files change without touching
+    * this directory). The cache holds names, never an open file. */
+  def pointEntries(tableDir: Path, splits: FileStore.Splits, idx: Int): PointView = {
     val name = splits.names(idx)
-    val l = list(tableDir.resolve(name))
+    val dir = tableDir.resolve(name)
+    val stat =
+      try Files.readAttributes(dir, classOf[BasicFileAttributes])
+      catch { case _: NoSuchFileException => null }
+    val cacheable = stat != null && stat.isDirectory && stat.fileKey != null
+    val cached = if (cacheable) pointCache.synchronized(pointCache.get(dir)) else null
+    if (cached != null && cached.fileKey == stat.fileKey && cached.mtime == stat.lastModifiedTime)
+      return cached.view
+    val listedAt = System.currentTimeMillis()
+    val l = list(dir)
     val unpromoted =
       if (l.present || idx == 0) Vector.empty
       else {
@@ -201,8 +233,84 @@ object ShardFiles {
       mergeLinkTargetOf(p.getFileName.toString).fold(Vector.empty[Entry])(t =>
         list(tableDir.resolve(t)).covered)
     }
-    if (unpromoted.isEmpty && linked.isEmpty) l.covered else l.covered ++ unpromoted ++ linked
+    val view = new PointView(
+      if (unpromoted.isEmpty && linked.isEmpty) l.covered else l.covered ++ unpromoted ++ linked)
+    // a listing with unpromoted or linked files is not present or has
+    // merge links, so it is never cached
+    if (cacheable && l.present && l.satellites.isEmpty && l.mergeLinks.isEmpty &&
+        cleanAt(stat.lastModifiedTime, listedAt))
+      cachePoint(dir, new CachedListing(stat.fileKey, stat.lastModifiedTime, view))
+    else if (cached != null) pointCache.synchronized {
+      if (pointCache.remove(dir, cached)) pointCacheWeight -= cached.weight
+    }
+    view
   }
+
+  /** What a point read sees of one region: its store files and the
+    * views the point faces derive from them, each built on first use
+    * and shared by every read the listing serves. */
+  final class PointView(val entries: Vector[Entry]) {
+    lazy val segments: Vector[Path] = segmentsOf(entries)
+    lazy val mask: ShardMask = maskOf(entries)
+    private lazy val puts: Map[String, Vector[Entry]] = entries.filter(_.isPut).groupBy(_.digest)
+    /** the put files of one key digest, in listing order. */
+    def putsOf(digest: String): Vector[Entry] = puts.getOrElse(digest, Vector.empty)
+  }
+
+  /** Racy-clean: may a listing that started at `listedAtMillis` stand
+    * for its directory while the directory's mtime stays `mtime`? Only
+    * when it started more than G after that mtime ([[pointEntries]]). */
+  private[graft] def cleanAt(mtime: FileTime, listedAtMillis: Long): Boolean = {
+    val graceMillis = if (mtime.toInstant.getNano == 0) 2000L else 50L
+    listedAtMillis - mtime.toMillis > graceMillis
+  }
+
+  /** The cap on cached listing entries. A cached region weighs one plus
+    * its entry count, so at a few hundred bytes per entry the cache
+    * stays near 10 MB however many regions a JVM reads. */
+  private[graft] val PointCacheEntries = 1 << 15
+
+  private final class CachedListing(val fileKey: AnyRef, val mtime: FileTime, val view: PointView) {
+    def weight: Long = 1L + view.entries.size
+  }
+
+  // accessOrder=true: iteration runs least recently used first, the
+  // eviction order; every access synchronized (get moves the links)
+  private val pointCache = new java.util.LinkedHashMap[Path, CachedListing](64, 0.75f, true)
+  private var pointCacheWeight = 0L
+  private var pointCacheCap = PointCacheEntries.toLong
+
+  private def cachePoint(dir: Path, c: CachedListing): Unit = pointCache.synchronized {
+    val prev = pointCache.put(dir, c)
+    if (prev != null) pointCacheWeight -= prev.weight
+    pointCacheWeight += c.weight
+    evictToCap()
+  }
+
+  private def evictToCap(): Unit = {
+    val it = pointCache.values().iterator()
+    while (pointCacheWeight > pointCacheCap && it.hasNext) {
+      pointCacheWeight -= it.next().weight
+      it.remove()
+    }
+  }
+
+  /** Test seam: resize the cache cap (in entries, evicting down to it)
+    * and return the previous cap. */
+  private[graft] def setPointCacheCap(entries: Long): Long = pointCache.synchronized {
+    val prev = pointCacheCap
+    pointCacheCap = entries
+    evictToCap()
+    prev
+  }
+
+  /** (cached regions, cached weight) — inspection only. */
+  private[graft] def pointCacheStats: (Int, Long) =
+    pointCache.synchronized((pointCache.size, pointCacheWeight))
+
+  /** Listing counter — the spec seam proving a warm point read lists
+    * no region directory ([[pointEntries]]). */
+  private[graft] val listings = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The region directories of a table directory in name (≡ key)
     * order: every entry whose name decodes as a region start

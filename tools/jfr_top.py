@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Per-child sample shares under named frames of a JFR recording.
 
-    python3 tools/jfr_top.py <recording.jfr> <frame> [frame ...] [--top N] [--prefix P]
+    python3 tools/jfr_top.py <recording.jfr> <frame> [frame ...] [--top N] [--prefix P] [--native]
 
 For each named frame (a substring of `package.Class.method`, e.g.
-`pushFiles` or `RecordProcessor$.processLine`), counts the execution
-samples whose stack holds that frame, then splits them by the frame's
+`pushFiles` or `RecordProcessor$.processLine`), counts the samples
+(execution samples unless `--native`) whose stack holds that frame, then splits them by the frame's
 callee on those stacks (`(self)` when the frame was on top). A frame
 that recurses is counted once per sample, at its outermost call.
 
@@ -15,10 +15,20 @@ with `graft.` and that is not a compiler-made lambda or bridge
 wrappers (`List.foreach`); a sample with no such callee keeps its direct
 one.
 
-Reads `jfr print --events jdk.ExecutionSample --stack-depth 300` line by
-line: the default stack depth of 5 hides every engine frame, and the
-`--json` form of a long recording runs to gigabytes. Record with a deep
-enough stack, for example
+With `--native` it reads the native-method samples
+(`jdk.NativeMethodSample`) instead: stacks of threads sitting in a
+native call such as `UnixNativeDispatcher.mkdir0` or `open0`, which is
+where an import spends its system time and which execution samples never
+show. JDK 17 takes at most one native sample per sampling period (for
+the whole JVM, against several execution samples), so compare native
+shares only with other native shares, never with execution-sample
+counts.
+
+Reads `jfr print --events <event> --stack-depth 300` line by line: the
+default stack depth of 5 hides every engine frame, and the `--json` form
+of a long recording runs to gigabytes. Both kinds of sample need a deep
+stack at recording time as well (the JVM default is 64 frames, which cuts
+a Spark task's stack well above the named frames), for example
 
     JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions=stackdepth=512 \\
       -XX:StartFlightRecording=filename=/abs/path/run.jfr,settings=profile" \\
@@ -41,12 +51,12 @@ def frame_name(line: str) -> str:
     return name[:cut] if cut >= 0 else name.split(" ")[0]
 
 
-def samples(recording: str):
-    """Yield each execution sample's stack, leaf first."""
+def samples(recording: str, event: str):
+    """Yield the stack of each `event` sample, leaf first."""
     jfr = shutil.which("jfr")
     if jfr is None:
         sys.exit("jfr_top: no `jfr` on PATH (it ships in the JDK's bin/)")
-    cmd = [jfr, "print", "--events", "jdk.ExecutionSample", "--stack-depth", "300", recording]
+    cmd = [jfr, "print", "--events", event, "--stack-depth", "300", recording]
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True, bufsize=1 << 20)
     stack, in_stack = [], False
     for line in proc.stdout:
@@ -69,12 +79,15 @@ def main():
     ap.add_argument("frames", nargs="+")
     ap.add_argument("--top", type=int, default=15, help="children to print per frame")
     ap.add_argument("--prefix", default="", help="attribute to the nearest callee with this prefix")
+    ap.add_argument("--native", action="store_true",
+                    help="read jdk.NativeMethodSample instead of jdk.ExecutionSample")
     args = ap.parse_args()
+    event, kind = ("jdk.NativeMethodSample", "native") if args.native else ("jdk.ExecutionSample", "execution")
 
     total = 0
     under = collections.Counter()
     children = {f: collections.Counter() for f in args.frames}
-    for stack in samples(args.recording):
+    for stack in samples(args.recording, event):
         total += 1
         for f in args.frames:
             # outermost occurrence: the last match in a leaf-first stack
@@ -91,7 +104,7 @@ def main():
                         break
             children[f][child] += 1
 
-    print(f"{total} execution samples in {args.recording}")
+    print(f"{total} {kind} samples in {args.recording}")
     for f in args.frames:
         n = under[f]
         print(f"\n{f}: {n} samples ({100.0 * n / max(total, 1):.1f} % of all)")
